@@ -68,13 +68,18 @@ object GeoDocs {
 
   /** docs (doc_id, spans) → + geometry columns (wkb, lon, lat), spans
     * passed through untouched. The geo span is the FIRST span with
-    * kind='geo' (deterministic); lon/lat are the centroid for polygons.
-    * Stays inside codegen: higher-order filter + our native expressions. */
+    * kind='geo' (deterministic); lon/lat are the centroid for polygons;
+    * docs without a parseable geo span are dropped. Each span's WKT is
+    * parsed once: the parse is a one-element explode, because the
+    * optimizer would substitute a projected parse into the null filter
+    * pushed below it and so parse every span twice. No higher-order
+    * function either, so the whole extraction stays in codegen. */
   def withGeometry(docs: DataFrame): DataFrame = {
-    val geoText = element_at(filter(col("spans"), s => s.getField("kind") === "geo"), 1)
+    val spans = col("spans")
+    val geoText = get(spans, (array_position(spans.getField("kind"), "geo") - 1).cast("int"))
       .getField("text")
     docs
-      .withColumn("wkb", gf.st_geomfromtext(geoText))
+      .withColumn("wkb", explode(array(gf.st_geomfromtext(geoText))))
       .where(col("wkb").isNotNull)
       .withColumn("pt", gf.st_centroid(col("wkb")))
       .withColumn("lon", gf.st_x(col("pt")))

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge, StBox}
 import graft.functions.gf
 import graft.geom.{BoolOps, Geom, Wkb}
 
@@ -15,6 +16,11 @@ import graft.geom.{BoolOps, Geom, Wkb}
   *   points   --st_cell(z)---> (cell, point)
   *   equi-join on cell → exact PIP refine (st_contains_point)
   *
+  * The point joins carry each polygon as its boxed struct
+  * <minx, miny, maxx, maxy, wkb> (StBox) on the polygon side, and the
+  * refine predicate takes that struct in place of the WKB: it rejects
+  * points outside the envelope without copying the polygon's bytes.
+  *
   * A point lands in exactly one cell, so point-vs-polygon candidates are
   * already distinct — no dedup needed. Polygon-vs-polygon joins dedup on the
   * id pair before the (expensive) exact predicate.
@@ -25,32 +31,30 @@ import graft.geom.{BoolOps, Geom, Wkb}
   *  - broadcast when the exploded cover fits (dims like admin boundaries);
   *    shuffle hash/sort-merge otherwise — Spark/AQE picks by size, we only
   *    hint explicitly when told
-  *  - skewed cells (everyone in one city): `saltedPipJoin` splits each hot
+  *  - skewed cells (everyone in one city): `pipJoinSalted` splits each hot
   *    cell into S sub-keys; AQE skew-join also re-splits at runtime
   */
 object SpatialJoin {
 
   /** Point-in-polygon join. `pts` needs (lon, lat), `polys` needs `wkb`.
     * Returns pts columns + polys columns for every (point, polygon) pair
-    * where the polygon contains the point (ray-crossing rule).
+    * where the polygon contains the point (ray-crossing rule); the
+    * polygon's `wkb` comes out as `poly_wkb`, in its place.
     */
   def pipJoin(pts: DataFrame, polys: DataFrame, z: Int,
               broadcastPolys: Boolean = true,
               predicate: String = "contains"): DataFrame = {
-    // the polygon geometry is namespaced to poly_wkb so points may carry
-    // their own wkb column (e.g. geo-docs rows) through the join untouched
-    val cover = polys.withColumnRenamed("wkb", "poly_wkb")
-      .withColumn("cell", explode(gf.st_cover(col("poly_wkb"), lit(z))))
+    val cover = coverSide(polys, z)
     val side = if (broadcastPolys) broadcast(cover) else cover
     val refine: Column = predicate match {
       case "contains"   => gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat"))
       case "intersects" => gf.st_intersects_point(col("poly_wkb"), col("lon"), col("lat"))
       case other => throw new IllegalArgumentException(s"predicate $other")
     }
-    pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
+    unboxed(pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
       .join(side, "cell")
       .where(refine)
-      .drop("cell")
+      .drop("cell"))
   }
 
   /** Salted PIP join for skewed cells: every point key becomes
@@ -61,15 +65,29 @@ object SpatialJoin {
     */
   def pipJoinSalted(pts: DataFrame, polys: DataFrame, z: Int, salt: Int,
                     saltKey: Column): DataFrame = {
-    val cover = polys.withColumnRenamed("wkb", "poly_wkb")
-      .withColumn("cell", explode(gf.st_cover(col("poly_wkb"), lit(z))))
+    val cover = coverSide(polys, z)
       .withColumn("salt", explode(lit((0 until salt).toArray)))
-    pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
+    unboxed(pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
       .withColumn("salt", pmod(xxhash64(saltKey), lit(salt)).cast("int"))
       .join(cover, Seq("cell", "salt"))
       .where(gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat")))
-      .drop("cell", "salt")
+      .drop("cell", "salt"))
   }
+
+  /** The polygon side of the point joins, exploded over its cover at zoom
+    * z. The polygon's `wkb` is replaced in place by its boxed struct
+    * (StBox), named poly_wkb so points may carry their own wkb column (e.g.
+    * geo-docs rows) through the join untouched. The WKB rides once, inside
+    * the struct: the refine tests the envelope in place and reads the WKB
+    * only for points inside it. */
+  private def coverSide(polys: DataFrame, z: Int): DataFrame =
+    polys.withColumn("wkb", ColumnBridge.column(StBox(ColumnBridge.expression(col("wkb")))))
+      .withColumnRenamed("wkb", "poly_wkb")
+      .withColumn("cell", explode(gf.st_cover(col("poly_wkb.wkb"), lit(z))))
+
+  /** A joined coverSide's poly_wkb back as the plain WKB, in place. */
+  private def unboxed(joined: DataFrame): DataFrame =
+    joined.withColumn("poly_wkb", col("poly_wkb.wkb"))
 
   /** Polygon-polygon (layer algebra style) intersects join between `left`
     * (leftId, wkb) and `right` (rightId, wkb2 renamed on the fly): cover both

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import graft.geom._
 import graft.cell.{CellId, Hilbert}
 
@@ -124,6 +126,39 @@ object GeoKernel {
 
   def intersectsPoint(wkb: Array[Byte], x: Double, y: Double): Boolean =
     WkbPip.intersectsPoint(wkb, x, y)
+
+  /** The boxed geometry (minx, miny, maxx, maxy, wkb) of st_box: a closed
+    * envelope that holds every point the geometry contains or intersects,
+    * so a point outside it needs no WKB read. That is the geometry's
+    * envelope (curves linearized as on read; Envelope.Empty for an empty
+    * geometry), except for geometries with line work, whose box is
+    * unbounded: pointOnLine accepts a point whose squared distance to a
+    * segment underflows to 0 or whose rounded projection leaves the
+    * segment, and such a point can lie off the line's envelope. */
+  def box(wkb: Array[Byte]): InternalRow = {
+    val g = decode(wkb)
+    val e = if (hasLinework(g)) Unbounded else g.envelope
+    new GenericInternalRow(Array[Any](e.minX, e.minY, e.maxX, e.maxY, wkb))
+  }
+
+  private val Unbounded = Envelope(Double.NegativeInfinity, Double.NegativeInfinity,
+    Double.PositiveInfinity, Double.PositiveInfinity)
+
+  private def hasLinework(g: Geom): Boolean = g match {
+    case _: LineString | _: MultiLineString => true
+    case c: GeometryCollection => c.geoms.exists(hasLinework)
+    case _ => false
+  }
+
+  /** Closed envelope test on a box; NaN rejects. */
+  private def inBox(box: InternalRow, x: Double, y: Double): Boolean =
+    x >= box.getDouble(0) && x <= box.getDouble(2) && y >= box.getDouble(1) && y <= box.getDouble(3)
+
+  def boxContainsPoint(box: InternalRow, x: Double, y: Double): Boolean =
+    inBox(box, x, y) && WkbPip.containsPoint(box.getBinary(4), x, y)
+
+  def boxIntersectsPoint(box: InternalRow, x: Double, y: Double): Boolean =
+    inBox(box, x, y) && WkbPip.intersectsPoint(box.getBinary(4), x, y)
 
   def intersects(a: Array[Byte], b: Array[Byte]): Boolean =
     GeoOps.intersects(decode(a), decode(b))

@@ -859,6 +859,30 @@ case class StCoverCount(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** The boxed polygon that the broadcast point-in-polygon joins carry:
+  * struct<minx, miny, maxx, maxy, wkb>, the geometry decoded once
+  * (GeoKernel.box), null for a null WKB. [[PointPredicate]]s accept it in
+  * place of the WKB. Built by SpatialJoin and CellJoinRule; not registered
+  * as a SQL function. */
+case class StBox(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
+  override def dataType: DataType = StBox.Type
+  override def prettyName: String = "st_box"
+  protected override def nullSafeEval(w: Any): Any = GeoKernel.box(w.asInstanceOf[Array[Byte]])
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"${K.N}.box($c)")
+  protected override def withNewChildInternal(newChild: Expression): StBox = copy(child = newChild)
+}
+
+object StBox {
+  val Type: StructType = StructType(
+    Seq("minx", "miny", "maxx", "maxy").map(StructField(_, DoubleType, nullable = false)) :+
+      StructField("wkb", BinaryType, nullable = false))
+
+  /** The WKB field of a boxed geometry. */
+  def wkb(box: Expression): Expression = GetStructField(box, 4, Some("wkb"))
+}
+
 /** cell_ring(cell, r) → array<long> of cells at Chebyshev distance r
   * (kNN ring expansion, SURVEY.md §2.H). */
 case class CellRing(left: Expression, right: Expression)
@@ -950,32 +974,51 @@ case class StCell(first: Expression, second: Expression, third: Expression)
     copy(first = a, second = b, third = c)
 }
 
-/** st_contains_point(wkb, x, y) — THE spatial-join refine predicate
-  * (ray-crossing PIP, ogrlinearring.cpp:452-521 + hole rule ogrpolygon.cpp:770). */
-case class StContainsPoint(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, DoubleType, DoubleType)
+/** Point predicate over a geometry given as WKB or as the boxed struct of
+  * [[StBox]]. On the struct the kernel tests the closed envelope in place
+  * (an UnsafeRow's getStruct does not copy) and reads the WKB only for
+  * points inside it, so a broadcast join's refine no longer copies every
+  * candidate's polygon bytes. Both inputs give the same result. */
+abstract class PointPredicate extends TernaryExpression with ImplicitCastInputTypes {
+  /** Whether the boundary counts (st_intersects_point). */
+  protected def boundary: Boolean
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(TypeCollection(BinaryType, StBox.Type), DoubleType, DoubleType)
   override def dataType: DataType = BooleanType
+  protected override def nullSafeEval(w: Any, x: Any, y: Any): Any = {
+    val px = x.asInstanceOf[Double]; val py = y.asInstanceOf[Double]
+    w match {
+      case b: InternalRow =>
+        if (boundary) GeoKernel.boxIntersectsPoint(b, px, py) else GeoKernel.boxContainsPoint(b, px, py)
+      case wkb: Array[Byte] =>
+        if (boundary) GeoKernel.intersectsPoint(wkb, px, py) else GeoKernel.containsPoint(wkb, px, py)
+    }
+  }
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val onWkb = if (boundary) "intersectsPoint" else "containsPoint"
+    val f = if (first.dataType == BinaryType) onWkb else "box" + onWkb.capitalize
+    defineCodeGen(ctx, ev, (w, x, y) => s"${K.N}.$f($w, $x, $y)")
+  }
+}
+
+/** st_contains_point(geom, x, y) — THE spatial-join refine predicate
+  * (ray-crossing PIP, ogrlinearring.cpp:452-521 + hole rule ogrpolygon.cpp:770);
+  * geom is WKB or the boxed struct ([[StBox]]). */
+case class StContainsPoint(first: Expression, second: Expression, third: Expression)
+    extends PointPredicate {
   override def prettyName: String = "st_contains_point"
-  protected override def nullSafeEval(w: Any, x: Any, y: Any): Any =
-    GeoKernel.containsPoint(w.asInstanceOf[Array[Byte]], x.asInstanceOf[Double], y.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, x, y) => s"${K.N}.containsPoint($w, $x, $y)")
+  protected def boundary = false
   protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StContainsPoint =
     copy(first = a, second = b, third = c)
 }
 
-/** st_intersects_point(wkb, x, y) — PIP including boundary
-  * (OGRCurvePolygon::IntersectsPoint, ogrcurvepolygon.cpp:829). */
+/** st_intersects_point(geom, x, y) — PIP including boundary
+  * (OGRCurvePolygon::IntersectsPoint, ogrcurvepolygon.cpp:829); geom is
+  * WKB or the boxed struct ([[StBox]]). */
 case class StIntersectsPoint(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, DoubleType, DoubleType)
-  override def dataType: DataType = BooleanType
+    extends PointPredicate {
   override def prettyName: String = "st_intersects_point"
-  protected override def nullSafeEval(w: Any, x: Any, y: Any): Any =
-    GeoKernel.intersectsPoint(w.asInstanceOf[Array[Byte]], x.asInstanceOf[Double], y.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, x, y) => s"${K.N}.intersectsPoint($w, $x, $y)")
+  protected def boundary = true
   protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StIntersectsPoint =
     copy(first = a, second = b, third = c)
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.graft.{StCell, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint}
+import org.apache.spark.sql.types.{BinaryType, LongType}
+import org.apache.spark.sql.graft.{StBox, StCell, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint}
 
 /** Optimizer rule: rewrite naive spatial-predicate joins
   *
@@ -19,7 +19,12 @@ import org.apache.spark.sql.graft.{StCell, StContainsPoint, StCover, StCoverCoun
   *
   *   point case:  points + st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_cover(wkb,z))
   *                … refined by the ORIGINAL predicate (a point is in exactly
-  *                one cell, so no dedup is introduced)
+  *                one cell, so no dedup is introduced). The polygon side
+  *                carries its geometry once, as the boxed struct
+  *                <minx, miny, maxx, maxy, wkb> (StBox) in place of the
+  *                wkb column, and the refine takes the struct: it tests
+  *                the envelope without copying the WKB. The wkb column is
+  *                re-projected from the struct above the join
   *   geom case:   both sides explode their covers and equi-join on the cell;
   *                a pair sharing k cells would appear k times, so the join
   *                keeps only the row whose matched cell is the MINIMUM cell
@@ -45,7 +50,7 @@ import org.apache.spark.sql.graft.{StCell, StContainsPoint, StCover, StCoverCoun
   * scan is exactly what this rewrite recovers declaratively.
   *
   * The rule fires only when the join condition IS the bare spatial
-  * predicate (the rewritten plans carry the predicate under an And, so they
+  * predicate over WKB (the rewritten plans carry the predicate under an And, so they
   * never re-fire). Zoom is configurable with `spark.graft.celljoin.zoom`
   * (default 4, clamped to [0, 18]). Register at runtime through
   * `spark.experimental.extraOptimizations` (GraftFunctions.register) or at
@@ -103,15 +108,26 @@ object CellJoinRule extends Rule[LogicalPlan] {
     // points side: one cell per row
     val cellL = Alias(StCell(lon, lat, Literal(z)), "__graft_cell_pt")()
     val pts2 = Project(ptsSide.output :+ cellL, ptsSide)
-    // polygon side: explode the cover
+    // polygon side: the geometry rides once, as the boxed struct the refine
+    // reads in place, exploded over its cover; a bare wkb column is dropped
+    // here and re-projected from the struct above the join under its own
+    // name and id
+    val boxA = Alias(StBox(wkb), "__graft_box")()
+    val box = boxA.toAttribute
+    val boxed = Project(polyFit.output.filterNot(wkb.semanticEquals) :+ boxA, polyFit)
     val cellR = AttributeReference("__graft_cell_poly", LongType, nullable = false)()
-    val polys2 = Generate(Explode(StCover(wkb, Literal(z))), Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(cellR), child = polyFit)
-    val cond = And(EqualTo(cellL.toAttribute, cellR), pred)
+    val polys2 = Generate(Explode(StCover(StBox.wkb(box), Literal(z))), Nil,
+      outer = false, qualifier = None, generatorOutput = Seq(cellR), child = boxed)
+    val cond = And(EqualTo(cellL.toAttribute, cellR), pred.withNewChildren(box +: pred.children.tail))
     val joined =
       if (ptsLeft) Join(pts2, polys2, Inner, Some(cond), hint)
       else Join(polys2, pts2, Inner, Some(cond), hint)
-    val cellBranch = Project(j.output, joined)
+    val out: Seq[NamedExpression] = j.output.map {
+      case a if a.semanticEquals(wkb) =>
+        Alias(StBox.wkb(box), a.name)(exprId = a.exprId, qualifier = a.qualifier)
+      case a => a
+    }
+    val cellBranch = Project(out, joined)
     val bigBranch =
       if (ptsLeft) naiveBranch(j.output, ptsSide, polyBig, pred, hint)
       else naiveBranch(j.output, polyBig, ptsSide, pred, hint)
@@ -156,8 +172,9 @@ object CellJoinRule extends Rule[LogicalPlan] {
     val execMode = PipJoinStrategy.mode == "exec"
     pred match {
       case StContainsPoint(_, _, _) | StIntersectsPoint(_, _, _) if execMode => None
-      case StContainsPoint(w, lo, la) => matchPoint(w, lo, la, lSet, rSet)
-      case StIntersectsPoint(w, lo, la) => matchPoint(w, lo, la, lSet, rSet)
+      // the geometry as WKB: a predicate over a boxed struct keeps its plan
+      case StContainsPoint(w, lo, la) if w.dataType == BinaryType => matchPoint(w, lo, la, lSet, rSet)
+      case StIntersectsPoint(w, lo, la) if w.dataType == BinaryType => matchPoint(w, lo, la, lSet, rSet)
       case StIntersects(a, b)
           if a.references.nonEmpty && b.references.nonEmpty =>
         if (a.references.subsetOf(lSet) && b.references.subsetOf(rSet))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graft.{StContainsPoint, StIntersectsPoint}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.BinaryType
 import graft.functions.GeoKernel
 
 /** Physical-plan path for the naive point-in-polygon join — the whole-
@@ -56,7 +57,7 @@ object PipJoinStrategy extends SparkStrategy {
         case _ => return Nil
       }
       val ptRefs = lon.references ++ lat.references
-      if (wkb.references.isEmpty || ptRefs.isEmpty) return Nil
+      if (wkb.dataType != BinaryType || wkb.references.isEmpty || ptRefs.isEmpty) return Nil
       if (ptRefs.subsetOf(left.outputSet) && wkb.references.subsetOf(right.outputSet))
         Seq(BroadcastPipJoinExec(planLater(left), planLater(right),
           wkb, lon, lat, zoom, ptsLeft = true, boundary))
@@ -89,14 +90,17 @@ case class BroadcastPipJoinExec(pts: SparkPlan, polys: SparkPlan,
     val wkbBound = BindReferences.bindReference(wkb, polyOut)
     val z = zoom
     // dim-side index build (the broadcast-hash-join contract: this side is
-    // small). Oversized covers fall into a linear side list, not an error.
-    val index = new java.util.HashMap[Long, java.util.ArrayList[(Array[Byte], InternalRow)]]()
-    val oversize = new java.util.ArrayList[(Array[Byte], InternalRow)]()
+    // small). Each entry holds the polygon's boxed struct (StBox), so the
+    // probe tests the envelope before it reads the WKB, with the same
+    // kernel as the join paths' refine. Oversized covers fall into a linear
+    // side list, not an error.
+    val index = new java.util.HashMap[Long, java.util.ArrayList[(InternalRow, InternalRow)]]()
+    val oversize = new java.util.ArrayList[(InternalRow, InternalRow)]()
     polys.executeCollect().foreach { row =>
       val w = wkbBound.eval(row)
       if (w != null) {
         val bytes = w.asInstanceOf[Array[Byte]]
-        val entry = (bytes, row)
+        val entry = (GeoKernel.box(bytes), row)
         if (GeoKernel.coverCount(bytes, z) > 4096L) oversize.add(entry)
         else GeoKernel.cover(bytes, z).foreach { c =>
           var l = index.get(c)
@@ -123,13 +127,13 @@ case class BroadcastPipJoinExec(pts: SparkPlan, polys: SparkPlan,
           val x = lo.asInstanceOf[Double]; val y = la.asInstanceOf[Double]
           val cands = idx.get(GeoKernel.cell(x, y, z))
           val hits = new scala.collection.mutable.ArrayBuffer[InternalRow]()
-          def probe(l: java.util.ArrayList[(Array[Byte], InternalRow)]): Unit =
+          def probe(l: java.util.ArrayList[(InternalRow, InternalRow)]): Unit =
             if (l != null) {
               var i = 0
               while (i < l.size()) {
-                val (bytes, polyRow) = l.get(i)
-                val in = if (bnd) GeoKernel.intersectsPoint(bytes, x, y)
-                         else GeoKernel.containsPoint(bytes, x, y)
+                val (box, polyRow) = l.get(i)
+                val in = if (bnd) GeoKernel.boxIntersectsPoint(box, x, y)
+                         else GeoKernel.boxContainsPoint(box, x, y)
                 if (in) hits += polyRow
                 i += 1
               }

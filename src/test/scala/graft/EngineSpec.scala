@@ -42,6 +42,28 @@ class EngineSpec extends AnyFunSuite {
     assert(out.join(orig, Seq("doc_id", "spans")).count() == out.count())
   }
 
+  test("withGeometry parses each geo span once and drops the docs without a parseable one") {
+    val spans = Seq(
+      ("a", Seq(Span("text", "t", "", 0), Span("geo", "POINT (1 2)", "", 1))),
+      ("b", Seq(Span("geo", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", "", 0), Span("geo", "POINT (9 9)", "", 1))),
+      ("c", Seq(Span("geo", "NOT WKT", "", 0), Span("geo", "POINT (5 5)", "", 1))),
+      ("d", Seq(Span("text", "no geometry", "", 0))),
+      ("e", Seq.empty[Span]))
+    val df = GeoDocs.withGeometry(spans.toDF("doc_id", "spans"))
+    val parses = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: org.apache.spark.sql.graft.StGeomFromText => e }))
+    assert(parses.size === 1, df.queryExecution.optimizedPlan.treeString)
+    // the first geo span decides: c's unparseable one drops it
+    assert(df.select($"doc_id", $"lon", $"lat").as[(String, Double, Double)].collect().sorted.toSeq ===
+      Seq(("a", 1.0, 2.0), ("b", 1.0, 1.0)))
+    val some = docs.where($"doc_id" < "doc_000000300")
+    val want = GeoDocs.withGeometry(some).select($"doc_id", gf.st_astext($"wkb"))
+      .as[(String, String)].collect().toMap
+    val oracle = some.as[GeoDoc].collect().map { d =>
+      d.doc_id -> Wkt.write(Wkt.parse(d.spans.find(_.kind == "geo").get.text)) }.toMap
+    assert(want === oracle)
+  }
+
   test("spatial join matches per-row oracle (ray-crossing PIP over all zones)") {
     val got = SpatialJoin.pipJoin(pts, zones, z = 6)
       .select($"doc_id", $"zone_id").as[(String, String)].collect().toSet

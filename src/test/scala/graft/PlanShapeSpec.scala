@@ -1,13 +1,19 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.graft.StContainsPoint
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
 import graft.engine.{Raster, TileSink, CalcExpr, Ann}
 
 /** Physical-plan assertions for the round-4 operators' scale claims (the
   * PLANS.md contract, checked mechanically): narrow ops stay shuffle-free,
   * the PQ approximate pass carries codes rather than raw vectors. */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -180,6 +186,48 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p.take(1200))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       p.take(1200))
+  }
+
+  /** The cell PIP join's refine must not copy polygon bytes per candidate:
+    * Spark's broadcast hash join loads every build-side column its
+    * condition names before it evaluates the condition, so the condition
+    * names no binary build column, and the build side carries the WKB once,
+    * inside the boxed polygon struct. */
+  private def assertBoxedRefine(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val refines = collect(plan) {
+      case j: BroadcastHashJoinExec if j.condition.exists(_.exists(_.isInstanceOf[StContainsPoint])) => j
+    }
+    assert(refines.size === 1, plan.treeString)
+    val j = refines.head
+    val build = if (j.buildSide == BuildLeft) j.left else j.right
+    val named = j.condition.get.references.filter(build.outputSet.contains)
+    assert(!named.exists(_.dataType == BinaryType), s"condition names binary build columns $named")
+    def binaries(t: DataType): Int = t match {
+      case BinaryType => 1
+      case s: StructType => s.fields.map(f => binaries(f.dataType)).sum
+      case a: ArrayType => binaries(a.elementType)
+      case _ => 0
+    }
+    assert(!build.output.exists(_.dataType == BinaryType), build.output)
+    assert(build.output.map(a => binaries(a.dataType)).sum === 1, build.output)
+  }
+
+  test("g03 pipJoin refine reads the boxed polygon: no binary in its condition, one WKB built") {
+    assertBoxedRefine(SparkEntry.entry(spark))
+  }
+
+  test("g30 rule-planned refine reads the boxed polygon: no binary in its condition, one WKB built") {
+    // g30's naive predicate join over its 20 bands, on generated points
+    import spark.implicits._
+    val pts = spark.range(3000).select(col("id").as("event_id"),
+      (col("id") * 0.12 - 180.0).as("lon"), (col("id") % 170 - 85.0).as("lat"))
+    val polys = (0 until 20).map { i =>
+      val x0 = -180.0 + 18.0 * i
+      (i.toLong, s"POLYGON (($x0 -50, ${x0 + 10} -50, ${x0 + 10} 50, $x0 50, $x0 -50))")
+    }.toDF("poly_id", "wkt").withColumn("wkb", graft.functions.gf.st_geomfromtext(col("wkt"))).drop("wkt")
+    assertBoxedRefine(pts.join(polys,
+      graft.functions.gf.st_contains_point(polys("wkb"), pts("lon"), pts("lat"))))
   }
 
   test("d30 per-domain cap aggregates partially before the shuffle, no Window") {
