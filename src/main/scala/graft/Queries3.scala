@@ -1293,15 +1293,11 @@ object Queries3 {
       SELECT CAST(b AS BIGINT) AS d0, CAST(sum(val) AS BIGINT) AS s
       FROM v GROUP BY 1 ORDER BY 1""")),
 
-    // -- SparkStrategy physical path (PipJoinExec.scala): the same naive
-    // st_contains_point join as g30, planned by BroadcastPipJoinExec
-    // (spark.graft.celljoin.strategy=exec on an isolated newSession —
-    // PipJoinStrategySpec asserts the plan shape; this gate asserts the
-    // results against the closed-form PIP oracle).
-    ("g38_strategy_join", (s0, dir) => {
-      val s = s0.newSession()
-      functions.GraftFunctions.register(s)
-      s.conf.set("spark.graft.celljoin.strategy", "exec")
+    // -- a second fixture for the naive st_contains_point join that
+    // CellJoinRule plans (g30 has 20 bands at 18° spacing; this one 12
+    // wider bands at 30°), gated against the closed-form PIP oracle
+    ("g38_strategy_join", (s, dir) => {
+      prep(s)
       import s.implicits._
       import graft.functions.gf
       val pts = Queries.eventPoints(s, dir).where(col("event_id") < 3000)

@@ -42,18 +42,12 @@ object SpatialJoin {
     * polygon's `wkb` comes out as `poly_wkb`, in its place.
     */
   def pipJoin(pts: DataFrame, polys: DataFrame, z: Int,
-              broadcastPolys: Boolean = true,
-              predicate: String = "contains"): DataFrame = {
+              broadcastPolys: Boolean = true): DataFrame = {
     val cover = coverSide(polys, z)
     val side = if (broadcastPolys) broadcast(cover) else cover
-    val refine: Column = predicate match {
-      case "contains"   => gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat"))
-      case "intersects" => gf.st_intersects_point(col("poly_wkb"), col("lon"), col("lat"))
-      case other => throw new IllegalArgumentException(s"predicate $other")
-    }
     unboxed(pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
       .join(side, "cell")
-      .where(refine)
+      .where(gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat")))
       .drop("cell"))
   }
 

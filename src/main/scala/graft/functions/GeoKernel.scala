@@ -323,10 +323,7 @@ object GeoKernel {
   def cell(lon: Double, lat: Double, z: Int): Long = CellId.fromLonLat(lon, lat, z)
 
   def cellZ(c: Long): Int = CellId.zoom(c)
-  def cellX(c: Long): Int = CellId.x(c)
-  def cellY(c: Long): Int = CellId.y(c)
   def cellParent(c: Long, z: Int): Long = CellId.parentAt(c, z)
-  def cellQuadkey(c: Long): String = CellId.quadKey(c)
 
   def cover(wkb: Array[Byte], z: Int): Array[Long] = CellId.cover(decode(wkb), z)
 
@@ -357,6 +354,4 @@ object GeoKernel {
 
   def mercX(lon: Double): Double = Mercator.lonToX(lon)
   def mercY(lat: Double): Double = Mercator.latToY(lat)
-  def mercLon(x: Double): Double = Mercator.xToLon(x)
-  def mercLat(y: Double): Double = Mercator.yToLat(y)
 }

@@ -168,9 +168,6 @@ object GraftFunctions {
       if (!spark.experimental.extraOptimizations.contains(graft.plans.CellJoinRule))
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ graft.plans.CellJoinRule
-      if (!spark.experimental.extraStrategies.contains(graft.plans.PipJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.PipJoinStrategy
     }
   }
 
@@ -189,7 +186,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.inject(ext)
     ext.injectOptimizerRule(_ => graft.plans.CellJoinRule)
-    ext.injectPlannerStrategy(_ => graft.plans.PipJoinStrategy)
   }
 }
 

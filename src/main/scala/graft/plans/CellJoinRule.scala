@@ -51,8 +51,10 @@ import org.apache.spark.sql.graft.{StBox, StCell, StContainsPoint, StCover, StCo
   *
   * The rule fires only when the join condition IS the bare spatial
   * predicate over WKB (the rewritten plans carry the predicate under an And, so they
-  * never re-fire). Zoom is configurable with `spark.graft.celljoin.zoom`
-  * (default 4, clamped to [0, 18]). Register at runtime through
+  * never re-fire). It is the one planner entry for these joins: Spark picks
+  * the physical equi-join. Zoom is configurable with
+  * `spark.graft.celljoin.zoom` (an integer, default 4, clamped to [0, 18];
+  * anything else is refused). Register at runtime through
   * `spark.experimental.extraOptimizations` (GraftFunctions.register) or at
   * build time via GraftExtensions. */
 object CellJoinRule extends Rule[LogicalPlan] {
@@ -60,10 +62,14 @@ object CellJoinRule extends Rule[LogicalPlan] {
   /** Matches CellId.cover's default cap. */
   private val MaxCoverCells = 4096L
 
+  private val ZoomKey = "spark.graft.celljoin.zoom"
+
+  /** A malformed value is refused: silently planning at another zoom
+    * would hide the typo behind a different cover size. */
   private def zoom: Int = {
-    val z =
-      try SQLConf.get.getConfString("spark.graft.celljoin.zoom", "4").toInt
-      catch { case _: Exception => 4 }
+    val v = SQLConf.get.getConfString(ZoomKey, "4")
+    val z = v.trim.toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"$ZoomKey must be an integer zoom level, got '$v'"))
     math.max(0, math.min(18, z))
   }
 
@@ -167,11 +173,7 @@ object CellJoinRule extends Rule[LogicalPlan] {
   private def matchPredicate(pred: Expression, left: LogicalPlan,
                              right: LogicalPlan): Option[SpatialMatch] = {
     val lSet = left.outputSet; val rSet = right.outputSet
-    // spark.graft.celljoin.strategy=exec hands point joins to
-    // PipJoinStrategy's physical operator instead (PipJoinExec.scala)
-    val execMode = PipJoinStrategy.mode == "exec"
     pred match {
-      case StContainsPoint(_, _, _) | StIntersectsPoint(_, _, _) if execMode => None
       // the geometry as WKB: a predicate over a boxed struct keeps its plan
       case StContainsPoint(w, lo, la) if w.dataType == BinaryType => matchPoint(w, lo, la, lSet, rSet)
       case StIntersectsPoint(w, lo, la) if w.dataType == BinaryType => matchPoint(w, lo, la, lSet, rSet)

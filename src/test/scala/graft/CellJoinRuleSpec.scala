@@ -1,8 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{gf, GraftFunctions}
+import graft.functions.{gf, GeoKernel, GraftFunctions}
 
 /** The optimizer rule must turn a naive spatial-predicate join (nested
   * loop) into a cell equi-join, with identical results. The only
@@ -21,7 +22,8 @@ class CellJoinRuleSpec extends AnyFunSuite {
         s"unguarded quadratic join in:\n$plan")
   }
 
-  test("naive st_contains_point join is rewritten to a hash join on cell") {
+  /** 3000 event points and 20 lat-bounded bands, 10° wide at 18° spacing. */
+  private lazy val bands = {
     val s = SparkTestSession.spark
     GraftFunctions.register(s)
     import s.implicits._
@@ -32,20 +34,62 @@ class CellJoinRuleSpec extends AnyFunSuite {
       (i.toLong, s"POLYGON (($x0 -50, ${x0 + 10} -50, ${x0 + 10} 50, $x0 50, $x0 -50))")
     }.toDF("poly_id", "wkt")
       .withColumn("wkb", gf.st_geomfromtext(col("wkt"))).drop("wkt").cache()
+    (pts, polys)
+  }
 
+  private def pairs(df: DataFrame): Array[(Long, Long)] =
+    df.select("event_id", "poly_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+
+  test("naive st_contains_point join is rewritten to a hash join on cell") {
+    val (pts, polys) = bands
     // naive formulation: join condition is ONLY the spatial predicate
     val naive = pts.join(polys,
       gf.st_contains_point(polys("wkb"), pts("lon"), pts("lat")))
     assertCellRewrite(naive.queryExecution.executedPlan.toString)
 
     // results must equal the hand-built cell join
-    val got = naive.select("event_id", "poly_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val want = engine.SpatialJoin.pipJoin(pts, polys, z = 4)
-      .select("event_id", "poly_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val got = pairs(naive)
+    val want = pairs(engine.SpatialJoin.pipJoin(pts, polys, z = 4))
     assert(got.sameElements(want), s"${got.length} vs ${want.length}")
     assert(got.nonEmpty)
+  }
+
+  test("naive st_intersects_point join is rewritten and matches a brute-force join") {
+    val (pts, polys) = bands
+    val pred = gf.st_intersects_point(polys("wkb"), pts("lon"), pts("lat"))
+    val naive = pts.join(polys, pred)
+    assertCellRewrite(naive.queryExecution.executedPlan.toString)
+    val got = pairs(naive)
+    // oracle: every (point, band) pair of the collected rows tested by the kernel
+    // (a join guarded with `&& lit(true)` is no oracle: the optimizer folds
+    // the guard away before the rule runs, so the rule plans it too)
+    val bandRows = polys.collect().map(r => (r.getAs[Long]("poly_id"), r.getAs[Array[Byte]]("wkb")))
+    val brute = (for {
+      p <- pts.collect(); (id, w) <- bandRows
+      if GeoKernel.intersectsPoint(w, p.getAs[Double]("lon"), p.getAs[Double]("lat"))
+    } yield (p.getAs[Long]("event_id"), id)).sorted
+    assert(got.sameElements(brute), s"${got.length} vs ${brute.length}")
+    // the boundary predicate accepts every interior hit
+    val interior = pairs(pts.join(polys,
+      gf.st_contains_point(polys("wkb"), pts("lon"), pts("lat"))))
+    assert(interior.nonEmpty && interior.toSet.subsetOf(got.toSet))
+  }
+
+  test("a malformed celljoin zoom is refused, naming the key and the value") {
+    val (pts, polys) = bands
+    val s = SparkTestSession.spark
+    s.conf.set("spark.graft.celljoin.zoom", "abc")
+    try {
+      val e = intercept[Exception] {
+        pts.join(polys, gf.st_contains_point(polys("wkb"), pts("lon"), pts("lat")))
+          .queryExecution.optimizedPlan
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(m => m.contains("spark.graft.celljoin.zoom") && m.contains("'abc'")),
+        msgs.mkString("\n"))
+    } finally s.conf.unset("spark.graft.celljoin.zoom")
   }
 
   test("oversized polygons at a user-raised zoom fall back instead of throwing") {
@@ -88,10 +132,12 @@ class CellJoinRuleSpec extends AnyFunSuite {
     assertCellRewrite(naive.queryExecution.executedPlan.toString)
     val got = naive.select("id", "id_b")
       .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    // oracle: brute-force via a guarded (non-matching) condition
-    val brute = a.join(b, gf.st_intersects(col("wkb"), col("wkb_b")) && lit(true))
-      .select("id", "id_b")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    // oracle: every pair of the collected rows tested by the kernel
+    val bRows = b.collect().map(r => (r.getAs[String]("id_b"), r.getAs[Array[Byte]]("wkb_b")))
+    val brute = (for {
+      ra <- a.collect(); (idB, wb) <- bRows
+      if GeoKernel.intersects(ra.getAs[Array[Byte]]("wkb"), wb)
+    } yield (ra.getAs[String]("id"), idB)).sorted
     assert(got.sameElements(brute), s"${got.length} vs ${brute.length}")
     assert(got.length > 64, "expected overlapping neighbors beyond self-matches")
   }
