@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * metrics"). Reference analog: `gdal raster tile --resume` — "Generate only
   * missing files" by re-listing outputs
   * (/root/reference/apps/gdalalg_raster_tile.cpp:289); our version records
-  * completed work units in a manifest table and anti-joins pending keys.
+  * completed work units in a manifest table and skips the keys it holds.
   *
   * A work unit is a key group (e.g. a zoom level, a cell prefix, a partition
   * range). Completion is atomic per unit: output parquet lands under
@@ -23,13 +23,17 @@ object Manifest {
 
   def manifestPath(outDir: String): String = s"$outDir/_graft_manifest"
 
-  def completedUnits(spark: SparkSession, outDir: String): Set[String] = {
+  /** Which of `units` the manifest records as completed. The filter runs
+    * before the collect, so the driver holds at most the rows of `units`,
+    * not every row the manifest has appended. */
+  def completedUnits(spark: SparkSession, outDir: String, units: Seq[String]): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(manifestPath(outDir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
+    if (!fs.exists(p) || units.isEmpty) Set.empty
     else {
       import spark.implicits._
-      spark.read.parquet(manifestPath(outDir)).select("unit").as[String].collect().toSet
+      spark.read.parquet(manifestPath(outDir)).where(col("unit").isin(units: _*))
+        .select("unit").as[String].collect().toSet
     }
   }
 
@@ -44,7 +48,7 @@ object Manifest {
   def runResumable(spark: SparkSession, outDir: String, jobId: String,
                    units: Seq[String], inputFingerprint: String)
                   (process: String => Long): Seq[String] = {
-    val done = completedUnits(spark, outDir)
+    val done = completedUnits(spark, outDir, units)
     val todo = units.filterNot(done)
     todo.foreach { u =>
       val t0 = System.nanoTime()

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBus
 import scala.collection.mutable
 
 /** Task/stage execution metrics captured per job section — the "metrics"
@@ -41,22 +42,21 @@ object Metrics {
   }
 
   /** Run `f`, returning its result plus the aggregated task metrics of all
-    * Spark work it scheduled. */
+    * Spark work it scheduled. The listener bus is asynchronous, but the
+    * scheduler queues every task-end event of a job before its action
+    * returns, so draining the bus is a barrier: before `f`, so earlier
+    * jobs' events stay out of the stats, and after `f`, so all of `f`'s are
+    * in. Each drain waits at most 2 s; past that the stats hold what has
+    * landed. */
   def measure[T](spark: SparkSession)(f: => T): (T, TaskStats) = {
+    val sc = spark.sparkContext
     val rec = new Recorder
-    spark.sparkContext.addSparkListener(rec)
+    ListenerBus.drain(sc, 2000)
+    sc.addSparkListener(rec)
     try {
       val out = f
-      // listener bus is async; poll briefly so queued task-end events land
-      val deadline = System.nanoTime() + 2000000000L
-      var last = rec.acc.get
-      var stable = 0
-      while (System.nanoTime() < deadline && stable < 3) {
-        Thread.sleep(50)
-        val cur = rec.acc.get
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
+      ListenerBus.drain(sc, 2000)
       (out, rec.acc.get)
-    } finally spark.sparkContext.removeSparkListener(rec)
+    } finally sc.removeSparkListener(rec)
   }
 }

@@ -10,8 +10,9 @@ import graft.functions.gf
   * — base tiles at max zoom, overview zoom z-1 built from the 4 children
   * (MosaicDataset, :2003), parallel fan-out in jobs (:3927), `--resume`
   * skipping existing tiles (:289). Here the tile grid is pure expression math
-  * (tile_x/tile_y), the pyramid is an iterative parent aggregation, and
-  * resume is a manifest anti-join (Manifest.scala).
+  * (tile_x/tile_y), the pyramid is one aggregation over each point's tile
+  * ancestors, and resume skips the units the manifest already records
+  * (Manifest.scala).
   */
 object TileJob {
 
@@ -30,22 +31,16 @@ object TileJob {
       .withColumn("y", gf.tile_y(col("lat"), lit(z)))
       .groupBy("z", "x", "y").agg(count(lit(1)).as("n"))
 
-  /** Full pyramid of tile counts from maxZ down to minZ, computed the
-    * reference way: base level aggregated once, each overview level from its
-    * children ((x/2, y/2) parent — gdalalg_raster_tile.cpp:2003 semantics,
-    * counts sum like an Average-kernel mosaic's weight plane). One shuffle
-    * per level, each level 4x smaller. */
-  def pyramidCounts(pts: DataFrame, minZ: Int, maxZ: Int): DataFrame = {
-    // base level aggregated once, then ONE explode over the zoom levels +
-    // ONE re-aggregation: two shuffles total and a single codegen stage,
-    // instead of the previous per-level union (6 compiled stages + cache)
-    // whose first-execution JIT dominated wall time
-    tileCounts(pts, maxZ)
-      .withColumn("zo", explode(lit((minZ to maxZ).toArray)))
-      .select(col("zo").cast("int").as("z"),
-        expr(s"CAST(x div CAST(pow(2, $maxZ - zo) AS BIGINT) AS INT)").as("x"),
-        expr(s"CAST(y div CAST(pow(2, $maxZ - zo) AS BIGINT) AS INT)").as("y"),
-        col("n"))
-      .groupBy("z", "x", "y").agg(sum("n").as("n"))
-  }
+  /** Full pyramid of tile counts from maxZ down to minZ in one shuffle: each
+    * point's tile is computed once at maxZ, and its tile at every zoom z is
+    * the ancestor (x >> (maxZ - z), y >> (maxZ - z)) — the (x/2, y/2)
+    * parent of gdalalg_raster_tile.cpp:2003 applied maxZ - z times, exact
+    * because tiles are clamped to [0, 2^z). Counts sum like an
+    * Average-kernel mosaic's weight plane. */
+  def pyramidCounts(pts: DataFrame, minZ: Int, maxZ: Int): DataFrame =
+    pts.select(gf.tile_x(col("lon"), lit(maxZ)).as("x"), gf.tile_y(col("lat"), lit(maxZ)).as("y"))
+      .withColumn("z", explode(lit((minZ to maxZ).toArray)))
+      .select(col("z"), expr(s"shiftright(x, $maxZ - z)").as("x"),
+        expr(s"shiftright(y, $maxZ - z)").as("y"))
+      .groupBy("z", "x", "y").agg(count(lit(1)).as("n"))
 }

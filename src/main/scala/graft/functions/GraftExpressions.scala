@@ -29,6 +29,17 @@ object ColumnBridge {
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 }
 
+/** Drain of the listener bus, which is private[spark]: the scheduler posts
+  * a job's task-end and job-end events before its action returns, so once
+  * the bus is empty every listener has seen them. */
+object ListenerBus {
+  /** Waits at most `timeoutMs` for every queued event to be delivered;
+    * returns at the deadline even if the bus is still busy. */
+  def drain(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    try sc.listenerBus.waitUntilEmpty(timeoutMs)
+    catch { case _: java.util.concurrent.TimeoutException => () }
+}
+
 // ------------------------------------------------------------------ codecs
 
 /** st_geomfromtext(wkt) → WKB (null on unparseable WKT).

@@ -176,25 +176,66 @@ class EngineSpec extends AnyFunSuite {
         if (u == "z4") throw new RuntimeException("killed") else 1L
       }
     }
-    assert(Manifest.completedUnits(spark, dir2) == Set("z3"))
+    assert(Manifest.completedUnits(spark, dir2, units) == Set("z3"))
     val r3 = Manifest.runResumable(spark, dir2, "job2", units, "fp1")(_ => 1L)
     assert(r3 == Seq("z4", "z5"))
-    assert(Manifest.completedUnits(spark, dir2) == units.toSet)
+    assert(Manifest.completedUnits(spark, dir2, units) == units.toSet)
+    assert(Manifest.completedUnits(spark, dir2, Seq("z4", "z9")) == Set("z4"))
   }
 
   test("manifest records task metrics per unit (lineage + metrics)") {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_metrics").toString
-    Manifest.runResumable(s, dir, "jobM", Seq("u1"), "fp") { _ =>
-      // real Spark work so the listener sees tasks
-      s.range(0, 100000, 1, 8).selectExpr("sum(id)").collect()
-      100000L
+    val units = (1 to 10).map(i => s"u$i")
+    // each unit runs one 7-task job, and a listener that is slow on every
+    // task end keeps the shared bus busy after a job returns: a barrier
+    // that returns before the unit's task-end events land, or lets in those
+    // of the 40-task job run just before, records another count
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = Thread.sleep(10)
     }
-    val rec = s.read.parquet(Manifest.manifestPath(dir))
-      .selectExpr("unit", "rows", "metrics_json").as[(String, Long, String)].collect().head
-    assert(rec._1 == "u1" && rec._2 == 100000L)
-    assert(rec._3.contains("\"n_tasks\":") && !rec._3.contains("\"n_tasks\":0"))
-    assert(rec._3.contains("run_time_ms"))
+    s.sparkContext.addSparkListener(slow)
+    try {
+      s.sparkContext.parallelize(1 to 1000, 40).count()
+      Manifest.runResumable(s, dir, "jobM", units, "fp") { _ =>
+        s.sparkContext.parallelize(1 to 1000, 7).count()
+      }
+    } finally s.sparkContext.removeSparkListener(slow)
+    val recs = s.read.parquet(Manifest.manifestPath(dir))
+      .selectExpr("unit", "rows", "metrics_json").as[(String, Long, String)].collect()
+    assert(recs.map(_._1).sorted.toSeq == units.sorted)
+    recs.foreach { case (u, rows, m) =>
+      assert(rows == 1000L, u)
+      assert(m.contains("\"n_tasks\":7,") && m.contains("run_time_ms"), s"$u: $m")
+    }
+  }
+
+  test("pyramid counts equal the per-zoom tile counts, clamped and boundary points included") {
+    val (minZ, maxZ) = (0, 9)
+    def boundaries(z: Int): Seq[Int] = if (z <= 6) 1 until (1 << z) else Seq(1, (1 << z) / 2 + 1, (1 << z) - 1)
+    // lons exactly on tile column edges; lats exactly on tile row edges
+    val edgeLons = (1 to maxZ).flatMap(z => boundaries(z).map(k => -180.0 + 360.0 * k / (1 << z)))
+    val edgeLats = (1 to 6).flatMap(z => boundaries(z).map(k =>
+      math.toDegrees(math.atan(math.sinh(math.Pi * (1 - 2.0 * k / (1 << z)))))))
+    val lons = Seq(-180.0, 180.0, 0.0, -179.99, 179.99)
+    val lats = Seq(85.0511, -85.0511, 89.9, -89.9, 0.0, Mercator.MaxLat, -Mercator.MaxLat)
+    val edge = (lons ++ edgeLons).flatMap(lon => lats.map(lat => (lon, lat))) ++
+      edgeLats.flatMap(lat => lons.map(lon => (lon, lat)))
+    val input = edge.toDF("lon", "lat").union(pts.select("lon", "lat"))
+    val pyr = TileJob.pyramidCounts(input, minZ, maxZ)
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    assert(pyr.schema.map(f => (f.name, f.dataType)) ==
+      Seq("z" -> IntegerType, "x" -> IntegerType, "y" -> IntegerType, "n" -> LongType))
+    val want = (minZ to maxZ).map(z => TileJob.tileCounts(input, z)).reduce(_ union _)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.as[(Int, Int, Int, Long)].collect().sorted.toSeq
+    val got = rows(pyr)
+    assert(got == rows(want))
+    // the clamped corners land in the corner tiles at every zoom
+    (minZ to maxZ).foreach { z =>
+      val last = (1 << z) - 1
+      assert(got.exists(r => r._1 == z && r._2 == last && r._3 == 0), s"z=$z")
+      assert(got.exists(r => r._1 == z && r._2 == 0 && r._3 == last), s"z=$z")
+    }
   }
 }

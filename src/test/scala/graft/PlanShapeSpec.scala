@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.graft.StContainsPoint
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
-import graft.engine.{Raster, TileSink, CalcExpr, Ann}
+import graft.engine.{Raster, TileSink, CalcExpr, Ann, TileJob}
 
 /** Physical-plan assertions for the round-4 operators' scale claims (the
   * PLANS.md contract, checked mechanically): narrow ops stay shuffle-free,
@@ -186,6 +186,13 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(p.contains("BroadcastHashJoin"), p.take(1200))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       p.take(1200))
+  }
+
+  test("tile pyramid is one shuffle with integer parent math (g02's operator)") {
+    val pts = spark.range(0, 1000).select((rand(1) * 360 - 180).as("lon"), (rand(2) * 170 - 85).as("lat"))
+    val p = TileJob.pyramidCounts(pts, 3, 8).queryExecution.executedPlan.toString
+    assert(exchanges(p) === 1, p)
+    assert(!p.toUpperCase.contains("POWER"), p)
   }
 
   /** The cell PIP join's refine must not copy polygon bytes per candidate:
