@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{gf, GraftFunctions}
+import graft.functions.gf
 import graft.engine.{SpatialJoin, TileJob, Knn}
 import graft.sql.OgrCompat
 import QueryFixtures._
@@ -20,11 +20,6 @@ import QueryFixtures._
   *  - every query ends with a deterministic ORDER BY on both sides
   */
 object Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def prep(s: SparkSession): Unit = GraftFunctions.register(s)
 
   /** Deterministic golden-ratio point cloud from the events table — the
     * engine-side twin of the oracle's lonOf/latOf SQL (same literals). */
@@ -1309,7 +1304,7 @@ object Queries {
           expr(s"1.0 + 2.0 * ${fract(s"CAST(p_partkey AS DOUBLE) * $sqrt3")}").as("w"))
         .withColumn("wkb", gf.st_geomfromtext(expr(rectWkt("cx", "cy", "w"))))
         .select("p_partkey", "wkb")
-      SpatialJoin.intersectsJoin(left, "o_orderkey", right, "p_partkey", z = 4)
+      SpatialJoin.intersectsJoin(left, right, z = 4)
         .select("o_orderkey", "p_partkey").orderBy("o_orderkey", "p_partkey")
     }, Some(s"""
       WITH l AS (SELECT o_orderkey, ${lonOfQ("o_orderkey")} AS cx, ${latOfQ("o_orderkey")} AS cy,

@@ -10,18 +10,6 @@ import QueryFixtures._
   * round-1 verdict flagged as missing). Same conventions as [[Queries]]. */
 object Queries2 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def prep(s: SparkSession): Unit = functions.GraftFunctions.register(s)
-
-  /** GDALChecksumImage column over per-pixel ints, negative-safe: the
-    * engine masks the accumulator with &0xffff per row (always the
-    * canonical [0,65535] representative), so the SQL twin takes the same
-    * representative of the total sum. */
-  private def cksCol(iv: String): String =
-    s"CAST(((sum($iv % ([7,11,13,17,19,23,29,31,37,41,43])[CAST((cy * 256 + cx) % 11 AS INT) + 1]) % 65536) + 65536) % 65536 AS BIGINT)"
-
   private def toInt(col: String): String = s"CAST(floor($col + 0.5) AS BIGINT)"
 
   private def cents0(c: String): String = s"CAST(floor($c * 100.0 + 0.5) AS BIGINT)"

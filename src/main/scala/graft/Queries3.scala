@@ -11,15 +11,6 @@ import QueryFixtures._
   * outputs where possible. */
 object Queries3 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def prep(s: SparkSession): Unit = functions.GraftFunctions.register(s)
-
-  /** GDALChecksumImage twin over a 256-px cell (same as Queries2.cksCol). */
-  private def cksCol(iv: String): String =
-    s"CAST(((sum($iv % ([7,11,13,17,19,23,29,31,37,41,43])[CAST((cy * 256 + cx) % 11 AS INT) + 1]) % 65536) + 65536) % 65536 AS BIGINT)"
-
   private def toInt(col: String): String = s"CAST(floor($col + 0.5) AS BIGINT)"
 
   /** poly/idlink fixture layers for the OGR SQL text entry point

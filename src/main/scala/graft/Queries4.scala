@@ -9,11 +9,6 @@ import QueryFixtures._
   * outputs where possible. */
 object Queries4 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def prep(s: SparkSession): Unit = functions.GraftFunctions.register(s)
-
   val defs6: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // -- NTv2-style grid-shift datum transform (g52): the bilinear

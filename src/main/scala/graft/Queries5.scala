@@ -7,11 +7,6 @@ import QueryFixtures._
 /** Round-5 continuation gates. Same conventions as [[Queries]]. */
 object Queries5 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def prep(s: SparkSession): Unit = functions.GraftFunctions.register(s)
-
   // ------------------------------------------------------------------
   // SURF correlator gates (r53 detection, r54 matching). The synthetic
   // pair is a lattice of square pyramids with quasi-random integer

@@ -2,14 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import QueryFixtures.t
 
 /** Round-5 final-continuation gates: the remaining training-data-pipeline
   * operators (semantic dedup, PII redaction, composite quality rules).
   * Same conventions as [[Queries]]. */
 object Queries6 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   // PII patterns shared by the Spark path and the DuckDB twin. Kept inside
   // the common Java-regex/RE2 subset (char classes, bounded repetition) so

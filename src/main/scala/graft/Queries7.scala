@@ -2,15 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import QueryFixtures.t
 
 /** Round-5 eighth-continuation gates: BPE subword tokenizer training /
   * encoding (Sennrich et al. 2016) and BM25 corpus retrieval (Robertson &
   * Zaragoza 2009) — the two classic text-pipeline operators the
   * training-data family still lacked. Same conventions as [[Queries]]. */
 object Queries7 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   private val NMerges = 12
   private val VocabCap = 4096L

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Shared constants + dual-dialect SQL snippet generators for the
   * correctness gate. Every snippet here is emitted BOTH into the Spark
   * query (via expr(...)) and into the DuckDB oracle SQL, built from the
@@ -13,6 +15,20 @@ package graft
   * boundary — measure-zero for golden-ratio-generated inputs.
   */
 object QueryFixtures {
+
+  /** A gate table: `<dir>/<name>.parquet`. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.parquet(s"$dir/$name.parquet")
+
+  /** Registers the graft functions and the cell-join rule (idempotent). */
+  def prep(s: SparkSession): Unit = graft.functions.GraftFunctions.register(s)
+
+  /** GDALChecksumImage column over per-pixel ints `iv` of a 256-px cell,
+    * negative-safe: the engine masks the accumulator with &0xffff per row
+    * (always the canonical [0,65535] representative), so the SQL twin takes
+    * the same representative of the total sum. */
+  def cksCol(iv: String): String =
+    s"CAST(((sum($iv % ([7,11,13,17,19,23,29,31,37,41,43])[CAST((cy * 256 + cx) % 11 AS INT) + 1]) % 65536) + 65536) % 65536 AS BIGINT)"
 
   /** Shortest round-trip literal: parses to the identical double in the
     * JVM, DuckDB and Spark SQL. */

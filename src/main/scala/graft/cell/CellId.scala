@@ -15,8 +15,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object CellId {
 
-  final val MaxZoom = 28
-
   def pack(z: Int, x: Int, y: Int): Long =
     (z.toLong << 58) | (x.toLong << 29) | y.toLong
 

@@ -427,7 +427,6 @@ object Focal {
 
   def slope(tiles: Dataset[Tile]): Dataset[Tile] = focal3x3(tiles, slopeWindow)
   def hillshade(tiles: Dataset[Tile]): Dataset[Tile] = focal3x3(tiles, hillshadeWindow())
-  def focalMean(tiles: Dataset[Tile]): Dataset[Tile] = focal3x3(tiles, meanWindow)
   def aspect(tiles: Dataset[Tile]): Dataset[Tile] = focal3x3(tiles, aspectWindow())
   def tpi(tiles: Dataset[Tile]): Dataset[Tile] = focal3x3(tiles, tpiWindow)
   def tri(tiles: Dataset[Tile], alg: String = "Riley"): Dataset[Tile] =

@@ -1,8 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Linear referencing — the ogrlineref utility family
   * (/root/reference/apps/ogrlineref.cpp): station a point along a polyline
   * (Project, ogrlineref.cpp:424, which the reference delegates to GEOS
@@ -17,8 +14,9 @@ import org.apache.spark.sql.functions._
   * return cumulative-length-before + factor·segment-length.
   *
   * Scale shape: lines are the small side (a route table), points the big
-  * side — the DataFrame API broadcasts the line coordinates and stations
-  * every point map-only, the same one-sided plan as the PIP join.
+  * side — the kernels are pure functions of one line and one point, so a
+  * caller broadcasts the line coordinates and stations every point
+  * map-only, the same one-sided plan as the PIP join.
   */
 object LinearRef {
 
@@ -167,21 +165,5 @@ object LinearRef {
       s += step
     }
     out.toSeq
-  }
-
-  /** DataFrame API: station every point of `points` (cols line_id, px, py)
-    * against the broadcast `lines` (cols line_id, coords: array<double>) —
-    * map-only on the point side after a broadcast hash join on line_id. */
-  def stationPoints(points: DataFrame, lines: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    val proj = udf { (coords: Seq[Double], px: Double, py: Double) =>
-      val (s, d2) = project(coords.toArray, px, py)
-      Array(s, d2)
-    }
-    points.join(broadcast(lines), "line_id")
-      .withColumn("__p", proj(col("coords"), col("px"), col("py")))
-      .withColumn("station", col("__p").getItem(0))
-      .withColumn("dist2", col("__p").getItem(1))
-      .drop("__p", "coords")
   }
 }

@@ -658,7 +658,6 @@ final class MdArray private (
 
   def sumAxis(axis: Int): MdArray = reduceAxis(axis, _ + _, 0.0)
   def maxAxis(axis: Int): MdArray = reduceAxis(axis, math.max, Double.NegativeInfinity)
-  def minAxis(axis: Int): MdArray = reduceAxis(axis, math.min, Double.PositiveInfinity)
 
   /** Flatten to a coordinate table (d0..dN-1, v) — the gate/inspection
     * surface (GDALMDArray::AsClassicDataset analog for rank ≤ 2 plus the

@@ -1,7 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.Mercator
 
@@ -1167,17 +1166,6 @@ object Raster {
       y += 1
     }
     cks
-  }
-
-  /** Checksum as a typed Aggregator — the distributed raster-equality oracle
-    * (per-tile, so order within a tile is the reference's row-major order). */
-  val tileChecksum: Aggregator[Tile, Long, Long] = new Aggregator[Tile, Long, Long] {
-    def zero: Long = 0L
-    def reduce(b: Long, t: Tile): Long = (b + checksum(t.pixels, t.w, t.h)) & 0xffffffffL
-    def merge(a: Long, b: Long): Long = (a + b) & 0xffffffffL
-    def finish(r: Long): Long = r
-    def bufferEncoder: Encoder[Long] = Encoders.scalaLong
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
   }
 
 }

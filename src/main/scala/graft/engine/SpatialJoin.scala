@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, StBox}
 import graft.functions.gf
 import graft.geom.{BoolOps, Geom, Wkb}
+import graft.plans.CellJoinRule
 
 /** Cell-indexed spatial joins — the north-rule operator (SURVEY.md §2.E).
   *
@@ -12,7 +13,7 @@ import graft.geom.{BoolOps, Geom, Wkb}
   * feature, iterate candidates, refine with prepared geometry",
   * /root/reference/ogr/ogrsf_frmts/generic/ogrlayer.cpp:5385-5538):
   *
-  *   polygons --st_cover(z)--> exploded (cell, poly)   [small side: broadcast]
+  *   polygons --cover(z)----> exploded (cell, poly)   [small side: broadcast]
   *   points   --st_cell(z)---> (cell, point)
   *   equi-join on cell → exact PIP refine (st_contains_point)
   *
@@ -22,8 +23,11 @@ import graft.geom.{BoolOps, Geom, Wkb}
   * points outside the envelope without copying the polygon's bytes.
   *
   * A point lands in exactly one cell, so point-vs-polygon candidates are
-  * already distinct — no dedup needed. Polygon-vs-polygon joins dedup on the
-  * id pair before the (expensive) exact predicate.
+  * already distinct — no dedup needed. Polygon-vs-polygon joins are not
+  * built here: `intersectsJoin` writes the naive predicate join and
+  * CellJoinRule plans it (both sides explode their covers; a pair is kept
+  * only at the smallest cell both covers share; geometries whose cover is
+  * over the cap take a nested-loop fallback).
   *
   * Scale notes (100 TB):
   *  - polygon side exploded by its cover; choose z so covers stay small
@@ -83,23 +87,17 @@ object SpatialJoin {
   private def unboxed(joined: DataFrame): DataFrame =
     joined.withColumn("poly_wkb", col("poly_wkb.wkb"))
 
-  /** Polygon-polygon (layer algebra style) intersects join between `left`
-    * (leftId, wkb) and `right` (rightId, wkb2 renamed on the fly): cover both
-    * sides, equi-join on cell, dedup the id pair (a pair can share many
-    * cells), exact refine. Reference: Intersection/Union/Clip layer loops
-    * (ogrlayer.cpp:5385,5803,7537).
+  /** Polygon-polygon (layer algebra style) intersects join: one row per
+    * (`left` row, `right` row) whose `wkb` geometries intersect, left
+    * columns then right columns, the right `wkb` renamed `wkb_r`. A thin
+    * builder: it writes the naive st_intersects join with the right side
+    * broadcast and hands it to CellJoinRule at zoom z, the one
+    * polygon-polygon cell join. Reference: Intersection/Union/Clip layer
+    * loops (ogrlayer.cpp:5385,5803,7537).
     */
-  def intersectsJoin(left: DataFrame, leftId: String,
-                     right: DataFrame, rightId: String, z: Int,
-                     broadcastRight: Boolean = true): DataFrame = {
-    val l = left.withColumn("cell", explode(gf.st_cover(col("wkb"), lit(z))))
-    val rBase = right.withColumnRenamed("wkb", "wkb_r")
-      .withColumn("cell", explode(gf.st_cover(col("wkb_r"), lit(z))))
-    val r = if (broadcastRight) broadcast(rBase) else rBase
-    l.join(r, "cell")
-      .dropDuplicates(leftId, rightId)
-      .where(gf.st_intersects(col("wkb"), col("wkb_r")))
-      .drop("cell")
+  def intersectsJoin(left: DataFrame, right: DataFrame, z: Int): DataFrame = {
+    val r = broadcast(right.withColumnRenamed("wkb", "wkb_r"))
+    CellJoinRule.plan(left.join(r, gf.st_intersects(col("wkb"), col("wkb_r"))), z)
   }
 
   /** Layer-algebra Identity (OGRLayer::Identity,
@@ -112,16 +110,15 @@ object SpatialJoin {
     * set is deterministic (the reference drops empty remainders; callers
     * filter on st_isempty for that behavior — documented).
     *
-    * Spark shape: ONE cell-cover equi-join (method side broadcast when
-    * small), pair pieces map-side, the remainder fold is one groupByKey
+    * Spark shape: ONE cell-cover equi-join (intersectsJoin, method side
+    * broadcast), pair pieces map-side, the remainder fold is one groupByKey
     * on lid — the same distribution the reference's per-feature loop has,
     * minus the single-node bottleneck. */
-  def identity(left: DataFrame, right: DataFrame, z: Int,
-               broadcastRight: Boolean = true): DataFrame = {
+  def identity(left: DataFrame, right: DataFrame, z: Int): DataFrame = {
     val spark = left.sparkSession
     import spark.implicits._
-    val cand = intersectsJoin(left.select(col("lid"), col("wkb")), "lid",
-      right.select(col("rid"), col("wkb")), "rid", z, broadcastRight)
+    val cand = intersectsJoin(left.select(col("lid"), col("wkb")),
+      right.select(col("rid"), col("wkb")), z)
       .select("lid", "rid", "wkb", "wkb_r")
       .as[(Long, Long, Array[Byte], Array[Byte])]
     val pairs = cand.map { case (lid, rid, a, b) =>
@@ -144,8 +141,7 @@ object SpatialJoin {
 
   /** Layer-algebra Erase (OGRLayer::Erase): each left feature minus the
     * union of intersecting right features — Identity's remainder rows. */
-  def erase(left: DataFrame, right: DataFrame, z: Int,
-            broadcastRight: Boolean = true): DataFrame =
-    identity(left, right, z, broadcastRight)
+  def erase(left: DataFrame, right: DataFrame, z: Int): DataFrame =
+    identity(left, right, z)
       .where(col("rid").isNull).drop("rid")
 }

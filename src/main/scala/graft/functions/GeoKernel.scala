@@ -177,7 +177,6 @@ object GeoKernel {
   def isEmpty(wkb: Array[Byte]): Boolean = decode(wkb).isEmpty
   def isValid(wkb: Array[Byte]): Boolean = GeoOps.isValid(decode(wkb))
   def geometryType(wkb: Array[Byte]): String = decode(wkb).typeName
-  def numGeometries(wkb: Array[Byte]): Int = GeoOps.dump(decode(wkb)).length
 
   // ---- accessors / measures
   def stX(wkb: Array[Byte]): Double = decode(wkb) match {

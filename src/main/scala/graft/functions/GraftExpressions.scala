@@ -29,6 +29,19 @@ object ColumnBridge {
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 }
 
+/** LogicalPlan → DataFrame bridge for engine code that rewrites an analyzed
+  * plan itself (CellJoinRule.plan): Dataset.ofRows is private[sql]. The
+  * plan is marked analyzed, so the analyzer leaves the rewrite as built. */
+object DatasetBridge {
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    plan.setAnalyzed()
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  }
+}
+
 /** Drain of the listener bus, which is private[spark]: the scheduler posts
   * a job's task-end and job-end events before its action returns, so once
   * the bus is empty every listener has seen them. */
@@ -280,7 +293,6 @@ case class StPoint(left: Expression, right: Expression)
 abstract class GeoUnary extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   protected def method: String
-  protected def fromKernel(v: Any): Any = v
   protected def genCall(c: String): String
   protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => genCall(c))

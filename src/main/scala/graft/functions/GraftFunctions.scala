@@ -181,7 +181,10 @@ object GraftFunctions {
     }
 }
 
-/** Usage: spark.builder.config("spark.sql.extensions", "graft.functions.GraftExtensions") */
+/** Usage: spark.builder.config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * before the first SparkContext starts: the builder reads the key from the
+  * context's conf, so a session on a running context takes it through
+  * `builder.withExtensions(new GraftExtensions)` instead. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.inject(ext)

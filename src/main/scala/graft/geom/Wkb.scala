@@ -70,9 +70,6 @@ object Wkb {
     r.readGeom()
   }
 
-  def tryRead(bytes: Array[Byte]): Option[Geom] =
-    try Some(read(bytes)) catch { case _: Exception => None }
-
   private final class Reader(bytes: Array[Byte]) {
     private val buf = ByteBuffer.wrap(bytes)
 

@@ -1,12 +1,15 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{BinaryType, LongType}
-import org.apache.spark.sql.graft.{StBox, StCell, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint}
 
 /** Optimizer rule: rewrite naive spatial-predicate joins
   *
@@ -14,8 +17,10 @@ import org.apache.spark.sql.graft.{StBox, StCell, StContainsPoint, StCover, StCo
   *   a      JOIN b     ON st_intersects(a.wkb, b.wkb)
   *
   * — which Spark can only plan as nested-loop / cartesian joins, O(n·m)
-  * predicate evaluations — into the cell-indexed equi-joins the engine's
-  * SpatialJoin API builds by hand:
+  * predicate evaluations — into cell-indexed equi-joins (the point case is
+  * the shape SpatialJoin.pipJoin builds by hand; the geom case is the one
+  * polygon-polygon join, which SpatialJoin.intersectsJoin builds through
+  * `plan`):
   *
   *   point case:  points + st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_cover(wkb,z))
   *                … refined by the ORIGINAL predicate (a point is in exactly
@@ -50,13 +55,23 @@ import org.apache.spark.sql.graft.{StBox, StCell, StContainsPoint, StCover, StCo
   * scan is exactly what this rewrite recovers declaratively.
   *
   * The rule fires only when the join condition IS the bare spatial
-  * predicate over WKB (the rewritten plans carry the predicate under an And, so they
-  * never re-fire). It is the one planner entry for these joins: Spark picks
-  * the physical equi-join. Zoom is configurable with
-  * `spark.graft.celljoin.zoom` (an integer, default 4, clamped to [0, 18];
-  * anything else is refused). Register at runtime through
-  * `spark.experimental.extraOptimizations` (GraftFunctions.register) or at
-  * build time via GraftExtensions. */
+  * predicate over WKB, so it rewrites each join exactly once: the cell
+  * join carries the predicate under an And with its cell keys, and the
+  * fallback joins carry it inside CellJoinFallback, a pass-through
+  * expression no optimizer rule folds (an And(true, pred) guard is folded
+  * by BooleanSimplification, which shares the operator-optimization batch
+  * with a rule injected through GraftExtensions) and no join-rebuilding
+  * rule drops (as it would a plan tag).
+  *
+  * It is the one planner entry for these joins: Spark picks the physical
+  * equi-join. Two entries reach the same rewrite:
+  *  - as an optimizer rule, at `spark.graft.celljoin.zoom` (an integer,
+  *    default 4, clamped to [0, 18]; anything else is refused), registered
+  *    at runtime through `spark.experimental.extraOptimizations`
+  *    (GraftFunctions.register) or at build time via GraftExtensions;
+  *  - as `plan(df, z)`, over a DataFrame's analyzed plan at an explicit
+  *    zoom: the DataFrame builders (SpatialJoin.intersectsJoin) write the
+  *    naive predicate join and hand it here. */
 object CellJoinRule extends Rule[LogicalPlan] {
 
   /** Matches CellId.cover's default cap. */
@@ -78,14 +93,22 @@ object CellJoinRule extends Rule[LogicalPlan] {
                                 ptsLeft: Boolean) extends SpatialMatch
   private case class GeomMatch(wkbLeft: Expression, wkbRight: Expression) extends SpatialMatch
 
-  def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+  def apply(plan: LogicalPlan): LogicalPlan = rewrite(plan, zoom)
+
+  /** The rewrite at zoom `z` over `df`'s analyzed plan, as a DataFrame; a
+    * join that is no bare spatial predicate join is left as it is. */
+  def plan(df: DataFrame, z: Int): DataFrame =
+    DatasetBridge.ofRows(df.sparkSession, rewrite(df.queryExecution.analyzed, z))
+
+  /** `z` is by name: the zoom is read only for a join that matches. */
+  private def rewrite(plan: LogicalPlan, z: => Int): LogicalPlan = plan.transform {
     case j @ Join(left, right, Inner | Cross, Some(pred), hint)
         if matchPredicate(pred, left, right).isDefined =>
       matchPredicate(pred, left, right).get match {
         case PointMatch(wkb, lon, lat, ptsLeft) =>
-          rewritePoint(j, pred, wkb, lon, lat, ptsLeft, hint)
+          rewritePoint(j, pred, wkb, lon, lat, ptsLeft, hint, z)
         case GeomMatch(wl, wr) =>
-          rewriteGeom(j, pred, wl, wr, hint)
+          rewriteGeom(j, pred, wl, wr, hint, z)
       }
   }
 
@@ -100,15 +123,14 @@ object CellJoinRule extends Rule[LogicalPlan] {
   }
 
   /** The fallback nested-loop branch: original join shape, predicate
-    * wrapped under And(true, pred) so this rule cannot re-fire on it. */
+    * wrapped in CellJoinFallback so this rule cannot re-fire on it. */
   private def naiveBranch(out: Seq[Attribute], l: LogicalPlan, r: LogicalPlan,
                           pred: Expression, hint: JoinHint): LogicalPlan =
-    Project(out, Join(l, r, Inner, Some(And(Literal(true), pred)), hint))
+    Project(out, Join(l, r, Inner, Some(CellJoinFallback(pred)), hint))
 
   private def rewritePoint(j: Join, pred: Expression, wkb: Expression,
                            lon: Expression, lat: Expression, ptsLeft: Boolean,
-                           hint: JoinHint): LogicalPlan = {
-    val z = zoom
+                           hint: JoinHint, z: Int): LogicalPlan = {
     val (ptsSide, polySide) = if (ptsLeft) (j.left, j.right) else (j.right, j.left)
     val (polyFit, polyBig) = splitByCoverSize(polySide, wkb, z)
     // points side: one cell per row
@@ -141,8 +163,7 @@ object CellJoinRule extends Rule[LogicalPlan] {
   }
 
   private def rewriteGeom(j: Join, pred: Expression, wl: Expression,
-                          wr: Expression, hint: JoinHint): LogicalPlan = {
-    val z = zoom
+                          wr: Expression, hint: JoinHint, z: Int): LogicalPlan = {
     val (lFit, lBig) = splitByCoverSize(j.left, wl, z)
     val (rFit, rBig) = splitByCoverSize(j.right, wr, z)
     // each side carries its full (sorted) cover array AND the exploded cell
@@ -199,4 +220,18 @@ object CellJoinRule extends Rule[LogicalPlan] {
       Some(PointMatch(wkb, lon, lat, ptsLeft = false))
     else None
   }
+}
+
+/** The oversize fallback's join condition: evaluates as the spatial
+  * predicate it wraps, but is no bare predicate, so CellJoinRule leaves the
+  * join it guards as it is. */
+case class CellJoinFallback(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = "celljoin_fallback"
+  override def eval(input: InternalRow): Any = child.eval(input)
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    child.genCode(ctx)
+  protected override def withNewChildInternal(newChild: Expression): CellJoinFallback =
+    copy(child = newChild)
 }

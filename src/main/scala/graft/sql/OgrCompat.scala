@@ -17,16 +17,13 @@ import org.apache.spark.sql.functions._
   *    (/root/reference/ogr/ogrsf_frmts/generic/ogr_gensql.cpp:1516-1546)
   *  - AND is null iff BOTH operands are null; OR is null if EITHER is
   *    (/root/reference/ogr/swq_op_general.cpp:545-562)
-  *  - DISTINCT returns values in order of first appearance
-  *    (/root/reference/ogr/swq.cpp:324-430)
+  * (First-appearance DISTINCT, swq.cpp:324-430, lives in OgrSql's
+  * SELECT DISTINCT planning.)
   */
 object OgrCompat {
 
   /** Case-insensitive string equality — OGR `=` on strings. */
   def eqCi(a: Column, b: Column): Column = lower(a) === lower(b)
-
-  /** Case-insensitive `<>`. */
-  def neCi(a: Column, b: Column): Column = lower(a) =!= lower(b)
 
   final val IntMax = 2147483647L
 
@@ -90,13 +87,4 @@ object OgrCompat {
       .drop("__rn")
     primary.join(firstOnly, keys, joinType)
   }
-
-  /** First-appearance DISTINCT: distinct values of `c` ordered by the
-    * first row (by `orderCol`) in which each value appeared
-    * (reference: swq.cpp:412-419 insertion-ordered set; pinned by
-    * autotest/ogr/ogr_sql_test.py:197-204). */
-  def distinctFirstAppearance(df: DataFrame, c: String, orderCol: Column): DataFrame =
-    df.groupBy(col(c)).agg(min(orderCol).as("__first"))
-      .orderBy(col("__first"))
-      .select(col(c))
 }

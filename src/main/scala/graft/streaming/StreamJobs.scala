@@ -29,12 +29,6 @@ object StreamJobs {
       .select(unix_timestamp(col("window.start")).as("wstart"),
         col("event_type"), col("n"), col("sum_cents"))
 
-  /** Streaming tile-assignment: each arriving doc point is assigned its
-    * (z, x, y) tiles — a narrow, stateless transform (no watermark needed).
-    * Input: (doc_id, lon, lat). */
-  def tileAssignments(points: DataFrame, minZ: Int, maxZ: Int): DataFrame =
-    graft.engine.TileJob.assign(points, minZ, maxZ)
-
   /** Streaming exact dedup for document ingest (the training-pipeline d01
     * twin): first arrival of each content digest passes, duplicates drop.
     * State is the digest set bounded by the watermark horizon — late

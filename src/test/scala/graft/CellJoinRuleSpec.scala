@@ -1,9 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
 import org.apache.spark.sql.functions._
-import graft.functions.{gf, GeoKernel, GraftFunctions}
+import graft.functions.{gf, GeoKernel, GraftExtensions, GraftFunctions}
 
 /** The optimizer rule must turn a naive spatial-predicate join (nested
   * loop) into a cell equi-join, with identical results. The only
@@ -140,5 +141,67 @@ class CellJoinRuleSpec extends AnyFunSuite {
     } yield (ra.getAs[String]("id"), idB)).sorted
     assert(got.sameElements(brute), s"${got.length} vs ${brute.length}")
     assert(got.length > 64, "expected overlapping neighbors beyond self-matches")
+  }
+
+  test("under GraftExtensions alone the rewrite runs once per join") {
+    // the injected rule shares the operator-optimization batch with
+    // BooleanSimplification: its fallback guard must survive that batch, or
+    // the rule re-fires on its own fallback joins until the batch gives up.
+    // A new session on the shared context, with no register: the builder
+    // reads spark.sql.extensions from the context's conf, so the session
+    // takes the class that key names through withExtensions.
+    val shared = SparkTestSession.spark
+    val s = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    try {
+      // Range-based inputs and a polygon built from its row: the optimizer
+      // can neither fold the inputs to local rows nor the polygon to a
+      // literal (a literal polygon turns the join into a filter)
+      val pts = s.range(50).select(col("id").as("pid"),
+        (col("id") * 7.0 - 175.0).as("lon"), (col("id") % 9 * 10.0 - 40.0).as("lat"))
+      val x0 = (col("id") - 120).cast("string")
+      val poly = s.range(1).select(col("id").as("poly_id"), gf.st_geomfromtext(concat(
+        lit("POLYGON (("), x0, lit(" -30, 60 -30, 60 30, "), x0, lit(" 30, "), x0, lit(" -30))")))
+        .as("wkb"))
+      // 6×6 grids of 35° squares at 30° spacing: neighbors overlap
+      val grid = s.range(36).select(col("id"),
+        (col("id") % 6 * 30.0 - 150.0).as("x"), (floor(col("id") / 6) * 30.0 - 60.0).as("y"))
+      def sq(pre: String): DataFrame = grid.select(concat(lit(pre), col("id")).as(s"id_$pre"),
+        gf.st_geomfromtext(concat(lit("POLYGON (("),
+          col("x"), lit(" "), col("y"), lit(", "), col("x") + 35, lit(" "), col("y"), lit(", "),
+          col("x") + 35, lit(" "), col("y") + 35, lit(", "), col("x"), lit(" "), col("y") + 35, lit(", "),
+          col("x"), lit(" "), col("y"), lit("))"))).as(s"wkb_$pre"))
+      val (a, b) = (sq("a"), sq("b"))
+      val pointJoin = pts.join(poly, gf.st_contains_point(poly("wkb"), pts("lon"), pts("lat")))
+      val geomJoin = a.join(b, gf.st_intersects(col("wkb_a"), col("wkb_b")))
+      for (df <- Seq(pointJoin, geomJoin)) {
+        val t0 = System.nanoTime()
+        val plan = df.queryExecution.optimizedPlan
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(secs < 10.0, s"optimization took $secs s")
+        val unions = plan.collect { case u: Union => u }
+        val cellJoins = plan.collect {
+          case j: Join if j.condition.exists(_.references.exists(_.name.startsWith("__graft_cell"))) => j
+        }
+        assert(unions.size === 1 && cellJoins.size === 1, plan.treeString)
+      }
+      val polyWkb = poly.collect().head.getAs[Array[Byte]]("wkb")
+      val wantPts = pts.collect().collect {
+        case r if GeoKernel.containsPoint(polyWkb, r.getAs[Double]("lon"), r.getAs[Double]("lat")) =>
+          r.getAs[Long]("pid")
+      }.sorted
+      val gotPts = pointJoin.select("pid").collect().map(_.getLong(0)).sorted
+      assert(gotPts.toSeq === wantPts.toSeq && gotPts.nonEmpty)
+      val bRows = b.collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
+      val wantGeom = (for {
+        ra <- a.collect(); (idB, wb) <- bRows
+        if GeoKernel.intersects(ra.getAs[Array[Byte]](1), wb)
+      } yield (ra.getString(0), idB)).sorted
+      val gotGeom = geomJoin.select("id_a", "id_b").collect()
+        .map(r => (r.getString(0), r.getString(1))).sorted
+      assert(gotGeom.toSeq === wantGeom.toSeq && gotGeom.length > 36)
+    } finally {
+      SparkSession.setActiveSession(shared)
+      SparkSession.setDefaultSession(shared)
+    }
   }
 }

@@ -89,7 +89,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("polygon-polygon intersects join vs per-row oracle") {
     val polyDocs = pts.where(gf.st_geometrytype($"wkb") === "POLYGON").limit(200).cache()
-    val got = SpatialJoin.intersectsJoin(polyDocs, "doc_id", zones.withColumnRenamed("zone_id", "zid"), "zid", z = 6)
+    val got = SpatialJoin.intersectsJoin(polyDocs, zones.withColumnRenamed("zone_id", "zid"), z = 6)
       .select($"doc_id", $"zid").as[(String, String)].collect().toSet
     val zGeoms = zoneWkts.map { case (id, w) => (id, Wkt.parse(w)) }
     val oracle = polyDocs.select($"doc_id", gf.st_astext($"wkb")).as[(String, String)].collect()

@@ -70,4 +70,33 @@ class LayerAlgebraSpec extends AnyFunSuite {
     assert(rem.length === 1)
     assert(math.abs(rem.head - 12.0) < 1e-9) // 16 - 4 corners of 1x1
   }
+
+  test("a polygon whose cover is over the cell cap joins through the fallback, not a refusal") {
+    // A0 spans 200°×100°: its z=8 cover needs ~12k cells (> 4096); B3 is a
+    // 170° strip, oversized on the right side too
+    val left = df(Seq(
+      rect(0L, -100.0, -50.0, 100.0, 50.0),
+      rect(1L, 120.0, 60.0, 122.0, 62.0),
+      rect(2L, -5.0, -5.0, 5.0, 5.0)), "lid")
+    val right = df(Seq(
+      rect(0L, 0.0, 0.0, 1.0, 1.0),
+      rect(1L, 121.0, 61.0, 125.0, 65.0),
+      rect(2L, 150.0, -80.0, 151.0, -79.0),
+      rect(3L, -85.0, -80.0, 85.0, -48.0)), "rid")
+    def cells(d: DataFrame, id: String) = d.collect().map(r =>
+      r.getAs[Long](id) -> graft.functions.GeoKernel.coverCount(r.getAs[Array[Byte]]("wkb"), 8)).toMap
+    assert(cells(left, "lid")(0L) > 4096 && cells(right, "rid")(3L) > 4096)
+    val brute = (for {
+      l <- left.collect(); r <- right.collect()
+      if graft.functions.GeoKernel.intersects(l.getAs[Array[Byte]]("wkb"), r.getAs[Array[Byte]]("wkb"))
+    } yield (l.getAs[Long]("lid"), r.getAs[Long]("rid"))).toSet
+    assert(brute === Set((0L, 0L), (0L, 3L), (1L, 1L), (2L, 0L)))
+    val joined = SpatialJoin.intersectsJoin(left, right, z = 8)
+      .select("lid", "rid").as[(Long, Long)].collect()
+    assert(joined.sorted.toSeq === brute.toSeq.sorted)
+    val ident = SpatialJoin.identity(left, right, z = 8)
+      .select(col("lid"), col("rid")).as[(Long, Option[Long])].collect()
+    assert(ident.collect { case (l, Some(r)) => (l, r) }.sorted.toSeq === brute.toSeq.sorted)
+    assert(ident.collect { case (l, None) => l }.sorted.toSeq === Seq(0L, 1L, 2L))
+  }
 }

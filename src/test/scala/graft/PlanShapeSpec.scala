@@ -4,11 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.graft.StContainsPoint
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
-import graft.engine.{Raster, TileSink, CalcExpr, Ann, TileJob}
+import graft.engine.{Raster, TileSink, CalcExpr, Ann, TileJob, SpatialJoin}
 
 /** Physical-plan assertions for the round-4 operators' scale claims (the
   * PLANS.md contract, checked mechanically): narrow ops stay shuffle-free,
@@ -186,6 +189,34 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(p.contains("BroadcastHashJoin"), p.take(1200))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       p.take(1200))
+  }
+
+  test("polygon-polygon intersectsJoin is one broadcast cell hash join, deduped at the min common cell (g18's operator)") {
+    // g18's shape: rectangles of half-width 1-3° on both sides, z=4, ids ordered
+    def rects(id: String, n: Long, k: Double): DataFrame = spark.range(1, n + 1)
+      .select(col("id").as(id),
+        (pmod(col("id") * k, lit(1.0)) * 340.0 - 170.0).as("x"),
+        (pmod(col("id") * (k + 0.25), lit(1.0)) * 160.0 - 80.0).as("y"),
+        (pmod(col("id") * (k + 0.5), lit(1.0)) * 2.0 + 1.0).as("w"))
+      .select(col(id), graft.functions.gf.st_geomfromtext(expr(
+        "concat('POLYGON ((', x - w, ' ', y - w, ', ', x + w, ' ', y - w, ', ', " +
+          "x + w, ' ', y + w, ', ', x - w, ' ', y + w, ', ', x - w, ' ', y - w, '))')")).as("wkb"))
+    val df = SpatialJoin.intersectsJoin(rects("lid", 400, 0.6180339887), rects("rid", 200, 0.4142135623), z = 4)
+      .select("lid", "rid").orderBy("lid", "rid")
+    val plan = df.queryExecution.executedPlan
+    val hashJoins = collect(plan) { case j: BroadcastHashJoinExec => j }
+    assert(hashJoins.size === 1, plan.treeString)
+    val j = hashJoins.head
+    assert((j.leftKeys ++ j.rightKeys).forall(_.references.forall(_.name.startsWith("__graft_cell"))),
+      plan.treeString)
+    val cond = j.condition.map(_.sql).getOrElse("")
+    assert(cond.contains("array_min(array_intersect(") && cond.contains("st_intersects("), cond)
+    // no dedup barrier: neither an aggregate nor a hash shuffle (the
+    // ORDER BY's range exchange is the only shuffle)
+    assert(collect(plan) { case a: BaseAggregateExec => a }.isEmpty, plan.treeString)
+    assert(collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }.isEmpty, plan.treeString)
   }
 
   test("tile pyramid is one shuffle with integer parent math (g02's operator)") {
