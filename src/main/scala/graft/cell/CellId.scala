@@ -84,7 +84,8 @@ object CellId {
 
   /** Cell cover of a lon/lat envelope at zoom z: all XYZ tiles whose range
     * (GetTileIndices semantics, floor + 1e-3 EPSILON, clamped —
-    * gdalalg_raster_tile.cpp:458-478) intersects the envelope. Sorted. */
+    * gdalalg_raster_tile.cpp:458-478) intersects the envelope, row by row
+    * (y, then x); [[cover]] sorts them. */
   def coverEnvelope(e: Envelope, z: Int, maxCells: Int = 4096): Array[Long] = {
     val (minX, minY, maxX, maxY) = Mercator.tileRangeLonLat(e, z)
     val nx = (maxX - minX + 1).toLong
@@ -100,14 +101,15 @@ object CellId {
       while (tx <= maxX) { out(i) = pack(z, tx, ty); i += 1; tx += 1 }
       ty += 1
     }
-    out // row-major ascending (z,x,y)? pack sorts by x then y; re-sort:
+    out
   }
 
-  /** Cell cover of a geometry at zoom z: envelope range, refined so that each
-    * kept cell's envelope actually intersects the geometry envelope (exact
-    * geometry-cell intersection refine happens at join time via the PIP
-    * predicate, mirroring the reference's envelope-prefilter-then-exact
-    * two-phase FilterGeometry, /root/reference/ogr/ogrsf_frmts/generic/ogrlayer.cpp:4004-4076). */
+  /** Cell cover of a geometry at zoom z: every tile of its envelope's tile
+    * range ([[coverEnvelope]]), sorted. Cells are not tested against the
+    * geometry itself, so a cover may hold cells the geometry misses; the
+    * exact geometry test happens at join time in the refine predicate,
+    * mirroring the reference's envelope-prefilter-then-exact two-phase
+    * FilterGeometry (ogr/ogrsf_frmts/generic/ogrlayer.cpp:4004-4076). */
   def cover(g: Geom, z: Int, maxCells: Int = 4096): Array[Long] = {
     val e = g.envelope
     if (e.isEmpty) return Array.empty

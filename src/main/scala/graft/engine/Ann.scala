@@ -510,12 +510,19 @@ object Ann {
       .where(col("cos_u") >= tauU)
       .groupBy("hi")
       .agg(count(lit(1)).as("n_dups"), min("lo").as("dup_lo"))
-    assigned.select(col("vec_id"), col("cid").cast("long").as("cid"))
+    // the per-vector result is small: materialized here, so the
+    // full-corpus assignment cache (embeddings included) can be released
+    // before returning instead of staying pinned for the session
+    val out = assigned.select(col("vec_id"), col("cid").cast("long").as("cid"))
       .join(dups, col("vec_id") === col("hi"), "left")
       .select(col("vec_id"), col("cid"),
         when(col("hi").isNull, 1L).otherwise(0L).as("kept"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
         coalesce(col("dup_lo"), col("vec_id")).as("dup_lo"))
+      .persist()
+    out.count()
+    assigned.unpersist(blocking = false)
+    out
   }
 
   def ivfTopK(vecs: DataFrame, idCol: String, embCol: String,

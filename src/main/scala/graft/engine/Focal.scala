@@ -431,5 +431,4 @@ object Focal {
   def tpi(tiles: Dataset[Tile]): Dataset[Tile] = focal3x3(tiles, tpiWindow)
   def tri(tiles: Dataset[Tile], alg: String = "Riley"): Dataset[Tile] =
     focal3x3(tiles, if (alg == "Wilson") triWilsonWindow else triRileyWindow)
-  def roughness(tiles: Dataset[Tile]): Dataset[Tile] = focal3x3(tiles, roughnessWindow)
 }

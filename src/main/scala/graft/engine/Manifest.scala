@@ -1,20 +1,34 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.UUID
 
-/** Per-partition checkpoint/lineage manifests for exact resume
-  * (north rule: "resumable from checkpoint with per-partition lineage +
-  * metrics"). Reference analog: `gdal raster tile --resume` — "Generate only
-  * missing files" by re-listing outputs
-  * (/root/reference/apps/gdalalg_raster_tile.cpp:289); our version records
-  * completed work units in a manifest table and skips the keys it holds.
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.SparkSession
+
+/** Per-unit checkpoint/lineage manifests for exact resume (north rule:
+  * "resumable from checkpoint with per-partition lineage + metrics").
+  * Reference analog: `gdal raster tile --resume` — "Generate only missing
+  * files" by re-listing outputs (gdalalg_raster_tile.cpp:289); our version
+  * lists the manifest's fragments and skips the units they record.
   *
   * A work unit is a key group (e.g. a zoom level, a cell prefix, a partition
-  * range). Completion is atomic per unit: output parquet lands under
-  * `outDir/key=...`, then the manifest row (key, rows, ms, lineage) is
-  * appended. A killed job resumes by skipping keys already in the manifest;
-  * partially-written unmanifested output is overwritten (idempotent units).
+  * range). The manifest is a directory of parquet files at [[manifestPath]]
+  * that Spark's parquet reader reads as [[UnitRecord]] rows. Completing a unit
+  * appends one fragment: a one-row parquet file written to a hidden
+  * `.<name>.tmp` and then renamed to `part-<uuid>.parquet`, so a reader never
+  * sees a half-written fragment and a crash leaves only a hidden file. The
+  * unit's output lands under `outDir` before its fragment is committed; a
+  * killed job resumes by skipping the units that committed fragments record,
+  * and partially-written unrecorded output is overwritten (idempotent units).
+  * Reading and appending are driver-side file I/O and start no Spark job.
   */
 object Manifest {
 
@@ -23,23 +37,78 @@ object Manifest {
 
   def manifestPath(outDir: String): String = s"$outDir/_graft_manifest"
 
-  /** Which of `units` the manifest records as completed. The filter runs
-    * before the collect, so the driver holds at most the rows of `units`,
-    * not every row the manifest has appended. */
+  /** A fragment's schema: [[UnitRecord]]'s columns, typed as Spark writes
+    * them (strings nullable, longs required). */
+  private val fragmentSchema: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary job_id (STRING);
+      |  optional binary unit (STRING);
+      |  required int64 rows;
+      |  required int64 ms;
+      |  optional binary input_fingerprint (STRING);
+      |  optional binary metrics_json (STRING);
+      |}""".stripMargin)
+
+  /** The projection [[completedUnits]] reads. */
+  private val unitSchema = "message spark_schema { optional binary unit (STRING); }"
+
+  /** Names that are not data files, as Spark's own listing skips them. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** Which of `units` the manifest records as completed. Reads only the
+    * `unit` column of each committed fragment; the driver holds at most the
+    * rows of `units`, not every row the manifest has appended. */
   def completedUnits(spark: SparkSession, outDir: String, units: Seq[String]): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) || units.isEmpty) Set.empty
+    val dir = new Path(manifestPath(outDir))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    if (units.isEmpty || !fs.exists(dir)) Set.empty
     else {
-      import spark.implicits._
-      spark.read.parquet(manifestPath(outDir)).where(col("unit").isin(units: _*))
-        .select("unit").as[String].collect().toSet
+      val want = units.toSet
+      // a copy, so the projection stays out of the session's conf
+      val readConf = new Configuration(conf)
+      readConf.set(ReadSupport.PARQUET_READ_SCHEMA, unitSchema)
+      fs.listStatus(dir).iterator
+        .filter(s => s.isFile && !hidden(s.getPath.getName))
+        .flatMap(s => readUnits(s.getPath, readConf).filter(want))
+        .toSet
     }
   }
 
+  private def readUnits(file: Path, conf: Configuration): Seq[String] = {
+    // built on the file's conf: the Path-based builder first loads a fresh
+    // default Configuration, which costs ten times the read of a fragment
+    val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport
+    }.build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null)
+      .collect { case g if g.getFieldRepetitionCount(0) > 0 => g.getString(0, 0) }
+      .toList
+    finally reader.close()
+  }
+
+  /** Append `rec` as one committed fragment. */
   def recordUnit(spark: SparkSession, outDir: String, rec: UnitRecord): Unit = {
-    import spark.implicits._
-    Seq(rec).toDS().coalesce(1).write.mode(SaveMode.Append).parquet(manifestPath(outDir))
+    val dir = new Path(manifestPath(outDir))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    val name = s"part-${UUID.randomUUID()}.parquet"
+    val tmp = new Path(dir, s".$name.tmp")
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(fragmentSchema).build()
+    try {
+      val g = new SimpleGroup(fragmentSchema)
+      def str(field: String, v: String): Unit = if (v != null) g.add(field, v)
+      str("job_id", rec.job_id)
+      str("unit", rec.unit)
+      g.add("rows", rec.rows)
+      g.add("ms", rec.ms)
+      str("input_fingerprint", rec.input_fingerprint)
+      str("metrics_json", rec.metrics_json)
+      writer.write(g)
+    } finally writer.close()
+    if (!fs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"Manifest.recordUnit: could not commit $tmp as $name")
   }
 
   /** Run `process(unit)` for every unit not already manifested, recording

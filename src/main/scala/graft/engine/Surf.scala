@@ -101,12 +101,6 @@ object Surf {
     new IntegralImage(h, w, m)
   }
 
-  /** RGB → luminosity of GDALSimpleSURF::ConvertRGBToLuminosity
-    * (gdal_simplesurf.cpp:181-227): (0.21·R + 0.72·G + 0.07·B) / 255. */
-  def luminosity(r: Array[Double], g: Array[Double],
-                 b: Array[Double]): Array[Double] =
-    Array.tabulate(r.length)(i => (r(i) * 0.21 + g(i) * 0.72 + b(i) * 0.07) / 255.0)
-
   /** One octave layer's fast-Hessian field (gdal_octave.cpp:148-208).
     * detHessians/signs are zero outside the computed radius band, matching
     * how the extremum guard never reads those cells. */

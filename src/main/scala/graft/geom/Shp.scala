@@ -26,8 +26,9 @@ import scala.collection.mutable.ArrayBuffer
   *    ogrgeometryfactory.cpp:1702): CW rings are shells; each CCW ring is
   *    a hole assigned to its smallest-area enclosing shell (envelope +
   *    area prefilter, then ray-crossing containment of the hole's first
-  *    vertex); the one-shell fast path skips all containment tests; shells
-  *    keep their record order in the output MULTIPOLYGON.
+  *    vertex); a CCW ring that no shell's envelope contains becomes a
+  *    polygon of its own; the one-shell fast path skips all containment
+  *    tests; polygons keep their record order in the output MULTIPOLYGON.
   *
   * Ring winding is decided by the shoelace sign (CW ⟺ signed area < 0) —
   * equivalent on simple rings to the reference's lowest-rightmost-pivot
@@ -173,7 +174,10 @@ object Shp {
     * CCW rings are holes; a hole goes to the smallest-area shell whose
     * envelope contains its envelope and which contains its first vertex
     * (the reference's increasing-area candidate walk, with the
-    * biggest-shell assume-inside backstop); shells keep record order. */
+    * biggest-shell assume-inside backstop). A CCW ring that no shell's
+    * envelope contains is no hole: it becomes a polygon of its own, as
+    * the reference promotes an unenclosed ring to top level. Polygons keep
+    * the record order of their outer rings. */
   private def organizeRings(rings: Array[Array[Double]]): Geom = {
     if (rings.isEmpty) return Polygon(Array.empty)
     val signed = rings.map(GeoOps.signedRingArea)
@@ -189,34 +193,49 @@ object Shp {
     val holes = ArrayBuffer.fill(rings.length)(ArrayBuffer.empty[Array[Double]])
     val byAreaAsc = shellIdx.sortBy(i => math.abs(signed(i)))
     val biggest = byAreaAsc.last
+    val envs = rings.map(Envelope.ofCoords)
+    val orphans = ArrayBuffer.empty[Int]
     rings.indices.filter(i => signed(i) >= 0.0).foreach { h =>
-      val hEnv = Envelope.ofCoords(rings(h))
       val hArea = math.abs(signed(h))
       val px = rings(h)(0); val py = rings(h)(1)
       val owner = byAreaAsc.find { s =>
-        math.abs(signed(s)) >= hArea &&
-          Envelope.ofCoords(rings(s)).contains(hEnv) &&
+        math.abs(signed(s)) >= hArea && envs(s).contains(envs(h)) &&
           (s == biggest || // last-candidate assume-inside (fast-version rule)
             GeoOps.isPointInRing(rings(s), px, py, testEnvelope = false))
-      }.getOrElse(biggest)
-      holes(owner) += rings(h)
+      }
+      owner match {
+        case Some(s) => holes(s) += rings(h)
+        case None if shellIdx.exists(s => envs(s).contains(envs(h))) => holes(biggest) += rings(h)
+        case None => orphans += h
+      }
     }
-    val polys = shellIdx.map(s => Polygon((rings(s) +: holes(s)).toArray))
+    val polys = (shellIdx ++ orphans).sorted.map(s => Polygon((rings(s) +: holes(s)).toArray))
     if (polys.length == 1) polys.head else MultiPolygon(polys.toArray)
   }
 
   // ---------------------------------------------------- whole-file frame
 
+  private def typeName(t: Int): String = t match {
+    case PointType => "Point"
+    case PolyLineType => "PolyLine"
+    case PolygonType => "Polygon"
+    case MultiPointType => "MultiPoint"
+    case other => s"type $other"
+  }
+
   /** Compose a full `.shp` byte stream (100-byte header + framed records)
     * and the matching `.shx` index. Record headers are big-endian
     * (record number 1-based, content length in 16-bit words); the file
     * header carries magic 9994, version 1000, the shape type, and the
-    * global bbox — shpopen.c SHPWriteHeader. */
+    * global bbox — shpopen.c SHPWriteHeader. Every non-null record must
+    * have the header's one shape type; mixed types are refused. */
   def writeFile(geoms: Seq[Geom]): (Array[Byte], Array[Byte]) = {
     val recs = geoms.map(writeRecord)
-    val shpType = recs.map(r =>
-      ByteBuffer.wrap(r).order(ByteOrder.LITTLE_ENDIAN).getInt())
-      .find(_ != NullShape).getOrElse(NullShape)
+    val types = recs.map(r => ByteBuffer.wrap(r).order(ByteOrder.LITTLE_ENDIAN).getInt())
+      .filter(_ != NullShape).distinct
+    require(types.size <= 1, "Shp.writeFile: a shapefile holds one shape type, got " +
+      types.map(typeName).mkString(" and ") + "; refusing")
+    val shpType = types.headOption.getOrElse(NullShape)
     val env = geoms.filter(g => g != null && !g.isEmpty)
       .foldLeft(Envelope.Empty)((e, g) => e.union(g.envelope))
     val contentBytes = recs.map(_.length + 8).sum

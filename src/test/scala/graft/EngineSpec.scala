@@ -211,6 +211,88 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  private def manifestDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def rec(u: String, fp: String = "fp"): Manifest.UnitRecord =
+    Manifest.UnitRecord("jobF", u, u.drop(1).toLong, 10L * u.drop(1).toLong, fp)
+
+  test("manifest I/O starts no Spark job: recordUnit x3 and completedUnits") {
+    val sc = spark.sparkContext
+    val dir = manifestDir("graft_nojob")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // earlier suites' job events land before the counter is attached, and
+    // any job the manifest started lands before it is read
+    def confEntries = {
+      import scala.jdk.CollectionConverters._
+      sc.hadoopConfiguration.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    }
+    val confBefore = confEntries
+    org.apache.spark.sql.graft.ListenerBus.drain(sc, 10000)
+    sc.addSparkListener(counter)
+    val done = try {
+      Seq("u1", "u2", "u3").foreach(u => Manifest.recordUnit(spark, dir, rec(u)))
+      val d = Manifest.completedUnits(spark, dir, Seq("u1", "u2", "u3", "u4"))
+      org.apache.spark.sql.graft.ListenerBus.drain(sc, 10000)
+      d
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get == 0)
+    assert(done == Set("u1", "u2", "u3"))
+    // the parquet builders leave the session's Hadoop conf as it was
+    assert(confEntries == confBefore)
+  }
+
+  test("manifest fragments read back through spark.read.parquet with UnitRecord's columns and types") {
+    val dir = manifestDir("graft_fragschema")
+    val recs = Seq(rec("u1"), rec("u2", fp = null),
+      Manifest.UnitRecord("jobF", "u3", 7L, 0L, "fp", """{"n_tasks":2}"""))
+    recs.foreach(Manifest.recordUnit(spark, dir, _))
+    val df = spark.read.parquet(Manifest.manifestPath(dir))
+    val want = Seq.empty[Manifest.UnitRecord].toDS().schema
+    assert(df.schema.map(f => (f.name, f.dataType)) == want.map(f => (f.name, f.dataType)))
+    assert(df.as[Manifest.UnitRecord].collect().sortBy(_.unit).toSeq == recs)
+  }
+
+  test("manifest rewritten by Spark (read, filter, write, rename) reads back the kept units") {
+    val dir = manifestDir("graft_rewrite")
+    val units = Seq("u1", "u2", "u3", "u4")
+    units.foreach(u => Manifest.recordUnit(spark, dir, rec(u)))
+    // the interruption perfbench's tile_resume simulates
+    val mp = new org.apache.hadoop.fs.Path(Manifest.manifestPath(dir))
+    val kept = new org.apache.hadoop.fs.Path(s"$dir/_manifest_kept")
+    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.read.parquet(mp.toString).where(!col("unit").isin("u1", "u3"))
+      .write.parquet(kept.toString)
+    fs.delete(mp, true); fs.rename(kept, mp)
+    assert(Manifest.completedUnits(spark, dir, units) == Set("u2", "u4"))
+    // a fragment appended beside the Spark-written files counts, and Spark
+    // reads both kinds together
+    Manifest.recordUnit(spark, dir, rec("u3"))
+    assert(Manifest.completedUnits(spark, dir, units) == Set("u2", "u3", "u4"))
+    assert(spark.read.parquet(mp.toString).as[Manifest.UnitRecord].collect().sortBy(_.unit).toSeq ==
+      Seq(rec("u2"), rec("u3"), rec("u4")))
+  }
+
+  test("manifest ignores an uncommitted hidden fragment") {
+    val dir = manifestDir("graft_uncommitted")
+    Manifest.recordUnit(spark, dir, rec("u1"))
+    // a fragment holding u2's row, left under its temporary hidden name as
+    // a crash between write and rename leaves it
+    val other = manifestDir("graft_uncommitted_src")
+    Manifest.recordUnit(spark, other, rec("u2"))
+    val mp = new org.apache.hadoop.fs.Path(Manifest.manifestPath(dir))
+    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val frag = fs.listStatus(new org.apache.hadoop.fs.Path(Manifest.manifestPath(other)))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    assert(fs.rename(frag, new org.apache.hadoop.fs.Path(mp, ".x.tmp")))
+    assert(Manifest.completedUnits(spark, dir, Seq("u1", "u2")) == Set("u1"))
+    assert(spark.read.parquet(mp.toString).select("unit").as[String].collect().toSeq == Seq("u1"))
+  }
+
   test("pyramid counts equal the per-zoom tile counts, clamped and boundary points included") {
     val (minZ, maxZ) = (0, 9)
     def boundaries(z: Int): Seq[Int] = if (z <= 6) 1 until (1 << z) else Seq(1, (1 << z) / 2 + 1, (1 << z) - 1)

@@ -25,7 +25,7 @@ class SemDedupSpec extends AnyFunSuite {
 
   private def run(tauU: Long) =
     Ann.semDedup(corpus, "vec_id", "e", k = 8, iters = 2, tauU = tauU,
-      trainCap = 250).cache()
+      trainCap = 250)
 
   test("perturbed near-duplicates are removed, originals kept") {
     val r = run(950000L)
@@ -53,6 +53,20 @@ class SemDedupSpec extends AnyFunSuite {
     val loose = run(900000L).where(col("kept") === 0).count()
     val strict = run(999000L).where(col("kept") === 0).count()
     assert(strict <= loose)
+  }
+
+  test("the full-corpus assignment cache is released: no cached plan holds the embeddings") {
+    def cachedRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = cachedRdds
+    val r = Ann.semDedup(corpus, "vec_id", "e", k = 8, iters = 2, tauU = 950000L, trainCap = 250)
+    // the one cache semDedup leaves is its own small per-vector result
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val kept = cm.lookupCachedData(r.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    assert(kept.map(_.cachedRepresentation.output.map(_.name)) ==
+      Some(Seq("vec_id", "cid", "kept", "n_dups", "dup_lo")))
+    assert((cachedRdds -- before).size == 1)
+    r.unpersist(blocking = true)
+    assert((cachedRdds -- before).isEmpty)
   }
 
   test("maxCluster guard refuses a quadratic cluster loudly") {

@@ -81,6 +81,19 @@ class ShpSpec extends AnyFunSuite {
     assert(GeoOps.area(mp.polys(1)) == 4.0 - 1.0)
   }
 
+  test("a CCW ring outside every shell's envelope reads back as its own polygon") {
+    // the second polygon's hole lies outside both shells: it is stored CCW,
+    // and no shell can own it
+    val r = Shp.writeRecord(g(
+      "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0))," +
+        " ((20 0, 30 0, 30 10, 20 10, 20 0), (50 0, 52 0, 52 2, 50 2, 50 0)))"))
+    val mp = Shp.readRecord(r).asInstanceOf[MultiPolygon]
+    assert(mp.polys.length == 3)
+    assert(mp.polys.forall(_.numInterior == 0))
+    assert(mp.polys.map(GeoOps.area(_)).toSeq == Seq(100.0, 100.0, 4.0))
+    assert(mp.polys(2).envelope == Envelope(50, 0, 52, 2))
+  }
+
   test("NULL shape for EVERY empty geometry; unsupported types refuse loudly") {
     // SHPWriteOGRObject writes SHPT_NULL for empty input of any type — a
     // typed record with zero parts and a sentinel box would be malformed
@@ -116,5 +129,12 @@ class ShpSpec extends AnyFunSuite {
     // shx: first record at word offset 50
     val xb = java.nio.ByteBuffer.wrap(shx).order(java.nio.ByteOrder.BIG_ENDIAN)
     assert(xb.getInt(100) == 50 && xb.getInt(104) == 10) // 20-byte point content
+  }
+
+  test("whole-file writer refuses mixed shape types, naming them") {
+    val e = intercept[IllegalArgumentException] {
+      Shp.writeFile(Seq(g("POINT (1 1)"), Point.Empty, g("POLYGON ((0 0, 1 0, 1 1, 0 0))")))
+    }
+    assert(e.getMessage.contains("Point and Polygon"), e.getMessage)
   }
 }
