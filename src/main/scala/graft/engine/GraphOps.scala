@@ -20,6 +20,16 @@ object GraphOps {
     log.warn(s"$what stopped at maxIter=$it with changes still pending; " +
       "results may be partially relaxed — raise maxIter")
 
+  /** A guard cap (a size bound that refuses rather than degrades) from the
+    * session conf. A value that is not an integer is refused, naming the
+    * key: falling back to the default would hide the typo behind a
+    * different cap. */
+  private[graft] def guardCap(spark: SparkSession, key: String, default: Long): Long = {
+    val v = spark.conf.get(key, default.toString)
+    v.trim.toLongOption.getOrElse(
+      throw new IllegalArgumentException(s"$key must be an integer, got '$v'"))
+  }
+
   /** Single-source shortest distances. `edges` needs (src, dst, w). */
   def shortestPaths(edges: DataFrame, source: Long, maxIter: Int = 64): DataFrame = {
     val spark = edges.sparkSession
@@ -135,9 +145,7 @@ object GraphOps {
   def connectedComponentsAuto(edges: Dataset[(Long, Long)]): Dataset[(Long, Long)] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val limit =
-      try spark.conf.get("spark.graft.cc.driverLimit", "2000000").toLong
-      catch { case _: Exception => 2000000L }
+    val limit = guardCap(spark, "spark.graft.cc.driverLimit", 2000000L)
     val e = edges.cache()
     val n = e.limit((limit + 1).min(Int.MaxValue.toLong).toInt).count()
     if (n <= limit) {
@@ -227,10 +235,9 @@ object GraphOps {
     * (node, dist, parent). */
   private[graft] def backtrackPath(dist: DataFrame, source: Long,
                                    target: Long): Option[List[(Long, Double)]] = {
+    val limit = guardCap(dist.sparkSession, "spark.graft.sssp.backtrackLimit", 4000000L)
     dist.where(col("node") === target).collect().headOption.map { r =>
       val (tc, tp) = (r.getDouble(1), r.getLong(2))
-      val limit = dist.sparkSession.conf
-        .getOption("spark.graft.sssp.backtrackLimit").map(_.toLong).getOrElse(4000000L)
       val sub = dist.where(col("dist") <= tc)
         .select(col("node"), col("dist"), col("parent"))
       if (sub.count() > limit) throw new IllegalStateException(

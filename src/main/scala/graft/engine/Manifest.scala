@@ -35,6 +35,13 @@ object Manifest {
   case class UnitRecord(job_id: String, unit: String, rows: Long, ms: Long,
                         input_fingerprint: String, metrics_json: String = "{}")
 
+  /** The manifest dir. Its leading `_` hides it from Spark's listing of
+    * `outDir`, so a read of the output never picks up manifest rows. The
+    * library reads fragments with parquet-mr ([[completedUnits]]), which
+    * has no such rule; only an explicit `spark.read.parquet` of this path
+    * logs Spark's "All paths were ignored" WARN, and then reads it anyway,
+    * because an explicitly named root path is kept. The name stays: a
+    * rename would orphan the manifests of existing output dirs. */
   def manifestPath(outDir: String): String = s"$outDir/_graft_manifest"
 
   /** A fragment's schema: [[UnitRecord]]'s columns, typed as Spark writes

@@ -9,13 +9,16 @@ import org.apache.spark.sql.Dataset
   *
   * Spark shape (fully distributed; nothing O(pixels) or O(perimeter)
   * reaches the driver):
-  *  1. per-tile local connected components over the near-black mask
-  *     (4-conn), labeled by their MIN global pixel index (deterministic,
+  *  1. per-tile connected components of the near-black mask (4-conn) from
+  *     the shared labeler (`Polygonize.label`) run on a class copy of the
+  *     tile — near pixels 1.0, all others NaN, which never unions or
+  *     pairs — labeled by their MIN global pixel index (deterministic,
   *     tiling-invariant);
-  *  2. tiles emit border strips keyed by the shared tile edge; one shuffle
-  *     pairs facing strips into label-adjacency edges, plus edges from a
-  *     virtual collar node (-1) to every component touching the GLOBAL
-  *     border — the edge list is deduped distributively;
+  *  2. tiles emit the labeler's border strips, keyed by the shared tile
+  *     edge, and their near labels on the GLOBAL border; one shuffle pairs
+  *     facing strips into label-adjacency edges (`Polygonize.pairStrips`)
+  *     and links each border label to a virtual collar node (-1) — the
+  *     edge list is deduped distributively;
   *  3. GraphOps.connectedComponentsAuto resolves components (driver
   *     union-find while the edge list fits the budget, distributed
   *     hash-min beyond). Because hash-min labels a component with its MIN
@@ -29,58 +32,15 @@ import org.apache.spark.sql.Dataset
   * indices; two bands would collide — callers sieve one band at a time). */
 object Nearblack {
 
-  /** Local CC with labels = global pixel index of each component's first
-    * (row-major min) pixel. Returns label array (-1 for non-near pixels). */
-  private def localCC(t: Tile, isNear: Double => Boolean, width: Long): Array[Long] = {
-    val n = t.w * t.h
-    val parent = new Array[Int](n)
-    var i = 0
-    while (i < n) { parent(i) = if (isNear(t.pixels(i))) i else -1; i += 1 }
-    def find(a: Int): Int = {
-      var r = a
-      while (parent(r) != r) r = parent(r)
-      var c = a
-      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    def union(a: Int, b: Int): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    var y = 0
-    while (y < t.h) {
-      var x = 0
-      while (x < t.w) {
-        val idx = y * t.w + x
-        if (parent(idx) >= 0) {
-          if (x + 1 < t.w && parent(idx + 1) >= 0) union(idx, idx + 1)
-          if (y + 1 < t.h && parent(idx + t.w) >= 0) union(idx, idx + t.w)
-        }
-        x += 1
-      }
-      y += 1
-    }
-    // relabel roots to global pixel indices (first pixel in row-major scan
-    // has the min global index for its component within this tile)
-    val lblOfRoot = new java.util.HashMap[Int, Long]()
-    val out = new Array[Long](n)
-    y = 0
-    while (y < t.h) {
-      var x = 0
-      while (x < t.w) {
-        val idx = y * t.w + x
-        if (parent(idx) >= 0) {
-          val r = find(idx)
-          if (!lblOfRoot.containsKey(r))
-            lblOfRoot.put(r, (t.y.toLong * t.h + y) * width + (t.x.toLong * t.w + x))
-          out(idx) = lblOfRoot.get(r)
-        } else out(idx) = -1L
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
+  /** Labels of the near-black mask's components: the shared labeler on a
+    * class copy of the tile. A non-near pixel is NaN there, a singleton
+    * whose label no near component shares. */
+  private def labelNear(t: Tile, isNear: Double => Boolean, width: Long): TileLabels =
+    Polygonize.label(t.copy(pixels = t.pixels.map(v => if (isNear(v)) 1.0 else Double.NaN)),
+      width, 4)
+
+  /** Record kind of a tile's collar labels; the grid-line strips are 0-3. */
+  private val Collar = 4
 
   /** @param nTilesX,nTilesY full tile-grid extent (global border detection) */
   def nearblack(tiles: Dataset[Tile], nTilesX: Int, nTilesY: Int,
@@ -96,40 +56,25 @@ object Nearblack {
     val nearF = isNear
     val ntx = nTilesX; val nty = nTilesY
 
-    // pass 1: records = border strips (kind 0 vertical / 1 horizontal,
-    // keyed by the shared edge) + global-collar labels (kind 2)
+    // pass 1: records = border strips (keyed by the shared edge) + the
+    // near labels on the global collar (kind Collar, keyed by the tile)
     val recs = cached.flatMap { t =>
-      val lab = localCC(t, nearF, width)
+      val tl = labelNear(t, nearF, width)
       val w = t.w; val h = t.h
-      def strip(f: Int => Int, len: Int): Array[Long] = Array.tabulate(len)(i => lab(f(i)))
-      val buf = scala.collection.mutable.ArrayBuffer[(Int, Int, Int, Array[Long])]()
-      buf += ((t.x, t.y, 0, strip(i => i * w + w - 1, h)))   // our right edge
-      buf += ((t.x - 1, t.y, 0, strip(i => i * w, h)))       // neighbor's right edge
-      buf += ((t.x, t.y, 1, strip(i => (h - 1) * w + i, w))) // our bottom edge
-      buf += ((t.x, t.y - 1, 1, strip(i => i, w)))           // neighbor's bottom edge
-      val collar = scala.collection.mutable.HashSet[Long]()
-      if (t.y == 0) strip(i => i, w).foreach(l => if (l >= 0) collar += l)
-      if (t.y == nty - 1) strip(i => (h - 1) * w + i, w).foreach(l => if (l >= 0) collar += l)
-      if (t.x == 0) strip(i => i * w, h).foreach(l => if (l >= 0) collar += l)
-      if (t.x == ntx - 1) strip(i => i * w + w - 1, h).foreach(l => if (l >= 0) collar += l)
-      if (collar.nonEmpty) buf += ((t.x, t.y, 2, collar.toArray))
-      buf.iterator
+      val onCollar =
+        (if (t.y == 0) 0 until w else Nil) ++
+        (if (t.y == nty - 1) (h - 1) * w until h * w else Nil) ++
+        (if (t.x == 0) (0 until h).map(_ * w) else Nil) ++
+        (if (t.x == ntx - 1) (0 until h).map(_ * w + w - 1) else Nil)
+      val collar = onCollar.filter(i => nearF(t.pixels(i))).map(tl.labels).distinct
+      if (collar.isEmpty) tl.strips
+      else tl.strips :+ Strip(t.x, t.y, t.band, Collar, 0, Array.empty, collar.toArray)
     }
 
     // pass 2: label adjacency (facing strips) + collar edges, deduped
-    val edges = recs.groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (key, it) =>
-      if (key._3 == 2) it.flatMap(_._4.iterator.map(l => (-1L, l)))
-      else {
-        val sides = it.toArray
-        if (sides.length < 2) Iterator.empty
-        else {
-          val l1 = sides(0)._4; val l2 = sides(1)._4
-          val m = math.min(l1.length, l2.length)
-          (0 until m).iterator
-            .filter(i => l1(i) >= 0 && l2(i) >= 0 && l1(i) != l2(i))
-            .map(i => (math.min(l1(i), l2(i)), math.max(l1(i), l2(i))))
-        }
-      }
+    val edges = recs.groupByKey(_.key).flatMapGroups { (key, it) =>
+      if (key._4 == Collar) it.flatMap(_.labels.iterator.map(l => (-1L, l)))
+      else Polygonize.pairStrips(it, 4).collect { case (true, a, b) => (a, b) }
     }.distinct()
 
     // pass 3: components; collar-connected ⇔ component id is the virtual
@@ -148,11 +93,11 @@ object Nearblack {
       ts.map { t =>
         if (set.isEmpty) t
         else {
-          val lab = localCC(t, nearF, width)
+          val lab = labelNear(t, nearF, width).labels
           val out = t.pixels.clone()
           var i = 0
           while (i < out.length) {
-            if (lab(i) >= 0 && set.contains(lab(i))) out(i) = fillB
+            if (set.contains(lab(i))) out(i) = fillB
             i += 1
           }
           Tile(t.z, t.x, t.y, t.band, t.w, t.h, out)

@@ -1,7 +1,31 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+
+/** One tile edge's pixels as a cross-tile merge sees them, keyed by the
+  * tile-grid line they lie on: kind 0 is the vertical line between tiles
+  * (tx, ty) and (tx+1, ty), kind 1 the horizontal line between (tx, ty) and
+  * (tx, ty+1). With 8-connectivity, kind 2 is the corner pixel shared by the
+  * NW tile (tx, ty) and the SE tile (tx+1, ty+1), kind 3 the one shared by
+  * the NE tile (tx+1, ty) and the SW tile (tx, ty+1). `owner` is 0 for the
+  * left/top side of the line and 1 for the right/bottom side. */
+case class Strip(tx: Int, ty: Int, band: Int, kind: Int, owner: Int,
+                 values: Array[Double], labels: Array[Long]) {
+  def key: (Int, Int, Int, Int) = (tx, ty, band, kind)
+}
+
+/** A labeled tile: each pixel's label, the (label, value, size) components
+  * and the edge strips (the 8-connected corners included). */
+private[graft] case class TileLabels(labels: Array[Long],
+                                     comps: Array[(Long, Double, Long)], strips: Array[Strip])
+
+/** Per-tile output of the ring-emitting polygonize: component aggregates,
+  * border strips (their owner flags place cross-tile boundary segments in
+  * global coordinates), and boundary arcs (directed polylines, interior on
+  * the left, points interleaved x0,y0,x1,y1,…). */
+case class PolyRingTileOut(comps: Array[(Long, Double, Long)], borders: Array[Strip],
+                           arcs: Array[(Long, Array[Long])])
 
 /** Distributed polygonize: connected components of equal-valued pixels
   * (4-connected GDAL default, 8-connected option) over a tiled raster —
@@ -12,10 +36,11 @@ import org.apache.spark.sql.functions._
   * Reference: two-pass connected-component polygonizer
   * (/root/reference/alg/polygonize.cpp:455-498, 4/8-connectivity :169-229).
   * Spark shape:
-  *   1. per-tile union-find → local components labeled by their MIN global
-  *      pixel index (deterministic, mergeable)
+  *   1. [[label]]: per-tile union-find → local components labeled by their
+  *      MIN global pixel index (deterministic, mergeable)
   *   2. tiles emit their border strips keyed by the shared edge; one
-  *      shuffle pairs facing strips → adjacency edges between labels
+  *      shuffle pairs facing strips ([[stripEdges]]) → adjacency edges
+  *      between labels
   *   3. the label adjacency graph (O(total tile perimeter) — orders of
   *      magnitude smaller than the raster, but unbounded in adversarial
   *      stripe rasters) is resolved by GraphOps.connectedComponentsAuto:
@@ -25,19 +50,112 @@ import org.apache.spark.sql.functions._
   *   4. per-tile component aggregates re-key to their root (join against
   *      the label→root mapping; Catalyst broadcasts it while small) and merge
   * Labels are min-global-pixel-index, so output is invariant to tiling.
+  * Sieve and Nearblack label their tiles and pair their strips with the
+  * same [[label]] and [[pairStrips]].
   */
-case class PolyTileOut(comps: Array[(Long, Double, Long)],
-                       borders: Array[(Int, Int, Int, Int, Array[Double], Array[Long])])
-
-/** Per-tile output of the ring-emitting polygonize: component aggregates,
-  * border strips WITH side-owner flags (needed to place cross-tile boundary
-  * segments in global coordinates), and boundary arcs (directed polylines,
-  * interior on the left, points interleaved x0,y0,x1,y1,…). */
-case class PolyRingTileOut(comps: Array[(Long, Double, Long)],
-                           borders: Array[(Int, Int, Int, Int, Int, Array[Double], Array[Long])],
-                           arcs: Array[(Long, Array[Long])])
-
 object Polygonize {
+
+  /** Connected components of equal-valued pixels in one tile, 4- or
+    * 8-connected (NaN never equals itself, so a NaN pixel is a component of
+    * its own). Union-find keeps each set's minimum local index as its root;
+    * in row-major order that is also the set's minimum global pixel index,
+    * which labels the component. `width` = global raster width in pixels. */
+  private[graft] def label(t: Tile, width: Long, conn: Int): TileLabels = {
+    val w = t.w; val h = t.h; val px = t.pixels
+    val parent = Array.tabulate(w * h)(identity)
+    def find(a: Int): Int = {
+      var r = a
+      while (parent(r) != r) r = parent(r)
+      var c = a
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val i = y * w + x
+        if (x + 1 < w && px(i) == px(i + 1)) union(i, i + 1)
+        if (y + 1 < h && px(i) == px(i + w)) union(i, i + w)
+        if (conn == 8) {
+          if (x + 1 < w && y + 1 < h && px(i) == px(i + w + 1)) union(i, i + w + 1)
+          if (x > 0 && y + 1 < h && px(i) == px(i + w - 1)) union(i, i + w - 1)
+        }
+        x += 1
+      }
+      y += 1
+    }
+    val gx0 = t.x.toLong * w; val gy0 = t.y.toLong * h
+    val labels = new Array[Long](w * h)
+    val size = new Array[Long](w * h)
+    var i = 0
+    while (i < w * h) {
+      val r = find(i)
+      labels(i) = (gy0 + r / w) * width + gx0 + r % w
+      size(r) += 1
+      i += 1
+    }
+    val comps = (0 until w * h).iterator.filter(r => parent(r) == r)
+      .map(r => (labels(r), px(r), size(r))).toArray
+    def strip(kind: Int, owner: Int, kx: Int, ky: Int, at: Array[Int]) =
+      Strip(kx, ky, t.band, kind, owner, at.map(px), at.map(labels))
+    def col(x: Int) = Array.tabulate(h)(_ * w + x)
+    def row(y: Int) = Array.tabulate(w)(y * w + _)
+    val edges = Array(
+      strip(0, 0, t.x, t.y, col(w - 1)),     // our right edge
+      strip(0, 1, t.x - 1, t.y, col(0)),     // neighbor's right edge
+      strip(1, 0, t.x, t.y, row(h - 1)),     // our bottom edge
+      strip(1, 1, t.x, t.y - 1, row(0)))     // neighbor's bottom edge
+    val strips =
+      if (conn != 8) edges
+      else edges ++ Array(
+        strip(2, 0, t.x, t.y, Array(w * h - 1)),         // we are NW
+        strip(2, 1, t.x - 1, t.y - 1, Array(0)),         // we are SE
+        strip(3, 0, t.x - 1, t.y, Array((h - 1) * w)),   // we are NE
+        strip(3, 1, t.x, t.y - 1, Array(w - 1)))         // we are SW
+    TileLabels(labels, comps, strips)
+  }
+
+  /** Label edges across the strips of one grid line: `sides` holds them
+    * (one strip: a raster border, no edges). Aligned pixels pair, and with
+    * 8-connectivity each pixel's diagonal neighbours (offset ±1) on the
+    * facing strip too. Each edge is (sameValue, min label, max label);
+    * pairs of equal labels are dropped. */
+  private[graft] def pairStrips(sides: Iterator[Strip], conn: Int)
+      : Iterator[(Boolean, Long, Long)] = {
+    val ss = sides.take(2).toArray
+    if (ss.length < 2) Iterator.empty
+    else {
+      val (a, b) = (ss(0), ss(1))
+      val offs = if (conn == 8) Seq(-1, 0, 1) else Seq(0)
+      a.values.indices.iterator.flatMap { i =>
+        offs.iterator.map(i + _).filter(j => j >= 0 && j < b.values.length).map { j =>
+          (a.values(i) == b.values(j), math.min(a.labels(i), b.labels(j)),
+            math.max(a.labels(i), b.labels(j)))
+        }
+      }.filter(e => e._2 != e._3)
+    }
+  }
+
+  /** [[pairStrips]] over every grid line: one shuffle groups the strips by
+    * line. Not deduplicated. */
+  private[graft] def stripEdges(strips: Dataset[Strip], conn: Int): Dataset[(Boolean, Long, Long)] = {
+    import strips.sparkSession.implicits._
+    strips.groupByKey(_.key).flatMapGroups((_, it) => pairStrips(it, conn))
+  }
+
+  /** Component aggregates re-keyed to their merged root and summed. The
+    * mapping is perimeter-sized: Catalyst broadcasts it while it is small,
+    * shuffles when it is not — either way no driver materialization. */
+  private def merged(comps: Dataset[(Long, Double, Long)], mapping: DataFrame): DataFrame =
+    comps.toDF("label", "value", "size")
+      .join(mapping, col("label") === col("lbl"), "left")
+      .select(coalesce(col("root"), col("label")).as("label"), col("value"), col("size"))
+      .groupBy("label", "value").agg(sum("size").as("size"))
 
   /** (label = min global pixel idx, value, size) per component. `width` =
     * global raster width in pixels (for the global index). */
@@ -45,142 +163,24 @@ object Polygonize {
     require(conn == 4 || conn == 8, s"connectivity must be 4 or 8, got $conn")
     val spark = tiles.sparkSession
     import spark.implicits._
-    val connB = conn
 
     // ---- pass 1: per-tile CCL + border strips
     val perTile = tiles.map { t =>
-      val w = t.w; val h = t.h
-      val parent = Array.tabulate(w * h)(identity)
-      def find(a: Int): Int = {
-        var r = a
-        while (parent(r) != r) r = parent(r)
-        var c = a
-        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      def union(a: Int, b: Int): Unit = {
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val i = y * w + x
-          if (x + 1 < w && t.pixels(i) == t.pixels(i + 1)) union(i, i + 1)
-          if (y + 1 < h && t.pixels(i) == t.pixels(i + w)) union(i, i + w)
-          if (connB == 8) {
-            if (x + 1 < w && y + 1 < h && t.pixels(i) == t.pixels(i + w + 1)) union(i, i + w + 1)
-            if (x > 0 && y + 1 < h && t.pixels(i) == t.pixels(i + w - 1)) union(i, i + w - 1)
-          }
-          x += 1
-        }
-        y += 1
-      }
-      def globalIdx(x: Int, y: Int): Long =
-        (t.y.toLong * h + y) * width + (t.x.toLong * w + x)
-      // local root -> global label (min global idx; row-major scan order
-      // means the first pixel of a root has the min index)
-      val lbl = new java.util.HashMap[Int, Long]()
-      val value = new java.util.HashMap[Int, Double]()
-      val size = new java.util.HashMap[Int, Long]()
-      y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val i = y * w + x
-          val r = find(i)
-          if (!lbl.containsKey(r)) { lbl.put(r, globalIdx(x, y)); value.put(r, t.pixels(i)) }
-          size.put(r, size.getOrDefault(r, 0L) + 1L)
-          x += 1
-        }
-        y += 1
-      }
-      val comps = lbl.keySet().toArray(Array.empty[Integer]).map { r =>
-        (lbl.get(r.intValue).longValue, value.get(r.intValue).doubleValue,
-          size.get(r.intValue).longValue)
-      }
-      // border strips: (edgeTx, edgeTy, band, vertical?, values, labels)
-      // vertical edge key (tx,ty) = edge between (tx,ty) and (tx+1,ty):
-      // left tile emits col w-1, right tile emits col 0 under key (tx-1? )
-      def colStrip(x: Int) = {
-        val vs = new Array[Double](h); val ls = new Array[Long](h)
-        var yy = 0
-        while (yy < h) {
-          vs(yy) = t.pixels(yy * w + x)
-          val g = find(yy * w + x); ls(yy) = lbl.get(g)
-          yy += 1
-        }
-        (vs, ls)
-      }
-      def rowStrip(y0: Int) = {
-        val vs = new Array[Double](w); val ls = new Array[Long](w)
-        var xx = 0
-        while (xx < w) {
-          vs(xx) = t.pixels(y0 * w + xx)
-          val g = find(y0 * w + xx); ls(xx) = lbl.get(g)
-          xx += 1
-        }
-        (vs, ls)
-      }
-      // kinds: 0 = vertical edge, 1 = horizontal edge, 2 = main-diagonal
-      // corner (NW/SE tiles), 3 = anti-diagonal corner (NE/SW tiles)
-      def corner(x: Int, y: Int) = {
-        val g = find(y * w + x)
-        (Array(t.pixels(y * w + x)), Array(lbl.get(g).longValue))
-      }
-      val strips = Array(
-        { val (vs, ls) = colStrip(w - 1); (t.x, t.y, t.band, 0, vs, ls) },     // our right edge
-        { val (vs, ls) = colStrip(0); (t.x - 1, t.y, t.band, 0, vs, ls) },     // neighbor's right edge
-        { val (vs, ls) = rowStrip(h - 1); (t.x, t.y, t.band, 1, vs, ls) },     // our bottom edge
-        { val (vs, ls) = rowStrip(0); (t.x, t.y - 1, t.band, 1, vs, ls) }      // neighbor's bottom edge
-      )
-      val borders =
-        if (connB != 8) strips
-        else strips ++ Array(
-          { val (vs, ls) = corner(w - 1, h - 1); (t.x, t.y, t.band, 2, vs, ls) },    // we are NW
-          { val (vs, ls) = corner(0, 0); (t.x - 1, t.y - 1, t.band, 2, vs, ls) },    // we are SE
-          { val (vs, ls) = corner(0, h - 1); (t.x - 1, t.y, t.band, 3, vs, ls) },    // we are NE
-          { val (vs, ls) = corner(w - 1, 0); (t.x, t.y - 1, t.band, 3, vs, ls) })    // we are SW
-      PolyTileOut(comps, borders)
+      val tl = label(t, width, conn)
+      (tl.comps, tl.strips)
     }.cache()
 
-    // ---- pass 2: adjacency across facing strips
-    val edges = perTile.flatMap(_.borders)
-      .groupByKey(b => (b._1, b._2, b._3, b._4))
-      .flatMapGroups { (_, it) =>
-        val sides = it.toArray
-        if (sides.length < 2) Iterator.empty
-        else {
-          // the two facing strips arrive in arbitrary order; labels differ,
-          // pair equal-valued aligned pixels
-          val (_, _, _, _, v1, l1) = sides(0)
-          val (_, _, _, _, v2, l2) = sides(1)
-          val offs = if (connB == 8) Seq(-1, 0, 1) else Seq(0)
-          (0 until v1.length).iterator.flatMap { i =>
-            offs.iterator.map(o => i + o)
-              .filter(j => j >= 0 && j < v2.length)
-              .filter(j => v1(i) == v2(j) && l1(i) != l2(j))
-              .map(j => (math.min(l1(i), l2(j)), math.max(l1(i), l2(j))))
-          }
-        }
-      }.distinct()
+    // ---- pass 2: equal-valued label pairs across facing strips
+    val edges = stripEdges(perTile.flatMap(_._2), conn)
+      .filter(_._1).map(e => (e._2, e._3)).distinct()
 
     // ---- pass 3: components of the label graph (driver fast path under
     // spark.graft.cc.driverLimit edges, distributed hash-min beyond)
     val mapping = GraphOps.connectedComponentsAuto(edges)
       .toDF("lbl", "root")
 
-    // ---- pass 4: merge component aggregates under root labels. The
-    // mapping is perimeter-sized: Catalyst broadcasts it while it is small,
-    // shuffles when it is not — either way no driver materialization.
-    val out = perTile.flatMap(_.comps)
-      .toDF("label", "value", "size")
-      .join(mapping, col("label") === col("lbl"), "left")
-      .select(coalesce(col("root"), col("label")).as("label"),
-        col("value"), col("size"))
-      .groupBy("label", "value").agg(sum("size").as("size"))
-    out
+    // ---- pass 4: merge component aggregates under root labels
+    merged(perTile.flatMap(_._1), mapping)
   }
 
   // =====================================================================
@@ -231,58 +231,14 @@ object Polygonize {
   def polygons(tiles: Dataset[Tile], width: Long): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val maxArcPts =
-      try spark.conf.get("spark.graft.polygonize.maxArcPoints", "100000000").toLong
-      catch { case _: Exception => 100000000L }
+    val maxArcPts = GraphOps.guardCap(spark, "spark.graft.polygonize.maxArcPoints", 100000000L)
 
     // ---- pass 1: per-tile CCL + aggregates + border strips + interior arcs
     val perTile = tiles.map { t =>
       val w = t.w; val h = t.h
       val gx0 = t.x.toLong * w; val gy0 = t.y.toLong * h
-      val parent = Array.tabulate(w * h)(identity)
-      def find(a: Int): Int = {
-        var r = a
-        while (parent(r) != r) r = parent(r)
-        var c = a
-        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      def union(a: Int, b: Int): Unit = {
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val i = y * w + x
-          if (x + 1 < w && t.pixels(i) == t.pixels(i + 1)) union(i, i + 1)
-          if (y + 1 < h && t.pixels(i) == t.pixels(i + w)) union(i, i + w)
-          x += 1
-        }
-        y += 1
-      }
-      val lbl = new java.util.HashMap[Int, Long]()
-      val value = new java.util.HashMap[Int, Double]()
-      val size = new java.util.HashMap[Int, Long]()
-      y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val i = y * w + x
-          val r = find(i)
-          if (!lbl.containsKey(r)) {
-            lbl.put(r, (gy0 + y) * width + gx0 + x); value.put(r, t.pixels(i))
-          }
-          size.put(r, size.getOrDefault(r, 0L) + 1L)
-          x += 1
-        }
-        y += 1
-      }
-      val comps = lbl.keySet().toArray(Array.empty[Integer]).map { r =>
-        (lbl.get(r.intValue).longValue, value.get(r.intValue).doubleValue,
-          size.get(r.intValue).longValue)
-      }
+      val tl = label(t, width, 4)
+      val lbl = tl.labels
 
       // interior-definite boundary unit edges (sides between two in-tile
       // pixels of different value); tile-border sides are pass-2-pending
@@ -294,12 +250,12 @@ object Polygonize {
       def addEdge(l: Long, sx: Long, sy: Long, ex: Long, ey: Long): Unit = {
         eLbl += l; eSx += sx; eSy += sy; eEx += ex; eEy += ey
       }
-      y = 0
+      var y = 0
       while (y < h) {
         var x = 0
         while (x < w) {
           val i = y * w + x
-          val l = lbl.get(find(i))
+          val l = lbl(i)
           val gx = gx0 + x; val gy = gy0 + y
           if (y > 0 && t.pixels(i) != t.pixels(i - w)) addEdge(l, gx, gy, gx + 1, gy)
           if (y + 1 < h && t.pixels(i) != t.pixels(i + w)) addEdge(l, gx + 1, gy + 1, gx, gy + 1)
@@ -381,31 +337,7 @@ object Polygonize {
         k += 1
       }
 
-      // border strips with owner flags and absolute line coordinates:
-      // (edgeTx, edgeTy, band, kind, owner, values, labels); kind 0 =
-      // vertical edge (between tile tx and tx+1), kind 1 = horizontal
-      def colStrip(x: Int) = {
-        val vs = new Array[Double](h); val ls = new Array[Long](h)
-        var yy = 0
-        while (yy < h) {
-          vs(yy) = t.pixels(yy * w + x); ls(yy) = lbl.get(find(yy * w + x)); yy += 1
-        }
-        (vs, ls)
-      }
-      def rowStrip(y0: Int) = {
-        val vs = new Array[Double](w); val ls = new Array[Long](w)
-        var xx = 0
-        while (xx < w) {
-          vs(xx) = t.pixels(y0 * w + xx); ls(xx) = lbl.get(find(y0 * w + xx)); xx += 1
-        }
-        (vs, ls)
-      }
-      val borders = Array(
-        { val (vs, ls) = colStrip(w - 1); (t.x, t.y, t.band, 0, 0, vs, ls) },
-        { val (vs, ls) = colStrip(0); (t.x - 1, t.y, t.band, 0, 1, vs, ls) },
-        { val (vs, ls) = rowStrip(h - 1); (t.x, t.y, t.band, 1, 0, vs, ls) },
-        { val (vs, ls) = rowStrip(0); (t.x, t.y - 1, t.band, 1, 1, vs, ls) })
-      PolyRingTileOut(comps, borders, arcs.toArray)
+      PolyRingTileOut(tl.comps, tl.strips, arcs.toArray)
     }.cache()
 
     // tile extents for strip coordinate math (uniform grid assumed, as
@@ -417,65 +349,34 @@ object Polygonize {
     // cross-tile/raster-border boundary segments (single-segment arcs).
     // rowKind 0 = adjacency (a,b); rowKind 1 = arc (a = label, pts)
     val stripOut = perTile.flatMap(_.borders)
-      .groupByKey(b => (b._1, b._2, b._3, b._4))
+      .groupByKey(_.key)
       .flatMapGroups { (key, it) =>
         val (ex, ey, _, kind) = key
         val sides = it.toArray
-        val o0 = sides.find(_._5 == 0) // left/top owner
-        val o1 = sides.find(_._5 == 1) // right/bottom owner
-        val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Array[Long])]()
-        def vArc(l: Long, x: Long, gy: Long, down: Boolean): Unit =
-          out += ((1, l, 0L,
-            if (down) Array(x, gy, x, gy + 1) else Array(x, gy + 1, x, gy)))
-        def hArc(l: Long, gx: Long, y: Long, right: Boolean): Unit =
-          out += ((1, l, 0L,
-            if (right) Array(gx, y, gx + 1, y) else Array(gx + 1, y, gx, y)))
-        if (kind == 0) {
-          val bx = (ex.toLong + 1) * tw
-          (o0, o1) match {
-            case (Some(a), Some(b)) =>
-              val (v0, l0) = (a._6, a._7); val (v1, l1) = (b._6, b._7)
-              var i = 0
-              while (i < v0.length) {
-                val gy = ey.toLong * th + i
-                if (v0(i) == v1(i)) {
-                  if (l0(i) != l1(i))
-                    out += ((0, math.min(l0(i), l1(i)), math.max(l0(i), l1(i)), Array.empty[Long]))
-                } else { vArc(l0(i), bx, gy, down = true); vArc(l1(i), bx, gy, down = false) }
-                i += 1
-              }
-            case (Some(a), None) => // raster right border
-              var i = 0
-              while (i < a._6.length) { vArc(a._7(i), bx, ey.toLong * th + i, down = true); i += 1 }
-            case (None, Some(b)) => // raster left border
-              var i = 0
-              while (i < b._6.length) { vArc(b._7(i), bx, ey.toLong * th + i, down = false); i += 1 }
-            case _ =>
-          }
-        } else if (kind == 1) {
-          val by = (ey.toLong + 1) * th
-          (o0, o1) match {
-            case (Some(a), Some(b)) =>
-              val (v0, l0) = (a._6, a._7); val (v1, l1) = (b._6, b._7)
-              var i = 0
-              while (i < v0.length) {
-                val gx = ex.toLong * tw + i
-                if (v0(i) == v1(i)) {
-                  if (l0(i) != l1(i))
-                    out += ((0, math.min(l0(i), l1(i)), math.max(l0(i), l1(i)), Array.empty[Long]))
-                } else { hArc(l0(i), gx, by, right = false); hArc(l1(i), gx, by, right = true) }
-                i += 1
-              }
-            case (Some(a), None) => // raster bottom border
-              var i = 0
-              while (i < a._6.length) { hArc(a._7(i), ex.toLong * tw + i, by, right = false); i += 1 }
-            case (None, Some(b)) => // raster top border
-              var i = 0
-              while (i < b._6.length) { hArc(b._7(i), ex.toLong * tw + i, by, right = true); i += 1 }
-            case _ =>
-          }
+        val o0 = sides.find(_.owner == 0) // left/top side
+        val o1 = sides.find(_.owner == 1) // right/bottom side
+        val pairs = pairStrips(sides.iterator, 4).collect {
+          case (true, a, b) => (0, a, b, Array.empty[Long])
         }
-        out.iterator
+        // the unit side at strip position i, directed with the owner's
+        // interior on its left; kind 0 lines are vertical, kind 1 horizontal
+        val bx = (ex.toLong + 1) * tw; val by = (ey.toLong + 1) * th
+        def side(i: Int, owner: Int): Array[Long] =
+          if (kind == 0) {
+            val gy = ey.toLong * th + i
+            if (owner == 0) Array(bx, gy, bx, gy + 1) else Array(bx, gy + 1, bx, gy)
+          } else {
+            val gx = ex.toLong * tw + i
+            if (owner == 0) Array(gx + 1, by, gx, by) else Array(gx, by, gx + 1, by)
+          }
+        // a boundary wherever the two sides differ, or one side is missing
+        // (the raster border)
+        val boundary: Int => Boolean = (o0, o1) match {
+          case (Some(a), Some(b)) => i => a.values(i) != b.values(i)
+          case _ => _ => true
+        }
+        pairs ++ sides.head.values.indices.iterator.filter(boundary)
+          .flatMap(i => sides.iterator.map(s => (1, s.labels(i), 0L, side(i, s.owner))))
       }.cache()
 
     // ---- pass 3: merge labels across tiles (O(log n) star CC)
@@ -495,11 +396,7 @@ object Polygonize {
     }.toDF("rlbl", "wkt")
 
     // ---- aggregates (value, size) under root labels, joined to the rings
-    perTile.flatMap(_.comps)
-      .toDF("label", "value", "size")
-      .join(mapping, col("label") === col("lbl"), "left")
-      .select(coalesce(col("root"), col("label")).as("label"), col("value"), col("size"))
-      .groupBy("label", "value").agg(sum("size").as("size"))
+    merged(perTile.flatMap(_.comps), mapping)
       .join(ringWkt, col("label") === col("rlbl"))
       .select(col("label"), col("value"), col("size"), col("wkt"))
   }

@@ -14,9 +14,10 @@ import org.apache.spark.sql.Dataset
   * absorbed pixels take the absorber's value; components that become
   * same-value adjacent coalesce. Isolated small components are kept.
   *
-  * Distribution: reuses the Polygonize shape — per-tile CCL, cross-tile
-  * same-value union + cross-value adjacency from border strips, in-tile
-  * cross-value adjacency from the CCL pass; the component graph resolves
+  * Distribution: per-tile labels and border strips from the shared labeler
+  * (`Polygonize.label`); cross-tile same-value union + cross-value
+  * adjacency from `Polygonize.stripEdges`, in-tile cross-value adjacency
+  * from a pass over the labels; the component graph resolves
   * via GraphOps.connectedComponentsAuto and the sequential `mergePolicy`
   * runs per independent cluster of the merge subgraph, in parallel on
   * executors (exactly equivalent to the global sequential order — see
@@ -122,36 +123,18 @@ object Sieve {
     val spark = tiles.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
+    val maxCluster = GraphOps.guardCap(spark, "spark.graft.sieve.maxClusterNodes", 1000000L)
     val t0 = tiles.cache()
 
     val per = t0.map { t =>
-      val (_, comps, adjB, borders) = localCcl(t, width, conn)
-      (t.x, t.y, comps, adjB, borders)
+      val tl = Polygonize.label(t, width, conn)
+      (t.x, t.y, tl.comps, diffAdjacency(t, tl.labels, conn), tl.strips)
     }.cache()
     per.count() // materialize once; several downstream consumers
 
-    // cross-tile edges from border strips: perimeter-proportional.
-    // 8-conn additionally pairs each strip pixel with its diagonal
-    // neighbors (offset ±1 on the facing strip) and the corner points of
-    // diagonally-adjacent tiles (kind 2/3 single-pixel strips).
-    val connB = conn
-    val crossEdges = per.flatMap(_._5)
-      .groupByKey(b => (b._1, b._2, b._3, b._4))
-      .flatMapGroups { (_, it) =>
-        val sides = it.toArray
-        if (sides.length < 2) Iterator.empty
-        else {
-          val (_, _, _, _, v1, l1) = sides(0)
-          val (_, _, _, _, v2, l2) = sides(1)
-          val offs = if (connB == 8) Seq(-1, 0, 1) else Seq(0)
-          (0 until v1.length).iterator.flatMap { i =>
-            offs.iterator
-              .map(o => i + o)
-              .filter(j => j >= 0 && j < v2.length)
-              .map(j => (v1(i) == v2(j), math.min(l1(i), l2(j)), math.max(l1(i), l2(j))))
-          }.filter(e => e._2 != e._3)
-        }
-      }.distinct().cache()
+    // cross-tile edges from facing border strips, tagged same-value or not:
+    // perimeter-proportional
+    val crossEdges = Polygonize.stripEdges(per.flatMap(_._5), conn).distinct().cache()
 
     // same-value cross-tile merge → label→root mapping (Dataset; driver
     // fast path under spark.graft.cc.driverLimit, hash-min beyond)
@@ -207,9 +190,6 @@ object Sieve {
     // sequential, reference-semantics) mergePolicy would run as a single
     // giant executor task. Same contract as the LSH hot-bucket cap:
     // report-and-refuse, never a silent degradation.
-    val maxCluster =
-      try spark.conf.get("spark.graft.sieve.maxClusterNodes", "1000000").toLong
-      catch { case _: Exception => 1000000L }
     val changedDs = nodeStats.groupByKey(_._1).cogroup(edgeC.groupByKey(_._1)) { (_, ns, es) =>
       val comps0 = ns.map(n => n._2 -> (n._3, n._4)).toMap
       if (comps0.size > maxCluster)
@@ -241,7 +221,7 @@ object Sieve {
         ts.map { t =>
           if (m.isEmpty) t
           else {
-            val (lbl, _, _, _) = localCcl(t, width, connB)
+            val lbl = Polygonize.label(t, width, conn).labels
             val px = t.pixels.clone()
             var i = 0
             while (i < px.length) {
@@ -256,72 +236,19 @@ object Sieve {
     out
   }
 
-  /** Per-tile CCL: (per-pixel global label, comps (label,value,size),
-    * in-tile diff-value adjacency, border (strips for cross-tile)). */
-  private[engine] def localCcl(t: Tile, width: Long, conn: Int = 4)
-      : (Array[Long], Array[(Long, Double, Long)], Array[(Long, Long)],
-         Array[(Int, Int, Int, Int, Array[Double], Array[Long])]) = {
+  /** In-tile label edges between adjacent pixels of different value
+    * (4- or 8-connected), each (min label, max label), deduplicated. */
+  private def diffAdjacency(t: Tile, lbl: Array[Long], conn: Int): Array[(Long, Long)] = {
     val w = t.w; val h = t.h
-    val parent = Array.tabulate(w * h)(identity)
-    def find(a: Int): Int = {
-      var r = a
-      while (parent(r) != r) r = parent(r)
-      var c = a
-      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Int, b: Int): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    val adj = scala.collection.mutable.HashSet[(Long, Long)]()
     var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val i = y * w + x
-        if (x + 1 < w && t.pixels(i) == t.pixels(i + 1)) union(i, i + 1)
-        if (y + 1 < h && t.pixels(i) == t.pixels(i + w)) union(i, i + w)
-        if (conn == 8) {
-          if (x + 1 < w && y + 1 < h && t.pixels(i) == t.pixels(i + w + 1)) union(i, i + w + 1)
-          if (x > 0 && y + 1 < h && t.pixels(i) == t.pixels(i + w - 1)) union(i, i + w - 1)
-        }
-        x += 1
-      }
-      y += 1
-    }
-    def globalIdx(x: Int, y: Int): Long =
-      (t.y.toLong * h + y) * width + (t.x.toLong * w + x)
-    val lblOfRoot = new java.util.HashMap[Int, Long]()
-    val valOfRoot = new java.util.HashMap[Int, Double]()
-    val sizeOfRoot = new java.util.HashMap[Int, Long]()
-    val pixLbl = new Array[Long](w * h)
-    y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val i = y * w + x
-        val r = find(i)
-        if (!lblOfRoot.containsKey(r)) { lblOfRoot.put(r, globalIdx(x, y)); valOfRoot.put(r, t.pixels(i)) }
-        sizeOfRoot.put(r, sizeOfRoot.getOrDefault(r, 0L) + 1L)
-        pixLbl(i) = lblOfRoot.get(r)
-        x += 1
-      }
-      y += 1
-    }
-    val comps = lblOfRoot.keySet().toArray(Array.empty[Integer]).map { r =>
-      (lblOfRoot.get(r.intValue).longValue, valOfRoot.get(r.intValue).doubleValue,
-        sizeOfRoot.get(r.intValue).longValue)
-    }
-    // in-tile diff-value adjacency
-    val adjB = scala.collection.mutable.HashSet[(Long, Long)]()
-    y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
         val i = y * w + x
         def diffEdge(j: Int): Unit =
           if (t.pixels(i) != t.pixels(j))
-            adjB += ((math.min(pixLbl(i), pixLbl(j)), math.max(pixLbl(i), pixLbl(j))))
+            adj += ((math.min(lbl(i), lbl(j)), math.max(lbl(i), lbl(j))))
         if (x + 1 < w) diffEdge(i + 1)
         if (y + 1 < h) diffEdge(i + w)
         if (conn == 8) {
@@ -332,35 +259,6 @@ object Sieve {
       }
       y += 1
     }
-    def colStrip(x: Int) = {
-      val vs = new Array[Double](h); val ls = new Array[Long](h)
-      var yy = 0
-      while (yy < h) { vs(yy) = t.pixels(yy * w + x); ls(yy) = pixLbl(yy * w + x); yy += 1 }
-      (vs, ls)
-    }
-    def rowStrip(y0: Int) = {
-      val vs = new Array[Double](w); val ls = new Array[Long](w)
-      var xx = 0
-      while (xx < w) { vs(xx) = t.pixels(y0 * w + xx); ls(xx) = pixLbl(y0 * w + xx); xx += 1 }
-      (vs, ls)
-    }
-    // kinds: 0 = vertical edge, 1 = horizontal edge, 2 = main-diagonal
-    // corner (NW/SE tiles), 3 = anti-diagonal corner (NE/SW tiles)
-    def corner(x: Int, y: Int) =
-      (Array(t.pixels(y * w + x)), Array(pixLbl(y * w + x)))
-    val strips = Array(
-      { val (vs, ls) = colStrip(w - 1); (t.x, t.y, t.band, 0, vs, ls) },
-      { val (vs, ls) = colStrip(0); (t.x - 1, t.y, t.band, 0, vs, ls) },
-      { val (vs, ls) = rowStrip(h - 1); (t.x, t.y, t.band, 1, vs, ls) },
-      { val (vs, ls) = rowStrip(0); (t.x, t.y - 1, t.band, 1, vs, ls) })
-    val borders =
-      if (conn != 8) strips
-      else strips ++ Array(
-        { val (vs, ls) = corner(w - 1, h - 1); (t.x, t.y, t.band, 2, vs, ls) },     // we are NW
-        { val (vs, ls) = corner(0, 0); (t.x - 1, t.y - 1, t.band, 2, vs, ls) },     // we are SE
-        { val (vs, ls) = corner(0, h - 1); (t.x - 1, t.y, t.band, 3, vs, ls) },     // we are NE
-        { val (vs, ls) = corner(w - 1, 0); (t.x, t.y - 1, t.band, 3, vs, ls) })     // we are SW
-    (pixLbl, comps, adjB.toArray, borders)
+    adj.toArray
   }
-
 }
