@@ -8,14 +8,17 @@ import graft.functions.GraftFunctions
   * (spatial-join throughput, docs/sec), per-query wall times over
   * SPARK_GRAFT_SF_DIR, and the BASELINE.md §3 scaling probe — the same
   * north-rule job (span parse → salted PIP join; tile assignment) at
-  * local[8] and local[32] on identical input, reporting throughput at both
-  * parallelism levels and the per-core-normalized scaling efficiency
-  * throughput_32 / (4 × throughput_8).
+  * local[p_lo] and local[p_hi = 4·p_lo] on identical input, reporting
+  * throughput at both parallelism levels and the per-core-normalized
+  * scaling efficiency throughput_hi / (4 × throughput_lo).
   *
   * Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  * SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALE_N (probe rows,
-  * default 1,000,000), SPARK_GRAFT_SCALE_RUNS (default 3),
-  * SPARK_GRAFT_SKIP_SCALING=1 to skip the probe.
+  * SPARK_GRAFT_CPUS (default: the host's cores), SPARK_GRAFT_SCALE_N
+  * (probe rows, default 4,000,000), SPARK_GRAFT_SCALE_RUNS (default 5),
+  * SPARK_GRAFT_SCALE_P (p_lo, default cores / 4), SPARK_GRAFT_SCALE_PAIRS
+  * (default 3), SPARK_GRAFT_SKIP_SCALING=1 to skip the probe; it is also
+  * skipped, with a note on stderr, when p_hi exceeds the host's cores.
+  * Probe JVMs get a third of the host's MemTotal as heap.
   */
 object Bench {
 
@@ -32,6 +35,13 @@ object Bench {
     "e01_cosine_topk", "e02_embed_neardup", "e11_semdedup",
     "g20_overlay", "r13_dem_extras", "r15_warp_area",
     "q03_groupby", "q04_join_agg", "q10_firstmatch_join", "q13_time_window")
+
+  private[graft] def hostCores: Int = Runtime.getRuntime.availableProcessors
+
+  /** A probe JVM's heap in MB: a third of MemTotal, within [1 GB, 24 GB]. */
+  private def probeHeapMb: Long = scala.util.Using(scala.io.Source.fromFile("/proc/meminfo"))(
+    _.getLines().collectFirst { case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong })
+    .toOption.flatten.fold(24L * 1024)(kb => math.max(1024L, math.min(24L * 1024, kb / 3072)))
 
   private def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -182,7 +192,7 @@ object Bench {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx24g",
+      s"-Xmx${probeHeapMb}m",
       // GC threads sized to the simulated executor's core allocation —
       // the JVM default (= machine cores) would give the low-parallelism
       // JVM 8x its share of GC bandwidth and skew the N vs 4N comparison
@@ -225,10 +235,16 @@ object Bench {
       sys.exit(0)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(hostCores)(_.toInt)
     val scaleN = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "4000000").toLong
     val scaleRuns = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "5").toInt
-    val skipScaling = sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")
+    val pLo = sys.env.get("SPARK_GRAFT_SCALE_P").fold(math.max(1, hostCores / 4))(_.toInt)
+    val pHi = pLo * 4
+    // on fewer cores than p_hi the probe would measure oversubscription
+    val oversubscribed = pHi > hostCores
+    if (oversubscribed)
+      System.err.println(s"scaling probe skipped: p_hi = $pHi exceeds the host's $hostCores cores")
+    val skipScaling = sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1") || oversubscribed
 
     val s = session(cpus)
     val all = SparkEntry.queries
@@ -247,7 +263,6 @@ object Bench {
     }
     s.stop()
 
-    val pLo = sys.env.getOrElse("SPARK_GRAFT_SCALE_P", "4").toInt
     val pairsN = sys.env.getOrElse("SPARK_GRAFT_SCALE_PAIRS", "3").toInt
     val scaling: String = if (skipScaling) "null" else {
       // MATCHED PAIRS (round-4 verdict ask): the sandbox's external load
@@ -261,7 +276,6 @@ object Bench {
       // the best pair among load-clean ones on BOTH statistics (best-of-
       // window and median), plus every pair's raw windows so nothing hides.
       val half = math.max(2, (scaleRuns + 1) / 2)
-      val pHi = pLo * 4
       final case class P(lo: ProbeResult, hi: ProbeResult) {
         def eff: Double = hi.thr / (4.0 * lo.thr)
         def effMed: Double = hi.thrMed / (4.0 * lo.thrMed)

@@ -351,10 +351,11 @@ object Queries7 {
     // -- Exact distributed quantiles (d28): the k-th order statistic of a
     // double column WITHOUT a global sort — 16-bit-digit radix selection
     // over the order-preserving IEEE bit map (double_usort_bits), four
-    // bounded aggregation passes per quantile, ≤2^16 driver counters per
-    // pass. No sample, no approximation: the twin computes the same k-th
-    // element by brute row_number and the values must be bit-equal
-    // doubles. k = floor((n-1)·q) + 1 (the lower order statistic).
+    // bounded aggregation passes shared by the three quantiles, ≤2^16
+    // driver counters per quantile per pass. No sample, no
+    // approximation: the twin computes the same k-th element by brute
+    // row_number and the values must be bit-equal doubles.
+    // k = floor((n-1)·q) + 1 (the lower order statistic).
     ("d28_exact_quantile", (s, dir) => {
       // k is defined over the NON-NULL population on both sides —
       // exactKth excludes nulls, so counting them into n would let k
@@ -363,10 +364,10 @@ object Queries7 {
         .where(col("value").isNotNull)
       val n = ev.count()
       val sp = s; import sp.implicits._
-      Seq(50L, 90L, 99L).map { q =>
-        val k = (n - 1) * q / 100 + 1
-        (q, k, engine.Quantiles.exactKth(ev, "value", k))
-      }.toDF("q_e2", "k", "value").orderBy("q_e2")
+      val qk = Seq(50L, 90L, 99L).map(q => (q, (n - 1) * q / 100 + 1))
+      qk.zip(engine.Quantiles.exactKths(ev, "value", qk.map(_._2)))
+        .map { case ((q, k), v) => (q, k, v) }
+        .toDF("q_e2", "k", "value").orderBy("q_e2")
     }, Some("""
       WITH ev AS (SELECT value FROM events WHERE value IS NOT NULL),
       n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ev),

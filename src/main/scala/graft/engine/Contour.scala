@@ -68,7 +68,9 @@ object Contour {
     * Nodata: NaN pixels (e.g. from Raster.maskNodata) band to NaN; since
     * NaN != NaN every such pixel is its own CCL singleton, and they are
     * dropped after labeling — nodata areas emit NO polygons, matching
-    * gdal_contour's skip of nodata pixels (contour.cpp nodata guard). */
+    * gdal_contour's skip of nodata pixels (contour.cpp nodata guard).
+    * The result comes back cached and materialized; the components' cache
+    * is released. */
   def contourPolygons(tiles: Dataset[Tile], interval: Double, width: Long,
                       conn: Int = 4): DataFrame = {
     val spark = tiles.sparkSession
@@ -77,10 +79,11 @@ object Contour {
     val banded = tiles.map { t =>
       t.copy(pixels = t.pixels.map(v => math.floor(v / interval)))
     }
-    Polygonize.components(banded, width, conn)
+    val caches = new GraphOps.CallCaches
+    caches.result(caches.own(Polygonize.components(banded, width, conn))
       .where(not(isnan(col("value"))))
       .withColumn("elev_min", col("value") * interval)
-      .withColumn("elev_max", (col("value") + 1.0) * interval)
+      .withColumn("elev_max", (col("value") + 1.0) * interval))
   }
 
   /** Per (tile, level): (z, x, y, level, n_segments, len_u). Cells whose

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.geom.{BoolOps, Geom, MultiPolygon, Polygon, Wkb}
+import graft.geom.{Buffer, Geom, MultiPolygon, Polygon, Wkb}
 import scala.collection.mutable.ArrayBuffer
 
 /** Raster footprint: the polygon of valid-data pixels (reference:
@@ -64,19 +64,7 @@ object Footprint {
       val c = (gy0 + ry0).toDouble; val d = (gy0 + ry1).toDouble
       pieces += Polygon(Array(Array(a, c, b, c, b, d, a, d, a, c)))
     }
-    unionAll(pieces)
-  }
-
-  private def unionAll(pieces: ArrayBuffer[Geom]): Geom = {
-    var cur = pieces
-    while (cur.length > 1) {
-      val next = new ArrayBuffer[Geom]((cur.length + 1) / 2)
-      var i = 0
-      while (i + 1 < cur.length) { next += BoolOps.union(cur(i), cur(i + 1)); i += 2 }
-      if (i < cur.length) next += cur(i)
-      cur = next
-    }
-    if (cur.isEmpty) MultiPolygon(Array.empty) else cur(0)
+    Buffer.unionAll(pieces)
   }
 
   /** Dataset-level footprint: one WKB row. */

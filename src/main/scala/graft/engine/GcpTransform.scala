@@ -43,16 +43,18 @@ object GcpTransform {
                     x * x * y, x * y * y, x * x * x, y * y * y)
   }
 
-  /** In-place Gaussian elimination with partial pivoting; a is n×(n+1)
-    * augmented. Returns the solution vector. */
-  private def solve(a: Array[Array[Double]]): Array[Double] = {
+  /** In-place n×(n+1) augmented Gaussian elimination with partial pivoting
+    * (the GDALLinearSystemSolve analog, alg/gdallinearsystem.cpp); refuses
+    * a singular system with `singular`. Returns the solution vector. */
+  private[engine] def solve(a: Array[Array[Double]], singular: String =
+      "singular GCP system (degenerate control points)"): Array[Double] = {
     val n = a.length
     var col = 0
     while (col < n) {
       var piv = col
       var r = col + 1
       while (r < n) { if (math.abs(a(r)(col)) > math.abs(a(piv)(col))) piv = r; r += 1 }
-      require(math.abs(a(piv)(col)) > 1e-14, "singular GCP system (degenerate control points)")
+      require(math.abs(a(piv)(col)) > 1e-14, singular)
       if (piv != col) { val t = a(piv); a(piv) = a(col); a(col) = t }
       r = col + 1
       while (r < n) {

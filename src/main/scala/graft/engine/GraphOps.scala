@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** GNM-style network analysis (reference: GNMGraph::DijkstraShortestPath /
   * ConnectedComponents, /root/reference/gnm/gnmgraph.cpp:185-244 and
@@ -28,6 +29,24 @@ object GraphOps {
     val v = spark.conf.get(key, default.toString)
     v.trim.toLongOption.getOrElse(
       throw new IllegalArgumentException(s"$key must be an integer, got '$v'"))
+  }
+
+  /** The caches one operator call makes. `apply` caches a Dataset unless
+    * it is cached already (a caller's cache is never released); `own` takes
+    * over a cache the call was handed back by an inner operator; `result`
+    * persists and counts the output, then releases every cache made or
+    * owned here. */
+  private[graft] final class CallCaches {
+    private val made = scala.collection.mutable.ArrayBuffer[Dataset[_]]()
+    def apply[T](ds: Dataset[T]): Dataset[T] =
+      if (ds.storageLevel != StorageLevel.NONE) ds else { made += ds; ds.cache() }
+    def own[T](ds: Dataset[T]): Dataset[T] = { made += ds; ds }
+    def release(): Unit = { made.foreach(_.unpersist()); made.clear() }
+    def result[T](out: Dataset[T]): Dataset[T] = {
+      val r = out.cache()
+      try r.count() catch { case e: Throwable => r.unpersist(); throw e } finally release()
+      r
+    }
   }
 
   /** Single-source shortest distances. `edges` needs (src, dst, w). */
@@ -146,7 +165,8 @@ object GraphOps {
     val spark = edges.sparkSession
     import spark.implicits._
     val limit = guardCap(spark, "spark.graft.cc.driverLimit", 2000000L)
-    val e = edges.cache()
+    val caches = new CallCaches
+    val e = caches(edges)
     val n = e.limit((limit + 1).min(Int.MaxValue.toLong).toInt).count()
     if (n <= limit) {
       val arr = e.collect()
@@ -164,12 +184,14 @@ object GraphOps {
       }
       val nodes = arr.iterator.flatMap(t => Iterator(t._1, t._2)).toArray.distinct
       val out = nodes.map(x => (x, find(x))).toSeq
-      e.unpersist()
+      caches.release()
       out.toDS()
     } else {
+      // connectedComponents checkpoints what it reads of e before returning
       val out = connectedComponents(e.toDF("src", "dst"))
         .select(col("node").cast("long"), col("comp").cast("long"))
         .as[(Long, Long)]
+      caches.release()
       out
     }
   }

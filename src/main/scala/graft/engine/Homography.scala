@@ -75,34 +75,6 @@ object Homography {
     Some(o)
   }
 
-  /** n×(n+1) augmented Gaussian elimination with partial pivoting (the
-    * GDALLinearSystemSolve analog, alg/gdallinearsystem.cpp). */
-  private def solve(a: Array[Array[Double]]): Array[Double] = {
-    val n = a.length
-    var col = 0
-    while (col < n) {
-      var piv = col; var r = col + 1
-      while (r < n) { if (math.abs(a(r)(col)) > math.abs(a(piv)(col))) piv = r; r += 1 }
-      require(math.abs(a(piv)(col)) > 1e-14, "homography system not invertible")
-      if (piv != col) { val t = a(piv); a(piv) = a(col); a(col) = t }
-      r = col + 1
-      while (r < n) {
-        val f = a(r)(col) / a(col)(col)
-        if (f != 0.0) { var c = col; while (c <= n) { a(r)(c) -= f * a(col)(c); c += 1 } }
-        r += 1
-      }
-      col += 1
-    }
-    val x = new Array[Double](n)
-    var i = n - 1
-    while (i >= 0) {
-      var s = a(i)(n); var j = i + 1
-      while (j < n) { s -= a(i)(j) * x(j); j += 1 }
-      x(i) = s / a(i)(i); i -= 1
-    }
-    x
-  }
-
   /** GDALGCPsToHomography: fit (pixel,line)→(geoX,geoY). Throws on the
     * reference's failure conditions. */
   def fromGcps(gcps: Seq[GcpTransform.Gcp]): Array[Double] = {
@@ -155,7 +127,7 @@ object Homography {
     var j = 0
     while (j < 9) { var k = 0; while (k < j) { ata(j)(k) = ata(k)(j); k += 1 }; j += 1 }
 
-    val hN = solve(ata)
+    val hN = GcpTransform.solve(ata, "homography system not invertible")
     require(math.abs(hN(6)) >= 1.0e-15, "homography h6 ~ 0")
 
     // convex-quadrilateral check on the unit square (lines 289-310)

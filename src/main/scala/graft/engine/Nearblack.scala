@@ -42,15 +42,18 @@ object Nearblack {
   /** Record kind of a tile's collar labels; the grid-line strips are 0-3. */
   private val Collar = 4
 
-  /** @param nTilesX,nTilesY full tile-grid extent (global border detection) */
+  /** The rewritten tiles, cached and materialized; the call's other caches
+    * are released, and a `tiles` cache the caller made is kept.
+    * @param nTilesX,nTilesY full tile-grid extent (global border detection) */
   def nearblack(tiles: Dataset[Tile], nTilesX: Int, nTilesY: Int,
                 isNear: Double => Boolean, fill: Double = 0.0): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
 
-    val cached = tiles.cache()
+    val caches = new GraphOps.CallCaches
+    val cached = caches(tiles)
     val dims = cached.limit(1).collect() // uniform-grid tile dims (bounded: 1 row)
-    if (dims.isEmpty) return cached
+    if (dims.isEmpty) { caches.release(); return tiles }
     val tileW = dims(0).w; val tileH = dims(0).h
     val width = nTilesX.toLong * tileW
     val nearF = isNear
@@ -87,7 +90,7 @@ object Nearblack {
     val scrubByTile = scrub.groupByKey { l =>
       (((l % width) / tw).toInt, ((l / width) / th).toInt)
     }
-    cached.groupByKey(t => (t.x, t.y)).cogroup(scrubByTile) { (_, ts, ss) =>
+    caches.result(cached.groupByKey(t => (t.x, t.y)).cogroup(scrubByTile) { (_, ts, ss) =>
       val set = new java.util.HashSet[Long]()
       ss.foreach(set.add)
       ts.map { t =>
@@ -103,6 +106,6 @@ object Nearblack {
           Tile(t.z, t.x, t.y, t.band, t.w, t.h, out)
         }
       }
-    }
+    })
   }
 }

@@ -158,17 +158,20 @@ object Polygonize {
       .groupBy("label", "value").agg(sum("size").as("size"))
 
   /** (label = min global pixel idx, value, size) per component. `width` =
-    * global raster width in pixels (for the global index). */
+    * global raster width in pixels (for the global index). The result
+    * comes back cached and materialized; the call's other caches are
+    * released. */
   def components(tiles: Dataset[Tile], width: Long, conn: Int = 4): DataFrame = {
     require(conn == 4 || conn == 8, s"connectivity must be 4 or 8, got $conn")
     val spark = tiles.sparkSession
     import spark.implicits._
+    val caches = new GraphOps.CallCaches
 
     // ---- pass 1: per-tile CCL + border strips
-    val perTile = tiles.map { t =>
+    val perTile = caches(tiles.map { t =>
       val tl = label(t, width, conn)
       (tl.comps, tl.strips)
-    }.cache()
+    })
 
     // ---- pass 2: equal-valued label pairs across facing strips
     val edges = stripEdges(perTile.flatMap(_._2), conn)
@@ -180,7 +183,7 @@ object Polygonize {
       .toDF("lbl", "root")
 
     // ---- pass 4: merge component aggregates under root labels
-    merged(perTile.flatMap(_._1), mapping)
+    caches.result(merged(perTile.flatMap(_._1), mapping))
   }
 
   // =====================================================================
@@ -227,14 +230,17 @@ object Polygonize {
     * strips; the per-component assembly task is O(that component's
     * boundary) — inherent, since the output WKB is the same size — and is
     * guarded by spark.graft.polygonize.maxArcPoints (default 100M vertices
-    * ≈ 1.6 GB) which THROWS rather than silently running a giant task. */
+    * ≈ 1.6 GB) which THROWS rather than silently running a giant task.
+    * The result comes back cached and materialized; the call's other
+    * caches are released. */
   def polygons(tiles: Dataset[Tile], width: Long): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val maxArcPts = GraphOps.guardCap(spark, "spark.graft.polygonize.maxArcPoints", 100000000L)
+    val caches = new GraphOps.CallCaches
 
     // ---- pass 1: per-tile CCL + aggregates + border strips + interior arcs
-    val perTile = tiles.map { t =>
+    val perTile = caches(tiles.map { t =>
       val w = t.w; val h = t.h
       val gx0 = t.x.toLong * w; val gy0 = t.y.toLong * h
       val tl = label(t, width, 4)
@@ -338,7 +344,7 @@ object Polygonize {
       }
 
       PolyRingTileOut(tl.comps, tl.strips, arcs.toArray)
-    }.cache()
+    })
 
     // tile extents for strip coordinate math (uniform grid assumed, as
     // everywhere in the Tile model)
@@ -348,7 +354,7 @@ object Polygonize {
     // ---- pass 2: facing strips → adjacency edges (same-value pairs) AND
     // cross-tile/raster-border boundary segments (single-segment arcs).
     // rowKind 0 = adjacency (a,b); rowKind 1 = arc (a = label, pts)
-    val stripOut = perTile.flatMap(_.borders)
+    val stripOut = caches(perTile.flatMap(_.borders)
       .groupByKey(_.key)
       .flatMapGroups { (key, it) =>
         val (ex, ey, _, kind) = key
@@ -377,7 +383,7 @@ object Polygonize {
         }
         pairs ++ sides.head.values.indices.iterator.filter(boundary)
           .flatMap(i => sides.iterator.map(s => (1, s.labels(i), 0L, side(i, s.owner))))
-      }.cache()
+      })
 
     // ---- pass 3: merge labels across tiles (O(log n) star CC)
     val adj = stripOut.filter(_._1 == 0).map(r => (r._2, r._3)).distinct()
@@ -396,9 +402,9 @@ object Polygonize {
     }.toDF("rlbl", "wkt")
 
     // ---- aggregates (value, size) under root labels, joined to the rings
-    merged(perTile.flatMap(_.comps), mapping)
+    caches.result(merged(perTile.flatMap(_.comps), mapping)
       .join(ringWkt, col("label") === col("rlbl"))
-      .select(col("label"), col("value"), col("size"), col("wkt"))
+      .select(col("label"), col("value"), col("size"), col("wkt")))
   }
 
   /** Assemble one component's boundary arcs into canonical polygon WKT.

@@ -19,10 +19,9 @@ import graft.functions.{GraftFunctions, gf}
   * (Blum et al.-era selection, radix flavor), which is what "exact p99 of
   * a 100-TB column" has to look like when a global sort is off the table.
   *
-  * Each quantile costs 4 filtered scans; callers needing many quantiles
-  * at scale would carry the per-quantile prefixes through shared passes
-  * (same aggregation keyed by (quantile, digit)) — the gate keeps the
-  * single-k form.
+  * Many quantiles share the passes (`exactKths`): each round's one
+  * aggregation is keyed by (prefix, digit), so p50/p90/p99 together cost
+  * the 4 aggregations of one quantile.
   */
 object Quantiles {
 
@@ -36,39 +35,43 @@ object Quantiles {
   /** Exact k-th smallest (1-based) value of `valueCol`. Throws if k is
     * out of range. NaNs, if present, order above +Infinity (IEEE bit
     * order); nulls are excluded by the expression's null semantics. */
-  def exactKth(df: DataFrame, valueCol: String, k: Long): Double = {
-    require(k >= 1, s"exactKth: k=$k must be >= 1")
+  def exactKth(df: DataFrame, valueCol: String, k: Long): Double =
+    exactKths(df, valueCol, Seq(k)).head
+
+  /** `exactKth` for each of `ks`, in shared passes: each of the 4 rounds
+    * is one aggregation keyed by (prefix fixed so far, next digit) over the
+    * rows that match any quantile's prefix, so any number of quantiles
+    * costs the 4 aggregations of one. Driver state: ≤2^16 counters per
+    * distinct prefix per round. */
+  def exactKths(df: DataFrame, valueCol: String, ks: Seq[Long]): Seq[Double] = {
+    ks.foreach(k => require(k >= 1, s"exactKth: k=$k must be >= 1"))
     GraftFunctions.register(df.sparkSession)
     val us = df.select(
       gf.double_usort_bits(col(valueCol).cast("double")).as("u"))
       .where(col("u").isNotNull)
-    var prefix = 0L
-    var kk = k
-    var r = 0
-    while (r < 4) {
+    val prefix = Array.fill(ks.length)(0L)
+    val kk = ks.toArray
+    for (r <- 0 until 4) {
       val shift = 48 - 16 * r
-      val base =
-        if (r == 0) us
-        else us.where(shiftrightunsigned(col("u"), shift + 16) === prefix)
-      val counts = base
-        .groupBy(shiftrightunsigned(col("u"), shift)
+      // the digits fixed so far; round 0 has none (a 64-bit shift is no shift)
+      val hi = if (r == 0) lit(0L) else shiftrightunsigned(col("u"), shift + 16)
+      val counts = us.where(hi.isin(prefix.distinct.toSeq: _*))
+        .groupBy(hi.as("p"), shiftrightunsigned(col("u"), shift)
           .bitwiseAND(lit(0xffffL)).as("d"))
         .agg(count(lit(1)).as("c"))
-        .collect() // ≤ 2^16 rows by construction
-        .map(row => (row.getLong(0), row.getLong(1)))
-        .sortBy(_._1)
-      var digit = -1L
-      var i = 0
-      while (digit < 0 && i < counts.length) {
-        val (d, c) = counts(i)
-        if (kk <= c) digit = d else kk -= c
-        i += 1
+        .collect() // ≤ 2^16 rows per distinct prefix by construction
+        .map(row => (row.getLong(0), row.getLong(1), row.getLong(2)))
+        .sortBy(_._2)
+      for (q <- ks.indices) {
+        // the next digit is the one whose cumulative count reaches k
+        val ds = counts.filter(_._1 == prefix(q))
+        val cum = ds.scanLeft(0L)(_ + _._3).tail
+        val i = cum.indexWhere(kk(q) <= _)
+        require(i >= 0, s"exactKth: k=${ks(q)} exceeds the row count; refusing")
+        if (i > 0) kk(q) -= cum(i - 1)
+        prefix(q) = (prefix(q) << 16) | ds(i)._2
       }
-      require(digit >= 0,
-        s"exactKth: k=$k exceeds the row count; refusing")
-      prefix = (prefix << 16) | digit
-      r += 1
     }
-    fromUsortBits(prefix)
+    prefix.toSeq.map(fromUsortBits)
   }
 }

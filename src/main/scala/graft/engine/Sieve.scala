@@ -116,7 +116,9 @@ object Sieve {
     * cluster alone. Clusters are therefore computed distributively and the
     * EXACT sequential `mergePolicy` runs per cluster in parallel on
     * executors (cogroup). The rewrite routes changed labels back to their
-    * owning tiles with a cogroup — no global broadcast. */
+    * owning tiles with a cogroup — no global broadcast. The result comes
+    * back cached and materialized; every other cache the call made is
+    * released, and a `tiles` cache the caller made is kept. */
   def sieve(tiles: Dataset[Tile], width: Long, threshold: Long,
             conn: Int = 4): Dataset[Tile] = {
     require(conn == 4 || conn == 8, s"connectivity must be 4 or 8, got $conn")
@@ -124,60 +126,61 @@ object Sieve {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val maxCluster = GraphOps.guardCap(spark, "spark.graft.sieve.maxClusterNodes", 1000000L)
-    val t0 = tiles.cache()
+    val caches = new GraphOps.CallCaches
+    val t0 = caches(tiles)
 
-    val per = t0.map { t =>
+    val per = caches(t0.map { t =>
       val tl = Polygonize.label(t, width, conn)
       (t.x, t.y, tl.comps, diffAdjacency(t, tl.labels, conn), tl.strips)
-    }.cache()
+    })
     per.count() // materialize once; several downstream consumers
 
     // cross-tile edges from facing border strips, tagged same-value or not:
     // perimeter-proportional
-    val crossEdges = Polygonize.stripEdges(per.flatMap(_._5), conn).distinct().cache()
+    val crossEdges = caches(Polygonize.stripEdges(per.flatMap(_._5), conn).distinct())
 
     // same-value cross-tile merge → label→root mapping (Dataset; driver
     // fast path under spark.graft.cc.driverLimit, hash-min beyond)
-    val rootDs = GraphOps.connectedComponentsAuto(
+    val rootDs = caches(GraphOps.connectedComponentsAuto(
         crossEdges.filter(_._1).map(e => (e._2, e._3)))
-      .toDF("lbl", "rt").cache()
+      .toDF("lbl", "rt"))
 
     // raw per-tile components with their owning tile (for the rewrite)
-    val rawComps = per.flatMap(p => p._3.iterator.map(c => (p._1, p._2, c._1, c._2, c._3)))
-      .toDF("tx", "ty", "label", "value", "size").cache()
+    val rawComps = caches(per.flatMap(p => p._3.iterator.map(c => (p._1, p._2, c._1, c._2, c._3)))
+      .toDF("tx", "ty", "label", "value", "size"))
 
     // global component stats, aggregated distributively on root labels
     val rooted = rawComps
       .join(rootDs, rawComps("label") === rootDs("lbl"), "left")
       .select(coalesce(col("rt"), col("label")).as("label"),
         col("value"), col("size"))
-    val compStats = rooted.groupBy("label")
-      .agg(min("value").as("value"), sum("size").as("size")).cache()
+    val compStats = caches(rooted.groupBy("label")
+      .agg(min("value").as("value"), sum("size").as("size")))
 
     // diff-value adjacency on roots, deduped distributively
-    val diffEdges = per.flatMap(_._4.iterator)
+    val diffEdges = caches(per.flatMap(_._4.iterator)
       .union(crossEdges.filter(!_._1).map(e => (e._2, e._3)))
       .toDF("a0", "b0")
       .join(rootDs.select(col("lbl").as("a0"), col("rt").as("ra")), Seq("a0"), "left")
       .join(rootDs.select(col("lbl").as("b0"), col("rt").as("rb")), Seq("b0"), "left")
       .select(coalesce(col("ra"), col("a0")).as("x"), coalesce(col("rb"), col("b0")).as("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .where(col("a") =!= col("b")).distinct().cache()
+      .where(col("a") =!= col("b")).distinct())
 
     // merge subgraph: edges with at least one sub-threshold endpoint
-    val smallIds = compStats.where(col("size") < threshold).select("label").cache()
-    val touching = diffEdges
+    val smallIds = caches(compStats.where(col("size") < threshold).select("label"))
+    val touching = caches(diffEdges
         .join(smallIds.withColumnRenamed("label", "a"), Seq("a"), "left_semi")
         .select("a", "b")
       .unionByName(diffEdges
         .join(smallIds.withColumnRenamed("label", "b"), Seq("b"), "left_semi")
         .select("a", "b"))
-      .distinct().as[(Long, Long)].cache()
+      .distinct().as[(Long, Long)])
 
     // independent clusters of the merge subgraph; the exact sequential
     // policy runs per cluster, in parallel (see scale note above)
-    val clusters = GraphOps.connectedComponentsAuto(touching)
-      .toDF("label", "cluster").cache()
+    val clusters = caches(GraphOps.connectedComponentsAuto(touching)
+      .toDF("label", "cluster"))
     val nodeStats = compStats.join(clusters, Seq("label"))
       .select(col("cluster"), col("label"), col("value"), col("size"))
       .as[(Long, Long, Double, Long)]
@@ -190,7 +193,7 @@ object Sieve {
     // sequential, reference-semantics) mergePolicy would run as a single
     // giant executor task. Same contract as the LSH hot-bucket cap:
     // report-and-refuse, never a silent degradation.
-    val changedDs = nodeStats.groupByKey(_._1).cogroup(edgeC.groupByKey(_._1)) { (_, ns, es) =>
+    val changedDs = caches(nodeStats.groupByKey(_._1).cogroup(edgeC.groupByKey(_._1)) { (_, ns, es) =>
       val comps0 = ns.map(n => n._2 -> (n._3, n._4)).toMap
       if (comps0.size > maxCluster)
         throw new IllegalStateException(
@@ -202,7 +205,7 @@ object Sieve {
       val edges0 = es.map(e => (e._2, e._3)).toSet
       val fv = mergePolicy(comps0, edges0, thr)
       fv.iterator.filter { case (l, v) => comps0(l)._1 != v }
-    }.toDF("rlabel", "newval").cache()
+    }.toDF("rlabel", "newval"))
 
     // rewrite: route changed root labels back to the tiles that hold a
     // member component, cogroup, and rewrite pixels locally
@@ -233,7 +236,7 @@ object Sieve {
           }
         }
       }
-    out
+    caches.result(out)
   }
 
   /** In-tile label edges between adjacent pixels of different value

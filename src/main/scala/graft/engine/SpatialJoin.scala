@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnBridge, StBox}
 import graft.functions.gf
 import graft.geom.{BoolOps, Geom, Wkb}
 import graft.plans.CellJoinRule
@@ -17,17 +16,14 @@ import graft.plans.CellJoinRule
   *   points   --st_cell(z)---> (cell, point)
   *   equi-join on cell → exact PIP refine (st_contains_point)
   *
-  * The point joins carry each polygon as its boxed struct
-  * <minx, miny, maxx, maxy, wkb> (StBox) on the polygon side, and the
-  * refine predicate takes that struct in place of the WKB: it rejects
-  * points outside the envelope without copying the polygon's bytes.
-  *
-  * A point lands in exactly one cell, so point-vs-polygon candidates are
-  * already distinct — no dedup needed. Polygon-vs-polygon joins are not
-  * built here: `intersectsJoin` writes the naive predicate join and
-  * CellJoinRule plans it (both sides explode their covers; a pair is kept
-  * only at the smallest cell both covers share; geometries whose cover is
-  * over the cap take a nested-loop fallback).
+  * No join is built here: each builder writes the naive predicate join and
+  * CellJoinRule plans it. In the point joins a polygon whose cover is over
+  * the cap (possible only at z > 6) is keyed by its cover at zoom 6, and
+  * each point then also probes its zoom-6 cell: one hash join over one
+  * build side, where each polygon rides as its boxed struct (StBox) that
+  * the refine tests in place. Polygon-polygon
+  * joins explode both covers, keep a pair only at the smallest cell both
+  * share, and send oversized geometries to a nested-loop fallback.
   *
   * Scale notes (100 TB):
   *  - polygon side exploded by its cover; choose z so covers stay small
@@ -35,57 +31,38 @@ import graft.plans.CellJoinRule
   *  - broadcast when the exploded cover fits (dims like admin boundaries);
   *    shuffle hash/sort-merge otherwise — Spark/AQE picks by size, we only
   *    hint explicitly when told
-  *  - skewed cells (everyone in one city): `pipJoinSalted` splits each hot
-  *    cell into S sub-keys; AQE skew-join also re-splits at runtime
+  *  - skewed cells (everyone in one city): `pipJoinSalted` adds the salt
+  *    as an extra join key, splitting each hot cell into S sub-keys; AQE
+  *    skew-join also re-splits a shuffled join at runtime
   */
 object SpatialJoin {
 
   /** Point-in-polygon join. `pts` needs (lon, lat), `polys` needs `wkb`.
     * Returns pts columns + polys columns for every (point, polygon) pair
     * where the polygon contains the point (ray-crossing rule); the
-    * polygon's `wkb` comes out as `poly_wkb`, in its place.
+    * polygon's `wkb` comes out as `poly_wkb`, in its place. The naive
+    * st_contains_point join, planned by CellJoinRule at zoom z.
     */
   def pipJoin(pts: DataFrame, polys: DataFrame, z: Int,
               broadcastPolys: Boolean = true): DataFrame = {
-    val cover = coverSide(polys, z)
-    val side = if (broadcastPolys) broadcast(cover) else cover
-    unboxed(pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
-      .join(side, "cell")
-      .where(gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat")))
-      .drop("cell"))
+    val p = polys.withColumnRenamed("wkb", "poly_wkb")
+    val side = if (broadcastPolys) broadcast(p) else p
+    CellJoinRule.plan(pts.join(side, gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat"))), z)
   }
 
   /** Salted PIP join for skewed cells: every point key becomes
-    * (cell, salt = hash(doc) % s); the polygon side is exploded s-fold.
+    * (cell, salt = hash(doc) % s); the polygon side is exploded s-fold:
+    * `pipJoin` filtered on salt equality, which becomes a join key.
     * Deterministic (no rand()) so resume/retry reproduce identical output.
     * Use when one cell holds a large share of the points (FIXTURES.md §1
     * skew variant; SURVEY.md §4 "skew handling").
     */
   def pipJoinSalted(pts: DataFrame, polys: DataFrame, z: Int, salt: Int,
-                    saltKey: Column): DataFrame = {
-    val cover = coverSide(polys, z)
-      .withColumn("salt", explode(lit((0 until salt).toArray)))
-    unboxed(pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
-      .withColumn("salt", pmod(xxhash64(saltKey), lit(salt)).cast("int"))
-      .join(cover, Seq("cell", "salt"))
-      .where(gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat")))
-      .drop("cell", "salt"))
-  }
-
-  /** The polygon side of the point joins, exploded over its cover at zoom
-    * z. The polygon's `wkb` is replaced in place by its boxed struct
-    * (StBox), named poly_wkb so points may carry their own wkb column (e.g.
-    * geo-docs rows) through the join untouched. The WKB rides once, inside
-    * the struct: the refine tests the envelope in place and reads the WKB
-    * only for points inside it. */
-  private def coverSide(polys: DataFrame, z: Int): DataFrame =
-    polys.withColumn("wkb", ColumnBridge.column(StBox(ColumnBridge.expression(col("wkb")))))
-      .withColumnRenamed("wkb", "poly_wkb")
-      .withColumn("cell", explode(gf.st_cover(col("poly_wkb.wkb"), lit(z))))
-
-  /** A joined coverSide's poly_wkb back as the plain WKB, in place. */
-  private def unboxed(joined: DataFrame): DataFrame =
-    joined.withColumn("poly_wkb", col("poly_wkb.wkb"))
+                    saltKey: Column): DataFrame =
+    pipJoin(pts.withColumn("salt", pmod(xxhash64(saltKey), lit(salt)).cast("int")),
+      polys.withColumn("poly_salt", explode(lit((0 until salt).toArray))), z, broadcastPolys = false)
+      .where(col("salt") === col("poly_salt"))
+      .drop("salt", "poly_salt")
 
   /** Polygon-polygon (layer algebra style) intersects join: one row per
     * (`left` row, `right` row) whose `wkb` geometries intersect, left

@@ -327,8 +327,8 @@ object GeoKernel {
   def cover(wkb: Array[Byte], z: Int): Array[Long] = CellId.cover(decode(wkb), z)
 
   /** Number of cells st_cover would materialize — envelope tile-range math
-    * only, never throws. Lets CellJoinRule route oversized geometries to a
-    * fallback join instead of crashing mid-query on the 4096-cell cap. */
+    * only, never throws. Lets CellJoinRule key oversized geometries apart
+    * instead of crashing mid-query on the 4096-cell cap. */
   def coverCount(wkb: Array[Byte], z: Int): Long = {
     val e = decode(wkb).envelope
     if (e.isEmpty) 0L

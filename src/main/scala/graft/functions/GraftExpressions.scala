@@ -867,8 +867,9 @@ case class StCover(left: Expression, right: Expression)
 
 /** st_cover_count(wkb, z) → number of cells st_cover(wkb, z) would produce
   * (envelope tile-range math only; never throws). CellJoinRule's oversize
-  * guard: geometries above the cover cap fall back to the naive join branch
-  * instead of crashing on CellId.cover's maxCells limit. */
+  * guard: geometries above the cover cap take their zoom-6 cover (point
+  * joins) or the naive join branch (polygon-polygon joins) instead of
+  * crashing on CellId.cover's maxCells limit. */
 case class StCoverCount(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)

@@ -73,7 +73,7 @@ object Buffer {
 
   /** Balanced pairwise union — O(n log n) sweep invocations instead of a
     * linear fold whose accumulated subject grows every step. */
-  private def unionAll(pieces: ArrayBuffer[Geom]): Geom = {
+  private[graft] def unionAll(pieces: ArrayBuffer[Geom]): Geom = {
     if (pieces.isEmpty) return MultiPolygon(Array.empty)
     var cur: ArrayBuffer[Geom] = pieces
     while (cur.length > 1) {

@@ -17,12 +17,10 @@ import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint
   *   a      JOIN b     ON st_intersects(a.wkb, b.wkb)
   *
   * — which Spark can only plan as nested-loop / cartesian joins, O(n·m)
-  * predicate evaluations — into cell-indexed equi-joins (the point case is
-  * the shape SpatialJoin.pipJoin builds by hand; the geom case is the one
-  * polygon-polygon join, which SpatialJoin.intersectsJoin builds through
-  * `plan`):
+  * predicate evaluations — into cell-indexed equi-joins (SpatialJoin's
+  * point and polygon-polygon joins build theirs through `plan`):
   *
-  *   point case:  points + st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_cover(wkb,z))
+  *   point case:  points × st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_cover(wkb,z))
   *                … refined by the ORIGINAL predicate (a point is in exactly
   *                one cell, so no dedup is introduced). The polygon side
   *                carries its geometry once, as the boxed struct
@@ -43,12 +41,17 @@ import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint
   * difference between a plan that finishes and one that cannot.
   *
   * Oversize guard (geometries whose cover at the chosen zoom would exceed
-  * CellId.cover's 4096-cell cap — continental polygons at a fine zoom):
-  * each geometry side is split by the cheap envelope-only st_cover_count
-  * predicate; fitting rows take the cell join, oversized rows fall back to
-  * the original nested-loop join, and the branches union. A user-raised
-  * spark.graft.celljoin.zoom therefore degrades those rows to the naive
-  * (slow but correct) path instead of throwing mid-query.
+  * CellId.cover's 4096-cell cap — continental polygons at a fine zoom, by
+  * the cheap envelope-only st_cover_count; only above zoom 6, which has
+  * 4^6 = 4096 cells): in the point case an oversized polygon is keyed by
+  * its zoom-6 cover and each point also probes its zoom-6 cell (packed
+  * cells carry their zoom, so a pair meets under exactly one key), which
+  * keeps one hash join and spreads the extra probe over the zoom-6 cells;
+  * in the geom case (where a zoom-6 key would pair every geometry with
+  * its zoom-6 neighbours) each side is split, oversized rows fall back to
+  * the original nested-loop join, and the branches union, so a
+  * user-raised spark.graft.celljoin.zoom degrades those rows to a
+  * quadratic (slow but correct) path instead of throwing.
   *
   * Reference analog: OGR's layer-algebra loop installs a spatial filter per
   * probe feature (ogrlayer.cpp:5385-5538) — its index-accelerated candidate
@@ -70,12 +73,15 @@ import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint
   *    at runtime through `spark.experimental.extraOptimizations`
   *    (GraftFunctions.register) or at build time via GraftExtensions;
   *  - as `plan(df, z)`, over a DataFrame's analyzed plan at an explicit
-  *    zoom: the DataFrame builders (SpatialJoin.intersectsJoin) write the
-  *    naive predicate join and hand it here. */
+  *    zoom: the DataFrame builders in SpatialJoin write the naive
+  *    predicate join and hand it here. */
 object CellJoinRule extends Rule[LogicalPlan] {
 
   /** Matches CellId.cover's default cap. */
   private val MaxCoverCells = 4096L
+
+  /** The finest zoom at which no cover exceeds the cap: 4^6 = 4096 cells. */
+  private val CoarseZoom = 6
 
   private val ZoomKey = "spark.graft.celljoin.zoom"
 
@@ -132,34 +138,43 @@ object CellJoinRule extends Rule[LogicalPlan] {
                            lon: Expression, lat: Expression, ptsLeft: Boolean,
                            hint: JoinHint, z: Int): LogicalPlan = {
     val (ptsSide, polySide) = if (ptsLeft) (j.left, j.right) else (j.right, j.left)
-    val (polyFit, polyBig) = splitByCoverSize(polySide, wkb, z)
-    // points side: one cell per row
-    val cellL = Alias(StCell(lon, lat, Literal(z)), "__graft_cell_pt")()
-    val pts2 = Project(ptsSide.output :+ cellL, ptsSide)
+    // points side: each row probes its own cell and, where a cover can
+    // exceed the cap, its zoom-6 cell too
+    val own = StCell(lon, lat, Literal(z))
+    val (pts2, cellL) =
+      if (z <= CoarseZoom) {
+        val c = Alias(own, "__graft_cell_pt")()
+        (Project(ptsSide.output :+ c, ptsSide), c.toAttribute)
+      } else {
+        val c = AttributeReference("__graft_cell_pt", LongType)()
+        (Generate(Explode(CreateArray(Seq(own, StCell(lon, lat, Literal(CoarseZoom))))), Nil,
+          outer = false, qualifier = None, generatorOutput = Seq(c), child = ptsSide), c)
+      }
     // polygon side: the geometry rides once, as the boxed struct the refine
-    // reads in place, exploded over its cover; a bare wkb column is dropped
-    // here and re-projected from the struct above the join under its own
-    // name and id
+    // reads in place, exploded over its cover (at zoom 6 if it is over the
+    // cap; a null geometry has none); a bare wkb column is dropped here and
+    // re-projected from the struct above the join under its own name and id
     val boxA = Alias(StBox(wkb), "__graft_box")()
     val box = boxA.toAttribute
-    val boxed = Project(polyFit.output.filterNot(wkb.semanticEquals) :+ boxA, polyFit)
+    val boxed = Project(polySide.output.filterNot(wkb.semanticEquals) :+ boxA, polySide)
+    val polyWkb = StBox.wkb(box)
+    val cover = StCover(polyWkb, Literal(z))
+    val cells = if (z <= CoarseZoom) cover
+      else If(GreaterThan(StCoverCount(polyWkb, Literal(z)), Literal(MaxCoverCells)),
+        StCover(polyWkb, Literal(CoarseZoom)), cover)
     val cellR = AttributeReference("__graft_cell_poly", LongType, nullable = false)()
-    val polys2 = Generate(Explode(StCover(StBox.wkb(box), Literal(z))), Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(cellR), child = boxed)
-    val cond = And(EqualTo(cellL.toAttribute, cellR), pred.withNewChildren(box +: pred.children.tail))
+    val polys2 = Generate(Explode(cells), Nil, outer = false, qualifier = None,
+      generatorOutput = Seq(cellR), child = boxed)
+    val cond = And(EqualTo(cellL, cellR), pred.withNewChildren(box +: pred.children.tail))
     val joined =
       if (ptsLeft) Join(pts2, polys2, Inner, Some(cond), hint)
       else Join(polys2, pts2, Inner, Some(cond), hint)
     val out: Seq[NamedExpression] = j.output.map {
       case a if a.semanticEquals(wkb) =>
-        Alias(StBox.wkb(box), a.name)(exprId = a.exprId, qualifier = a.qualifier)
+        Alias(polyWkb, a.name)(exprId = a.exprId, qualifier = a.qualifier)
       case a => a
     }
-    val cellBranch = Project(out, joined)
-    val bigBranch =
-      if (ptsLeft) naiveBranch(j.output, ptsSide, polyBig, pred, hint)
-      else naiveBranch(j.output, polyBig, ptsSide, pred, hint)
-    Union(Seq(cellBranch, bigBranch))
+    Project(out, joined)
   }
 
   private def rewriteGeom(j: Join, pred: Expression, wl: Expression,

@@ -7,12 +7,13 @@ import graft.functions.GraftFunctions
 /** Ad-hoc profiling entry: time named gate queries (and print the physical
   * plan with SPARK_GRAFT_EXPLAIN=1) against a given sf dir.
   * Usage: runMain graft.tools.Profile <sfDir> <query1> [query2 ...]
+  * SPARK_GRAFT_CPUS sets the parallelism (default: the host's cores).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${sys.env.get("SPARK_GRAFT_CPUS").fold(graft.Bench.hostCores)(_.toInt)}]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64"))
       .config("spark.sql.session.timeZone", "UTC")

@@ -8,9 +8,9 @@ import graft.functions.{gf, GeoKernel, GraftExtensions, GraftFunctions}
 
 /** The optimizer rule must turn a naive spatial-predicate join (nested
   * loop) into a cell equi-join, with identical results. The only
-  * nested-loop remnant allowed in the rewritten plan is the oversize
-  * fallback branch, whose input is filtered to geometries over the
-  * st_cover_count cap (empty in the common case; AQE collapses it). */
+  * nested-loop remnant allowed in the rewritten plan is the polygon-polygon
+  * oversize fallback branch, whose input is filtered to geometries over
+  * the st_cover_count cap (empty in the common case; AQE collapses it). */
 class CellJoinRuleSpec extends AnyFunSuite {
 
   private def assertCellRewrite(plan: String): Unit = {
@@ -116,6 +116,66 @@ class CellJoinRuleSpec extends AnyFunSuite {
     } finally s.conf.unset("spark.graft.celljoin.zoom")
   }
 
+  test("a world-spanning polygon at z=10 gives the brute-force rows through pipJoin, pipJoinSalted and the rule") {
+    val s = SparkTestSession.spark
+    import s.implicits._
+    val (pts, bandPolys) = bands
+    // the world polygon's cover at z=10 needs ~10^6 cells (> 4096): it is
+    // keyed by its zoom-6 cover, the bands by their covers
+    val world = Seq((100L, "POLYGON ((-179 -80, 179 -80, 179 80, -179 80, -179 -80))"))
+      .toDF("poly_id", "wkt").withColumn("wkb", gf.st_geomfromtext(col("wkt"))).drop("wkt")
+    val polys = bandPolys.unionByName(world)
+    val polyRows = polys.collect().map(r => (r.getAs[Long]("poly_id"), r.getAs[Array[Byte]]("wkb")))
+    val brute = (for {
+      p <- pts.collect(); (id, w) <- polyRows
+      if GeoKernel.containsPoint(w, p.getAs[Double]("lon"), p.getAs[Double]("lat"))
+    } yield (p.getAs[Long]("event_id"), id)).sorted
+    assert(brute.count(_._2 == 100L) > 500, "the world polygon should hold many points")
+    assert(pairs(engine.SpatialJoin.pipJoin(pts, polys, z = 10)).toSeq === brute.toSeq)
+    assert(pairs(engine.SpatialJoin.pipJoinSalted(pts, polys, z = 10, salt = 4,
+      saltKey = col("event_id"))).toSeq === brute.toSeq)
+    s.conf.set("spark.graft.celljoin.zoom", "10")
+    try {
+      val naive = pts.join(polys, gf.st_contains_point(polys("wkb"), pts("lon"), pts("lat")))
+      assert(pairs(naive).toSeq === brute.toSeq)
+    } finally s.conf.unset("spark.graft.celljoin.zoom")
+    // the same rows when the join is shuffled rather than broadcast
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val shuffled = engine.SpatialJoin.pipJoin(pts, polys, z = 10, broadcastPolys = false)
+      assert(pairs(shuffled).toSeq === brute.toSeq)
+    } finally s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("a shuffled point join at z <= 6 shuffles each point once; above, once more under its zoom-6 cell") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val s = SparkTestSession.spark
+    val (pts, polys) = bands
+    val n = pts.count()
+    val helper = new AdaptiveSparkPlanHelper {}
+    /** Rows the points side writes to its shuffle. */
+    def pointShuffle(z: Int): Long = {
+      val df = engine.SpatialJoin.pipJoin(pts, polys, z, broadcastPolys = false)
+      df.collect()
+      val exchanges = helper.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "event_id") => e
+      }
+      assert(exchanges.size === 1, df.queryExecution.executedPlan.treeString)
+      exchanges.head.metrics("shuffleRecordsWritten").value
+    }
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(pointShuffle(4) === n)
+      assert(pointShuffle(6) === n)
+      assert(pointShuffle(10) === 2 * n)
+    } finally {
+      s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      s.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
   test("naive st_intersects polygon-polygon join is rewritten and deduped") {
     val s = SparkTestSession.spark
     GraftFunctions.register(s)
@@ -173,7 +233,9 @@ class CellJoinRuleSpec extends AnyFunSuite {
       val (a, b) = (sq("a"), sq("b"))
       val pointJoin = pts.join(poly, gf.st_contains_point(poly("wkb"), pts("lon"), pts("lat")))
       val geomJoin = a.join(b, gf.st_intersects(col("wkb_a"), col("wkb_b")))
-      for (df <- Seq(pointJoin, geomJoin)) {
+      // the point join keys oversized polygons by their zoom-6 cover: no
+      // fallback branch; the geom join unions its fallback branches
+      for ((df, wantUnions) <- Seq(pointJoin -> 0, geomJoin -> 1)) {
         val t0 = System.nanoTime()
         val plan = df.queryExecution.optimizedPlan
         val secs = (System.nanoTime() - t0) / 1e9
@@ -182,7 +244,7 @@ class CellJoinRuleSpec extends AnyFunSuite {
         val cellJoins = plan.collect {
           case j: Join if j.condition.exists(_.references.exists(_.name.startsWith("__graft_cell"))) => j
         }
-        assert(unions.size === 1 && cellJoins.size === 1, plan.treeString)
+        assert(unions.size === wantUnions && cellJoins.size === 1, plan.treeString)
       }
       val polyWkb = poly.collect().head.getAs[Array[Byte]]("wkb")
       val wantPts = pts.collect().collect {

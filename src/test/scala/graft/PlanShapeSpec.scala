@@ -5,10 +5,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.UnionExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.graft.StContainsPoint
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
 import graft.engine.{Raster, TileSink, CalcExpr, Ann, TileJob, SpatialJoin}
@@ -255,8 +256,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assertBoxedRefine(SparkEntry.entry(spark))
   }
 
-  test("g30 rule-planned refine reads the boxed polygon: no binary in its condition, one WKB built") {
-    // g30's naive predicate join over its 20 bands, on generated points
+  /** g30's 20 bands and generated points. */
+  private lazy val g30 = {
     import spark.implicits._
     val pts = spark.range(3000).select(col("id").as("event_id"),
       (col("id") * 0.12 - 180.0).as("lon"), (col("id") % 170 - 85.0).as("lat"))
@@ -264,8 +265,39 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val x0 = -180.0 + 18.0 * i
       (i.toLong, s"POLYGON (($x0 -50, ${x0 + 10} -50, ${x0 + 10} 50, $x0 50, $x0 -50))")
     }.toDF("poly_id", "wkt").withColumn("wkb", graft.functions.gf.st_geomfromtext(col("wkt"))).drop("wkt")
-    assertBoxedRefine(pts.join(polys,
-      graft.functions.gf.st_contains_point(polys("wkb"), pts("lon"), pts("lat"))))
+    (pts, polys)
+  }
+
+  /** g30's naive predicate join, which only CellJoinRule plans. */
+  private def g30Join: DataFrame = {
+    val (pts, polys) = g30
+    pts.join(polys, graft.functions.gf.st_contains_point(polys("wkb"), pts("lon"), pts("lat")))
+  }
+
+  test("g30 rule-planned refine reads the boxed polygon: no binary in its condition, one WKB built") {
+    assertBoxedRefine(g30Join)
+  }
+
+  test("every point join plans one broadcast hash join that refines: no union, no nested loop") {
+    val (pts, polys) = g30
+    def assertOneJoin(df: DataFrame, keys: String*): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val tree = plan.treeString
+      assert(collect(plan) { case b: BroadcastExchangeExec => b }.size === 1, tree)
+      val joins = collect(plan) { case j: BroadcastHashJoinExec => j }
+      assert(joins.size === 1, tree)
+      val j = joins.head
+      assert(j.condition.exists(_.exists(_.isInstanceOf[StContainsPoint])), tree)
+      val keyNames = (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+      assert(keys.forall(keyNames.contains), s"keys $keyNames lack $keys in\n$tree")
+      assert(collect(plan) { case u: UnionExec => u }.isEmpty, tree)
+      assert(collect(plan) { case n: BroadcastNestedLoopJoinExec => n }.isEmpty, tree)
+    }
+    assertOneJoin(SpatialJoin.pipJoin(pts, polys, z = 4))
+    assertOneJoin(SpatialJoin.pipJoin(pts, polys, z = 10)) // points also probe their zoom-6 cell
+    assertOneJoin(g30Join)
+    assertOneJoin(SpatialJoin.pipJoinSalted(pts, polys, z = 4, salt = 4, saltKey = col("event_id")),
+      "salt", "poly_salt")
   }
 
   test("d30 per-domain cap aggregates partially before the shuffle, no Window") {

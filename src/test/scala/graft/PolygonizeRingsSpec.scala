@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{Polygonize, Raster, Tile}
+import graft.engine.{Contour, Polygonize, Raster, Tile}
 
 /** Ring-emitting polygonize (reference: RPolygonize ring assembly,
   * alg/polygonize.cpp:455-498 + polygonize_polygonizer.cpp): components must
@@ -54,6 +54,21 @@ class PolygonizeRingsSpec extends AnyFunSuite {
       assert(a == fix32Expected)
       assert(b == fix32Expected)
     } finally s.conf.unset("spark.graft.cc.driverLimit")
+  }
+
+  test("polygons, components and contourPolygons leave only their result's cache") {
+    val s = spark
+    def cachedRdds = s.sparkContext.getPersistentRDDs.keySet.toSet
+    val tiled = Raster.syntheticTiles(s, 2, tileSize = 8)(fix32)
+    val before = cachedRdds
+    for (op <- Seq(() => Polygonize.polygons(tiled, 32), () => Polygonize.components(tiled, 32),
+                   () => Contour.contourPolygons(tiled, interval = 1.0, width = 32))) {
+      val r = op()
+      assert((cachedRdds -- before).size == 1)
+      assert(r.count() == fix32Expected.size)
+      r.unpersist(blocking = true)
+      assert((cachedRdds -- before).isEmpty)
+    }
   }
 
   test("pinch vertex: exterior and hole rings touching at a corner stay separate") {

@@ -40,6 +40,29 @@ class SieveSpec extends AnyFunSuite {
     }
   }
 
+  test("sieve leaves only its result's cache, and a tiles cache the caller made") {
+    val s = spark
+    def cachedRdds = s.sparkContext.getPersistentRDDs.keySet.toSet
+    val f = (gx: Long, gy: Long) => (((gx / 3) * 7 + (gy / 2) * 5) % 4).toDouble
+    val tiled = Raster.syntheticTiles(s, 2, tileSize = 8)(f)
+    val before = cachedRdds
+    val r = Sieve.sieve(tiled, width = 32, threshold = 8)
+    assert((cachedRdds -- before).size == 1)
+    val px = r.collect().map(t => (t.x, t.y) -> t.pixels.toSeq).toMap
+    r.unpersist(blocking = true)
+    assert((cachedRdds -- before).isEmpty)
+    // the caller's cache of the input survives the call
+    val t = tiled.cache()
+    t.count()
+    val withTiles = cachedRdds
+    val r2 = Sieve.sieve(t, width = 32, threshold = 8)
+    assert(withTiles.subsetOf(cachedRdds) && (cachedRdds -- withTiles).size == 1)
+    assert(r2.collect().map(t => (t.x, t.y) -> t.pixels.toSeq).toMap == px)
+    r2.unpersist(blocking = true)
+    t.unpersist(blocking = true)
+    assert((cachedRdds -- before).isEmpty)
+  }
+
   test("small components absorbed, large preserved") {
     val s = spark
     import s.implicits._
