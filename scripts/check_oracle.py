@@ -3,6 +3,9 @@
 output, run the matching oracle SQL in DuckDB over the same sf tables, and
 compare exactly (rows sorted by all columns, columns sorted by name).
 
+A gate whose query threw in Verify (verify_errors.json, gate -> message)
+fails with that message.
+
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 """
 import json, sys, glob, os
@@ -18,10 +21,14 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    err_path = f"{out_dir}/verify_errors.json"
+    errors = json.load(open(err_path)) if os.path.exists(err_path) else {}
     n_pass = n_fail = 0
     for name in sorted(oracle):
         sql = oracle[name]
         pq = f"{out_dir}/{name}"
+        if name in errors:
+            print(f"FAIL {name}: threw: {errors[name][:300]}"); n_fail += 1; continue
         if not os.path.isdir(pq):
             continue  # not attempted (Verify name-filter iteration run)
         if not glob.glob(f"{pq}/*.parquet"):

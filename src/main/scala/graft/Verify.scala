@@ -20,11 +20,11 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val errors = SparkEntry.queries.filter(kv => only(kv._1)).flatMap { case (name, fn) =>
+      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> Option(e.getMessage).getOrElse(e.toString))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -39,9 +39,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
+    // the message of each query that threw (gate -> message, {} when none
+    // did), which check_oracle.py reports; the exit code stays as it is
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), json(errors))
     spark.stop()
   }
 }

@@ -203,9 +203,9 @@ object GraphOps {
     * [[shortestPaths]]; ties pick the lowest parent id so the tree is
     * deterministic. Backtracking is one tiny (single-node filter) job per
     * hop — O(path length), never O(nodes), on the driver. */
-  private def ssspPath(e: DataFrame, source: Long, target: Long,
-                       removedNodes: Set[Long], removedEdges: Set[(Long, Long)],
-                       maxIter: Int): Option[List[(Long, Double)]] = {
+  private[graft] def ssspPath(e: DataFrame, source: Long, target: Long,
+                              removedNodes: Set[Long], removedEdges: Set[(Long, Long)],
+                              maxIter: Int): Option[List[(Long, Double)]] = {
     val spark = e.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -218,7 +218,9 @@ object GraphOps {
       val keys = removedEdges.map { case (a, b) => s"${a}_$b" }.toSeq
       g = g.where(!concat_ws("_", col("src"), col("dst")).isin(keys: _*))
     }
-    g = g.cache()
+    // a caller's cache of `e` (the unmasked first search) outlives the call
+    val caches = new CallCaches
+    g = caches(g)
     var dist = Seq((source, 0.0, -1L)).toDF("node", "dist", "parent").cache()
     var changed = 1L
     var it = 0
@@ -240,7 +242,7 @@ object GraphOps {
     }
     if (changed > 0) warnNoConverge("ssspPath", it)
     val out = backtrackPath(dist, source, target)
-    dist.unpersist(); g.unpersist()
+    dist.unpersist(); caches.release()
     out
   }
 

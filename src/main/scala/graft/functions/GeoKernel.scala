@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import graft.geom._
-import graft.cell.{CellId, Hilbert}
+import graft.cell.{CellId, CoverMasks, Hilbert}
 
 /** Static, JVM-primitive-typed kernel functions shared by Expression.eval and
   * generated code (`graft.functions.GeoKernel.xxx(...)` in codegen). A small
@@ -155,10 +156,23 @@ object GeoKernel {
     x >= box.getDouble(0) && x <= box.getDouble(2) && y >= box.getDouble(1) && y <= box.getDouble(3)
 
   def boxContainsPoint(box: InternalRow, x: Double, y: Double): Boolean =
-    inBox(box, x, y) && WkbPip.containsPoint(box.getBinary(4), x, y)
+    inBox(box, x, y) && boxPip(box, x, y, boundary = false)
 
   def boxIntersectsPoint(box: InternalRow, x: Double, y: Double): Boolean =
-    inBox(box, x, y) && WkbPip.intersectsPoint(box.getBinary(4), x, y)
+    inBox(box, x, y) && boxPip(box, x, y, boundary = true)
+
+  /** The ray test on the box's WKB where the row holds it: an UnsafeRow's
+    * wkb field is read in place (its slot holds offset << 32 | size). */
+  private def boxPip(box: InternalRow, x: Double, y: Double, boundary: Boolean): Boolean =
+    box match {
+      case u: UnsafeRow =>
+        val at = u.getLong(4)
+        val off = u.getBaseOffset + (at >> 32)
+        if (boundary) WkbPip.intersectsPoint(u.getBaseObject, off, at.toInt, x, y)
+        else WkbPip.containsPoint(u.getBaseObject, off, at.toInt, x, y)
+      case r =>
+        if (boundary) WkbPip.intersectsPoint(r.getBinary(4), x, y) else WkbPip.containsPoint(r.getBinary(4), x, y)
+    }
 
   def intersects(a: Array[Byte], b: Array[Byte]): Boolean =
     GeoOps.intersects(decode(a), decode(b))
@@ -179,15 +193,33 @@ object GeoKernel {
   def geometryType(wkb: Array[Byte]): String = decode(wkb).typeName
 
   // ---- accessors / measures
-  def stX(wkb: Array[Byte]): Double = decode(wkb) match {
-    case p: Point => p.x
-    case g => throw new IllegalArgumentException(s"st_x on ${g.typeName}")
+
+  /** Whether `wkb` is the 21-byte little-endian 2-D point that Wkb.write
+    * emits for a point: its ordinates are read in place, without a decode
+    * or the LRU's hash of the bytes. */
+  private def isLePoint(wkb: Array[Byte]): Boolean =
+    wkb.length == 21 && wkb(0) == 1 && wkb(1) == 1 && wkb(2) == 0 && wkb(3) == 0 && wkb(4) == 0
+
+  private def leDouble(wkb: Array[Byte], at: Int): Double = {
+    var v = 0L
+    var i = 7
+    while (i >= 0) { v = (v << 8) | (wkb(at + i) & 0xffL); i -= 1 }
+    java.lang.Double.longBitsToDouble(v)
   }
 
-  def stY(wkb: Array[Byte]): Double = decode(wkb) match {
-    case p: Point => p.y
-    case g => throw new IllegalArgumentException(s"st_y on ${g.typeName}")
-  }
+  def stX(wkb: Array[Byte]): Double =
+    if (isLePoint(wkb)) leDouble(wkb, 5)
+    else decode(wkb) match {
+      case p: Point => p.x
+      case g => throw new IllegalArgumentException(s"st_x on ${g.typeName}")
+    }
+
+  def stY(wkb: Array[Byte]): Double =
+    if (isLePoint(wkb)) leDouble(wkb, 13)
+    else decode(wkb) match {
+      case p: Point => p.y
+      case g => throw new IllegalArgumentException(s"st_y on ${g.typeName}")
+    }
 
   def area(wkb: Array[Byte]): Double = GeoOps.area(decode(wkb))
   def length(wkb: Array[Byte]): Double = GeoOps.length(decode(wkb))
@@ -200,7 +232,10 @@ object GeoKernel {
     Array(e.minX, e.minY, e.maxX, e.maxY)
   }
 
-  def centroid(wkb: Array[Byte]): Array[Byte] = Wkb.write(GeoOps.centroid(decode(wkb)))
+  /** A point is its own centroid, and Wkb.write writes it back as the same
+    * 21 bytes. */
+  def centroid(wkb: Array[Byte]): Array[Byte] =
+    if (isLePoint(wkb)) wkb else Wkb.write(GeoOps.centroid(decode(wkb)))
 
   def forceMulti(wkb: Array[Byte]): Array[Byte] = Wkb.write(GeoOps.forceMulti(decode(wkb)))
 
@@ -329,14 +364,40 @@ object GeoKernel {
   /** Number of cells st_cover would materialize — envelope tile-range math
     * only, never throws. Lets CellJoinRule key oversized geometries apart
     * instead of crashing mid-query on the 4096-cell cap. */
-  def coverCount(wkb: Array[Byte], z: Int): Long = {
-    val e = decode(wkb).envelope
+  def coverCount(wkb: Array[Byte], z: Int): Long = envCount(decode(wkb).envelope, z)
+
+  private def envCount(e: Envelope, z: Int): Long =
     if (e.isEmpty) 0L
     else {
       val (minX, minY, maxX, maxY) = Mercator.tileRangeLonLat(e, z)
       (maxX - minX + 1).toLong * (maxY - minY + 1).toLong
     }
+
+  /** The build rows of a point join at zoom z (CellJoinRule): one struct
+    * (cell, inside, outside) per cover cell, with the [[CoverMasks]] of the
+    * cell's children at z+3. A geometry whose cover at z is over the cap
+    * (possible only above CoarseZoom) is keyed by its zoom-6 cover; those
+    * rows, geometries without mask rings and zooms whose z+3 is no cell
+    * zoom carry 0 in both masks. */
+  def pointCover(wkb: Array[Byte], z: Int): ArrayData = {
+    val g = decode(wkb)
+    val coarse = z > CellId.CoarseZoom && envCount(g.envelope, z) > CellId.MaxCoverCells
+    val rings = if (coarse || z + 3 > CellId.MaxZoom) null else CoverMasks.rings(g)
+    val cells = CellId.cover(g, if (coarse) CellId.CoarseZoom else z)
+    new GenericArrayData(cells.map { c =>
+      val (in, out) = if (rings == null) (0L, 0L) else CoverMasks.of(g, rings, c)
+      new GenericInternalRow(Array[Any](c, in, out)): Any
+    })
   }
+
+  /** The point's bit in its cover row's masks: `cell` is its cell at z+3,
+    * the bit (y & 7) * 8 + (x & 7) names that child of its zoom-z cell.
+    * 0 outside the tile grid's lon/lat range (NaN included), where the
+    * cell is clamped and the point need not lie in its box. */
+  def childBit(cell: Long, lon: Double, lat: Double): Long =
+    if (lon >= -180.0 && lon <= 180.0 && lat >= -Mercator.MaxLat && lat <= Mercator.MaxLat)
+      1L << (((CellId.y(cell) & 7) << 3) | (CellId.x(cell) & 7))
+    else 0L
 
   def cellRing(c: Long, r: Int): Array[Long] = CellId.ring(c, r)
   def cellDisk(c: Long, r: Int): Array[Long] = CellId.disk(c, r)

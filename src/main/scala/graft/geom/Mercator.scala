@@ -44,9 +44,12 @@ object Mercator {
   def metersToPixelY(my: Double, z: Int): Double = (my + OriginShift) / resolution(z)
 
   /** Pixel → TMS tile index: tx = ceil(p/256) - 1 (gdal2tiles.py:461-466).
-    * Boundary pixels (p exactly k*256) belong to the LOWER tile. */
+    * Boundary pixels (p exactly k*256) belong to the LOWER tile. The index
+    * saturates at the Int range (NaN gives 0), so a pixel below it (lat
+    * -90 maps to -Inf) clamps to tile 0 like any other pixel left of the
+    * grid, and a point's tile at z is its tile at z+k shifted right by k. */
   def pixelToTileTms(p: Double): Int =
-    math.ceil(p / TileSize.toDouble).toInt - 1
+    (math.ceil(p / TileSize.toDouble) - 1).toInt
 
   /** TMS y → XYZ (Google/slippy) y: (2^z - 1) - ty (gdal2tiles.py:512;
     * GetFileY, gdalalg_raster_tile.cpp:509-513). */

@@ -1,7 +1,6 @@
 package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** OGR SQL dialect quirks, isolated behind a thin compatibility façade so
@@ -71,8 +70,11 @@ object OgrCompat {
 
   /** OGR first-match JOIN: at most one secondary row per primary row; the
     * reference takes the secondary layer's scan order, which we make
-    * deterministic by ordering on `tiebreak` (ascending, e.g. the FID).
-    * Equivalent to dedup-first then plain join (SURVEY.md §2.B). */
+    * deterministic by ordering on `tiebreak` (ascending, nulls first, e.g.
+    * the FID; a tie keeps one of the tied rows). Equivalent to
+    * dedup-first then plain join (SURVEY.md §2.B): the dedup is a min_by
+    * aggregate over the struct of the tiebreak columns, which Spark
+    * computes partially before its shuffle. */
   def firstMatchJoin(primary: DataFrame, secondary: DataFrame,
                      keys: Seq[String], tiebreak: Column*): DataFrame =
     firstMatchJoinTyped(primary, secondary, keys, "left", tiebreak: _*)
@@ -80,11 +82,13 @@ object OgrCompat {
   def firstMatchJoinTyped(primary: DataFrame, secondary: DataFrame,
                           keys: Seq[String], joinType: String,
                           tiebreak: Column*): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(tiebreak.map(_.asc): _*)
-    val firstOnly = secondary
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
+    def quoted(c: String): Column = col(s"`$c`")
+    val rest = secondary.columns.toSeq.filterNot(keys.contains)
+    val firstOnly =
+      if (rest.isEmpty) secondary.select(keys.map(quoted): _*).distinct()
+      else secondary.groupBy(keys.map(quoted): _*)
+        .agg(min_by(struct(rest.map(quoted): _*), struct(tiebreak: _*)).as("__first"))
+        .select(keys.map(quoted) ++ rest.map(c => col("__first").getField(c).as(c)): _*)
     primary.join(firstOnly, keys, joinType)
   }
 }

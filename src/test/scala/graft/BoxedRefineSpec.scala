@@ -3,17 +3,25 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, Predicate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, StBox, StContainsPoint, StIntersectsPoint}
-import org.apache.spark.sql.types.{BinaryType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+import graft.cell.{CellId, CoverMasks}
 import graft.functions.{gf, GeoKernel}
+import graft.geom.{Mercator, WkbPip}
 
 /** The boxed refine (envelope test on the st_box struct, then the WKB
-  * kernel) must give exactly the WKB refine's answer, for both point
-  * predicates, on every geometry type the WKB reader takes and every kind of
-  * probe point: vertices, edges, hole boundaries, NaN and infinities, and
-  * points a denormal away from a line. */
+  * kernel reading the bytes where the row holds them) must give exactly the
+  * WKB refine's answer, for both point predicates, on every geometry type
+  * the WKB reader takes and every kind of probe point: vertices, edges,
+  * hole boundaries, NaN and infinities, and points a denormal away from a
+  * line. So must the point join's masked refine, which answers from the
+  * cover row's child masks where they know the answer. */
 class BoxedRefineSpec extends AnyFunSuite {
 
   /** Test-side geometry tree, written as raw WKB so curve types, Z/M
@@ -146,8 +154,22 @@ class BoxedRefineSpec extends AnyFunSuite {
 
   private val toUnsafe = UnsafeProjection.create(StBox.Type)
 
+  private val toNested = UnsafeProjection.create(StructType(Seq(StructField("pad", StringType),
+    StructField("inner", StructType(Seq(StructField("id", LongType), StructField("box", StBox.Type)))))))
+
+  /** The box as a struct nested at a non-zero offset of a wider UnsafeRow. */
+  private def nested(box: InternalRow, rnd: Random): UnsafeRow = {
+    val pad = UTF8String.fromString("p" * rnd.nextInt(40))
+    val row = toNested(InternalRow(pad, InternalRow(rnd.nextLong(), box))).copy()
+    val inPlace = row.getStruct(1, 2).getStruct(1, 5)
+    assert(inPlace.getBaseObject eq row.getBaseObject)
+    assert(inPlace.getBaseOffset > row.getBaseOffset)
+    inPlace
+  }
+
   test("boxed refine == WKB refine for both predicates (seeded, 1500 geometries x 4 points)") {
     val rnd = new Random(20261017L)
+    val padRnd = new Random(5L)
     var hits = 0; var boundaryHits = 0; var outsideBox = 0; var offEnvelope = 0
     for (_ <- 1 to 1500) {
       val g = geometry(rnd)
@@ -155,6 +177,7 @@ class BoxedRefineSpec extends AnyFunSuite {
       val box = GeoKernel.box(w)
       // the struct as the join reads it: an UnsafeRow view, through the expression
       val unsafeBox = toUnsafe(box).copy()
+      val inPlace = nested(box, padRnd)
       for (_ <- 1 to 4) {
         val (x, y) = probe(rnd, g)
         val what = s"$g at ($x, $y)"
@@ -162,6 +185,8 @@ class BoxedRefineSpec extends AnyFunSuite {
         val i = GeoKernel.intersectsPoint(w, x, y)
         assert(GeoKernel.boxContainsPoint(box, x, y) === c, what)
         assert(GeoKernel.boxIntersectsPoint(box, x, y) === i, what)
+        assert(GeoKernel.boxContainsPoint(inPlace, x, y) === c, what)
+        assert(GeoKernel.boxIntersectsPoint(inPlace, x, y) === i, what)
         val (bx, by) = (Literal(unsafeBox, StBox.Type), (Literal(x), Literal(y)))
         assert(StContainsPoint(bx, by._1, by._2).eval() === c, what)
         assert(StIntersectsPoint(bx, by._1, by._2).eval() === i, what)
@@ -220,6 +245,184 @@ class BoxedRefineSpec extends AnyFunSuite {
       } finally {
         spark.conf.unset("spark.sql.codegen.wholeStage")
         spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
+
+  /** The (offset, bytes per item) of every count Wkb.write emits for a
+    * polygon or multipolygon starting at `at`, and the offset after it. */
+  private def counts(g: graft.geom.Geom, at: Int): (Seq[(Int, Int)], Int) = g match {
+    case p: graft.geom.Polygon =>
+      var pos = at + 9
+      val rings = p.rings.toSeq.map { r => val c = (pos, 16); pos += 4 + 8 * r.length; c }
+      ((at + 5, 4) +: rings, pos)
+    case m: graft.geom.MultiPolygon =>
+      var pos = at + 9
+      val parts = m.polys.toSeq.flatMap { q => val (cs, next) = counts(q, pos); pos = next; cs }
+      ((at + 5, 9) +: parts, pos)
+    case other => fail(s"no counts for $other")
+  }
+
+  test("truncated or count-mutated WKB is refused on both paths and never read past its bytes") {
+    val rnd = new Random(11L)
+    val off = Platform.BYTE_ARRAY_OFFSET
+    /** Refused through the byte[] path and in place, for both predicates. */
+    def refused(w: Array[Byte], size: Int, x: Double, y: Double, what: String): Unit = {
+      val copy = java.util.Arrays.copyOf(w, size)
+      // in place the bytes sit in a longer buffer: a reader that ran past
+      // `size` would find the rest of the geometry and answer
+      for (f <- Seq[() => Boolean](
+          () => WkbPip.containsPoint(copy, x, y), () => WkbPip.intersectsPoint(copy, x, y),
+          () => WkbPip.containsPoint(w, off, size, x, y), () => WkbPip.intersectsPoint(w, off, size, x, y)))
+        assert(scala.util.Try(f()).isFailure, what)
+    }
+    for (_ <- 1 to 300) {
+      val g = geometry(rnd); val w = wkb(g, rnd); val (x, y) = probe(rnd, g)
+      for (cut <- 0 until w.length) refused(w, cut, x, y, s"$g cut to $cut bytes at ($x, $y)")
+    }
+    val geoms = Seq(
+      "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 4 2, 4 4, 2 4, 2 2))",
+      "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((2 2, 9 2, 9 9, 2 9, 2 2), (3 3, 4 3, 4 4, 3 3)))")
+      .map(graft.geom.Wkt.parse)
+    var mutated = 0
+    for (g <- geoms; (at, each) <- counts(g, 0)._1) {
+      val w = graft.geom.Wkb.write(g)
+      val fits = (w.length - at - 4) / each
+      for (n <- Seq(-1, Int.MinValue, Int.MaxValue, fits + 1)) {
+        val bad = w.clone()
+        ByteBuffer.wrap(bad).order(ByteOrder.LITTLE_ENDIAN).putInt(at, n)
+        for ((x, y) <- Seq((1.0, 1.0), (3.5, 3.2), (50.0, 50.0))) {
+          val what = s"$g with the count at byte $at set to $n, at ($x, $y)"
+          refused(bad, bad.length, x, y, what)
+          // in the boxed struct, behind an envelope that passes every probe
+          val box = nested(new GenericInternalRow(Array[Any](-1e9, -1e9, 1e9, 1e9, bad)), rnd)
+          assert(scala.util.Try(GeoKernel.boxContainsPoint(box, x, y)).isFailure, what)
+          assert(scala.util.Try(GeoKernel.boxIntersectsPoint(box, x, y)).isFailure, what)
+          mutated += 1
+        }
+      }
+    }
+    assert(mutated === (3 + 6) * 4 * 3)
+  }
+
+  /** The join's answer for one polygon at zoom z: the point probes the
+    * cover row of its key cell (and of its zoom-6 cell above zoom 6);
+    * masked, the row's masks answer where they know the point's child, the
+    * boxed predicate elsewhere. False when no row shares a key with the
+    * point. */
+  private def joined(rows: Map[Long, InternalRow], box: InternalRow, x: Double, y: Double, z: Int,
+                     boundary: Boolean, masked: Boolean): Boolean = {
+    val fine = GeoKernel.cell(x, y, z + 3)
+    val keys = Set(GeoKernel.cellParent(fine, z), GeoKernel.cellParent(fine, math.min(z, CellId.CoarseZoom)))
+    val bit = if (masked) GeoKernel.childBit(fine, x, y) else 0L
+    val hits = keys.toSeq.flatMap(rows.get).map { r =>
+      (r.getLong(1) & bit) != 0 || ((r.getLong(2) & bit) == 0 &&
+        (if (boundary) GeoKernel.boxIntersectsPoint(box, x, y) else GeoKernel.boxContainsPoint(box, x, y)))
+    }
+    assert(hits.size <= 1)
+    hits.contains(true)
+  }
+
+  test("masked refine == unmasked refine at every child's corners, edge midpoints and centre (z = 0, 4, 10)") {
+    val rnd = new Random(20261020L)
+    val eps = CoverMasks.Eps
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      java.lang.Double.MIN_VALUE, -java.lang.Double.MIN_VALUE, 200.0, -1e12, 89.0, -90.0)
+    var probes = 0L; var byMask = 0L; var maskedRows = 0
+    for (_ <- 1 to 1500) {
+      val g = geometry(rnd)
+      val w = wkb(g, rnd)
+      val box = toUnsafe(GeoKernel.box(w)).copy()
+      for (z <- Seq(0, 4, 10)) {
+        val cover = GeoKernel.pointCover(w, z)
+        val rows = (0 until cover.numElements()).map(cover.getStruct(_, 3)).map(r => r.getLong(0) -> r).toMap
+        def check(x: Double, y: Double): Unit = {
+          val what = s"$g at z=$z, ($x, $y)"
+          for (boundary <- Seq(false, true))
+            assert(joined(rows, box, x, y, z, boundary, masked = true) ===
+              joined(rows, box, x, y, z, boundary, masked = false), s"$what, boundary $boundary")
+          probes += 1
+        }
+        for (s <- special) { check(s, rnd.nextDouble() * 10); check(rnd.nextDouble() * 10, s) }
+        for (r <- rnd.shuffle(rows.values.toList).take(2)) {
+          val (cell, in, out) = (r.getLong(0), r.getLong(1), r.getLong(2))
+          if ((in | out) != 0) maskedRows += 1
+          for (b <- 0 until 64) {
+            val e = Mercator.tileEnvelopeLonLat(CellId.zoom(cell) + 3, CellId.x(cell) * 8 + (b & 7),
+              CellId.y(cell) * 8 + (b >>> 3))
+            val xs = Seq(e.minX, (e.minX + e.maxX) / 2, e.maxX)
+            val ys = Seq(e.minY, (e.minY + e.maxY) / 2, e.maxY)
+            def jitter(v: Double): Double = rnd.nextInt(5) match {
+              case 0 => v
+              case 1 => v + eps
+              case 2 => v - eps
+              case 3 => math.nextUp(v)
+              case _ => math.nextDown(v)
+            }
+            for (x <- xs; y <- ys) {
+              val (px, py) = (jitter(x), jitter(y))
+              val fine = GeoKernel.cell(px, py, z + 3)
+              if (GeoKernel.cellParent(fine, CellId.zoom(cell)) == cell &&
+                  (GeoKernel.childBit(fine, px, py) & (in | out)) != 0) byMask += 1
+              check(px, py)
+            }
+          }
+        }
+      }
+    }
+    // the masks must answer a good share of the child probes
+    assert(maskedRows > 500 && byMask > probes / 10, (probes, byMask, maskedRows))
+  }
+
+  test("a row whose inside bit holds the point answers without reading its WKB") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val pts = Seq((1L, 10.0, 10.0)).toDF("id", "lon", "lat")
+    val polys = Seq((7L, graft.geom.Wkb.write(graft.geom.Wkt.parse(
+      "POLYGON ((0 0, 20 0, 20 20, 0 20, 0 0))")))).toDF("poly_id", "wkb")
+    val z = 4
+    assert(engine.SpatialJoin.pipJoin(pts, polys, z).count() === 1)
+    val j = engine.SpatialJoin.pipJoin(pts, polys, z).queryExecution.optimizedPlan
+      .collectFirst { case j: Join => j }.get
+    val attrs = j.left.output ++ j.right.output
+    val fine = GeoKernel.cell(10.0, 10.0, z + 3)
+    val bit = GeoKernel.childBit(fine, 10.0, 10.0)
+    val garbage = Array[Byte](1, 3, 0, 0, 0, 9, 9, 9)
+    def row(inside: Long, outside: Long): InternalRow = new GenericInternalRow(attrs.map { a =>
+      a.name match {
+        case "lon" | "lat" => 10.0
+        case "__graft_cell_pt" | "__graft_cell_poly" => GeoKernel.cellParent(fine, z)
+        case "__graft_bit" => bit
+        case "__graft_inside" => inside
+        case "__graft_outside" => outside
+        case "__graft_box" => InternalRow(0.0, 0.0, 20.0, 20.0, garbage)
+        case _ => null
+      }
+    }.toArray[Any])
+    val cond = org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(j.condition.get, attrs)
+    for (eval <- Seq[InternalRow => Any](cond.eval, Predicate.create(j.condition.get, attrs).eval)) {
+      assert(eval(row(bit, 0L)) == true)
+      assert(eval(row(0L, bit)) == false)
+      assert(scala.util.Try(eval(row(0L, 0L))).isFailure, "a boundary child reads the WKB")
+    }
+  }
+
+  test("a point's key cell is the parent of its cell three zooms finer, on edge, clamped and NaN points") {
+    val lats = Seq(Mercator.MaxLat, -Mercator.MaxLat, 90.0, -90.0, 89.0, -89.9, 0.0, -0.0,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e300, -1e300)
+    val lons = Seq(180.0, -180.0, 200.0, -200.0, 0.0, -0.0, 1e12, -1e12, -4e5, 1e300, -1e300,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    for (z <- (0 to 18) :+ 25) {
+      // tile edges at z, as the grid computes them, and an ulp either side
+      val n = 1 << math.min(z, 10)
+      val edges = (0 to n by math.max(1, n / 16)).map(k => Mercator.tileEnvelopeLonLat(math.min(z, 10), k % n, k % n))
+      val edgeLons = edges.flatMap(e => Seq(e.minX, math.nextUp(e.minX), math.nextDown(e.minX)))
+      val edgeLats = edges.flatMap(e => Seq(e.maxY, math.nextUp(e.maxY), math.nextDown(e.maxY)))
+      for (lon <- lons ++ edgeLons; lat <- lats ++ edgeLats) {
+        val fine = GeoKernel.cell(lon, lat, z + 3)
+        assert(CellId.parentAt(fine, z) === GeoKernel.cell(lon, lat, z), s"($lon, $lat) at z=$z")
+        if (z > CellId.CoarseZoom)
+          assert(CellId.parentAt(fine, CellId.CoarseZoom) === GeoKernel.cell(lon, lat, CellId.CoarseZoom))
       }
     }
   }

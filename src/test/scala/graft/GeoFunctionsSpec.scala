@@ -114,4 +114,34 @@ class GeoFunctionsSpec extends AnyFunSuite {
     // and it actually executes through the generated code
     assert(df.count() == 1000)
   }
+
+  test("st_x / st_y / st_centroid read a little-endian 2-D point in place, as the decode path would") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    import graft.functions.GeoKernel
+    import graft.geom.{GeoOps, Point, Wkb}
+    /** A point WKB in either byte order with `extra` trailing ordinates. */
+    def pt(x: Double, y: Double, big: Boolean, code: Int, extra: Int): Array[Byte] = {
+      val b = ByteBuffer.allocate(5 + 8 * (2 + extra))
+        .order(if (big) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+      b.put((if (big) 0 else 1).toByte).putInt(code).putDouble(x).putDouble(y)
+      (0 until extra).foreach(_ => b.putDouble(7.5))
+      b.array()
+    }
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000123L) // a NaN with a payload
+    val vals = Seq(1.5, -0.0, 0.0, Double.NaN, nan2, Double.PositiveInfinity, -1e300, java.lang.Double.MIN_VALUE)
+    val forms = Seq((false, 1, 0), (true, 1, 0), (false, 1001, 1), (true, 2001, 1), (false, 3001, 2),
+      (false, 0x80000001, 1))
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    for (x <- vals; y <- vals; (big, code, extra) <- forms) {
+      val w = pt(x, y, big, code, extra)
+      val p = Wkb.read(w).asInstanceOf[Point]
+      assert(bits(GeoKernel.stX(w)) === bits(p.x) && bits(GeoKernel.stY(w)) === bits(p.y), (x, y, big, code))
+      assert(GeoKernel.centroid(w).toSeq === Wkb.write(GeoOps.centroid(p)).toSeq, (x, y, big, code))
+    }
+    // the written form is exactly what the in-place read takes
+    assert(Wkb.write(Point(1.5, -0.0)).toSeq === pt(1.5, -0.0, big = false, 1, 0).toSeq)
+    val poly = Wkb.write(graft.geom.Wkt.parse("POLYGON ((0 0, 1 0, 1 1, 0 0))"))
+    assert(intercept[IllegalArgumentException](GeoKernel.stX(poly)).getMessage === "st_x on POLYGON")
+    assert(intercept[IllegalArgumentException](GeoKernel.stY(poly)).getMessage === "st_y on POLYGON")
+  }
 }

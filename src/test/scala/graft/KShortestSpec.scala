@@ -65,4 +65,28 @@ class KShortestSpec extends AnyFunSuite {
       assert(ex.getMessage.contains("backtrackLimit"))
     } finally spark.conf.unset("spark.graft.sssp.backtrackLimit")
   }
+
+  test("a spur search keeps the caller's cached edges cached and never re-caches them") {
+    import spark.implicits._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val e = Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (0L, 2L, 3.0), (2L, 3L, 1.0)).toDF("src", "dst", "w").cache()
+    e.count()
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("cache-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(ev: LogEvent): Unit = warnings.add(ev.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.CacheManager").asInstanceOf[CoreLogger]
+    capture.start(); logger.addAppender(capture)
+    try {
+      // the first search runs on `e` itself, a spur search on `e` masked
+      assert(GraphOps.ssspPath(e, 0L, 3L, Set.empty, Set.empty, 64).map(_.map(_._1)) === Some(List(0L, 1L, 2L, 3L)))
+      assert(e.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(GraphOps.ssspPath(e, 0L, 3L, Set(1L), Set.empty, 64).map(_.map(_._1)) === Some(List(0L, 2L, 3L)))
+      assert(e.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally { logger.removeAppender(capture); capture.stop(); e.unpersist() }
+    assert(!warnings.toArray.exists(_.toString.contains("already cached")), warnings)
+  }
 }

@@ -249,4 +249,22 @@ class OgrSqlSpec extends AnyFunSuite {
     assert(clustered.select(clustered("eas_id").cast("long")).as[Long].collect().sorted ===
       ls("poly").df.select(ls("poly").df("eas_id").cast("long")).as[Long].collect().sorted)
   }
+
+  test("first-match join: the first row by tiebreak, nulls first; a tie keeps one tied row") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val primary = Seq(1L, 2L, 3L, 4L).toDF("k")
+    val secondary = Seq[(Long, java.lang.Integer, String)](
+      (1L, 2, "b"), (1L, null, "null-first"), (1L, 1, "a"),
+      (2L, 5, "tie-x"), (2L, 5, "tie-y"), (2L, 7, "later"),
+      (3L, 4, "only"), (9L, 1, "unmatched")).toDF("k", "ord", "v")
+    val got = graft.sql.OgrCompat.firstMatchJoin(primary, secondary, Seq("k"), col("ord"))
+      .collect().map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.getString(2)))).toMap
+    assert(got.size === 4)
+    assert(got(1L) === ((None, Some("null-first"))))
+    assert(got(2L)._1 === Some(5) && Set("tie-x", "tie-y").contains(got(2L)._2.get), got(2L))
+    assert(got(3L) === ((Some(4), Some("only"))))
+    assert(got(4L) === ((None, None)))
+  }
 }

@@ -309,6 +309,17 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(!p.contains("Window"), p.take(1200))
   }
 
+  test("first-match join dedups with a partial aggregate, no Window (q10's operator)") {
+    import spark.implicits._
+    val orders = Seq((1L, 10.0), (2L, 20.0)).toDF("o_orderkey", "o_totalprice")
+    val li = Seq((1L, 2, 7L), (1L, 1, 8L), (2L, 1, 9L)).toDF("o_orderkey", "l_linenumber", "l_partkey")
+    val df = graft.sql.OgrCompat.firstMatchJoin(orders, li, Seq("o_orderkey"),
+      col("l_linenumber"), col("l_partkey"))
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.toLowerCase.contains("partial_min_by"), p.take(1500))
+    assert(!p.contains("Window"), p.take(1500))
+  }
+
   test("d24 BM25 corpus side broadcasts df/stats, never sort-merges") {
     val df = SparkEntry.queries("d24_bm25")(spark, "/root/testdata/sf0.001")
     val p = df.queryExecution.executedPlan.toString
