@@ -15,15 +15,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object CellId {
 
-  /** The finest zoom the packing holds: x/y need 28 bits. */
-  final val MaxZoom = 28
-
-  /** The default cap of [[cover]]. */
-  final val MaxCoverCells = 4096
-
-  /** The finest zoom at which no cover exceeds the cap: 4^6 = 4096 cells. */
-  final val CoarseZoom = 6
-
   def pack(z: Int, x: Int, y: Int): Long =
     (z.toLong << 58) | (x.toLong << 29) | y.toLong
 
@@ -95,7 +86,7 @@ object CellId {
     * (GetTileIndices semantics, floor + 1e-3 EPSILON, clamped —
     * gdalalg_raster_tile.cpp:458-478) intersects the envelope, row by row
     * (y, then x); [[cover]] sorts them. */
-  def coverEnvelope(e: Envelope, z: Int, maxCells: Int = MaxCoverCells): Array[Long] = {
+  def coverEnvelope(e: Envelope, z: Int, maxCells: Int = 4096): Array[Long] = {
     val (minX, minY, maxX, maxY) = Mercator.tileRangeLonLat(e, z)
     val nx = (maxX - minX + 1).toLong
     val ny = (maxY - minY + 1).toLong
@@ -119,7 +110,7 @@ object CellId {
     * exact geometry test happens at join time in the refine predicate,
     * mirroring the reference's envelope-prefilter-then-exact two-phase
     * FilterGeometry (ogr/ogrsf_frmts/generic/ogrlayer.cpp:4004-4076). */
-  def cover(g: Geom, z: Int, maxCells: Int = MaxCoverCells): Array[Long] = {
+  def cover(g: Geom, z: Int, maxCells: Int = 4096): Array[Long] = {
     val e = g.envelope
     if (e.isEmpty) return Array.empty
     val arr = coverEnvelope(e, z, maxCells)

@@ -21,10 +21,8 @@ import graft.plans.CellJoinRule
   * the cap (possible only at z > 6) is keyed by its cover at zoom 6, and
   * each point then also probes its zoom-6 cell: one hash join over one
   * build side, where each polygon rides as its boxed struct (StBox) that
-  * the refine tests in place. Each cover row carries masks of the children
-  * (zoom z+3) of its cell that lie wholly inside or wholly outside the
-  * polygon, and each point its child's bit, so the ray test runs only for
-  * points in children the polygon's boundary crosses. Polygon-polygon
+  * the refine tests in place: the envelope, then the ray test over the
+  * WKB bytes in the hash relation's row. Polygon-polygon
   * joins explode both covers, keep a pair only at the smallest cell both
   * share, and send oversized geometries to a nested-loop fallback.
   *

@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import graft.geom._
-import graft.cell.{CellId, CoverMasks, Hilbert}
+import graft.cell.{CellId, Hilbert}
 
 /** Static, JVM-primitive-typed kernel functions shared by Expression.eval and
   * generated code (`graft.functions.GeoKernel.xxx(...)` in codegen). A small
@@ -364,40 +363,14 @@ object GeoKernel {
   /** Number of cells st_cover would materialize — envelope tile-range math
     * only, never throws. Lets CellJoinRule key oversized geometries apart
     * instead of crashing mid-query on the 4096-cell cap. */
-  def coverCount(wkb: Array[Byte], z: Int): Long = envCount(decode(wkb).envelope, z)
-
-  private def envCount(e: Envelope, z: Int): Long =
+  def coverCount(wkb: Array[Byte], z: Int): Long = {
+    val e = decode(wkb).envelope
     if (e.isEmpty) 0L
     else {
       val (minX, minY, maxX, maxY) = Mercator.tileRangeLonLat(e, z)
       (maxX - minX + 1).toLong * (maxY - minY + 1).toLong
     }
-
-  /** The build rows of a point join at zoom z (CellJoinRule): one struct
-    * (cell, inside, outside) per cover cell, with the [[CoverMasks]] of the
-    * cell's children at z+3. A geometry whose cover at z is over the cap
-    * (possible only above CoarseZoom) is keyed by its zoom-6 cover; those
-    * rows, geometries without mask rings and zooms whose z+3 is no cell
-    * zoom carry 0 in both masks. */
-  def pointCover(wkb: Array[Byte], z: Int): ArrayData = {
-    val g = decode(wkb)
-    val coarse = z > CellId.CoarseZoom && envCount(g.envelope, z) > CellId.MaxCoverCells
-    val rings = if (coarse || z + 3 > CellId.MaxZoom) null else CoverMasks.rings(g)
-    val cells = CellId.cover(g, if (coarse) CellId.CoarseZoom else z)
-    new GenericArrayData(cells.map { c =>
-      val (in, out) = if (rings == null) (0L, 0L) else CoverMasks.of(g, rings, c)
-      new GenericInternalRow(Array[Any](c, in, out)): Any
-    })
   }
-
-  /** The point's bit in its cover row's masks: `cell` is its cell at z+3,
-    * the bit (y & 7) * 8 + (x & 7) names that child of its zoom-z cell.
-    * 0 outside the tile grid's lon/lat range (NaN included), where the
-    * cell is clamped and the point need not lie in its box. */
-  def childBit(cell: Long, lon: Double, lat: Double): Long =
-    if (lon >= -180.0 && lon <= 180.0 && lat >= -Mercator.MaxLat && lat <= Mercator.MaxLat)
-      1L << (((CellId.y(cell) & 7) << 3) | (CellId.x(cell) & 7))
-    else 0L
 
   def cellRing(c: Long, r: Int): Array[Long] = CellId.ring(c, r)
   def cellDisk(c: Long, r: Int): Array[Long] = CellId.disk(c, r)

@@ -888,9 +888,7 @@ case class StCoverCount(left: Expression, right: Expression)
   * (GeoKernel.box), null for a null WKB. [[PointPredicate]]s accept it in
   * place of the WKB: they test the closed envelope, then run the ray test
   * on the wkb field where the row holds it (an UnsafeRow's bytes are not
-  * copied). The per-cover-row masks that let most candidates skip the ray
-  * test ride beside it ([[StPointCover]]). Built by CellJoinRule; not
-  * registered as a SQL function. */
+  * copied). Built by CellJoinRule; not registered as a SQL function. */
 case class StBox(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = StBox.Type
@@ -908,43 +906,6 @@ object StBox {
 
   /** The WKB field of a boxed geometry. */
   def wkb(box: Expression): Expression = GetStructField(box, 4, Some("wkb"))
-}
-
-/** The build rows of CellJoinRule's point join at zoom z:
-  * array<struct<cell, inside, outside>>, one per cover cell, with the
-  * interior and exterior masks of the cell's 8 x 8 children
-  * (GeoKernel.pointCover, graft.cell.CoverMasks). Not a SQL function. */
-case class StPointCover(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = ArrayType(StPointCover.Row, containsNull = false)
-  override def prettyName: String = "st_point_cover"
-  protected override def nullSafeEval(w: Any, z: Any): Any =
-    GeoKernel.pointCover(w.asInstanceOf[Array[Byte]], z.asInstanceOf[Int])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, z) => s"${K.N}.pointCover($w, $z)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): StPointCover =
-    copy(left = l, right = r)
-}
-
-object StPointCover {
-  val Row: StructType = StructType(
-    Seq("cell", "inside", "outside").map(StructField(_, LongType, nullable = false)))
-}
-
-/** The point side's bit in its cover row's masks (GeoKernel.childBit):
-  * child_bit(cell at z+3, lon, lat), 0 outside the tile grid's range. */
-case class StChildBit(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, DoubleType, DoubleType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "st_child_bit"
-  protected override def nullSafeEval(c: Any, lon: Any, lat: Any): Any =
-    GeoKernel.childBit(c.asInstanceOf[Long], lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, lon, lat) => s"${K.N}.childBit($c, $lon, $lat)")
-  protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StChildBit =
-    copy(first = a, second = b, third = c)
 }
 
 /** cell_ring(cell, r) → array<long> of cells at Chebyshev distance r

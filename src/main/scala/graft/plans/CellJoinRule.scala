@@ -9,8 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
-import org.apache.spark.sql.graft.{CellParent, DatasetBridge, StBox, StCell, StChildBit, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint, StPointCover}
-import graft.cell.CellId
+import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint}
 
 /** Optimizer rule: rewrite naive spatial-predicate joins
   *
@@ -21,22 +20,14 @@ import graft.cell.CellId
   * predicate evaluations — into cell-indexed equi-joins (SpatialJoin's
   * point and polygon-polygon joins build theirs through `plan`):
   *
-  *   point case:  points × parent(st_cell(lon,lat,z+3), z)  ⋈_cell
-  *                polys × inline(st_point_cover(wkb,z))
+  *   point case:  points × st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_cover(wkb,z))
   *                … refined by the ORIGINAL predicate (a point is in exactly
   *                one cell, so no dedup is introduced). The polygon side
   *                carries its geometry once, as the boxed struct
   *                <minx, miny, maxx, maxy, wkb> (StBox) in place of the
   *                wkb column, and the refine takes the struct: it tests
-  *                the envelope and runs the ray test on the WKB where the
-  *                row holds it. Each cover row also carries two masks over
-  *                its cell's 8 x 8 children at z+3 (graft.cell.CoverMasks:
-  *                child wholly inside, child wholly outside, each grown by
-  *                1e-9°), and each point its child's bit (0 outside the
-  *                tile grid's lon/lat range, so NaN and infinite probes
-  *                still meet the envelope test): the refine is
-  *                `inside & bit != 0 OR (outside & bit == 0 AND pred)`,
-  *                and the ray test runs only in boundary children. The wkb
+  *                the envelope, then runs the ray test on the WKB where
+  *                the row holds it, copying no candidate's bytes. The wkb
   *                column is re-projected from the struct above the join
   *   geom case:   both sides explode their covers and equi-join on the cell;
   *                a pair sharing k cells would appear k times, so the join
@@ -55,9 +46,8 @@ import graft.cell.CellId
   * the cheap envelope-only st_cover_count; only above zoom 6, which has
   * 4^6 = 4096 cells): in the point case an oversized polygon is keyed by
   * its zoom-6 cover and each point also probes its zoom-6 cell (packed
-  * cells carry their zoom, so a pair meets under exactly one key; these
-  * rows carry no masks), which keeps one hash join and spreads the extra
-  * probe over the zoom-6 cells;
+  * cells carry their zoom, so a pair meets under exactly one key), which
+  * keeps one hash join and spreads the extra probe over the zoom-6 cells;
   * in the geom case (where a zoom-6 key would pair every geometry with
   * its zoom-6 neighbours) each side is split, oversized rows fall back to
   * the original nested-loop join, and the branches union, so a
@@ -87,6 +77,12 @@ import graft.cell.CellId
   *    zoom: the DataFrame builders in SpatialJoin write the naive
   *    predicate join and hand it here. */
 object CellJoinRule extends Rule[LogicalPlan] {
+
+  /** Matches CellId.cover's default cap. */
+  private val MaxCoverCells = 4096L
+
+  /** The finest zoom at which no cover exceeds the cap: 4^6 = 4096 cells. */
+  private val CoarseZoom = 6
 
   private val ZoomKey = "spark.graft.celljoin.zoom"
 
@@ -129,8 +125,8 @@ object CellJoinRule extends Rule[LogicalPlan] {
   private def splitByCoverSize(side: LogicalPlan, wkb: Expression, z: Int)
       : (LogicalPlan, LogicalPlan) = {
     val cnt = StCoverCount(wkb, Literal(z))
-    (Filter(LessThanOrEqual(cnt, Literal(CellId.MaxCoverCells.toLong)), side),
-     Filter(GreaterThan(cnt, Literal(CellId.MaxCoverCells.toLong)), side))
+    (Filter(LessThanOrEqual(cnt, Literal(MaxCoverCells)), side),
+     Filter(GreaterThan(cnt, Literal(MaxCoverCells)), side))
   }
 
   /** The fallback nested-loop branch: original join shape, predicate
@@ -143,41 +139,34 @@ object CellJoinRule extends Rule[LogicalPlan] {
                            lon: Expression, lat: Expression, ptsLeft: Boolean,
                            hint: JoinHint, z: Int): LogicalPlan = {
     val (ptsSide, polySide) = if (ptsLeft) (j.left, j.right) else (j.right, j.left)
-    // points side: the cell at z+3 (at z where z+3 is no cell zoom) once;
-    // each row carries its child's bit and probes the cell's parent at z
-    // and, where a cover can exceed the cap, at zoom 6 too
-    val fineA = Alias(StCell(lon, lat, Literal(if (z + 3 <= CellId.MaxZoom) z + 3 else z)),
-      "__graft_cell_fine")()
-    val fine = fineA.toAttribute
-    val bitA = Alias(StChildBit(fine, lon, lat), "__graft_bit")()
-    val bit = bitA.toAttribute
-    val withFine = Project(ptsSide.output :+ fineA, ptsSide)
-    def parent(zp: Int): Expression = CellParent(fine, Literal(zp))
+    // points side: each row probes its own cell and, where a cover can
+    // exceed the cap, its zoom-6 cell too
+    val own = StCell(lon, lat, Literal(z))
     val (pts2, cellL) =
-      if (z <= CellId.CoarseZoom) {
-        val c = Alias(parent(z), "__graft_cell_pt")()
-        (Project(ptsSide.output ++ Seq(bitA, c), withFine), c.toAttribute)
+      if (z <= CoarseZoom) {
+        val c = Alias(own, "__graft_cell_pt")()
+        (Project(ptsSide.output :+ c, ptsSide), c.toAttribute)
       } else {
         val c = AttributeReference("__graft_cell_pt", LongType)()
-        (Generate(Explode(CreateArray(Seq(parent(z), parent(CellId.CoarseZoom)))), Nil,
-          outer = false, qualifier = None, generatorOutput = Seq(c),
-          child = Project(ptsSide.output ++ Seq(fine, bitA), withFine)), c)
+        (Generate(Explode(CreateArray(Seq(own, StCell(lon, lat, Literal(CoarseZoom))))), Nil,
+          outer = false, qualifier = None, generatorOutput = Seq(c), child = ptsSide), c)
       }
     // polygon side: the geometry rides once, as the boxed struct the refine
-    // reads in place, beside each cover row's masks (a null geometry has no
-    // rows); a bare wkb column is dropped here and re-projected from the
-    // struct above the join under its own name and id
+    // reads in place, exploded over its cover (at zoom 6 if it is over the
+    // cap; a null geometry has none); a bare wkb column is dropped here and
+    // re-projected from the struct above the join under its own name and id
     val boxA = Alias(StBox(wkb), "__graft_box")()
     val box = boxA.toAttribute
     val boxed = Project(polySide.output.filterNot(wkb.semanticEquals) :+ boxA, polySide)
     val polyWkb = StBox.wkb(box)
-    val Seq(cellR, inside, outside) = Seq("cell_poly", "inside", "outside")
-      .map(n => AttributeReference(s"__graft_$n", LongType, nullable = false)())
-    val polys2 = Generate(Inline(StPointCover(polyWkb, Literal(z))), Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(cellR, inside, outside), child = boxed)
-    def has(mask: Expression): Expression = Not(EqualTo(BitwiseAnd(mask, bit), Literal(0L)))
-    val refine = Or(has(inside), And(Not(has(outside)), pred.withNewChildren(box +: pred.children.tail)))
-    val cond = And(EqualTo(cellL, cellR), refine)
+    val cover = StCover(polyWkb, Literal(z))
+    val cells = if (z <= CoarseZoom) cover
+      else If(GreaterThan(StCoverCount(polyWkb, Literal(z)), Literal(MaxCoverCells)),
+        StCover(polyWkb, Literal(CoarseZoom)), cover)
+    val cellR = AttributeReference("__graft_cell_poly", LongType, nullable = false)()
+    val polys2 = Generate(Explode(cells), Nil, outer = false, qualifier = None,
+      generatorOutput = Seq(cellR), child = boxed)
+    val cond = And(EqualTo(cellL, cellR), pred.withNewChildren(box +: pred.children.tail))
     val joined =
       if (ptsLeft) Join(pts2, polys2, Inner, Some(cond), hint)
       else Join(polys2, pts2, Inner, Some(cond), hint)

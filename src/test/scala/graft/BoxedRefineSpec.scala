@@ -4,14 +4,13 @@ import java.nio.{ByteBuffer, ByteOrder}
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, Predicate, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, StBox, StContainsPoint, StIntersectsPoint}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
-import graft.cell.{CellId, CoverMasks}
+import graft.cell.CellId
 import graft.functions.{gf, GeoKernel}
 import graft.geom.{Mercator, WkbPip}
 
@@ -20,8 +19,7 @@ import graft.geom.{Mercator, WkbPip}
   * WKB refine's answer, for both point predicates, on every geometry type
   * the WKB reader takes and every kind of probe point: vertices, edges,
   * hole boundaries, NaN and infinities, and points a denormal away from a
-  * line. So must the point join's masked refine, which answers from the
-  * cover row's child masks where they know the answer. */
+  * line. */
 class BoxedRefineSpec extends AnyFunSuite {
 
   /** Test-side geometry tree, written as raw WKB so curve types, Z/M
@@ -305,109 +303,7 @@ class BoxedRefineSpec extends AnyFunSuite {
     assert(mutated === (3 + 6) * 4 * 3)
   }
 
-  /** The join's answer for one polygon at zoom z: the point probes the
-    * cover row of its key cell (and of its zoom-6 cell above zoom 6);
-    * masked, the row's masks answer where they know the point's child, the
-    * boxed predicate elsewhere. False when no row shares a key with the
-    * point. */
-  private def joined(rows: Map[Long, InternalRow], box: InternalRow, x: Double, y: Double, z: Int,
-                     boundary: Boolean, masked: Boolean): Boolean = {
-    val fine = GeoKernel.cell(x, y, z + 3)
-    val keys = Set(GeoKernel.cellParent(fine, z), GeoKernel.cellParent(fine, math.min(z, CellId.CoarseZoom)))
-    val bit = if (masked) GeoKernel.childBit(fine, x, y) else 0L
-    val hits = keys.toSeq.flatMap(rows.get).map { r =>
-      (r.getLong(1) & bit) != 0 || ((r.getLong(2) & bit) == 0 &&
-        (if (boundary) GeoKernel.boxIntersectsPoint(box, x, y) else GeoKernel.boxContainsPoint(box, x, y)))
-    }
-    assert(hits.size <= 1)
-    hits.contains(true)
-  }
-
-  test("masked refine == unmasked refine at every child's corners, edge midpoints and centre (z = 0, 4, 10)") {
-    val rnd = new Random(20261020L)
-    val eps = CoverMasks.Eps
-    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
-      java.lang.Double.MIN_VALUE, -java.lang.Double.MIN_VALUE, 200.0, -1e12, 89.0, -90.0)
-    var probes = 0L; var byMask = 0L; var maskedRows = 0
-    for (_ <- 1 to 1500) {
-      val g = geometry(rnd)
-      val w = wkb(g, rnd)
-      val box = toUnsafe(GeoKernel.box(w)).copy()
-      for (z <- Seq(0, 4, 10)) {
-        val cover = GeoKernel.pointCover(w, z)
-        val rows = (0 until cover.numElements()).map(cover.getStruct(_, 3)).map(r => r.getLong(0) -> r).toMap
-        def check(x: Double, y: Double): Unit = {
-          val what = s"$g at z=$z, ($x, $y)"
-          for (boundary <- Seq(false, true))
-            assert(joined(rows, box, x, y, z, boundary, masked = true) ===
-              joined(rows, box, x, y, z, boundary, masked = false), s"$what, boundary $boundary")
-          probes += 1
-        }
-        for (s <- special) { check(s, rnd.nextDouble() * 10); check(rnd.nextDouble() * 10, s) }
-        for (r <- rnd.shuffle(rows.values.toList).take(2)) {
-          val (cell, in, out) = (r.getLong(0), r.getLong(1), r.getLong(2))
-          if ((in | out) != 0) maskedRows += 1
-          for (b <- 0 until 64) {
-            val e = Mercator.tileEnvelopeLonLat(CellId.zoom(cell) + 3, CellId.x(cell) * 8 + (b & 7),
-              CellId.y(cell) * 8 + (b >>> 3))
-            val xs = Seq(e.minX, (e.minX + e.maxX) / 2, e.maxX)
-            val ys = Seq(e.minY, (e.minY + e.maxY) / 2, e.maxY)
-            def jitter(v: Double): Double = rnd.nextInt(5) match {
-              case 0 => v
-              case 1 => v + eps
-              case 2 => v - eps
-              case 3 => math.nextUp(v)
-              case _ => math.nextDown(v)
-            }
-            for (x <- xs; y <- ys) {
-              val (px, py) = (jitter(x), jitter(y))
-              val fine = GeoKernel.cell(px, py, z + 3)
-              if (GeoKernel.cellParent(fine, CellId.zoom(cell)) == cell &&
-                  (GeoKernel.childBit(fine, px, py) & (in | out)) != 0) byMask += 1
-              check(px, py)
-            }
-          }
-        }
-      }
-    }
-    // the masks must answer a good share of the child probes
-    assert(maskedRows > 500 && byMask > probes / 10, (probes, byMask, maskedRows))
-  }
-
-  test("a row whose inside bit holds the point answers without reading its WKB") {
-    val spark = SparkTestSession.spark
-    import spark.implicits._
-    val pts = Seq((1L, 10.0, 10.0)).toDF("id", "lon", "lat")
-    val polys = Seq((7L, graft.geom.Wkb.write(graft.geom.Wkt.parse(
-      "POLYGON ((0 0, 20 0, 20 20, 0 20, 0 0))")))).toDF("poly_id", "wkb")
-    val z = 4
-    assert(engine.SpatialJoin.pipJoin(pts, polys, z).count() === 1)
-    val j = engine.SpatialJoin.pipJoin(pts, polys, z).queryExecution.optimizedPlan
-      .collectFirst { case j: Join => j }.get
-    val attrs = j.left.output ++ j.right.output
-    val fine = GeoKernel.cell(10.0, 10.0, z + 3)
-    val bit = GeoKernel.childBit(fine, 10.0, 10.0)
-    val garbage = Array[Byte](1, 3, 0, 0, 0, 9, 9, 9)
-    def row(inside: Long, outside: Long): InternalRow = new GenericInternalRow(attrs.map { a =>
-      a.name match {
-        case "lon" | "lat" => 10.0
-        case "__graft_cell_pt" | "__graft_cell_poly" => GeoKernel.cellParent(fine, z)
-        case "__graft_bit" => bit
-        case "__graft_inside" => inside
-        case "__graft_outside" => outside
-        case "__graft_box" => InternalRow(0.0, 0.0, 20.0, 20.0, garbage)
-        case _ => null
-      }
-    }.toArray[Any])
-    val cond = org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(j.condition.get, attrs)
-    for (eval <- Seq[InternalRow => Any](cond.eval, Predicate.create(j.condition.get, attrs).eval)) {
-      assert(eval(row(bit, 0L)) == true)
-      assert(eval(row(0L, bit)) == false)
-      assert(scala.util.Try(eval(row(0L, 0L))).isFailure, "a boundary child reads the WKB")
-    }
-  }
-
-  test("a point's key cell is the parent of its cell three zooms finer, on edge, clamped and NaN points") {
+  test("a point's cell at z is the parent of its cell three zooms finer, on edge, clamped and NaN points") {
     val lats = Seq(Mercator.MaxLat, -Mercator.MaxLat, 90.0, -90.0, 89.0, -89.9, 0.0, -0.0,
       Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e300, -1e300)
     val lons = Seq(180.0, -180.0, 200.0, -200.0, 0.0, -0.0, 1e12, -1e12, -4e5, 1e300, -1e300,
@@ -421,8 +317,7 @@ class BoxedRefineSpec extends AnyFunSuite {
       for (lon <- lons ++ edgeLons; lat <- lats ++ edgeLats) {
         val fine = GeoKernel.cell(lon, lat, z + 3)
         assert(CellId.parentAt(fine, z) === GeoKernel.cell(lon, lat, z), s"($lon, $lat) at z=$z")
-        if (z > CellId.CoarseZoom)
-          assert(CellId.parentAt(fine, CellId.CoarseZoom) === GeoKernel.cell(lon, lat, CellId.CoarseZoom))
+        if (z > 6) assert(CellId.parentAt(fine, 6) === GeoKernel.cell(lon, lat, 6))
       }
     }
   }
