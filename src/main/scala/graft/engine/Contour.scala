@@ -3,9 +3,6 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-case class ContourStrip(z: Int, x: Int, y: Int, band: Int,
-                        dx: Int, dy: Int, sw: Int, sh: Int, strip: Array[Double])
-
 /** Distributed contour extraction (marching squares) over Dataset[Tile]
   * (SURVEY.md §2.G `contour`).
   *
@@ -13,7 +10,8 @@ case class ContourStrip(z: Int, x: Int, y: Int, band: Int,
   * (/root/reference/alg/contour.cpp:569, /root/reference/alg/marching_squares/).
   * A contour cell is the 2×2 pixel square whose top-left pixel is (gx,gy);
   * cells on tile seams need the right/bottom neighbor's first column/row —
-  * a 1-pixel halo join (right col + bottom row + corner pixel shipped, one
+  * a 1-pixel halo through the shared exchange ([[Gather.halo]] with
+  * (0, 0, 1, 1): right col + bottom row + corner pixel shipped, one
   * shuffle). Per cell the standard 16-case table yields 0–2 segments with
   * linearly interpolated edge endpoints in LOCAL cell coordinates; saddle
   * cases 5/10 use the fixed (left,top)+(right,bottom) /
@@ -91,70 +89,33 @@ object Contour {
   def contour(tiles: Dataset[Tile], levels: Seq[Double]): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val contrib = tiles.flatMap { t =>
-      def strip(x0: Int, y0: Int, sw: Int, sh: Int): Array[Double] = {
-        val s = new Array[Double](sw * sh)
-        var yy = 0
-        while (yy < sh) {
-          var xx = 0
-          while (xx < sw) { s(yy * sw + xx) = t.pixels((y0 + yy) * t.w + (x0 + xx)); xx += 1 }
-          yy += 1
-        }
-        s
-      }
-      Seq(
-        ContourStrip(t.z, t.x, t.y, t.band, 0, 0, t.w, t.h, t.pixels),
-        ContourStrip(t.z, t.x - 1, t.y, t.band, 1, 0, 1, t.h, strip(0, 0, 1, t.h)),
-        ContourStrip(t.z, t.x, t.y - 1, t.band, 0, 1, t.w, 1, strip(0, 0, t.w, 1)),
-        ContourStrip(t.z, t.x - 1, t.y - 1, t.band, 1, 1, 1, 1, strip(0, 0, 1, 1)))
-    }
     val lv = levels.toArray
-    contrib
-      .groupByKey(c => (c.z, c.x, c.y, c.band))
-      .flatMapGroups { (key, it) =>
-        val (z, x, y, band) = key
-        val parts = it.toArray
-        val center = parts.find(c => c.dx == 0 && c.dy == 0).orNull
-        if (center == null) Iterator.empty
-        else {
-          val w = center.sw; val h = center.sh
-          val pw = w + 1; val ph = h + 1
-          val pad = Array.fill(pw * ph)(Double.NaN)
-          parts.foreach { c =>
-            var sy = 0
-            while (sy < c.sh) {
-              var sx = 0
-              while (sx < c.sw) {
-                pad((c.dy * h + sy) * pw + (c.dx * w + sx)) = c.strip(sy * c.sw + sx)
-                sx += 1
-              }
-              sy += 1
+    Gather.halo(tiles, 0, 0, 1, 1) { halo =>
+      val w = halo.w; val h = halo.h
+      val pw = w + 1
+      val pad = halo.padded
+      val n = new Array[Long](lv.length)
+      val lenU = new Array[Long](lv.length)
+      var yy = 0
+      while (yy < h) {
+        var xx = 0
+        while (xx < w) {
+          val tl = pad(yy * pw + xx); val tr = pad(yy * pw + xx + 1)
+          val bl = pad((yy + 1) * pw + xx); val br = pad((yy + 1) * pw + xx + 1)
+          if (!java.lang.Double.isNaN(tl) && !java.lang.Double.isNaN(tr) &&
+              !java.lang.Double.isNaN(bl) && !java.lang.Double.isNaN(br)) {
+            var li = 0
+            while (li < lv.length) {
+              val (cn, cl) = cellSegments(tl, tr, br, bl, lv(li))
+              n(li) += cn; lenU(li) += cl
+              li += 1
             }
           }
-          val n = new Array[Long](lv.length)
-          val lenU = new Array[Long](lv.length)
-          var yy = 0
-          while (yy < h) {
-            var xx = 0
-            while (xx < w) {
-              val tl = pad(yy * pw + xx); val tr = pad(yy * pw + xx + 1)
-              val bl = pad((yy + 1) * pw + xx); val br = pad((yy + 1) * pw + xx + 1)
-              if (!java.lang.Double.isNaN(tl) && !java.lang.Double.isNaN(tr) &&
-                  !java.lang.Double.isNaN(bl) && !java.lang.Double.isNaN(br)) {
-                var li = 0
-                while (li < lv.length) {
-                  val (cn, cl) = cellSegments(tl, tr, br, bl, lv(li))
-                  n(li) += cn; lenU(li) += cl
-                  li += 1
-                }
-              }
-              xx += 1
-            }
-            yy += 1
-          }
-          lv.indices.iterator.map(li => (z, x, y, lv(li), n(li), lenU(li)))
+          xx += 1
         }
+        yy += 1
       }
-      .toDF("z", "x", "y", "level", "n_segments", "len_u")
+      lv.indices.iterator.map(li => (halo.z, halo.x, halo.y, lv(li), n(li), lenU(li)))
+    }.toDF("z", "x", "y", "level", "n_segments", "len_u")
   }
 }

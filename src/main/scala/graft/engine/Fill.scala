@@ -2,113 +2,59 @@ package graft.engine
 
 import org.apache.spark.sql.Dataset
 
-case class FillStrip(z: Int, x: Int, y: Int, band: Int,
-                     dx: Int, dy: Int, x0: Int, y0: Int,
-                     sw: Int, sh: Int, strip: Array[Double])
-
 /** fill-nodata: inverse-distance-weighted inpainting of nodata pixels from
   * valid pixels within a search radius R ≤ tile size (SURVEY.md §2.G
   * `fill-nodata`; reference: GDALFillNodata IDW interpolation,
   * /root/reference/alg/rasterfill.cpp:394). R-wide halo strips → one
-  * shuffle → per-tile window pass: out = Σ v/d² / Σ 1/d² over valid
+  * shuffle (the shared halo exchange, [[Gather.halo]]) → per-tile window
+  * pass over the padded frame: out = Σ v/d² / Σ 1/d² over valid
   * pixels with 0 < d² ≤ R² (nodata kept when no valid pixel in range).
   */
 object Fill {
 
   def fillNodata(tiles: Dataset[Tile], radius: Int, nodata: Double): Dataset[Tile] = {
+    require(radius >= 0, s"radius must be >= 0, got $radius")
     val spark = tiles.sparkSession
     import spark.implicits._
     val r = radius
-    val contrib = tiles.flatMap { t =>
-      require(r <= t.w && r <= t.h, s"radius $r > tile ${t.w}")
-      for {
-        dy <- -1 to 1
-        dx <- -1 to 1
-      } yield {
-        val x0 = if (dx == 1) t.w - r else 0
-        val y0 = if (dy == 1) t.h - r else 0
-        val sw = if (dx == 0) t.w else r
-        val sh = if (dy == 0) t.h else r
-        val strip =
-          if (dx == 0 && dy == 0) t.pixels
-          else {
-            val s = new Array[Double](sw * sh)
-            var yy = 0
-            while (yy < sh) {
-              var xx = 0
-              while (xx < sw) {
-                s(yy * sw + xx) = t.pixels((y0 + yy) * t.w + (x0 + xx))
-                xx += 1
-              }
-              yy += 1
-            }
-            s
-          }
-        FillStrip(t.z, t.x + dx, t.y + dy, t.band, dx, dy, x0, y0, sw, sh, strip)
-      }
-    }
-    contrib
-      .groupByKey(c => (c.z, c.x, c.y, c.band))
-      .mapGroups { (key, it) =>
-        val (z, x, y, band) = key
-        val parts = it.toArray
-        val center = parts.find(c => c.dx == 0 && c.dy == 0).orNull
-        if (center == null) null
-        else {
-          val w = center.sw; val h = center.sh
-          val pw = w + 2 * r; val ph = h + 2 * r
-          val pad = Array.fill(pw * ph)(Double.NaN)
-          parts.foreach { c =>
-            var sy = 0
-            while (sy < c.sh) {
-              val py = (c.y0 + sy) - c.dy * h + r
-              if (py >= 0 && py < ph) {
-                var sx = 0
-                while (sx < c.sw) {
-                  val px = (c.x0 + sx) - c.dx * w + r
-                  if (px >= 0 && px < pw) pad(py * pw + px) = c.strip(sy * c.sw + sx)
-                  sx += 1
-                }
-              }
-              sy += 1
-            }
-          }
-          val r2 = r * r
-          val out = new Array[Double](w * h)
-          var yy = 0
-          while (yy < h) {
-            var xx = 0
-            while (xx < w) {
-              val v = pad((yy + r) * pw + (xx + r))
-              out(yy * w + xx) =
-                if (v != nodata) v
-                else {
-                  var num = 0.0; var den = 0.0
-                  var dy2 = -r
-                  while (dy2 <= r) {
-                    var dx2 = -r
-                    while (dx2 <= r) {
-                      val d2 = dx2 * dx2 + dy2 * dy2
-                      if (d2 > 0 && d2 <= r2) {
-                        val nv = pad((yy + r + dy2) * pw + (xx + r + dx2))
-                        if (!java.lang.Double.isNaN(nv) && nv != nodata) {
-                          num += nv / d2
-                          den += 1.0 / d2
-                        }
-                      }
-                      dx2 += 1
+    Gather.halo(tiles, r, r, r, r) { halo =>
+      val w = halo.w; val h = halo.h
+      val pw = w + 2 * r
+      val pad = halo.padded
+      val r2 = r * r
+      val out = new Array[Double](w * h)
+      var yy = 0
+      while (yy < h) {
+        var xx = 0
+        while (xx < w) {
+          val v = pad((yy + r) * pw + (xx + r))
+          out(yy * w + xx) =
+            if (v != nodata) v
+            else {
+              var num = 0.0; var den = 0.0
+              var dy2 = -r
+              while (dy2 <= r) {
+                var dx2 = -r
+                while (dx2 <= r) {
+                  val d2 = dx2 * dx2 + dy2 * dy2
+                  if (d2 > 0 && d2 <= r2) {
+                    val nv = pad((yy + r + dy2) * pw + (xx + r + dx2))
+                    if (!java.lang.Double.isNaN(nv) && nv != nodata) {
+                      num += nv / d2
+                      den += 1.0 / d2
                     }
-                    dy2 += 1
                   }
-                  if (den > 0.0) num / den else nodata
+                  dx2 += 1
                 }
-              xx += 1
+                dy2 += 1
+              }
+              if (den > 0.0) num / den else nodata
             }
-            yy += 1
-          }
-          Tile(z, x, y, band, w, h, out)
+          xx += 1
         }
+        yy += 1
       }
-      .filter(_ != null)
+      Iterator.single(Tile(halo.z, halo.x, halo.y, halo.band, w, h, out))
+    }
   }
 }

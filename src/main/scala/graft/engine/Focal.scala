@@ -2,14 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** One halo contribution: the strip of a source tile that lands in the
-  * destination tile's 1-pixel padded frame. For the 8 neighbor directions
-  * only the facing row/column/corner is shipped, so shuffle volume is
-  * ~1.03x the raster (vs 9x if whole tiles were replicated). */
-case class FocalHalo(z: Int, x: Int, y: Int, band: Int,
-                     dx: Int, dy: Int, x0: Int, y0: Int,
-                     sw: Int, sh: Int, strip: Array[Double])
-
 /** Distributed 3×3 focal (neighborhood) raster ops over Dataset[Tile] with
   * halo exchange — the cross-tile-border machinery for DEM analysis and
   * focal filters (SURVEY.md §2.G).
@@ -18,9 +10,9 @@ case class FocalHalo(z: Int, x: Int, y: Int, band: Int,
   * (/root/reference/apps/gdaldem_lib.cpp:1184-1517) and the neighbors
   * focal-convolution step (/root/reference/apps/gdalalg_raster_neighbors.cpp:207-253).
   * GDAL streams scanlines with a 1-row lookahead; the Spark-native shape is
-  * a halo join: every tile contributes its border strips to its 8
-  * neighbors, one shuffle groups each tile with its halo, then the window
-  * op runs per-tile on a padded array. Pixels whose 3×3 window reaches
+  * the shared halo exchange ([[Gather.halo]]): every tile contributes its
+  * border strips to its 8 neighbors, one shuffle groups each tile with its
+  * halo, then the window op runs per-tile on the padded frame. Pixels whose 3×3 window reaches
   * outside the dataset (global border / missing neighbor) yield `nodataOut`
   * — the reference writes the src nodata there too.
   */
@@ -53,97 +45,43 @@ object Focal {
     val hw = (size - 1) / 2
     val spark = tiles.sparkSession
     import spark.implicits._
-    val contrib = tiles.flatMap { t =>
-      require(hw <= t.w && hw <= t.h, s"window $size exceeds tile ${t.w}x${t.h}")
-      for {
-        dy <- -1 to 1
-        dx <- -1 to 1
-      } yield {
-        // the neighbor at (+dx,+dy) needs our facing border strip
-        val x0 = if (dx == 1) t.w - hw else 0
-        val y0 = if (dy == 1) t.h - hw else 0
-        val sw = if (dx == 0) t.w else hw
-        val sh = if (dy == 0) t.h else hw
-        val strip =
-          if (dx == 0 && dy == 0) t.pixels
-          else {
-            val s = new Array[Double](sw * sh)
-            var yy = 0
-            while (yy < sh) {
-              var xx = 0
-              while (xx < sw) {
-                s(yy * sw + xx) = t.pixels((y0 + yy) * t.w + (x0 + xx))
-                xx += 1
-              }
-              yy += 1
+    Gather.halo(tiles, hw, hw, hw, hw) { halo =>
+      val w = halo.w; val h = halo.h
+      val pw = w + 2 * hw
+      val pad = halo.padded
+      val outs = Array.fill(fns.length)(new Array[Double](w * h))
+      val win = new Array[Double](size * size)
+      var yy = 0
+      while (yy < h) {
+        var xx = 0
+        while (xx < w) {
+          var ok = true
+          var k = 0
+          var wy = 0
+          while (wy < size) {
+            var wx = 0
+            while (wx < size) {
+              val v = pad((yy + wy) * pw + (xx + wx))
+              if (java.lang.Double.isNaN(v)) ok = false
+              win(k) = v
+              k += 1
+              wx += 1
             }
-            s
+            wy += 1
           }
-        FocalHalo(t.z, t.x + dx, t.y + dy, t.band, dx, dy, x0, y0, sw, sh, strip)
+          var fi = 0
+          while (fi < fns.length) {
+            outs(fi)(yy * w + xx) = if (ok) fns(fi)(win) else nodataOut
+            fi += 1
+          }
+          xx += 1
+        }
+        yy += 1
+      }
+      outs.iterator.zipWithIndex.map { case (out, fi) =>
+        (fi, Tile(halo.z, halo.x, halo.y, halo.band, w, h, out))
       }
     }
-    contrib
-      .groupByKey(c => (c.z, c.x, c.y, c.band))
-      .flatMapGroups { (key, it) =>
-        val (z, x, y, band) = key
-        val parts = it.toArray
-        val center = parts.find(c => c.dx == 0 && c.dy == 0).orNull
-        if (center == null) Iterator.empty
-        else {
-          val w = center.sw; val h = center.sh
-          val pw = w + 2 * hw; val ph = h + 2 * hw
-          val pad = Array.fill(pw * ph)(Double.NaN)
-          parts.foreach { c =>
-            // source tile sits at offset (-dx,-dy) from this tile; its
-            // strip pixel (sx,sy) is source-tile pixel (x0+sx, y0+sy)
-            var sy = 0
-            while (sy < c.sh) {
-              val py = (c.y0 + sy) - c.dy * h + hw
-              if (py >= 0 && py < ph) {
-                var sx = 0
-                while (sx < c.sw) {
-                  val px = (c.x0 + sx) - c.dx * w + hw
-                  if (px >= 0 && px < pw) pad(py * pw + px) = c.strip(sy * c.sw + sx)
-                  sx += 1
-                }
-              }
-              sy += 1
-            }
-          }
-          val outs = Array.fill(fns.length)(new Array[Double](w * h))
-          val win = new Array[Double](size * size)
-          var yy = 0
-          while (yy < h) {
-            var xx = 0
-            while (xx < w) {
-              var ok = true
-              var k = 0
-              var wy = 0
-              while (wy < size) {
-                var wx = 0
-                while (wx < size) {
-                  val v = pad((yy + wy) * pw + (xx + wx))
-                  if (java.lang.Double.isNaN(v)) ok = false
-                  win(k) = v
-                  k += 1
-                  wx += 1
-                }
-                wy += 1
-              }
-              var fi = 0
-              while (fi < fns.length) {
-                outs(fi)(yy * w + xx) = if (ok) fns(fi)(win) else nodataOut
-                fi += 1
-              }
-              xx += 1
-            }
-            yy += 1
-          }
-          outs.iterator.zipWithIndex.map { case (out, fi) =>
-            (fi, Tile(z, x, y, band, w, h, out))
-          }
-        }
-      }
   }
 
   /** Horn slope in degrees (gdaldem slope semantics, scale=1, z=1):

@@ -10,9 +10,11 @@ import scala.collection.mutable.ArrayBuffer
   * /root/reference/alg/gdaldither.cpp — FS error diffusion to four
   * neighbors).
   *
-  * Spark shape: the color HISTOGRAM is the distributed part (bounded at
-  * (2^nBits)³ bins regardless of raster size — a groupBy whose result
-  * always fits on the driver); the box-cutting runs on that bounded
+  * Spark shape: each pass reads the r, g, b tiles of one (z,x,y) together
+  * through the shared tile stack ([[Gather.stack]]). The color HISTOGRAM
+  * is the distributed part (bounded at (2^nBits)³ bins regardless of
+  * raster size — a groupBy whose result always fits on the driver); the
+  * box-cutting runs on that bounded
   * histogram centrally, exactly like GDAL. Palette entries are the
   * count-weighted mean of the ORIGINAL colors per box (GDAL reconstructs
   * from quantized levels — documented improvement, exact for
@@ -22,39 +24,28 @@ import scala.collection.mutable.ArrayBuffer
   * documented deviation, required for any parallel execution). */
 object Palette {
 
-  /** Tag-union (r,g,b) tile datasets and group per tile: one shuffle. */
-  private def zipRGB(r: Dataset[Tile], g: Dataset[Tile], b: Dataset[Tile]) = {
-    val spark = r.sparkSession
-    import spark.implicits._
-    r.map(t => t.copy(band = 0)).union(g.map(t => t.copy(band = 1)))
-      .union(b.map(t => t.copy(band = 2)))
-      .groupByKey(t => (t.z, t.x, t.y))
-  }
-
-  /** Median-cut palette of nColors from an RGB raster. */
+  /** Median-cut palette of nColors from an RGB raster. `nBits` in [1, 8]
+    * is the per-channel histogram depth, so the histogram the driver
+    * collects has at most 2^(3·nBits) rows (2^24 at nBits = 8). */
   def medianCut(r: Dataset[Tile], g: Dataset[Tile], b: Dataset[Tile],
                 nColors: Int, nBits: Int = 5): Array[(Int, Int, Int)] = {
+    require(nBits >= 1 && nBits <= 8, s"nBits must be in [1, 8], got $nBits")
     val spark = r.sparkSession
     import spark.implicits._
     val lv = 1 << nBits
     val shift = 8 - nBits
     // distributed bounded histogram: (bin, count, sumR, sumG, sumB)
-    val hist = zipRGB(r, g, b).flatMapGroups { (_, it) =>
-      val bands = new Array[Array[Double]](3)
-      it.foreach(t => bands(t.band) = t.pixels)
-      if (bands.exists(_ == null)) Iterator.empty
-      else {
-        val m = scala.collection.mutable.HashMap[Int, (Long, Long, Long, Long)]()
-        var i = 0
-        while (i < bands(0).length) {
-          val rv = bands(0)(i).toInt; val gv = bands(1)(i).toInt; val bv = bands(2)(i).toInt
-          val bin = ((rv >> shift) * lv + (gv >> shift)) * lv + (bv >> shift)
-          val cur = m.getOrElse(bin, (0L, 0L, 0L, 0L))
-          m(bin) = (cur._1 + 1, cur._2 + rv, cur._3 + gv, cur._4 + bv)
-          i += 1
-        }
-        m.iterator.map { case (k, v) => (k, v._1, v._2, v._3, v._4) }
+    val hist = Gather.stack(Seq(r, g, b)) { (_, _, _, _, _, bands) =>
+      val m = scala.collection.mutable.HashMap[Int, (Long, Long, Long, Long)]()
+      var i = 0
+      while (i < bands(0).length) {
+        val rv = bands(0)(i).toInt; val gv = bands(1)(i).toInt; val bv = bands(2)(i).toInt
+        val bin = ((rv >> shift) * lv + (gv >> shift)) * lv + (bv >> shift)
+        val cur = m.getOrElse(bin, (0L, 0L, 0L, 0L))
+        m(bin) = (cur._1 + 1, cur._2 + rv, cur._3 + gv, cur._4 + bv)
+        i += 1
       }
+      m.iterator.map { case (k, v) => (k, v._1, v._2, v._3, v._4) }
     }.toDF("bin", "n", "sr", "sg", "sb")
       .groupBy("bin")
       .agg(sum("n").as("n"), sum("sr").as("sr"), sum("sg").as("sg"), sum("sb").as("sb"))
@@ -122,21 +113,14 @@ object Palette {
     val spark = r.sparkSession
     import spark.implicits._
     val pal = palette
-    zipRGB(r, g, b).flatMapGroups { (key, it) =>
-      val (z, x, y) = key
-      val bands = new Array[Array[Double]](3)
-      var tw = 0; var th = 0
-      it.foreach { t => bands(t.band) = t.pixels; tw = t.w; th = t.h }
-      if (bands.exists(_ == null)) Iterator.empty // incomplete (z,x,y): skip, like medianCut
-      else {
-        val out = new Array[Double](tw * th)
-        var i = 0
-        while (i < out.length) {
-          out(i) = nearest(pal, bands(0)(i).toInt, bands(1)(i).toInt, bands(2)(i).toInt)
-          i += 1
-        }
-        Iterator.single(Tile(z, x, y, 1, tw, th, out))
+    Gather.stack(Seq(r, g, b)) { (z, x, y, tw, th, bands) =>
+      val out = new Array[Double](tw * th)
+      var i = 0
+      while (i < out.length) {
+        out(i) = nearest(pal, bands(0)(i).toInt, bands(1)(i).toInt, bands(2)(i).toInt)
+        i += 1
       }
+      Iterator.single(Tile(z, x, y, 1, tw, th, out))
     }
   }
 
@@ -147,12 +131,7 @@ object Palette {
     val spark = r.sparkSession
     import spark.implicits._
     val pal = palette
-    zipRGB(r, g, b).flatMapGroups { (key, it) =>
-      val (z, x, y) = key
-      val bands = new Array[Array[Double]](3)
-      var tw = 0; var th = 0
-      it.foreach { t => bands(t.band) = t.pixels; tw = t.w; th = t.h }
-      if (bands.exists(_ == null)) Iterator.empty else { // incomplete (z,x,y): skip
+    Gather.stack(Seq(r, g, b)) { (z, x, y, tw, th, bands) =>
       val err = Array.fill(3)(new Array[Double](tw * th))
       val out = new Array[Double](tw * th)
       var yy = 0
@@ -184,7 +163,6 @@ object Palette {
         yy += 1
       }
       Iterator.single(Tile(z, x, y, 1, tw, th, out))
-      }
     }
   }
 }

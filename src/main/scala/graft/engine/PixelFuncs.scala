@@ -9,7 +9,8 @@ import org.apache.spark.sql.Dataset
   * (/root/reference/apps/gdalalg_raster_nodata_to_alpha.cpp).
   *
   * Spark shape: single-source functions are narrow maps (zero shuffle);
-  * N-source functions are ONE groupByKey on the tile key — the same
+  * N-source functions are ONE groupByKey on the tile key (the shared
+  * tile stack, [[Gather.stack]]) — the same
   * cost as any band-stack read, independent of raster size, so the plan
   * is unchanged at 100 TB (tiles are the unit of parallelism).
   *
@@ -24,38 +25,28 @@ import org.apache.spark.sql.Dataset
   */
 object PixelFuncs {
 
-  /** N-band per-pixel combine: one shuffle on (z,x,y). `f` sees the
-    * per-band values in input order. */
+  /** N-band per-pixel combine over the shared tile stack
+    * ([[Gather.stack]]): one shuffle on (z,x,y). `f` sees the per-band
+    * values in input order; an (z,x,y) missing from any source is skipped. */
   def combineN(srcs: Seq[Dataset[Tile]], outBand: Int = 1)
               (f: Array[Double] => Double): Dataset[Tile] = {
     require(srcs.nonEmpty)
     val spark = srcs.head.sparkSession
     import spark.implicits._
     val nb = srcs.length
-    val tagged = srcs.zipWithIndex
-      .map { case (ds, i) => ds.map(t => t.copy(band = i)) }
-      .reduce(_ union _)
-    tagged.groupByKey(t => (t.z, t.x, t.y))
-      .flatMapGroups { (key, it) =>
-        val (z, x, y) = key
-        val bands = new Array[Array[Double]](nb)
-        var tw = 0; var th = 0
-        it.foreach { t => bands(t.band) = t.pixels; tw = t.w; th = t.h }
-        if (bands.exists(_ == null)) Iterator.empty
-        else {
-          val n = tw * th
-          val out = new Array[Double](n)
-          val v = new Array[Double](nb)
-          var i = 0
-          while (i < n) {
-            var b = 0
-            while (b < nb) { v(b) = bands(b)(i); b += 1 }
-            out(i) = f(v)
-            i += 1
-          }
-          Iterator.single(Tile(z, x, y, outBand, tw, th, out))
-        }
+    Gather.stack(srcs) { (z, x, y, tw, th, bands) =>
+      val n = tw * th
+      val out = new Array[Double](n)
+      val v = new Array[Double](nb)
+      var i = 0
+      while (i < n) {
+        var b = 0
+        while (b < nb) { v(b) = bands(b)(i); b += 1 }
+        out(i) = f(v)
+        i += 1
       }
+      Iterator.single(Tile(z, x, y, outBand, tw, th, out))
+    }
   }
 
   // ---- single-source (narrow map, no shuffle) ----------------------------

@@ -9,105 +9,53 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * Reference: GDALComputeProximity
   * (/root/reference/alg/gdalproximity.cpp:94) — scanline passes carrying
   * nearest-target coordinates, `MAXDIST` bounding the search. Spark shape:
-  * like Focal but with R-wide halo strips — any target within R of a pixel
+  * the shared halo exchange ([[Gather.halo]]) with R-wide strips, whose
+  * supplied pixels are scanned for targets — any target within R of a pixel
   * lies inside the tile's R-padded window, so one strip shuffle makes the
   * per-tile computation exact. Pixels with no target within R get
   * `nodata` (reference default 65535). Shuffle volume ≈ (1 + 4R/ts)× the
   * raster.
   */
-case class ProxStrip(z: Int, x: Int, y: Int, band: Int,
-                     dx: Int, dy: Int, x0: Int, y0: Int,
-                     sw: Int, sh: Int, strip: Array[Double])
-
 object Proximity {
 
   /** `isTarget` classifies pixel values; result pixels = distance in
     * pixel units to the nearest target (0 on targets), or nodata if none
-    * within `radius`. Requires radius <= tile size. */
+    * within `radius`. Requires 0 <= radius <= tile size; a negative radius
+    * is refused at the call. */
   def proximity(tiles: Dataset[Tile], radius: Int, isTarget: Double => Boolean,
                 nodata: Double = 65535.0): Dataset[Tile] = {
+    require(radius >= 0, s"radius must be >= 0, got $radius")
     val spark = tiles.sparkSession
     import spark.implicits._
     val r = radius
-    val contrib = tiles.flatMap { t =>
-      require(r <= t.w && r <= t.h, s"radius $r > tile ${t.w}")
-      for {
-        dy <- -1 to 1
-        dx <- -1 to 1
-      } yield {
-        val x0 = if (dx == 1) t.w - r else 0
-        val y0 = if (dy == 1) t.h - r else 0
-        val sw = if (dx == 0) t.w else r
-        val sh = if (dy == 0) t.h else r
-        val strip =
-          if (dx == 0 && dy == 0) t.pixels
-          else {
-            val s = new Array[Double](sw * sh)
-            var yy = 0
-            while (yy < sh) {
-              var xx = 0
-              while (xx < sw) {
-                s(yy * sw + xx) = t.pixels((y0 + yy) * t.w + (x0 + xx))
-                xx += 1
-              }
-              yy += 1
-            }
-            s
+    Gather.halo(tiles, r, r, r, r) { halo =>
+      val w = halo.w; val h = halo.h
+      // target coordinates in centre-tile pixels, halo included
+      val tx = new scala.collection.mutable.ArrayBuffer[Int]()
+      val ty = new scala.collection.mutable.ArrayBuffer[Int]()
+      halo.foreach { (px, py, v) => if (isTarget(v)) { tx += px; ty += py } }
+      val txA = tx.toArray; val tyA = ty.toArray
+      val r2 = r * r
+      val out = new Array[Double](w * h)
+      var yy = 0
+      while (yy < h) {
+        var xx = 0
+        while (xx < w) {
+          var best = Int.MaxValue
+          var i = 0
+          while (i < txA.length) {
+            val ddx = txA(i) - xx; val ddy = tyA(i) - yy
+            val d2 = ddx * ddx + ddy * ddy
+            if (d2 < best) best = d2
+            i += 1
           }
-        ProxStrip(t.z, t.x + dx, t.y + dy, t.band, dx, dy, x0, y0, sw, sh, strip)
-      }
-    }
-    contrib
-      .groupByKey(c => (c.z, c.x, c.y, c.band))
-      .mapGroups { (key, it) =>
-        val (z, x, y, band) = key
-        val parts = it.toArray
-        val center = parts.find(c => c.dx == 0 && c.dy == 0).orNull
-        if (center == null) null
-        else {
-          val w = center.sw; val h = center.sh
-          // collect target coordinates in padded frame [-r, w+r) x [-r, h+r)
-          val tx = new scala.collection.mutable.ArrayBuffer[Int]()
-          val ty = new scala.collection.mutable.ArrayBuffer[Int]()
-          parts.foreach { c =>
-            var sy = 0
-            while (sy < c.sh) {
-              val py = (c.y0 + sy) - c.dy * h // center-tile pixel coords
-              var sx = 0
-              while (sx < c.sw) {
-                if (isTarget(c.strip(sy * c.sw + sx))) {
-                  val px = (c.x0 + sx) - c.dx * w
-                  tx += px; ty += py
-                }
-                sx += 1
-              }
-              sy += 1
-            }
-          }
-          val txA = tx.toArray; val tyA = ty.toArray
-          val r2 = r * r
-          val out = new Array[Double](w * h)
-          var yy = 0
-          while (yy < h) {
-            var xx = 0
-            while (xx < w) {
-              var best = Int.MaxValue
-              var i = 0
-              while (i < txA.length) {
-                val ddx = txA(i) - xx; val ddy = tyA(i) - yy
-                val d2 = ddx * ddx + ddy * ddy
-                if (d2 < best) best = d2
-                i += 1
-              }
-              out(yy * w + xx) =
-                if (best <= r2) math.sqrt(best.toDouble) else nodata
-              xx += 1
-            }
-            yy += 1
-          }
-          Tile(z, x, y, band, w, h, out)
+          out(yy * w + xx) =
+            if (best <= r2) math.sqrt(best.toDouble) else nodata
+          xx += 1
         }
+        yy += 1
       }
-      .filter(_ != null)
+      Iterator.single(Tile(halo.z, halo.x, halo.y, halo.band, w, h, out))
+    }
   }
 }

@@ -1075,44 +1075,33 @@ object Raster {
     * pseudo-pan = Σ wᵢ·spectralᵢ, factor = pan/pseudo (0 when pseudo = 0),
     * outᵢ = spectralᵢ·factor. Spectral bands must be on the pan grid
     * (upsample with warpAffine first — GDAL does the same internally).
-    * Spark shape: tag-union all bands, ONE shuffle groups each (z,x,y)
-    * cell, per-tile arithmetic; output band i = sharpened spectral i. */
+    * Spark shape: the shared tile stack ([[Gather.stack]], pan first),
+    * ONE shuffle groups each (z,x,y) cell, per-tile arithmetic; output
+    * band i = sharpened spectral i. */
   def pansharpen(pan: Dataset[Tile], spectral: Seq[Dataset[Tile]],
                  weights: Seq[Double]): Dataset[Tile] = {
     val spark = pan.sparkSession
     import spark.implicits._
     require(spectral.nonEmpty && spectral.length == weights.length)
     val w = weights.toArray
-    val tagged = spectral.zipWithIndex.foldLeft(
-      pan.map(t => t.copy(band = 0))) { case (acc, (sp, i)) =>
-      acc.union(sp.map(t => t.copy(band = i + 1)))
-    }
     val nSp = spectral.length
-    tagged.groupByKey(t => (t.z, t.x, t.y))
-      .flatMapGroups { (key, it) =>
-        val (z, x, y) = key
-        val byBand = new Array[Array[Double]](nSp + 1)
-        var tw = 0; var th = 0
-        it.foreach { t => byBand(t.band) = t.pixels; tw = t.w; th = t.h }
-        if (byBand.exists(_ == null)) Iterator.empty
-        else {
-          val n = tw * th
-          val outs = Array.fill(nSp)(new Array[Double](n))
-          var j = 0
-          while (j < n) {
-            var pseudo = 0.0
-            var i = 0
-            while (i < nSp) { pseudo += w(i) * byBand(i + 1)(j); i += 1 }
-            val factor = if (pseudo == 0.0) 0.0 else byBand(0)(j) / pseudo
-            i = 0
-            while (i < nSp) { outs(i)(j) = byBand(i + 1)(j) * factor; i += 1 }
-            j += 1
-          }
-          outs.iterator.zipWithIndex.map { case (px, i) =>
-            Tile(z, x, y, i + 1, tw, th, px)
-          }
-        }
+    Gather.stack(pan +: spectral) { (z, x, y, tw, th, byBand) =>
+      val n = tw * th
+      val outs = Array.fill(nSp)(new Array[Double](n))
+      var j = 0
+      while (j < n) {
+        var pseudo = 0.0
+        var i = 0
+        while (i < nSp) { pseudo += w(i) * byBand(i + 1)(j); i += 1 }
+        val factor = if (pseudo == 0.0) 0.0 else byBand(0)(j) / pseudo
+        i = 0
+        while (i < nSp) { outs(i)(j) = byBand(i + 1)(j) * factor; i += 1 }
+        j += 1
       }
+      outs.iterator.zipWithIndex.map { case (px, i) =>
+        Tile(z, x, y, i + 1, tw, th, px)
+      }
+    }
   }
 
   /** `gdal raster as-features`: tiles → one row per pixel with global

@@ -49,8 +49,8 @@ import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint
   * cells carry their zoom, so a pair meets under exactly one key), which
   * keeps one hash join and spreads the extra probe over the zoom-6 cells;
   * in the geom case (where a zoom-6 key would pair every geometry with
-  * its zoom-6 neighbours) each side is split, oversized rows fall back to
-  * the original nested-loop join, and the branches union, so a
+  * its zoom-6 neighbours) each side is split above zoom 6, oversized rows
+  * fall back to the original nested-loop join, and the branches union, so a
   * user-raised spark.graft.celljoin.zoom degrades those rows to a
   * quadratic (slow but correct) path instead of throwing.
   *
@@ -119,14 +119,14 @@ object CellJoinRule extends Rule[LogicalPlan] {
       }
   }
 
-  /** Split a geometry-bearing side into (cover fits, cover oversized).
-    * Rows with a null wkb go nowhere — the original predicate would have
-    * evaluated to null and dropped them from the inner join anyway. */
-  private def splitByCoverSize(side: LogicalPlan, wkb: Expression, z: Int)
-      : (LogicalPlan, LogicalPlan) = {
-    val cnt = StCoverCount(wkb, Literal(z))
-    (Filter(LessThanOrEqual(cnt, Literal(MaxCoverCells)), side),
-     Filter(GreaterThan(cnt, Literal(MaxCoverCells)), side))
+  /** The rows of a geometry-bearing side whose cover fits the cap
+    * (`fits`) or exceeds it. Rows with a null wkb go to neither — the
+    * original predicate would have evaluated to null and dropped them from
+    * the inner join anyway. */
+  private def coverFilter(side: LogicalPlan, wkb: Expression, z: Int,
+                          fits: Boolean): LogicalPlan = {
+    val cnt = StCoverCount(wkb, Literal(z)); val cap = Literal(MaxCoverCells)
+    Filter(if (fits) LessThanOrEqual(cnt, cap) else GreaterThan(cnt, cap), side)
   }
 
   /** The fallback nested-loop branch: original join shape, predicate
@@ -180,8 +180,10 @@ object CellJoinRule extends Rule[LogicalPlan] {
 
   private def rewriteGeom(j: Join, pred: Expression, wl: Expression,
                           wr: Expression, hint: JoinHint, z: Int): LogicalPlan = {
-    val (lFit, lBig) = splitByCoverSize(j.left, wl, z)
-    val (rFit, rBig) = splitByCoverSize(j.right, wr, z)
+    // at z <= 6 no cover can exceed the cap: no split, no fallback branches
+    val coarse = z <= CoarseZoom
+    val lFit = if (coarse) j.left else coverFilter(j.left, wl, z, fits = true)
+    val rFit = if (coarse) j.right else coverFilter(j.right, wr, z, fits = true)
     // each side carries its full (sorted) cover array AND the exploded cell
     val covL = Alias(StCover(wl, Literal(z)), "__graft_cov_l")()
     val lProj = Project(j.left.output :+ covL, lFit)
@@ -198,11 +200,12 @@ object CellJoinRule extends Rule[LogicalPlan] {
     val cond = And(EqualTo(cellL, cellR),
       And(EqualTo(minCommon, cellL), pred))
     val cellBranch = Project(j.output, Join(lExp, rExp, Inner, Some(cond), hint))
-    // oversized rows: bigL joins everything on the right; fitting left rows
-    // still need the oversized right rows
-    val bigL = naiveBranch(j.output, lBig, j.right, pred, hint)
-    val bigR = naiveBranch(j.output, lFit, rBig, pred, hint)
-    Union(Seq(cellBranch, bigL, bigR))
+    // oversized rows: oversized left rows join everything on the right;
+    // fitting left rows still need the oversized right rows
+    if (coarse) cellBranch
+    else Union(Seq(cellBranch,
+      naiveBranch(j.output, coverFilter(j.left, wl, z, fits = false), j.right, pred, hint),
+      naiveBranch(j.output, lFit, coverFilter(j.right, wr, z, fits = false), pred, hint)))
   }
 
   /** The condition must be exactly one bare spatial predicate with its

@@ -232,12 +232,15 @@ class CellJoinRuleSpec extends AnyFunSuite {
           col("x"), lit(" "), col("y"), lit("))"))).as(s"wkb_$pre"))
       val (a, b) = (sq("a"), sq("b"))
       val pointJoin = pts.join(poly, gf.st_contains_point(poly("wkb"), pts("lon"), pts("lat")))
-      val geomJoin = a.join(b, gf.st_intersects(col("wkb_a"), col("wkb_b")))
+      def geomJoin = a.join(b, gf.st_intersects(col("wkb_a"), col("wkb_b")))
       // the point join keys oversized polygons by their zoom-6 cover: no
-      // fallback branch; the geom join unions its fallback branches
-      for ((df, wantUnions) <- Seq(pointJoin -> 0, geomJoin -> 1)) {
+      // fallback branch; above zoom 6 the geom join unions its fallback
+      // branches, at zoom 4 no cover can be oversized and it has none
+      for ((df, zoom, wantUnions) <- Seq((pointJoin, 4, 0), (geomJoin, 8, 1), (geomJoin, 4, 0))) {
         val t0 = System.nanoTime()
-        val plan = df.queryExecution.optimizedPlan
+        s.conf.set("spark.graft.celljoin.zoom", zoom.toString)
+        val plan = try df.queryExecution.optimizedPlan
+          finally s.conf.unset("spark.graft.celljoin.zoom")
         val secs = (System.nanoTime() - t0) / 1e9
         assert(secs < 10.0, s"optimization took $secs s")
         val unions = plan.collect { case u: Union => u }

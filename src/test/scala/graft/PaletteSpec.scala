@@ -42,4 +42,13 @@ class PaletteSpec extends AnyFunSuite {
     val want = (0 until 4).map(k => (40 + 50 * k, 200 - 40 * k, 30 + 60 * k)).toSet
     assert(pal == want, s"$pal vs $want")
   }
+
+  test("median cut refuses a histogram depth outside [1, 8] bits") {
+    val s = SparkTestSession.spark
+    val c = Raster.syntheticTiles(s, 0, tileSize = 8)((gx, _) => gx * 30.0)
+    for (bits <- Seq(0, 9)) {
+      val e = intercept[IllegalArgumentException](Palette.medianCut(c, c, c, nColors = 4, nBits = bits))
+      assert(e.getMessage.contains("nBits"), e.getMessage)
+    }
+  }
 }

@@ -218,6 +218,9 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(collect(plan) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
     }.isEmpty, plan.treeString)
+    // at z=4 no cover can exceed the cap: no oversize fallback branches
+    assert(collect(plan) { case b: BroadcastNestedLoopJoinExec => b }.isEmpty, plan.treeString)
+    assert(collect(plan) { case u: UnionExec => u }.isEmpty, plan.treeString)
   }
 
   test("tile pyramid is one shuffle with integer parent math (g02's operator)") {
