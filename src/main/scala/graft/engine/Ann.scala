@@ -28,6 +28,10 @@ import graft.functions.{GraftFunctions, gf}
   * aggregation-order float noise so an independent engine replaying the
   * same recipe (the DuckDB oracle) reproduces bit-identical centroids,
   * assignments, and top-k.
+  *
+  * Every search is one pipeline written once below: candidates (an IVF
+  * probe, or an ADC scan over PQ or SQ8 codes) → [[candidates]] window →
+  * exact-cosine [[refine]].
   */
 object Ann {
 
@@ -36,11 +40,28 @@ object Ann {
   private def vecNormSql(embCol: String): String =
     s"sqrt(aggregate(transform(CAST($embCol AS array<double>), y -> y * y), 0D, (acc, v) -> acc + v))"
 
+  /** Squared L2 distance between two array<double> SQL expressions, summed
+    * left to right (the oracle's list_sum(list_transform(...)) order). */
+  private def sqL2Sql(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
+
+  /** round(x·1e6) as a BIGINT: scores are ranked in these integer
+    * micro-units, so an independent engine ranks them identically. */
+  private def micro(x: String): Column =
+    expr(s"CAST(floor($x * 1000000.0 + 0.5) AS BIGINT)")
+
   // score(v, c) = c·c − 2·(v·c): monotone in squared L2 distance to the
   // centroid (the ‖v‖² term is constant per row and cannot change an
   // argmin); dots are sequential folds matching the oracle's
   // list_sum(list_transform(...)) order exactly. Evaluated inside the
   // fused VecNearestCid/VecProbeCids kernels below.
+
+  /** The fused kernels' centroid literals: ids, vectors and their c·c. */
+  private def centroidLits(cents: Seq[(Int, Array[Double])])
+      : (Array[Int], Array[Array[Double]], Array[Double]) = {
+    val cs = cents.map(_._2).toArray
+    (cents.map(_._1).toArray, cs, cs.map(_.foldLeft(0.0)((a, x) => a + x * x)))
+  }
 
   /** cid of the nearest centroid (ties → lowest cid). Map-only. Fused
     * into one native expression (functions.VecNearestCid): the previous
@@ -48,9 +69,7 @@ object Ann {
     * beyond Janino's method limits at realistic k×dim and silently fell
     * back to interpreted evaluation on the assignment map stage. */
   def nearestCid(emb: Column, cents: Seq[(Int, Array[Double])]): Column = {
-    val cids = cents.map(_._1).toArray
-    val cs = cents.map(_._2).toArray
-    val ccs = cs.map(_.foldLeft(0.0)((a, x) => a + x * x))
+    val (cids, cs, ccs) = centroidLits(cents)
     org.apache.spark.sql.graft.ColumnBridge.column(
       org.apache.spark.sql.graft.VecNearestCid(
         org.apache.spark.sql.graft.ColumnBridge.expression(emb),
@@ -60,9 +79,7 @@ object Ann {
   /** The `nprobe` nearest centroid ids, nearest first. Map-only; same
     * fused-expression rationale as [[nearestCid]]. */
   def probeCids(emb: Column, cents: Seq[(Int, Array[Double])], nprobe: Int): Column = {
-    val cids = cents.map(_._1).toArray
-    val cs = cents.map(_._2).toArray
-    val ccs = cs.map(_.foldLeft(0.0)((a, x) => a + x * x))
+    val (cids, cs, ccs) = centroidLits(cents)
     org.apache.spark.sql.graft.ColumnBridge.column(
       org.apache.spark.sql.graft.VecProbeCids(
         org.apache.spark.sql.graft.ColumnBridge.expression(emb),
@@ -108,6 +125,125 @@ object Ann {
     cents
   }
 
+  // ---- the shared pipeline steps ------------------------------------------
+
+  /** (idCol, e, nm): the raw vector and its sequential-fold norm. */
+  private def rawBase(vecs: DataFrame, idCol: String, embCol: String): DataFrame = {
+    val emb = col(embCol).cast("array<double>")
+    vecs.select(col(idCol), emb.as("e"), gf.vec_norm(emb).as("nm"))
+  }
+
+  /** The embedding on the unit sphere. Cosine ranking quantizes there:
+    * after normalization squared L2 is 2 − 2cos, so a compressed-domain L2
+    * ordering matches the cosine ordering up to quantization error (the
+    * standard PQ-for-cosine setup). */
+  private def unitVec(embCol: String): Column =
+    expr(s"transform(CAST($embCol AS array<double>), x -> x / ${vecNormSql(embCol)})")
+
+  /** Sub-space width dim/m of the embedding, refusing a ragged split. */
+  private def subWidth(vecs: DataFrame, embCol: String, m: Int): Int = {
+    val dim = vecs.select(size(col(embCol).cast("array<double>"))).head().getInt(0)
+    require(dim % m == 0, s"dim $dim not divisible into $m sub-spaces")
+    dim / m
+  }
+
+  /** Per query the `candC` (qid, pid) pairs of least approximate distance
+    * `ad_u` (ties → lowest pid). */
+  private def candidates(approx: DataFrame, candC: Int): DataFrame = {
+    val wCand = Window.partitionBy("qid").orderBy(col("ad_u").asc, col("pid").asc)
+    approx.withColumn("crk", row_number().over(wCand))
+      .where(col("crk") <= candC).select("qid", "pid")
+  }
+
+  /** Exact-cosine refine of (qid, pid, qe, qn, pe, pn) pairs: per query the
+    * `topK` best by (cos desc, pid asc) as (qid, pid, rank, cos_u) with
+    * cos_u = round(cos·1e6). */
+  private def refine(pairs: DataFrame, topK: Int): DataFrame = {
+    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
+    pairs
+      .withColumn("cos", gf.vec_dot(col("qe"), col("pe")) / (col("qn") * col("pn")))
+      .withColumn("rank", row_number().over(wTop).cast("long"))
+      .where(col("rank") <= topK)
+      .select(col("qid"), col("pid"), col("rank"), micro("cos").as("cos_u"))
+  }
+
+  /** [[refine]] of candidate (qid, pid) pairs against the raw vectors. */
+  private def refineCandidates(cands: DataFrame, vecs: DataFrame, idCol: String,
+                               embCol: String, isQuery: Column => Column,
+                               topK: Int): DataFrame = {
+    val raw = rawBase(vecs, idCol, embCol)
+    val base = raw.select(col(idCol).as("pid"), col("e").as("pe"), col("nm").as("pn"))
+    val qref = raw.where(isQuery(col(idCol)))
+      .select(col(idCol).as("qid"), col("e").as("qe"), col("nm").as("qn"))
+    refine(cands.join(base, "pid").join(qref, "qid"), topK)
+  }
+
+  /** Product quantizer over `src` (idCol, lcid, v): the w-wide sub-space s
+    * of v gets a deterministic [[kmeans]] codebook of k codewords, and every
+    * vector is encoded as its m nearest-codeword ids (map-only, codebooks
+    * are literals). Returns the codebooks as (s, code, cw) and the codes as
+    * (pid, lcid, s, code). */
+  private def productQuantize(src: DataFrame, idCol: String, m: Int, w: Int,
+                              k: Int, iters: Int, trainCap: Long): (DataFrame, DataFrame) = {
+    val spark = src.sparkSession
+    import spark.implicits._
+    def sub(s: Int) = slice(col("v"), s * w + 1, w)
+    val books = (0 until m).map { s =>
+      kmeans(src.select(col(idCol), sub(s).as("sub")), idCol, "sub", k, iters, trainCap)
+    }
+    val codeCols = books.zipWithIndex.map { case (cb, s) =>
+      struct(lit(s).as("s"), nearestCid(sub(s), cb).as("code"))
+    }
+    val codes = src.select(col(idCol).as("pid"), col("lcid"),
+        explode(array(codeCols: _*)).as("sc"))
+      .select(col("pid"), col("lcid"), col("sc.s").as("s"), col("sc.code").as("code"))
+    val bookDf = books.zipWithIndex.flatMap { case (cb, s) =>
+      cb.map { case (cid, cw) => (s, cid, cw.toSeq) }
+    }.toDF("s", "code", "cw")
+    (bookDf, codes)
+  }
+
+  /** ADC scan (asymmetric distance computation): one distance table per
+    * (query, probed list) row of `qvecs` (qid, lcid, qv) — the squared
+    * sub-distance of every codeword to the query's sub-vector, one small
+    * broadcast cross join — and each code in a probed list scores as the
+    * sum of its m table entries, never touching the raw vectors. lcid is on
+    * the join key, so the shuffle carries only the probed lists' codes. */
+  private def adcScan(codes: DataFrame, bookDf: DataFrame, qvecs: DataFrame,
+                      w: Int, candC: Int): DataFrame = {
+    val dtab = qvecs.crossJoin(broadcast(bookDf))
+      .select(col("qid"), col("lcid"), col("s"), col("code"),
+        expr(sqL2Sql(s"slice(qv, s * $w + 1, $w)", "cw")).as("d"))
+    val approx = codes.join(dtab, Seq("lcid", "s", "code"))
+      .where(col("qid") =!= col("pid"))
+      .groupBy("qid", "pid")
+      .agg(micro("sum(d)").as("ad_u"))
+    candidates(approx, candC)
+  }
+
+  /** PQ search: quantize `src` (idCol, lcid, v), ADC-scan the probed lists
+    * of `qvecs` (qid, lcid, qv), refine the candidates exactly. */
+  private def pqSearch(vecs: DataFrame, idCol: String, embCol: String,
+                       isQuery: Column => Column, src: DataFrame, qvecs: DataFrame,
+                       m: Int, w: Int, k: Int, iters: Int, candC: Int, topK: Int,
+                       trainCap: Long): DataFrame = {
+    val (bookDf, codes) = productQuantize(src, idCol, m, w, k, iters, trainCap)
+    refineCandidates(adcScan(codes, bookDf, qvecs, w, candC),
+      vecs, idCol, embCol, isQuery, topK)
+  }
+
+  /** PQ search over unit vectors: each vector in list `list`, each query
+    * probing the lists of the array `probes` (both over the raw vector). */
+  private def unitPqSearch(vecs: DataFrame, idCol: String, embCol: String,
+                           isQuery: Column => Column, list: Column, probes: Column,
+                           m: Int, w: Int, k: Int, iters: Int, candC: Int, topK: Int,
+                           trainCap: Long): DataFrame = {
+    val src = vecs.select(col(idCol), list.as("lcid"), unitVec(embCol).as("v"))
+    val qvecs = vecs.where(isQuery(col(idCol)))
+      .select(col(idCol).as("qid"), explode(probes).as("lcid"), unitVec(embCol).as("qv"))
+    pqSearch(vecs, idCol, embCol, isQuery, src, qvecs, m, w, k, iters, candC, topK, trainCap)
+  }
+
   /** SQ8 scalar-quantized top-k — the uniform 8-bit scalar-quantization
     * tier of the ANN compression ladder (the public faiss
     * ScalarQuantizer QT_8bit form), completing brute → IVF → PQ → IVF-PQ
@@ -129,11 +265,8 @@ object Ann {
     * independent engine reproduces the candidate sets bit-for-bit. */
   def sq8TopK(vecs: DataFrame, idCol: String, embCol: String,
               isQuery: Column => Column, candC: Int, topK: Int): DataFrame = {
-    val spark = vecs.sparkSession
-    GraftFunctions.register(spark)
-    val rawEmb = col(embCol).cast("array<double>")
-    val unit = vecs.select(col(idCol),
-      expr(s"transform(CAST($embCol AS array<double>), x -> x / ${vecNormSql(embCol)})").as("u"))
+    GraftFunctions.register(vecs.sparkSession)
+    val unit = vecs.select(col(idCol), unitVec(embCol).as("u"))
     val stats = unit.select(posexplode(col("u")).as(Seq("pos", "v")))
       .groupBy("pos").agg(min("v").as("mn"), max("v").as("mx"))
       .orderBy("pos").collect()
@@ -147,26 +280,11 @@ object Ann {
       .withColumn("r", expr(
         "zip_with(zip_with(codes, sps, (c, sp) -> c * sp / 255.0), mns, (t, a) -> a + t)"))
       .select(col(idCol), col("r"))
-    val rawBase = vecs.select(col(idCol), rawEmb.as("e"), gf.vec_norm(rawEmb).as("nm"))
-    val q = rawBase.where(isQuery(col(idCol))).join(withCodes, idCol)
-      .select(col(idCol).as("qid"), col("e").as("qe"), col("nm").as("qn"),
-        col("r").as("rq"))
+    val q = withCodes.where(isQuery(col(idCol))).select(col(idCol).as("qid"), col("r").as("rq"))
     val p = withCodes.select(col(idCol).as("pid"), col("r").as("rp"))
     val approx = q.crossJoin(p).where(col("qid") =!= col("pid"))
-      .select(col("qid"), col("pid"), expr(
-        "CAST(floor(aggregate(zip_with(rq, rp, (x, y) -> (x - y) * (x - y)), " +
-          "0D, (acc, v) -> acc + v) * 1000000.0 + 0.5) AS BIGINT)").as("ad_u"))
-    val wCand = Window.partitionBy("qid").orderBy(col("ad_u").asc, col("pid").asc)
-    val cands = approx.withColumn("crk", row_number().over(wCand))
-      .where(col("crk") <= candC).select("qid", "pid")
-    val base = rawBase.select(col(idCol).as("pid"), col("e").as("pe"), col("nm").as("pn"))
-    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    cands.join(base, "pid").join(q, "qid")
-      .withColumn("cos", gf.vec_dot(col("qe"), col("pe")) / (col("qn") * col("pn")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("qid"), col("pid"), col("rank"),
-        expr("CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)").as("cos_u"))
+      .select(col("qid"), col("pid"), micro(sqL2Sql("rq", "rp")).as("ad_u"))
+    refineCandidates(candidates(approx, candC), vecs, idCol, embCol, isQuery, topK)
   }
 
   /** Product-quantization top-k (the PQ half of the IVF-PQ shape used for
@@ -186,74 +304,18 @@ object Ann {
     *     to 1e-6 so independent engines rank identically; ties → pid) and
     *     re-rank them by exact cosine → `topK`.
     *
+    * This is IVF-PQ with one inverted list: every vector is in list 0 and
+    * every query probes it.
+    *
     * Scale: the approx pass streams CODES (m bytes/vector) instead of
     * dim·8 bytes — the 64× bandwidth cut that makes a 100 TB corpus
     * scannable; the exact refine touches only candC vectors per query. */
   def pqTopK(vecs: DataFrame, idCol: String, embCol: String,
              isQuery: Column => Column, m: Int, k: Int, iters: Int,
              candC: Int, topK: Int, trainCap: Long = Long.MaxValue): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    GraftFunctions.register(spark)
-    val rawEmb = col(embCol).cast("array<double>")
-    val dim = vecs.select(size(rawEmb)).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible into $m sub-spaces")
-    val w = dim / m
-    // cosine ranking → quantize on the UNIT SPHERE: after normalization,
-    // squared L2 is 2−2cos, so the ADC ordering matches the cosine
-    // ordering up to quantization error (the standard PQ-for-cosine setup)
-    val unit = vecs.select(col(idCol),
-      expr(s"transform(CAST($embCol AS array<double>), x -> x / ${vecNormSql(embCol)})").as("u"))
-    val emb = col("u")
-
-    // 1. per-sub-space codebooks (deterministic kmeans on the slices)
-    val books: Seq[(Int, Seq[(Int, Array[Double])])] = (0 until m).map { s =>
-      (s, kmeans(unit.select(col(idCol), slice(emb, s * w + 1, w).as("sub")),
-        idCol, "sub", k, iters, trainCap))
-    }
-
-    // 2. encode: m nearest-codeword ids per vector, exploded to (pid, s, code)
-    val codeCols = books.map { case (s, cb) =>
-      struct(lit(s).as("s"), nearestCid(slice(emb, s * w + 1, w), cb).as("code"))
-    }
-    val codes = unit.select(col(idCol).as("pid"),
-        explode(array(codeCols: _*)).as("sc"))
-      .select(col("pid"), col("sc.s").as("s"), col("sc.code").as("code"))
-
-    // 3. per-query ADC tables: (qid, s, code, d) over the m·k codewords
-    val bookRows = books.flatMap { case (s, cb) =>
-      cb.map { case (cid, cw) => (s, cid, cw.toSeq) }
-    }
-    val bookDf = bookRows.toDF("s", "code", "cw")
-    val rawBase = vecs.select(col(idCol), rawEmb.as("e"), gf.vec_norm(rawEmb).as("nm"))
-    val queries = rawBase.where(isQuery(col(idCol)))
-      .join(unit, idCol)
-      .select(col(idCol).as("qid"), col("e").as("qe"), col("nm").as("qn"),
-        col("u").as("uq"))
-    val dtab = queries.crossJoin(broadcast(bookDf))
-      .select(col("qid"), col("s"), col("code"),
-        expr(s"aggregate(zip_with(slice(uq, s * $w + 1, $w), cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)").as("d"))
-
-    // approximate distance = sum of the m table entries for the candidate's
-    // codes; rounded so ranking is engine-independent
-    val approx = codes.join(dtab, Seq("s", "code"))
-      .where(col("qid") =!= col("pid"))
-      .groupBy("qid", "pid")
-      .agg(expr("CAST(floor(sum(d) * 1000000.0 + 0.5) AS BIGINT)").as("ad_u"))
-    val wCand = Window.partitionBy("qid").orderBy(col("ad_u").asc, col("pid").asc)
-    val cands = approx.withColumn("crk", row_number().over(wCand))
-      .where(col("crk") <= candC).select("qid", "pid", "ad_u")
-
-    // 4. exact-cosine refine of the candidates only (raw vectors)
-    val base = rawBase.select(col(idCol).as("pid"), col("e").as("pe"),
-      col("nm").as("pn"))
-    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    cands.join(base, "pid").join(queries, "qid")
-      .withColumn("cos", gf.vec_dot(col("qe"), col("pe")) / (col("qn") * col("pn")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("qid"), col("pid"), col("rank"),
-        expr("CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)").as("cos_u"))
+    GraftFunctions.register(vecs.sparkSession)
+    unitPqSearch(vecs, idCol, embCol, isQuery, lit(0), array(lit(0)),
+      m, subWidth(vecs, embCol, m), k, iters, candC, topK, trainCap)
   }
 
   /** IVF-PQ: the full web-scale composition — the coarse IVF quantizer
@@ -263,70 +325,19 @@ object Ann {
     * vectors (the IVFFlat-PQ simplification; per-list residual codebooks
     * are the classic refinement, traded here for oracle-replayable
     * determinism). At scale: lists bound the scan, codes bound the
-    * bandwidth, the refine touches candC raw vectors per query. */
+    * bandwidth, the refine touches candC raw vectors per query. The ADC
+    * table entries are list-independent (global codebooks), so one table
+    * per probed list changes the plan, not the values. */
   def ivfPqTopK(vecs: DataFrame, idCol: String, embCol: String,
                 isQuery: Column => Column, kCoarse: Int, itersCoarse: Int,
                 nprobe: Int, m: Int, k: Int, iters: Int,
                 candC: Int, topK: Int, trainCap: Long = Long.MaxValue): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.register(vecs.sparkSession)
     val rawEmb = col(embCol).cast("array<double>")
-    val dim = vecs.select(size(rawEmb)).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible into $m sub-spaces")
-    val w = dim / m
+    val w = subWidth(vecs, embCol, m)
     val coarse = kmeans(vecs, idCol, embCol, kCoarse, itersCoarse, trainCap)
-    val unit = vecs.select(col(idCol),
-      expr(s"transform(CAST($embCol AS array<double>), x -> x / ${vecNormSql(embCol)})").as("u"))
-    val emb = col("u")
-    val books = (0 until m).map { s =>
-      (s, kmeans(unit.select(col(idCol), slice(emb, s * w + 1, w).as("sub")),
-        idCol, "sub", k, iters, trainCap))
-    }
-    val codeCols = books.map { case (s, cb) =>
-      struct(lit(s).as("s"), nearestCid(slice(emb, s * w + 1, w), cb).as("code"))
-    }
-    // codes carry the coarse list id so the ADC join is list-bounded
-    val codes = vecs.select(col(idCol).as("pid"),
-        nearestCid(rawEmb, coarse).as("lcid"))
-      .join(unit.select(col(idCol).as("pid"),
-        explode(array(codeCols: _*)).as("sc")), "pid")
-      .select(col("pid"), col("lcid"), col("sc.s").as("s"), col("sc.code").as("code"))
-    val bookDf = books.flatMap { case (s, cb) =>
-      cb.map { case (cid, cw) => (s, cid, cw.toSeq) }
-    }.toDF("s", "code", "cw")
-    val rawBase = vecs.select(col(idCol), rawEmb.as("e"), gf.vec_norm(rawEmb).as("nm"))
-    // one row per (query, probed list): the explode puts the coarse list id
-    // on the JOIN KEY so the ADC join below is list-bounded — the shuffle
-    // carries only codes whose lcid is actually probed, never all-pairs in
-    // the compressed domain (same shape as ivfPqResidualTopK). The ADC
-    // table entries are list-independent (global codebooks), so replicating
-    // them per probed lcid changes the plan, not the values.
-    val queries = rawBase.where(isQuery(col(idCol)))
-      .join(unit, idCol)
-      .select(col(idCol).as("qid"), col("u").as("uq"),
-        explode(probeCids(col("e"), coarse, nprobe)).as("lcid"))
-    val dtab = queries.crossJoin(broadcast(bookDf))
-      .select(col("qid"), col("lcid"), col("s"), col("code"),
-        expr(s"aggregate(zip_with(slice(uq, s * $w + 1, $w), cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)").as("d"))
-    val approx = codes.join(dtab, Seq("lcid", "s", "code"))
-      .where(col("qid") =!= col("pid"))
-      .groupBy("qid", "pid")
-      .agg(expr("CAST(floor(sum(d) * 1000000.0 + 0.5) AS BIGINT)").as("ad_u"))
-    val wCand = Window.partitionBy("qid").orderBy(col("ad_u").asc, col("pid").asc)
-    val cands = approx.withColumn("crk", row_number().over(wCand))
-      .where(col("crk") <= candC).select("qid", "pid")
-    val base = rawBase.select(col(idCol).as("pid"), col("e").as("pe"), col("nm").as("pn"))
-    val qref = rawBase.where(isQuery(col(idCol)))
-      .select(col(idCol).as("qid"), col("e").as("qe"), col("nm").as("qn"))
-    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    cands.join(base, "pid")
-      .join(qref, "qid")
-      .withColumn("cos", gf.vec_dot(col("qe"), col("pe")) / (col("qn") * col("pn")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("qid"), col("pid"), col("rank"),
-        expr("CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)").as("cos_u"))
+    unitPqSearch(vecs, idCol, embCol, isQuery, nearestCid(rawEmb, coarse),
+      probeCids(rawEmb, coarse, nprobe), m, w, k, iters, candC, topK, trainCap)
   }
 
   /** Residual IVF-PQ — the classic form (Jégou et al. 2011 §IV): PQ
@@ -341,69 +352,53 @@ object Ann {
                         isQuery: Column => Column, kCoarse: Int, itersCoarse: Int,
                         nprobe: Int, m: Int, k: Int, iters: Int,
                         candC: Int, topK: Int, trainCap: Long = Long.MaxValue): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.register(vecs.sparkSession)
     val rawEmb = col(embCol).cast("array<double>")
-    val dim = vecs.select(size(rawEmb)).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible into $m sub-spaces")
-    val w = dim / m
+    val w = subWidth(vecs, embCol, m)
     val coarse = kmeans(vecs, idCol, embCol, kCoarse, itersCoarse, trainCap)
-    // residual r = v − c(v); centroid looked up from a literal map by cid
+    // residual v − c(list); centroid looked up from a literal map by cid
     // (kmeans can drop empty clusters, so cids need not be contiguous)
     val centMap = typedLit(coarse.map { case (cid, c) => cid -> c.toSeq }.toMap)
-    val residWithMap = vecs.select(col(idCol), rawEmb.as("e"))
-      .withColumn("cmap", centMap)
-      .withColumn("lcid", nearestCid(col("e"), coarse))
-      .withColumn("r", expr("zip_with(e, element_at(cmap, lcid), (x, y) -> x - y)"))
-      .select(col(idCol), col("lcid"), col("r"))
-    val books = (0 until m).map { s =>
-      (s, kmeans(residWithMap.select(col(idCol), slice(col("r"), s * w + 1, w).as("sub")),
-        idCol, "sub", k, iters, trainCap))
-    }
-    val codeCols = books.map { case (s, cb) =>
-      struct(lit(s).as("s"), nearestCid(slice(col("r"), s * w + 1, w), cb).as("code"))
-    }
-    val codes = residWithMap.select(col(idCol).as("pid"), col("lcid"),
-        explode(array(codeCols: _*)).as("sc"))
-      .select(col("pid"), col("lcid"), col("sc.s").as("s"), col("sc.code").as("code"))
-    val bookDf = books.flatMap { case (s, cb) =>
-      cb.map { case (cid, cw) => (s, cid, cw.toSeq) }
-    }.toDF("s", "code", "cw")
-    val rawBase = vecs.select(col(idCol), rawEmb.as("e"), gf.vec_norm(rawEmb).as("nm"))
-    val queries = rawBase.where(isQuery(col(idCol)))
+    def resid(v: Column, list: Column) = zip_with(v, element_at(centMap, list), (x, y) => x - y)
+    val src = vecs.select(col(idCol), rawEmb.as("e"), nearestCid(rawEmb, coarse).as("lcid"))
+      .select(col(idCol), col("lcid"), resid(col("e"), col("lcid")).as("v"))
+    val qvecs = vecs.where(isQuery(col(idCol)))
+      .select(col(idCol).as("qid"), rawEmb.as("e"),
+        explode(probeCids(rawEmb, coarse, nprobe)).as("lcid"))
+      .select(col("qid"), col("lcid"), resid(col("e"), col("lcid")).as("qv"))
+    pqSearch(vecs, idCol, embCol, isQuery, src, qvecs, m, w, k, iters, candC, topK, trainCap)
+  }
+
+  /** IVF postings (pid, pe, pn, cid): every vector with its norm in its
+    * nearest centroid's inverted list. */
+  private def ivfPostings(vecs: DataFrame, idCol: String, embCol: String,
+                          cents: Seq[(Int, Array[Double])]): DataFrame =
+    rawBase(vecs, idCol, embCol).select(col(idCol).as("pid"), col("e").as("pe"),
+      col("nm").as("pn"), nearestCid(col("e"), cents).as("cid"))
+
+  /** IVF probe: each query joins the postings of its `nprobe` nearest
+    * lists on cid, and the members are refined exactly. */
+  private def ivfProbe(vecs: DataFrame, idCol: String, embCol: String,
+                       isQuery: Column => Column, cents: Seq[(Int, Array[Double])],
+                       postings: DataFrame, nprobe: Int, topK: Int): DataFrame = {
+    val probes = rawBase(vecs, idCol, embCol).where(isQuery(col(idCol)))
       .select(col(idCol).as("qid"), col("e").as("qe"), col("nm").as("qn"),
-        explode(probeCids(col("e"), coarse, nprobe)).as("lcid"))
-      .withColumn("cmap", centMap)
-      .withColumn("qr", expr("zip_with(qe, element_at(cmap, lcid), (x, y) -> x - y)"))
-      .drop("cmap")
-    // one ADC table per (query, probed list): residual vs codeword
-    val dtab = queries.select("qid", "lcid", "qr").crossJoin(broadcast(bookDf))
-      .select(col("qid"), col("lcid"), col("s"), col("code"),
-        expr(s"aggregate(zip_with(slice(qr, s * $w + 1, $w), cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)").as("d"))
-    val approx = codes.join(dtab, Seq("lcid", "s", "code"))
-      .where(col("qid") =!= col("pid"))
-      .groupBy("qid", "pid")
-      .agg(expr("CAST(floor(sum(d) * 1000000.0 + 0.5) AS BIGINT)").as("ad_u"))
-    val wCand = Window.partitionBy("qid").orderBy(col("ad_u").asc, col("pid").asc)
-    val cands = approx.withColumn("crk", row_number().over(wCand))
-      .where(col("crk") <= candC).select("qid", "pid")
-    val base = rawBase.select(col(idCol).as("pid"), col("e").as("pe"), col("nm").as("pn"))
-    val qref = rawBase.where(isQuery(col(idCol)))
-      .select(col(idCol).as("qid"), col("e").as("qe"), col("nm").as("qn"))
-    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    cands.join(base, "pid").join(qref, "qid")
-      .withColumn("cos", gf.vec_dot(col("qe"), col("pe")) / (col("qn") * col("pn")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("qid"), col("pid"), col("rank"),
-        expr("CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)").as("cos_u"))
+        explode(probeCids(col("e"), cents, nprobe)).as("cid"))
+    refine(probes.join(postings, "cid").where(col("qid") =!= col("pid")), topK)
   }
 
   /** IVF top-k: every vector joins its nearest centroid's inverted list;
     * each query probes the `nprobe` nearest lists and ranks candidates by
     * exact cosine (ties → lowest pid). Output: (qid, pid, rank, cos_u)
     * with cos_u = round(cos·1e6). Self-matches are excluded. */
+  def ivfTopK(vecs: DataFrame, idCol: String, embCol: String,
+              isQuery: Column => Column, k: Int, iters: Int,
+              nprobe: Int, topK: Int, trainCap: Long = Long.MaxValue): DataFrame = {
+    val cents = kmeans(vecs, idCol, embCol, k, iters, trainCap)
+    ivfProbe(vecs, idCol, embCol, isQuery, cents,
+      ivfPostings(vecs, idCol, embCol, cents), nprobe, topK)
+  }
+
   /** Persist an IVF index as TABLES — the Spark-native take on "build the
     * index once, query it many times": `centroids` (cid, ce) is the k×dim
     * driver-state codebook, `postings` (pid, pe, pn, cid) is the corpus
@@ -420,9 +415,7 @@ object Ann {
     val cents = kmeans(vecs, idCol, embCol, k, iters, trainCap)
     cents.map { case (cid, ce) => (cid, ce.toSeq) }.toDF("cid", "ce")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    val emb = col(embCol).cast("array<double>")
-    vecs.select(col(idCol).as("pid"), emb.as("pe"),
-        gf.vec_norm(emb).as("pn"), nearestCid(emb, cents).as("cid"))
+    ivfPostings(vecs, idCol, embCol, cents)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/postings")
   }
 
@@ -434,22 +427,12 @@ object Ann {
   def ivfQueryIndex(dir: String, vecs: DataFrame, idCol: String, embCol: String,
                     isQuery: Column => Column, nprobe: Int, topK: Int): DataFrame = {
     val spark = vecs.sparkSession
+    GraftFunctions.register(spark)
     val cents = spark.read.parquet(s"$dir/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toIndexedSeq
     val postings = spark.read.parquet(s"$dir/postings")
       .select(col("pid"), col("pe"), col("pn"), col("cid"))
-    val emb = col(embCol).cast("array<double>")
-    val probes = vecs.where(isQuery(col(idCol)))
-      .select(col(idCol).as("qid"), emb.as("qe"), gf.vec_norm(emb).as("qn"),
-        explode(probeCids(emb, cents, nprobe)).as("cid"))
-    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    probes.join(postings, "cid")
-      .where(col("qid") =!= col("pid"))
-      .withColumn("cos", gf.vec_dot(col("qe"), col("pe")) / (col("qn") * col("pn")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("qid"), col("pid"), col("rank"),
-        expr("CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)").as("cos_u"))
+    ivfProbe(vecs, idCol, embCol, isQuery, cents, postings, nprobe, topK)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -483,14 +466,13 @@ object Ann {
                maxCluster: Long = Long.MaxValue): DataFrame = {
     GraftFunctions.register(vecs.sparkSession)
     val cents = kmeans(vecs, idCol, embCol, k, iters, trainCap)
-    val emb = col(embCol).cast("array<double>")
     // persisted: the guard count, the lo/hi self-join (two scans) and the
     // final left-join would otherwise each recompute the full-corpus
     // assignment pass. At cluster scale, materialize this to a table
     // instead (the e10 postings pattern) — persist is the single-node
     // equivalent.
-    val assigned = vecs.select(col(idCol).cast("long").as("vec_id"),
-        emb.as("e"), gf.vec_norm(emb).as("nm"))
+    val assigned = rawBase(vecs, idCol, embCol)
+      .select(col(idCol).cast("long").as("vec_id"), col("e"), col("nm"))
       .withColumn("cid", nearestCid(col("e"), cents))
       .persist()
     if (maxCluster != Long.MaxValue) {
@@ -506,7 +488,7 @@ object Ann {
       col("e").as("he"), col("nm").as("hn"))
     val dups = lo.join(hi, "cid").where(col("lo") < col("hi"))
       .withColumn("cos", gf.vec_dot(col("le"), col("he")) / (col("ln") * col("hn")))
-      .withColumn("cos_u", expr("CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)"))
+      .withColumn("cos_u", micro("cos"))
       .where(col("cos_u") >= tauU)
       .groupBy("hi")
       .agg(count(lit(1)).as("n_dups"), min("lo").as("dup_lo"))
@@ -523,27 +505,5 @@ object Ann {
     out.count()
     assigned.unpersist(blocking = false)
     out
-  }
-
-  def ivfTopK(vecs: DataFrame, idCol: String, embCol: String,
-              isQuery: Column => Column, k: Int, iters: Int,
-              nprobe: Int, topK: Int, trainCap: Long = Long.MaxValue): DataFrame = {
-    val cents = kmeans(vecs, idCol, embCol, k, iters, trainCap)
-    val emb = col(embCol).cast("array<double>")
-    val base = vecs.select(col(idCol), emb.as("e"),
-      gf.vec_norm(emb).as("nm"))
-    val assigned = base.select(col(idCol).as("pid"), col("e").as("pe"),
-      col("nm").as("pn"), nearestCid(col("e"), cents).as("cid"))
-    val probes = base.where(isQuery(col(idCol)))
-      .select(col(idCol).as("qid"), col("e").as("qe"), col("nm").as("qn"),
-        explode(probeCids(col("e"), cents, nprobe)).as("cid"))
-    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    probes.join(assigned, "cid")
-      .where(col("qid") =!= col("pid"))
-      .withColumn("cos", gf.vec_dot(col("qe"), col("pe")) / (col("qn") * col("pn")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("qid"), col("pid"), col("rank"),
-        expr("CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)").as("cos_u"))
   }
 }

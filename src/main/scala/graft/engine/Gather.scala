@@ -49,7 +49,32 @@ final class Halo(val z: Int, val x: Int, val y: Int, val band: Int,
   }
 }
 
-/** Cross-tile gathering for the raster operators: the two Spark shapes
+/** The source tiles routed to destination tile (dx, dy) of a warp, on a
+  * dense local tile grid so that a pixel read is two array indexes (the
+  * kernels read the window several times per destination pixel). `band`
+  * is the band of the routed tiles, 1 when none was routed. */
+final class SrcWindow private[engine] (val dx: Int, val dy: Int, val band: Int,
+                                       ts: Int, srcW: Long, srcH: Long, tiles: Array[Tile]) {
+  private val tx0 = if (tiles.isEmpty) 0 else tiles.map(_.x).min
+  private val ty0 = if (tiles.isEmpty) 0 else tiles.map(_.y).min
+  private val gw = if (tiles.isEmpty) 0 else tiles.map(_.x).max - tx0 + 1
+  private val gh = if (tiles.isEmpty) 0 else tiles.map(_.y).max - ty0 + 1
+  private val grid = new Array[Array[Double]](gw * gh)
+  tiles.foreach(t => grid((t.y - ty0) * gw + (t.x - tx0)) = t.pixels)
+
+  /** Source pixel (gx, gy); NaN outside the source raster or the routed
+    * tiles. */
+  def pix(gx: Long, gy: Long): Double = {
+    if (gx < 0 || gy < 0 || gx >= srcW || gy >= srcH) return Double.NaN
+    val tx = (gx / ts).toInt - tx0; val ty = (gy / ts).toInt - ty0
+    if (tx < 0 || ty < 0 || tx >= gw || ty >= gh) return Double.NaN
+    val p = grid(ty * gw + tx)
+    if (p == null) Double.NaN
+    else p(((gy % ts) * ts + (gx % ts)).toInt)
+  }
+}
+
+/** Cross-tile gathering for the raster operators: the three Spark shapes
   * that meet tiles from different places in one shuffle. Each takes the
   * caller's per-tile function, so the caller's plan is one shuffle and one
   * per-group pass. */
@@ -104,6 +129,31 @@ object Gather {
           case None => Iterator.empty
           case Some(c) => f(new Halo(z, x, y, band, c.sw, c.sh, left, top, right, bottom, parts))
         }
+      }
+  }
+
+  /** Warp source window: `contrib` routes source tiles of size ts×ts to
+    * destination tiles as (dx, dy, tile), and one `groupByKey` on (dx, dy)
+    * meets every tile of the nDstX×nDstY destination grid with the tiles
+    * routed to it; a destination tile with none gets an empty window. The
+    * routing (which source tiles a destination needs) is the caller's. */
+  def window[U: Encoder](contrib: Dataset[(Int, Int, Tile)], nDstX: Int, nDstY: Int,
+                         ts: Int, srcW: Long, srcH: Long)
+                        (f: SrcWindow => IterableOnce[U]): Dataset[U] = {
+    val spark = contrib.sparkSession
+    import spark.implicits._
+    // one band −1 marker per destination tile, so every tile has a group
+    val marker = spark.range(0, nDstX.toLong * nDstY, 1, math.min(nDstX * nDstY, 64))
+      .map { id =>
+        ((id % nDstX).toInt, (id / nDstX).toInt,
+          Tile(0, 0, 0, -1, 0, 0, Array.emptyDoubleArray))
+      }
+    contrib.union(marker)
+      .groupByKey(c => (c._1, c._2))
+      .flatMapGroups { (key, it) =>
+        val tiles = it.map(_._3).filter(_.band != -1).toArray
+        f(new SrcWindow(key._1, key._2, if (tiles.isEmpty) 1 else tiles.last.band,
+          ts, srcW, srcH, tiles))
       }
   }
 

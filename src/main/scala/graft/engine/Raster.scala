@@ -297,20 +297,12 @@ object Raster {
     }
   }
 
-  /** Two-band pixel combine (sum/diff/norm-diff family): equi-join on the
-    * tile key — co-partitioned if both sides share bucketing; one shuffle
-    * otherwise. */
+  /** Two-band pixel combine (sum/diff/norm-diff family) over the tile
+    * stack ([[Gather.stack]]): one shuffle, tiles of one (z, x, y) that
+    * differ in size are refused. */
   def combineBands(a: Dataset[Tile], b: Dataset[Tile], outBand: Int = 1)
-                  (f: (Double, Double) => Double): Dataset[Tile] = {
-    import a.sparkSession.implicits._
-    a.joinWith(b, a("z") === b("z") && a("x") === b("x") && a("y") === b("y"))
-      .map { case (ta, tb) =>
-        val out = new Array[Double](ta.pixels.length)
-        var i = 0
-        while (i < out.length) { out(i) = f(ta.pixels(i), tb.pixels(i)); i += 1 }
-        Tile(ta.z, ta.x, ta.y, outBand, ta.w, ta.h, out)
-      }
-  }
+                  (f: (Double, Double) => Double): Dataset[Tile] =
+    PixelFuncs.combineN(Seq(a, b), outBand)(v => f(v(0), v(1)))
 
   /** dst pixel-center → src pixel-center affine: srcPx = (dstPx+0.5)·s + t − 0.5. */
   case class WarpAffine(sx: Double, sy: Double, tx: Double, ty: Double)
@@ -541,11 +533,6 @@ object Raster {
        (math.floor(xs.max + rad).toLong / ts).toInt, (math.floor(ys.max + rad).toLong / ts).toInt)
     }
 
-    val marker = spark.range(0, nDstX.toLong * nDstY, 1, math.min(nDstX * nDstY, 64))
-      .map { id =>
-        val dx = (id % nDstX).toInt; val dy = (id / nDstX).toInt
-        (dx, dy, Tile(0, 0, 0, -1, 0, 0, Array.emptyDoubleArray))
-      }
     val contrib = src.flatMap { t =>
       // forward-map this src tile's pixel bbox (+kernel halo) into dst
       // pixel space, emit to the covered dst tiles — O(replication), not
@@ -566,336 +553,307 @@ object Raster {
         if t.x >= x0 && t.x <= x1 && t.y >= y0 && t.y <= y1
       } yield (dx, dy, t)
     }
-    contrib.union(marker)
-      .groupByKey(c => (c._1, c._2))
-      .flatMapGroups { (key, it) =>
-        val (dx, dy) = key
-        val tileList = new scala.collection.mutable.ArrayBuffer[Tile]()
-        var z = dstZ; var band = 1
-        it.foreach { case (_, _, t) =>
-          if (t.band != -1) { tileList += t; z = t.z; band = t.band }
-        }
-        // dense local tile grid: pix() is two array indexes, no boxed
-        // hashmap lookups (the hot path runs srcWindow accesses per pixel)
-        val (tx0, ty0, tx1, ty1) =
-          if (tileList.isEmpty) (0, 0, -1, -1)
-          else (tileList.map(_.x).min, tileList.map(_.y).min,
-                tileList.map(_.x).max, tileList.map(_.y).max)
-        val gw = tx1 - tx0 + 1
-        val grid: Array[Array[Double]] =
-          if (tileList.isEmpty) Array.empty
-          else {
-            val g = new Array[Array[Double]](gw * (ty1 - ty0 + 1))
-            tileList.foreach(t => g((t.y - ty0) * gw + (t.x - tx0)) = t.pixels)
-            g
+    Gather.window(contrib, nDstX, nDstY, ts, srcW, srcH) { win =>
+      import win.{band, dx, dy, pix}
+      // point-kernel separable resample: rows convolved with wx then wy
+      // (exact operation order of the reference's CONVOL4 — left-assoc
+      // dot products — so an SQL twin writing the same expression is
+      // bit-identical)
+      def convolve(sxp: Double, syp: Double, wOf: Double => Array[Double],
+                   halfWidth: Int, normalize: Boolean): Double = {
+        val bx = math.floor(sxp); val by = math.floor(syp)
+        val fx = sxp - bx; val fy = syp - by
+        val wx = wOf(fx); val wy = wOf(fy)
+        val n = 2 * halfWidth
+        var acc = 0.0; var wsum = 0.0
+        var j = 0
+        var bad = false
+        while (j < n && !bad) {
+          var rowAcc = 0.0; var i = 0
+          while (i < n && !bad) {
+            val v = pix(bx.toLong + i - (halfWidth - 1), by.toLong + j - (halfWidth - 1))
+            if (java.lang.Double.isNaN(v)) bad = true
+            else rowAcc += wx(i) * v
+            i += 1
           }
-        def pix(gx: Long, gy: Long): Double = {
-          if (gx < 0 || gy < 0 || gx >= srcW || gy >= srcH) return Double.NaN
-          val tx = (gx / ts).toInt - tx0; val ty = (gy / ts).toInt - ty0
-          if (tx < 0 || ty < 0 || tx >= gw || ty >= ty1 - ty0 + 1) return Double.NaN
-          val p = grid(ty * gw + tx)
-          if (p == null) Double.NaN
-          else p(((gy % ts) * ts + (gx % ts)).toInt)
+          acc += wy(j) * rowAcc
+          j += 1
         }
-        // point-kernel separable resample: rows convolved with wx then wy
-        // (exact operation order of the reference's CONVOL4 — left-assoc
-        // dot products — so an SQL twin writing the same expression is
-        // bit-identical)
-        def convolve(sxp: Double, syp: Double, wOf: Double => Array[Double],
-                     halfWidth: Int, normalize: Boolean): Double = {
-          val bx = math.floor(sxp); val by = math.floor(syp)
-          val fx = sxp - bx; val fy = syp - by
-          val wx = wOf(fx); val wy = wOf(fy)
-          val n = 2 * halfWidth
-          var acc = 0.0; var wsum = 0.0
-          var j = 0
-          var bad = false
-          while (j < n && !bad) {
-            var rowAcc = 0.0; var i = 0
-            while (i < n && !bad) {
-              val v = pix(bx.toLong + i - (halfWidth - 1), by.toLong + j - (halfWidth - 1))
-              if (java.lang.Double.isNaN(v)) bad = true
-              else rowAcc += wx(i) * v
-              i += 1
-            }
-            acc += wy(j) * rowAcc
-            j += 1
-          }
-          if (bad) Double.NaN
-          else if (normalize) {
-            var i = 0
-            var sx0 = 0.0; var sy0 = 0.0
-            while (i < n) { sx0 += wx(i); sy0 += wy(i); i += 1 }
-            wsum = sx0 * sy0
-            if (wsum == 0.0) Double.NaN else acc / wsum
-          } else acc
-        }
+        if (bad) Double.NaN
+        else if (normalize) {
+          var i = 0
+          var sx0 = 0.0; var sy0 = 0.0
+          while (i < n) { sx0 += wx(i); sy0 += wy(i); i += 1 }
+          wsum = sx0 * sy0
+          if (wsum == 0.0) Double.NaN else acc / wsum
+        } else acc
+      }
 
-        // GWKResample mask semantics for the convolution kernels
-        // (alg/gdalwarpkernel.cpp:4027-4180): in-source nodata pixels drop
-        // from both accumulators and the result renormalizes by the
-        // surviving weight unless it is within 1e-5 of 1; surviving weight
-        // < 1e-6 -> dstnodata. Windows crossing the SOURCE EDGE keep the
-        // engine's out-of-source -> 0 convention (GDAL's no-mask kernels;
-        // the masks-enabled reference path renormalizes there too --
-        // documented deviation, bilinear implements that variant).
-        def convolveMasked(sxp: Double, syp: Double, wOf: Double => Array[Double],
-                           halfWidth: Int): Double = {
-          val bx = math.floor(sxp); val by = math.floor(syp)
-          val x0 = bx.toLong - (halfWidth - 1); val y0 = by.toLong - (halfWidth - 1)
-          if (x0 < 0 || y0 < 0 || bx.toLong + halfWidth >= srcW ||
-              by.toLong + halfWidth >= srcH) return 0.0
-          val fx = sxp - bx; val fy = syp - by
-          val wx = wOf(fx); val wy = wOf(fy)
-          val n = 2 * halfWidth
-          var acc = 0.0; var wsum = 0.0
-          var j = 0
-          while (j < n) {
-            var rowAcc = 0.0; var rowW = 0.0
-            var i = 0
-            while (i < n) {
-              val v = pix(x0 + i, y0 + j)
-              if (!java.lang.Double.isNaN(v)) { rowAcc += wx(i) * v; rowW += wx(i) }
-              i += 1
-            }
-            acc += wy(j) * rowAcc
-            wsum += wy(j) * rowW
-            j += 1
+      // GWKResample mask semantics for the convolution kernels
+      // (alg/gdalwarpkernel.cpp:4027-4180): in-source nodata pixels drop
+      // from both accumulators and the result renormalizes by the
+      // surviving weight unless it is within 1e-5 of 1; surviving weight
+      // < 1e-6 -> dstnodata. Windows crossing the SOURCE EDGE keep the
+      // engine's out-of-source -> 0 convention (GDAL's no-mask kernels;
+      // the masks-enabled reference path renormalizes there too --
+      // documented deviation, bilinear implements that variant).
+      def convolveMasked(sxp: Double, syp: Double, wOf: Double => Array[Double],
+                         halfWidth: Int): Double = {
+        val bx = math.floor(sxp); val by = math.floor(syp)
+        val x0 = bx.toLong - (halfWidth - 1); val y0 = by.toLong - (halfWidth - 1)
+        if (x0 < 0 || y0 < 0 || bx.toLong + halfWidth >= srcW ||
+            by.toLong + halfWidth >= srcH) return 0.0
+        val fx = sxp - bx; val fy = syp - by
+        val wx = wOf(fx); val wy = wOf(fy)
+        val n = 2 * halfWidth
+        var acc = 0.0; var wsum = 0.0
+        var j = 0
+        while (j < n) {
+          var rowAcc = 0.0; var rowW = 0.0
+          var i = 0
+          while (i < n) {
+            val v = pix(x0 + i, y0 + j)
+            if (!java.lang.Double.isNaN(v)) { rowAcc += wx(i) * v; rowW += wx(i) }
+            i += 1
           }
-          if (wsum < 0.000001) 0.0
-          else if (wsum < 0.99999 || wsum > 1.00001) acc / wsum
-          else acc
+          acc += wy(j) * rowAcc
+          wsum += wy(j) * rowW
+          j += 1
         }
+        if (wsum < 0.000001) 0.0
+        else if (wsum < 0.99999 || wsum > 1.00001) acc / wsum
+        else acc
+      }
 
-        val eps = 1e-10
-        val outs = Array.fill(kernels.length)(new Array[Double](ts * ts))
-        val vbuf = new scala.collection.mutable.ArrayBuffer[Double](64)
-        // pixel-outer loop: point kernels computed individually, area
-        // kernels share ONE footprint-rect scan per pixel (two accumulator
-        // chains — plain and squared — so each kernel's value is
-        // bit-identical to the single-kernel path)
-        val areaIdxs = kernels.indices.filter(i => areaKernels.contains(kernels(i))).toArray
-        val pointIdxs = kernels.indices.filter(i => pointKernels.contains(kernels(i))).toArray
-        val gaussIdxs = kernels.indices.filter(i => kernels(i) == "gauss").toArray
-        val gaussDim = gaussDimFor(aff.sy)
-        val gaussW = gaussMatrixFor(gaussDim)
-        val needSorted = areaIdxs.exists(i => kernels(i) == "med" || kernels(i) == "q1" || kernels(i) == "q3")
-        val needMode = areaIdxs.exists(i => kernels(i) == "mode")
-        var modeVals: Array[Double] = null
-        var modeCounts: Array[Double] = null
-        var yy = 0
-        while (yy < ts) {
-          val gyD = dy.toLong * ts + yy
-          val syp = (gyD + 0.5) * aff.sy + aff.ty - 0.5
-          var xx = 0
-          while (xx < ts) {
-            val gxD = dx.toLong * ts + xx
-            val sxp = (gxD + 0.5) * aff.sx + aff.tx - 0.5
-            val pidx = yy * ts + xx
-            var pi2 = 0
-            while (pi2 < pointIdxs.length) {
-              val ki = pointIdxs(pi2)
-              val v: Double = kernels(ki) match {
-                case "near" =>
-                  val v0 = pix(math.floor(sxp + 0.5).toLong, math.floor(syp + 0.5).toLong)
-                  if (java.lang.Double.isNaN(v0)) 0.0 else v0
-                case "bilinear" =>
-                  val x0 = math.floor(sxp); val y0 = math.floor(syp)
-                  val wx = sxp - x0; val wy = syp - y0
-                  val v00 = pix(x0.toLong, y0.toLong); val v10 = pix(x0.toLong + 1, y0.toLong)
-                  val v01 = pix(x0.toLong, y0.toLong + 1); val v11 = pix(x0.toLong + 1, y0.toLong + 1)
-                  val anyNaN = java.lang.Double.isNaN(v00) || java.lang.Double.isNaN(v10) ||
-                    java.lang.Double.isNaN(v01) || java.lang.Double.isNaN(v11)
-                  if (!anyNaN)
-                    (1.0 - wy) * ((1.0 - wx) * v00 + wx * v10) +
-                      wy * ((1.0 - wx) * v01 + wx * v11)
-                  else {
-                    // mask-aware path (GWKBilinearResample4Sample,
-                    // alg/gdalwarpkernel.cpp:2952-3030): accumulate valid
-                    // samples UL,UR,LL,LR with their weights, renormalize
-                    // by the valid-weight divisor; all-invalid -> nodata 0
-                    var acc = 0.0; var div = 0.0
-                    if (!java.lang.Double.isNaN(v00)) {
-                      val m = (1.0 - wx) * (1.0 - wy); acc += v00 * m; div += m
-                    }
-                    if (!java.lang.Double.isNaN(v10)) {
-                      val m = wx * (1.0 - wy); acc += v10 * m; div += m
-                    }
-                    if (!java.lang.Double.isNaN(v01)) {
-                      val m = (1.0 - wx) * wy; acc += v01 * m; div += m
-                    }
-                    if (!java.lang.Double.isNaN(v11)) {
-                      val m = wx * wy; acc += v11 * m; div += m
-                    }
-                    if (div == 1.0) acc
-                    else if (div < 0.00001) 0.0
-                    else acc / div
+      val eps = 1e-10
+      val outs = Array.fill(kernels.length)(new Array[Double](ts * ts))
+      val vbuf = new scala.collection.mutable.ArrayBuffer[Double](64)
+      // pixel-outer loop: point kernels computed individually, area
+      // kernels share ONE footprint-rect scan per pixel (two accumulator
+      // chains — plain and squared — so each kernel's value is
+      // bit-identical to the single-kernel path)
+      val areaIdxs = kernels.indices.filter(i => areaKernels.contains(kernels(i))).toArray
+      val pointIdxs = kernels.indices.filter(i => pointKernels.contains(kernels(i))).toArray
+      val gaussIdxs = kernels.indices.filter(i => kernels(i) == "gauss").toArray
+      val gaussDim = gaussDimFor(aff.sy)
+      val gaussW = gaussMatrixFor(gaussDim)
+      val needSorted = areaIdxs.exists(i => kernels(i) == "med" || kernels(i) == "q1" || kernels(i) == "q3")
+      val needMode = areaIdxs.exists(i => kernels(i) == "mode")
+      var modeVals: Array[Double] = null
+      var modeCounts: Array[Double] = null
+      var yy = 0
+      while (yy < ts) {
+        val gyD = dy.toLong * ts + yy
+        val syp = (gyD + 0.5) * aff.sy + aff.ty - 0.5
+        var xx = 0
+        while (xx < ts) {
+          val gxD = dx.toLong * ts + xx
+          val sxp = (gxD + 0.5) * aff.sx + aff.tx - 0.5
+          val pidx = yy * ts + xx
+          var pi2 = 0
+          while (pi2 < pointIdxs.length) {
+            val ki = pointIdxs(pi2)
+            val v: Double = kernels(ki) match {
+              case "near" =>
+                val v0 = pix(math.floor(sxp + 0.5).toLong, math.floor(syp + 0.5).toLong)
+                if (java.lang.Double.isNaN(v0)) 0.0 else v0
+              case "bilinear" =>
+                val x0 = math.floor(sxp); val y0 = math.floor(syp)
+                val wx = sxp - x0; val wy = syp - y0
+                val v00 = pix(x0.toLong, y0.toLong); val v10 = pix(x0.toLong + 1, y0.toLong)
+                val v01 = pix(x0.toLong, y0.toLong + 1); val v11 = pix(x0.toLong + 1, y0.toLong + 1)
+                val anyNaN = java.lang.Double.isNaN(v00) || java.lang.Double.isNaN(v10) ||
+                  java.lang.Double.isNaN(v01) || java.lang.Double.isNaN(v11)
+                if (!anyNaN)
+                  (1.0 - wy) * ((1.0 - wx) * v00 + wx * v10) +
+                    wy * ((1.0 - wx) * v01 + wx * v11)
+                else {
+                  // mask-aware path (GWKBilinearResample4Sample,
+                  // alg/gdalwarpkernel.cpp:2952-3030): accumulate valid
+                  // samples UL,UR,LL,LR with their weights, renormalize
+                  // by the valid-weight divisor; all-invalid -> nodata 0
+                  var acc = 0.0; var div = 0.0
+                  if (!java.lang.Double.isNaN(v00)) {
+                    val m = (1.0 - wx) * (1.0 - wy); acc += v00 * m; div += m
                   }
-                case "cubic" =>
-                  val r = convolve(sxp, syp, cubicWeights, 2, normalize = false)
-                  if (java.lang.Double.isNaN(r)) convolveMasked(sxp, syp, cubicWeights, 2) else r
-                case "cubicspline" =>
-                  val wOf = (f: Double) =>
-                    Array(bspline(f + 1.0), bspline(f), bspline(f - 1.0), bspline(f - 2.0))
-                  val r = convolve(sxp, syp, wOf, 2, normalize = true)
-                  if (java.lang.Double.isNaN(r)) convolveMasked(sxp, syp, wOf, 2) else r
-                case "lanczos" =>
-                  val wOf = (f: Double) =>
-                    Array(lanczosSinc(f + 2.0), lanczosSinc(f + 1.0), lanczosSinc(f),
-                      lanczosSinc(f - 1.0), lanczosSinc(f - 2.0), lanczosSinc(f - 3.0))
-                  val r = convolve(sxp, syp, wOf, 3, normalize = true)
-                  if (java.lang.Double.isNaN(r)) convolveMasked(sxp, syp, wOf, 3) else r
-              }
-              outs(ki)(pidx) = v
-              pi2 += 1
+                  if (!java.lang.Double.isNaN(v10)) {
+                    val m = wx * (1.0 - wy); acc += v10 * m; div += m
+                  }
+                  if (!java.lang.Double.isNaN(v01)) {
+                    val m = (1.0 - wx) * wy; acc += v01 * m; div += m
+                  }
+                  if (!java.lang.Double.isNaN(v11)) {
+                    val m = wx * wy; acc += v11 * m; div += m
+                  }
+                  if (div == 1.0) acc
+                  else if (div < 0.00001) 0.0
+                  else acc / div
+                }
+              case "cubic" =>
+                val r = convolve(sxp, syp, cubicWeights, 2, normalize = false)
+                if (java.lang.Double.isNaN(r)) convolveMasked(sxp, syp, cubicWeights, 2) else r
+              case "cubicspline" =>
+                val wOf = (f: Double) =>
+                  Array(bspline(f + 1.0), bspline(f), bspline(f - 1.0), bspline(f - 2.0))
+                val r = convolve(sxp, syp, wOf, 2, normalize = true)
+                if (java.lang.Double.isNaN(r)) convolveMasked(sxp, syp, wOf, 2) else r
+              case "lanczos" =>
+                val wOf = (f: Double) =>
+                  Array(lanczosSinc(f + 2.0), lanczosSinc(f + 1.0), lanczosSinc(f),
+                    lanczosSinc(f - 1.0), lanczosSinc(f - 2.0), lanczosSinc(f - 3.0))
+                val r = convolve(sxp, syp, wOf, 3, normalize = true)
+                if (java.lang.Double.isNaN(r)) convolveMasked(sxp, syp, wOf, 3) else r
             }
-            if (gaussIdxs.nonEmpty) {
-              // GAUSS window (overview.cpp:2100-2160): the dst pixel's base
-              // source footprint [int(0.5+left), int(0.5+right)+1) recentred
-              // to the matrix dim, truncated at the source edges with the
-              // matrix index shifted when the window clips at 0. Weighted
-              // mean over valid pixels, weight-count normalized; no valid
-              // contributor → nodata (0). Whole-image processing, so the
-              // reference's chunk pre-clamp branch never fires (documented:
-              // synthetic gates use non-negative footprints).
-              def gWindow(d0: Double, d1: Double, srcN: Long): (Int, Int, Int) = {
-                var off = (0.5 + d0).toInt
-                val off2base = (0.5 + d1).toInt + 1
-                val size = off2base - off
-                off = off + size / 2 - gaussDim / 2
-                val off2 = math.min(srcN, off.toLong + gaussDim).toInt
-                var shift = 0
-                if (off < 0) { shift = -off; off = 0 }
-                (off, off2, shift)
+            outs(ki)(pidx) = v
+            pi2 += 1
+          }
+          if (gaussIdxs.nonEmpty) {
+            // GAUSS window (overview.cpp:2100-2160): the dst pixel's base
+            // source footprint [int(0.5+left), int(0.5+right)+1) recentred
+            // to the matrix dim, truncated at the source edges with the
+            // matrix index shifted when the window clips at 0. Weighted
+            // mean over valid pixels, weight-count normalized; no valid
+            // contributor → nodata (0). Whole-image processing, so the
+            // reference's chunk pre-clamp branch never fires (documented:
+            // synthetic gates use non-negative footprints).
+            def gWindow(d0: Double, d1: Double, srcN: Long): (Int, Int, Int) = {
+              var off = (0.5 + d0).toInt
+              val off2base = (0.5 + d1).toInt + 1
+              val size = off2base - off
+              off = off + size / 2 - gaussDim / 2
+              val off2 = math.min(srcN, off.toLong + gaussDim).toInt
+              var shift = 0
+              if (off < 0) { shift = -off; off = 0 }
+              (off, off2, shift)
+            }
+            val (gx0, gx1, shx) = gWindow(gxD * aff.sx + aff.tx, (gxD + 1) * aff.sx + aff.tx, srcW)
+            val (gy0, gy1, shy) = gWindow(gyD * aff.sy + aff.ty, (gyD + 1) * aff.sy + aff.ty, srcH)
+            var tot = 0.0; var cnt = 0.0
+            var iy = gy0
+            while (iy < gy1) {
+              var ix = gx0
+              while (ix < gx1) {
+                val v = pix(ix.toLong, iy.toLong)
+                if (!java.lang.Double.isNaN(v)) {
+                  val w0 = gaussW((shy + iy - gy0) * gaussDim + (shx + ix - gx0))
+                  tot += v * w0; cnt += w0
+                }
+                ix += 1
               }
-              val (gx0, gx1, shx) = gWindow(gxD * aff.sx + aff.tx, (gxD + 1) * aff.sx + aff.tx, srcW)
-              val (gy0, gy1, shy) = gWindow(gyD * aff.sy + aff.ty, (gyD + 1) * aff.sy + aff.ty, srcH)
-              var tot = 0.0; var cnt = 0.0
-              var iy = gy0
-              while (iy < gy1) {
-                var ix = gx0
-                while (ix < gx1) {
-                  val v = pix(ix.toLong, iy.toLong)
-                  if (!java.lang.Double.isNaN(v)) {
-                    val w0 = gaussW((shy + iy - gy0) * gaussDim + (shx + ix - gx0))
-                    tot += v * w0; cnt += w0
+              iy += 1
+            }
+            val res = if (cnt == 0.0) 0.0 else tot / cnt
+            var gi = 0
+            while (gi < gaussIdxs.length) { outs(gaussIdxs(gi))(pidx) = res; gi += 1 }
+          }
+          if (areaIdxs.nonEmpty) {
+            // area footprint rect (GWKAverageOrModeComputeSourceCoords,
+            // gdalwarpkernel.cpp:6990: edge transform e·s+t,
+            // EPSILON=1e-10 floor/ceil, degenerate rects widened by one)
+            val xMin = gxD * aff.sx + aff.tx; val xMax = (gxD + 1) * aff.sx + aff.tx
+            val yMin = gyD * aff.sy + aff.ty; val yMax = (gyD + 1) * aff.sy + aff.ty
+            val (dfXMin, dfXMax) = if (xMin <= xMax) (xMin, xMax) else (xMax, xMin)
+            val (dfYMin, dfYMax) = if (yMin <= yMax) (yMin, yMax) else (yMax, yMin)
+            if (!(dfXMax > -eps && dfXMin < srcW + eps) ||
+                !(dfYMax > -eps && dfYMin < srcH + eps)) {
+              var ai = 0
+              while (ai < areaIdxs.length) { outs(areaIdxs(ai))(pidx) = 0.0; ai += 1 }
+            } else {
+              var iXMin = math.max(math.floor(dfXMin + eps), 0.0).toInt
+              var iXMax = math.min(math.ceil(dfXMax - eps), srcW.toDouble).toInt
+              if (iXMin == iXMax && iXMax < srcW) iXMax += 1
+              var iYMin = math.max(math.floor(dfYMin + eps), 0.0).toInt
+              var iYMax = math.min(math.ceil(dfYMax - eps), srcH.toDouble).toInt
+              if (iYMin == iYMax && iYMax < srcH) iYMax += 1
+              def weightY(iy: Int): Double =
+                if (iy == iYMin) { if (iYMin + 1 == iYMax) 1.0 else 1.0 - (dfYMin - iYMin) }
+                else if (iy + 1 == iYMax) 1.0 - (iYMax - dfYMax)
+                else 1.0
+              def weightX(ix: Int, wy: Double): Double =
+                if (ix == iXMin) { if (iXMin + 1 == iXMax) wy else wy * (1.0 - (dfXMin - iXMin)) }
+                else if (ix + 1 == iXMax) wy * (1.0 - (iXMax - dfXMax))
+                else wy
+              var totP = 0.0; var totS = 0.0; var totW = 0.0
+              var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+              var any = false
+              vbuf.clear()
+              var nBins = 0; var iMode = -1
+              if (needMode && modeVals == null) {
+                modeVals = new Array[Double](64); modeCounts = new Array[Double](64)
+              }
+              var iy = iYMin
+              while (iy < iYMax) {
+                val wy0 = weightY(iy)
+                var ix = iXMin
+                while (ix < iXMax) {
+                  val pv = pix(ix.toLong, iy.toLong)
+                  if (!java.lang.Double.isNaN(pv)) {
+                    any = true
+                    val w = weightX(ix, wy0)
+                    totP += w * pv
+                    totS += w * (pv * pv)
+                    totW += w
+                    if (pv < mn) mn = pv
+                    if (pv > mx) mx = pv
+                    if (needSorted) vbuf += pv
+                    if (needMode) {
+                      var i = 0; var found = false
+                      while (i < nBins && !found) {
+                        if (modeVals(i) == pv) {
+                          modeCounts(i) += w
+                          if (modeCounts(i) > modeCounts(iMode)) iMode = i
+                          found = true
+                        }
+                        i += 1
+                      }
+                      if (!found) {
+                        if (nBins == modeVals.length) {
+                          modeVals = java.util.Arrays.copyOf(modeVals, nBins * 2)
+                          modeCounts = java.util.Arrays.copyOf(modeCounts, nBins * 2)
+                        }
+                        modeVals(nBins) = pv; modeCounts(nBins) = w
+                        if (iMode < 0 || modeCounts(nBins) > modeCounts(iMode)) iMode = nBins
+                        nBins += 1
+                      }
+                    }
                   }
                   ix += 1
                 }
                 iy += 1
               }
-              val res = if (cnt == 0.0) 0.0 else tot / cnt
-              var gi = 0
-              while (gi < gaussIdxs.length) { outs(gaussIdxs(gi))(pidx) = res; gi += 1 }
-            }
-            if (areaIdxs.nonEmpty) {
-              // area footprint rect (GWKAverageOrModeComputeSourceCoords,
-              // gdalwarpkernel.cpp:6990: edge transform e·s+t,
-              // EPSILON=1e-10 floor/ceil, degenerate rects widened by one)
-              val xMin = gxD * aff.sx + aff.tx; val xMax = (gxD + 1) * aff.sx + aff.tx
-              val yMin = gyD * aff.sy + aff.ty; val yMax = (gyD + 1) * aff.sy + aff.ty
-              val (dfXMin, dfXMax) = if (xMin <= xMax) (xMin, xMax) else (xMax, xMin)
-              val (dfYMin, dfYMax) = if (yMin <= yMax) (yMin, yMax) else (yMax, yMin)
-              if (!(dfXMax > -eps && dfXMin < srcW + eps) ||
-                  !(dfYMax > -eps && dfYMin < srcH + eps)) {
-                var ai = 0
-                while (ai < areaIdxs.length) { outs(areaIdxs(ai))(pidx) = 0.0; ai += 1 }
-              } else {
-                var iXMin = math.max(math.floor(dfXMin + eps), 0.0).toInt
-                var iXMax = math.min(math.ceil(dfXMax - eps), srcW.toDouble).toInt
-                if (iXMin == iXMax && iXMax < srcW) iXMax += 1
-                var iYMin = math.max(math.floor(dfYMin + eps), 0.0).toInt
-                var iYMax = math.min(math.ceil(dfYMax - eps), srcH.toDouble).toInt
-                if (iYMin == iYMax && iYMax < srcH) iYMax += 1
-                def weightY(iy: Int): Double =
-                  if (iy == iYMin) { if (iYMin + 1 == iYMax) 1.0 else 1.0 - (dfYMin - iYMin) }
-                  else if (iy + 1 == iYMax) 1.0 - (iYMax - dfYMax)
-                  else 1.0
-                def weightX(ix: Int, wy: Double): Double =
-                  if (ix == iXMin) { if (iXMin + 1 == iXMax) wy else wy * (1.0 - (dfXMin - iXMin)) }
-                  else if (ix + 1 == iXMax) wy * (1.0 - (iXMax - dfXMax))
-                  else wy
-                var totP = 0.0; var totS = 0.0; var totW = 0.0
-                var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-                var any = false
-                vbuf.clear()
-                var nBins = 0; var iMode = -1
-                if (needMode && modeVals == null) {
-                  modeVals = new Array[Double](64); modeCounts = new Array[Double](64)
-                }
-                var iy = iYMin
-                while (iy < iYMax) {
-                  val wy0 = weightY(iy)
-                  var ix = iXMin
-                  while (ix < iXMax) {
-                    val pv = pix(ix.toLong, iy.toLong)
-                    if (!java.lang.Double.isNaN(pv)) {
-                      any = true
-                      val w = weightX(ix, wy0)
-                      totP += w * pv
-                      totS += w * (pv * pv)
-                      totW += w
-                      if (pv < mn) mn = pv
-                      if (pv > mx) mx = pv
-                      if (needSorted) vbuf += pv
-                      if (needMode) {
-                        var i = 0; var found = false
-                        while (i < nBins && !found) {
-                          if (modeVals(i) == pv) {
-                            modeCounts(i) += w
-                            if (modeCounts(i) > modeCounts(iMode)) iMode = i
-                            found = true
-                          }
-                          i += 1
-                        }
-                        if (!found) {
-                          if (nBins == modeVals.length) {
-                            modeVals = java.util.Arrays.copyOf(modeVals, nBins * 2)
-                            modeCounts = java.util.Arrays.copyOf(modeCounts, nBins * 2)
-                          }
-                          modeVals(nBins) = pv; modeCounts(nBins) = w
-                          if (iMode < 0 || modeCounts(nBins) > modeCounts(iMode)) iMode = nBins
-                          nBins += 1
-                        }
-                      }
-                    }
-                    ix += 1
+              var sortedArr: Array[Double] = null
+              if (needSorted && any) {
+                sortedArr = vbuf.toArray
+                java.util.Arrays.sort(sortedArr)
+              }
+              var ai = 0
+              while (ai < areaIdxs.length) {
+                val ki = areaIdxs(ai)
+                outs(ki)(pidx) =
+                  if (!any) 0.0
+                  else kernels(ki) match {
+                    case "average" => totP / totW
+                    case "sum"     => totP
+                    case "rms"     => math.sqrt(totS / totW)
+                    case "min"     => mn
+                    case "max"     => mx
+                    case "mode"    => modeVals(iMode)
+                    case q =>
+                      val quant = if (q == "med") 0.5 else if (q == "q1") 0.25 else 0.75
+                      sortedArr(math.ceil(quant * sortedArr.length - 1).toInt)
                   }
-                  iy += 1
-                }
-                var sortedArr: Array[Double] = null
-                if (needSorted && any) {
-                  sortedArr = vbuf.toArray
-                  java.util.Arrays.sort(sortedArr)
-                }
-                var ai = 0
-                while (ai < areaIdxs.length) {
-                  val ki = areaIdxs(ai)
-                  outs(ki)(pidx) =
-                    if (!any) 0.0
-                    else kernels(ki) match {
-                      case "average" => totP / totW
-                      case "sum"     => totP
-                      case "rms"     => math.sqrt(totS / totW)
-                      case "min"     => mn
-                      case "max"     => mx
-                      case "mode"    => modeVals(iMode)
-                      case q =>
-                        val quant = if (q == "med") 0.5 else if (q == "q1") 0.25 else 0.75
-                        sortedArr(math.ceil(quant * sortedArr.length - 1).toInt)
-                    }
-                  ai += 1
-                }
+                ai += 1
               }
             }
-            xx += 1
           }
-          yy += 1
+          xx += 1
         }
-        outs.iterator.zipWithIndex.map { case (o, i) =>
-          (i, Tile(dstZ, dx, dy, band, ts, ts, o))
-        }
+        yy += 1
       }
+      outs.iterator.zipWithIndex.map { case (o, i) =>
+        (i, Tile(dstZ, dx, dy, band, ts, ts, o))
+      }
+    }
   }
 
   /** Warp under an ARBITRARY dst→src pixel transform (GCP polynomial, TPS,
@@ -957,81 +915,51 @@ object Raster {
     val contrib = needs
       .joinWith(src, needs("_1") === src("x") && needs("_2") === src("y"))
       .map { case ((_, _, dx, dy), t) => (dx, dy, t) }
-    val marker = spark.range(0, nDstX.toLong * nDstY, 1, math.min(nDstX * nDstY, 64))
-      .map { id =>
-        ((id % nDstX).toInt, (id / nDstX).toInt,
-          Tile(0, 0, 0, -1, 0, 0, Array.emptyDoubleArray))
-      }
-    contrib.union(marker)
-      .groupByKey(c => (c._1, c._2))
-      .mapGroups { (key, it) =>
-        val (dx, dy) = key
-        val tileList = new scala.collection.mutable.ArrayBuffer[Tile]()
-        var band = 1
-        it.foreach { case (_, _, t) => if (t.band != -1) { tileList += t; band = t.band } }
-        val (tx0, ty0, tx1, ty1) =
-          if (tileList.isEmpty) (0, 0, -1, -1)
-          else (tileList.map(_.x).min, tileList.map(_.y).min,
-                tileList.map(_.x).max, tileList.map(_.y).max)
-        val gw = tx1 - tx0 + 1
-        val grid: Array[Array[Double]] =
-          if (tileList.isEmpty) Array.empty
-          else {
-            val g = new Array[Array[Double]](gw * (ty1 - ty0 + 1))
-            tileList.foreach(t => g((t.y - ty0) * gw + (t.x - tx0)) = t.pixels)
-            g
-          }
-        def pix(gx: Long, gy: Long): Double = {
-          if (gx < 0 || gy < 0 || gx >= srcW || gy >= srcH) return Double.NaN
-          val tx = (gx / ts).toInt - tx0; val ty = (gy / ts).toInt - ty0
-          if (tx < 0 || ty < 0 || tx >= gw || ty >= ty1 - ty0 + 1) return Double.NaN
-          val p = grid(ty * gw + tx)
-          if (p == null) Double.NaN
-          else p(((gy % ts) * ts + (gx % ts)).toInt)
-        }
-        val out = new Array[Double](ts * ts)
-        var yy = 0
-        while (yy < ts) {
-          var xx = 0
-          while (xx < ts) {
-            val (sxp, syp) = toSrc(dx.toLong * ts + xx, dy.toLong * ts + yy)
-            val v: Double = kernel match {
-              case "near" =>
-                val v0 = pix(math.floor(sxp + 0.5).toLong, math.floor(syp + 0.5).toLong)
-                if (java.lang.Double.isNaN(v0)) 0.0 else v0
-              case "bilinear" =>
-                val x0 = math.floor(sxp); val y0 = math.floor(syp)
-                val wx = sxp - x0; val wy = syp - y0
-                val v00 = pix(x0.toLong, y0.toLong); val v10 = pix(x0.toLong + 1, y0.toLong)
-                val v01 = pix(x0.toLong, y0.toLong + 1); val v11 = pix(x0.toLong + 1, y0.toLong + 1)
-                if (java.lang.Double.isNaN(v00) || java.lang.Double.isNaN(v10) ||
-                    java.lang.Double.isNaN(v01) || java.lang.Double.isNaN(v11)) 0.0
-                else (1.0 - wy) * ((1.0 - wx) * v00 + wx * v10) +
-                  wy * ((1.0 - wx) * v01 + wx * v11)
-              case _ => // cubic (Keys), same CONVOL4 order as warpAffine
-                val bx = math.floor(sxp); val by = math.floor(syp)
-                val wxs = cubicWeights(sxp - bx); val wys = cubicWeights(syp - by)
-                var acc = 0.0; var j2 = 0; var bad = false
-                while (j2 < 4 && !bad) {
-                  var rowAcc = 0.0; var i2 = 0
-                  while (i2 < 4 && !bad) {
-                    val pv = pix(bx.toLong + i2 - 1, by.toLong + j2 - 1)
-                    if (java.lang.Double.isNaN(pv)) bad = true
-                    else rowAcc += wxs(i2) * pv
-                    i2 += 1
-                  }
-                  acc += wys(j2) * rowAcc
-                  j2 += 1
+    Gather.window(contrib, nDstX, nDstY, ts, srcW, srcH) { win =>
+      import win.{band, dx, dy, pix}
+      val out = new Array[Double](ts * ts)
+      var yy = 0
+      while (yy < ts) {
+        var xx = 0
+        while (xx < ts) {
+          val (sxp, syp) = toSrc(dx.toLong * ts + xx, dy.toLong * ts + yy)
+          val v: Double = kernel match {
+            case "near" =>
+              val v0 = pix(math.floor(sxp + 0.5).toLong, math.floor(syp + 0.5).toLong)
+              if (java.lang.Double.isNaN(v0)) 0.0 else v0
+            case "bilinear" =>
+              val x0 = math.floor(sxp); val y0 = math.floor(syp)
+              val wx = sxp - x0; val wy = syp - y0
+              val v00 = pix(x0.toLong, y0.toLong); val v10 = pix(x0.toLong + 1, y0.toLong)
+              val v01 = pix(x0.toLong, y0.toLong + 1); val v11 = pix(x0.toLong + 1, y0.toLong + 1)
+              if (java.lang.Double.isNaN(v00) || java.lang.Double.isNaN(v10) ||
+                  java.lang.Double.isNaN(v01) || java.lang.Double.isNaN(v11)) 0.0
+              else (1.0 - wy) * ((1.0 - wx) * v00 + wx * v10) +
+                wy * ((1.0 - wx) * v01 + wx * v11)
+            case _ => // cubic (Keys), same CONVOL4 order as warpAffine
+              val bx = math.floor(sxp); val by = math.floor(syp)
+              val wxs = cubicWeights(sxp - bx); val wys = cubicWeights(syp - by)
+              var acc = 0.0; var j2 = 0; var bad = false
+              while (j2 < 4 && !bad) {
+                var rowAcc = 0.0; var i2 = 0
+                while (i2 < 4 && !bad) {
+                  val pv = pix(bx.toLong + i2 - 1, by.toLong + j2 - 1)
+                  if (java.lang.Double.isNaN(pv)) bad = true
+                  else rowAcc += wxs(i2) * pv
+                  i2 += 1
                 }
-                if (bad) 0.0 else acc
-            }
-            out(yy * ts + xx) = v
-            xx += 1
+                acc += wys(j2) * rowAcc
+                j2 += 1
+              }
+              if (bad) 0.0 else acc
           }
-          yy += 1
+          out(yy * ts + xx) = v
+          xx += 1
         }
-        Tile(dstZ, dx, dy, band, ts, ts, out)
+        yy += 1
       }
+      Iterator.single(Tile(dstZ, dx, dy, band, ts, ts, out))
+    }
   }
 
   /** gdaldem color-relief (reference: GDALColorReliefGetRGBA,

@@ -28,11 +28,8 @@ object Datum {
   }
 
   val WGS84: Ellipsoid = Ellipsoid(6378137.0, 298.257223563)
-  val GRS80: Ellipsoid = Ellipsoid(6378137.0, 298.257222101)
   val Intl1924: Ellipsoid = Ellipsoid(6378388.0, 297.0) // ED50
   val Airy1830: Ellipsoid = Ellipsoid(6377563.396, 299.3249646) // OSGB36
-  val Bessel1841: Ellipsoid = Ellipsoid(6377397.155, 299.1528128)
-  val Clarke1866: Ellipsoid = Ellipsoid(6378206.4, 294.978698214) // NAD27
 
   private val d2r = math.Pi / 180.0
   private val as2r = math.Pi / (180.0 * 3600.0)

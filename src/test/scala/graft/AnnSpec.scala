@@ -173,6 +173,35 @@ class AnnSpec extends AnyFunSuite {
     assert(resid >= 0.7, s"residual recall too low: $resid")
   }
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.select("qid", "pid", "rank", "cos_u").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sorted
+
+  test("IVF-PQ with one list and one probe returns exactly plain PQ's rows") {
+    // plain PQ is IVF-PQ whose coarse quantizer has a single list that
+    // every vector joins and every query probes (Jégou et al. 2011)
+    val isQ = (id: org.apache.spark.sql.Column) => id >= 20 && id < 32
+    val pq = rows(Ann.pqTopK(vecs, "vec_id", "embedding", isQ,
+      m = 8, k = 8, iters = 2, candC = 16, topK = 3))
+    val ivfPq = rows(Ann.ivfPqTopK(vecs, "vec_id", "embedding", isQ,
+      kCoarse = 1, itersCoarse = 1, nprobe = 1, m = 8, k = 8, iters = 2,
+      candC = 16, topK = 3))
+    assert(pq.nonEmpty && pq.size == 12 * 3)
+    assert(ivfPq === pq)
+  }
+
+  test("ivfQueryIndex over a written index returns exactly ivfTopK's rows") {
+    val idx = java.nio.file.Files.createTempDirectory("ann_ivf").toString
+    val isQ = (id: org.apache.spark.sql.Column) => id >= 20 && id < 40
+    Ann.ivfBuildIndex(vecs, "vec_id", "embedding", k = 6, iters = 2, dir = idx)
+    val persisted = rows(Ann.ivfQueryIndex(idx, vecs, "vec_id", "embedding", isQ,
+      nprobe = 2, topK = 3))
+    val inMemory = rows(Ann.ivfTopK(vecs, "vec_id", "embedding", isQ,
+      k = 6, iters = 2, nprobe = 2, topK = 3))
+    assert(inMemory.nonEmpty)
+    assert(persisted === inMemory)
+  }
+
   test("SQ8 top-k recall vs exact brute force is high (8-bit reconstruction)") {
     val got = Ann.sq8TopK(vecs, "vec_id", "embedding",
         isQuery = id => id < 20, candC = 48, topK = 3)

@@ -148,6 +148,21 @@ class GatherSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .getOrElse(fail(s"no IllegalArgumentException among the causes of $e"))
     assert(msg.contains("(0, 0, 0)") && msg.contains("4x4") && msg.contains("8x8"), msg)
   }
+
+  test("diffF refuses tiles of different sizes at one (z, x, y), in either order") {
+    val s = spark
+    import s.implicits._
+    val small = Seq(Tile(0, 0, 0, 1, 4, 4, Array.fill(16)(1.0))).toDS()
+    val big = Seq(Tile(0, 0, 0, 1, 8, 8, Array.fill(64)(2.0))).toDS()
+    for ((a, b) <- Seq((big, small), (small, big))) {
+      val e = intercept[Exception](PixelFuncs.diffF(a, b).collect())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      val msg = causes.collectFirst { case c: IllegalArgumentException => c.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException among the causes of $e"))
+      assert(msg.contains("stacked sources differ in size") &&
+        msg.contains("4x4") && msg.contains("8x8"), msg)
+    }
+  }
 }
 
 object GatherSpec {
