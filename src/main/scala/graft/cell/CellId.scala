@@ -86,8 +86,12 @@ object CellId {
     * (GetTileIndices semantics, floor + 1e-3 EPSILON, clamped —
     * gdalalg_raster_tile.cpp:458-478) intersects the envelope, row by row
     * (y, then x); [[cover]] sorts them. */
-  def coverEnvelope(e: Envelope, z: Int, maxCells: Int = 4096): Array[Long] = {
-    val (minX, minY, maxX, maxY) = Mercator.tileRangeLonLat(e, z)
+  def coverEnvelope(e: Envelope, z: Int, maxCells: Int = 4096): Array[Long] =
+    cells(e, z, maxCells, Mercator.tileRangeLonLat(e, z))
+
+  /** The tiles of an inclusive XYZ range of `e`, row by row. */
+  private def cells(e: Envelope, z: Int, maxCells: Int, range: (Int, Int, Int, Int)): Array[Long] = {
+    val (minX, minY, maxX, maxY) = range
     val nx = (maxX - minX + 1).toLong
     val ny = (maxY - minY + 1).toLong
     if (nx * ny > maxCells)
@@ -110,13 +114,24 @@ object CellId {
     * exact geometry test happens at join time in the refine predicate,
     * mirroring the reference's envelope-prefilter-then-exact two-phase
     * FilterGeometry (ogr/ogrsf_frmts/generic/ogrlayer.cpp:4004-4076). */
-  def cover(g: Geom, z: Int, maxCells: Int = 4096): Array[Long] = {
-    val e = g.envelope
-    if (e.isEmpty) return Array.empty
-    val arr = coverEnvelope(e, z, maxCells)
-    java.util.Arrays.sort(arr)
-    arr
-  }
+  def cover(g: Geom, z: Int, maxCells: Int = 4096): Array[Long] =
+    sorted(g.envelope, e => coverEnvelope(e, z, maxCells))
+
+  /** The joins' cover of a geometry at zoom z, sorted: the tiles of
+    * [[Mercator.joinTileRangeLonLat]], which hold [[fromLonLat]] of every
+    * point of the envelope. [[cover]] can miss the row or column that the
+    * envelope enters by less than 1e-3 of a tile, and a join keyed by it
+    * would miss the points there. */
+  def joinCover(g: Geom, z: Int, maxCells: Int = 4096): Array[Long] =
+    sorted(g.envelope, e => cells(e, z, maxCells, Mercator.joinTileRangeLonLat(e, z)))
+
+  private def sorted(e: Envelope, cover: Envelope => Array[Long]): Array[Long] =
+    if (e.isEmpty) Array.empty
+    else {
+      val arr = cover(e)
+      java.util.Arrays.sort(arr)
+      arr
+    }
 
   /** Envelope (lon/lat) of a cell. */
   def envelopeLonLat(cell: Long): Envelope =

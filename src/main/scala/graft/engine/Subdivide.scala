@@ -1,7 +1,9 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge, KernelFns}
 
 import graft.functions.gf
 
@@ -13,8 +15,9 @@ import graft.functions.gf
   * bounds the refine cost by the vertices that actually fall in each
   * cell, and the pieces distribute across the join like any other rows.
   *
-  * Semantics: piece(cell) = polygon ∩ bbox(cell) over the polygon's cell
-  * cover ([[graft.cell.CellId]] grid, st_clip_bbox = the g15 clip path).
+  * Semantics: piece(cell) = polygon ∩ bbox(cell) over the polygon's join
+  * cover ([[graft.cell.CellId.joinCover]], which holds the cell of every
+  * point of the envelope; st_clip_bbox = the g15 clip path).
   * The union of pieces is the polygon, so a point STRICTLY interior to
   * the polygon and not on a cell cut line matches exactly the piece of
   * its own cell; a point exactly ON an internal cut line (measure-zero
@@ -32,7 +35,8 @@ object Subdivide {
     * clips (cover cells whose bbox only touches the envelope, not the
     * polygon) are dropped. Keeps all other columns; adds `cell`. */
   def byCells(polys: DataFrame, z: Int): DataFrame =
-    polys.withColumn("cell", explode(gf.st_cover(col("wkb"), lit(z))))
+    polys.withColumn("cell", explode(ColumnBridge.column(
+        KernelFns("st_join_cover")(ColumnBridge.expression(col("wkb")), Literal(z)))))
       .withColumn("env", gf.st_cell_env(col("cell")))
       .withColumn("wkb", gf.st_clip_bbox(col("wkb"),
         element_at(col("env"), 1), element_at(col("env"), 2),

@@ -292,16 +292,21 @@ object GeoKernel {
   def fromUtm(wkb: Array[Byte], zone: Int): Array[Byte] =
     Wkb.write(Utm.inverseGeom(decode(wkb), zone))
 
-  /** check-geometry kernel (geom/CheckGeometry.scala): null when valid. */
-  def validityDetail(wkb: Array[Byte]): (String, Double, Double) =
-    CheckGeometry.validityDetail(decode(wkb)).map { case (r, x, y) => (r, x, y) }.orNull
+  /** check-geometry kernel (geom/CheckGeometry.scala): the reason and the
+    * location of the first defect, each null when the geometry is valid. */
+  def invalidReason(wkb: Array[Byte]): String =
+    CheckGeometry.validityDetail(decode(wkb)).map(_._1).orNull
+  def invalidX(wkb: Array[Byte]): java.lang.Double =
+    CheckGeometry.validityDetail(decode(wkb)).map(d => java.lang.Double.valueOf(d._2)).orNull
+  def invalidY(wkb: Array[Byte]): java.lang.Double =
+    CheckGeometry.validityDetail(decode(wkb)).map(d => java.lang.Double.valueOf(d._3)).orNull
 
-  def toWgs84Datum(wkb: Array[Byte], ps: Array[Double]): Array[Byte] =
-    Wkb.write(Datum.toWgs84Geom(decode(wkb), ps(0), ps(1), ps(2), ps(3), ps(4),
-      ps(5), ps(6), ps(7), ps(8)))
-  def fromWgs84Datum(wkb: Array[Byte], ps: Array[Double]): Array[Byte] =
-    Wkb.write(Datum.fromWgs84Geom(decode(wkb), ps(0), ps(1), ps(2), ps(3), ps(4),
-      ps(5), ps(6), ps(7), ps(8)))
+  def toWgs84Datum(wkb: Array[Byte], a: Double, invF: Double, tx: Double, ty: Double, tz: Double,
+                   rx: Double, ry: Double, rz: Double, dsPpm: Double): Array[Byte] =
+    Wkb.write(Datum.toWgs84Geom(decode(wkb), a, invF, tx, ty, tz, rx, ry, rz, dsPpm))
+  def fromWgs84Datum(wkb: Array[Byte], a: Double, invF: Double, tx: Double, ty: Double, tz: Double,
+                     rx: Double, ry: Double, rz: Double, dsPpm: Double): Array[Byte] =
+    Wkb.write(Datum.fromWgs84Geom(decode(wkb), a, invF, tx, ty, tz, rx, ry, rz, dsPpm))
 
   def toLcc(wkb: Array[Byte], lat1: Double, lat2: Double, lat0: Double, lon0: Double): Array[Byte] =
     Wkb.write(Conic.lccGeom(decode(wkb), lat1, lat2, lat0, lon0))
@@ -355,22 +360,30 @@ object GeoKernel {
   // ---- cells & tiles
   def cell(lon: Double, lat: Double, z: Int): Long = CellId.fromLonLat(lon, lat, z)
 
-  def cellZ(c: Long): Int = CellId.zoom(c)
   def cellParent(c: Long, z: Int): Long = CellId.parentAt(c, z)
 
   def cover(wkb: Array[Byte], z: Int): Array[Long] = CellId.cover(decode(wkb), z)
 
+  /** The joins' cover: every cell holding a point of the envelope
+    * ([[graft.cell.CellId.joinCover]]). */
+  def joinCover(wkb: Array[Byte], z: Int): Array[Long] = CellId.joinCover(decode(wkb), z)
+
   /** Number of cells st_cover would materialize — envelope tile-range math
-    * only, never throws. Lets CellJoinRule key oversized geometries apart
-    * instead of crashing mid-query on the 4096-cell cap. */
-  def coverCount(wkb: Array[Byte], z: Int): Long = {
-    val e = decode(wkb).envelope
+    * only, never throws. */
+  def coverCount(wkb: Array[Byte], z: Int): Long =
+    rangeSize(decode(wkb).envelope, Mercator.tileRangeLonLat(_, z))
+
+  /** Number of cells of the join cover. Lets CellJoinRule key oversized
+    * geometries apart instead of crashing mid-query on the 4096-cell cap. */
+  def joinCoverCount(wkb: Array[Byte], z: Int): Long =
+    rangeSize(decode(wkb).envelope, Mercator.joinTileRangeLonLat(_, z))
+
+  private def rangeSize(e: Envelope, range: Envelope => (Int, Int, Int, Int)): Long =
     if (e.isEmpty) 0L
     else {
-      val (minX, minY, maxX, maxY) = Mercator.tileRangeLonLat(e, z)
+      val (minX, minY, maxX, maxY) = range(e)
       (maxX - minX + 1).toLong * (maxY - minY + 1).toLong
     }
-  }
 
   def cellRing(c: Long, r: Int): Array[Long] = CellId.ring(c, r)
   def cellDisk(c: Long, r: Int): Array[Long] = CellId.disk(c, r)
@@ -384,7 +397,4 @@ object GeoKernel {
 
   def hilbert(x: Double, y: Double, minX: Double, minY: Double, maxX: Double, maxY: Double): Long =
     Hilbert.code(Envelope(minX, minY, maxX, maxY), x, y)
-
-  def mercX(lon: Double): Double = Mercator.lonToX(lon)
-  def mercY(lat: Double): Double = Mercator.latToY(lat)
 }

@@ -22,135 +22,28 @@ object GraftFunctions {
       f(args)
     }
 
-  val builders: Seq[(String, Builder)] = Seq(
-    arity("st_geomfromtext", 1)(a => StGeomFromText(a(0))),
-    arity("st_astext", 1)(a => StAsText(a(0))),
-    arity("st_asgeojson", 2)(a => StAsGeoJson(a(0), a(1))),
-    arity("st_geomfromgeojson", 1)(a => StGeomFromGeoJson(a(0))),
-    arity("st_askml", 1)(a => StAsKml(a(0))),
-    arity("st_geomfromkml", 1)(a => StGeomFromKml(a(0))),
-    arity("st_asgml", 1)(a => StAsGml(a(0))),
-    arity("st_geomfromgml", 1)(a => StGeomFromGml(a(0))),
-    arity("st_asshp", 1)(a => StAsShp(a(0))),
-    arity("st_fromshp", 1)(a => StGeomFromShp(a(0))),
-    arity("double_usort_bits", 1)(a => DoubleUsortBits(a(0))),
-    arity("st_cell_env", 1)(a => StCellEnv(a(0))),
-    arity("st_point", 2)(a => StPoint(a(0), a(1))),
-    arity("st_isempty", 1)(a => StIsEmpty(a(0))),
-    arity("st_isvalid", 1)(a => StIsValid(a(0))),
-    arity("st_geometrytype", 1)(a => StGeometryType(a(0))),
-    arity("st_x", 1)(a => StX(a(0))),
-    arity("st_y", 1)(a => StY(a(0))),
-    arity("st_area", 1)(a => StArea(a(0))),
-    arity("st_length", 1)(a => StLength(a(0))),
-    arity("st_curve_length", 1)(a => StCurveLength(a(0))),
-    arity("st_wrapdateline", 2)(a => StWrapDateline(a(0), a(1))),
-    arity("st_curve_area", 1)(a => StCurveArea(a(0))),
-    arity("st_geodesic_area", 1)(a => StGeodesicArea(a(0))),
-    arity("st_geodesic_length", 1)(a => StGeodesicLength(a(0))),
-    arity("st_envelope", 1)(a => StEnvelope(a(0))),
-    arity("st_centroid", 1)(a => StCentroid(a(0))),
-    arity("st_convexhull", 1)(a => StConvexHull(a(0))),
-    arity("st_multi", 1)(a => StMulti(a(0))),
-    arity("st_npoints", 1)(a => StNPoints(a(0))),
+  /** The two functions whose last argument has a default. */
+  private val withDefault: Map[String, Builder] = Map(
     "ogr_deflate" -> { (args: Seq[Expression]) =>
       require(args.length == 1 || args.length == 2,
         s"ogr_deflate expects 1 or 2 arguments, got ${args.length}")
       // default = Z_DEFAULT_COMPRESSION (-1), as CPLZLibDeflate
-      OgrDeflate(args(0), if (args.length == 2) args(1) else Literal(-1))
+      KernelFns("ogr_deflate")(args(0), if (args.length == 2) args(1) else Literal(-1))
     },
-    arity("ogr_inflate", 1)(a => OgrInflate(a(0))),
-    arity("st_swapxy", 1)(a => StSwapXY(a(0))),
-    arity("st_transform_3857", 1)(a => StTransform3857(a(0))),
-    arity("st_transform_4326", 1)(a => StTransform4326(a(0))),
-    arity("st_dump", 1)(a => StDump(a(0))),
-    arity("st_intersects", 2)(a => StIntersects(a(0), a(1))),
-    arity("st_contains", 2)(a => StContains(a(0), a(1))),
-    arity("st_env_intersects", 2)(a => StEnvIntersects(a(0), a(1))),
-    arity("st_distance", 2)(a => StDistance(a(0), a(1))),
-    arity("st_intersection", 2)(a => StIntersection(a(0), a(1))),
-    arity("st_union", 2)(a => StUnion(a(0), a(1))),
-    arity("st_difference", 2)(a => StDifference(a(0), a(1))),
-    arity("st_symdifference", 2)(a => StSymDifference(a(0), a(1))),
-    arity("st_buffer", 2)(a => StBuffer(a(0), a(1))),
-    arity("st_within", 2)(a => StWithin(a(0), a(1))),
-    arity("st_touches", 2)(a => StTouches(a(0), a(1))),
-    arity("st_crosses", 2)(a => StCrosses(a(0), a(1))),
-    arity("st_overlaps", 2)(a => StOverlaps(a(0), a(1))),
-    arity("st_equals", 2)(a => StEquals(a(0), a(1))),
-    arity("st_disjoint", 2)(a => StDisjoint(a(0), a(1))),
-    arity("st_makevalid", 1)(a => StMakeValid(a(0))),
-    arity("st_concavehull", 2)(a => StConcaveHull(a(0), a(1))),
-    arity("st_transform_utm", 2)(a => StTransformUtm(a(0), a(1))),
-    arity("st_transform_utm_inv", 2)(a => StTransformUtmInv(a(0), a(1))),
-    arity("st_isvalid_reason", 1)(a => StValidityDetail(a(0), 0)),
-    arity("st_invalid_x", 1)(a => StValidityDetail(a(0), 1)),
-    arity("st_invalid_y", 1)(a => StValidityDetail(a(0), 2)),
-    arity("st_transform_lcc", 5)(a => StTransformConic(a, 0)),
-    arity("st_transform_lcc_inv", 5)(a => StTransformConic(a, 1)),
-    arity("st_transform_albers", 5)(a => StTransformConic(a, 2)),
-    arity("st_transform_albers_inv", 5)(a => StTransformConic(a, 3)),
-    arity("st_transform_ps", 3)(a => StTransformProj(a, 0)),
-    arity("st_transform_ps_inv", 3)(a => StTransformProj(a, 1)),
-    arity("st_transform_sinu", 2)(a => StTransformProj(a, 2)),
-    arity("st_transform_sinu_inv", 2)(a => StTransformProj(a, 3)),
-    arity("st_transform_aeqd", 3)(a => StTransformProj(a, 4)),
-    arity("st_transform_aeqd_inv", 3)(a => StTransformProj(a, 5)),
-    arity("st_transform_eqc", 2)(a => StTransformProj(a, 6)),
-    arity("st_transform_eqc_inv", 2)(a => StTransformProj(a, 7)),
-    arity("st_transform_moll", 2)(a => StTransformProj(a, 8)),
-    arity("st_transform_moll_inv", 2)(a => StTransformProj(a, 9)),
-    arity("st_transform_ortho", 3)(a => StTransformProj(a, 10)),
-    arity("st_transform_ortho_inv", 3)(a => StTransformProj(a, 11)),
-    arity("st_transform_gnom", 3)(a => StTransformProj(a, 12)),
-    arity("st_transform_gnom_inv", 3)(a => StTransformProj(a, 13)),
-    arity("st_transform_stere", 3)(a => StTransformProj(a, 14)),
-    arity("st_transform_stere_inv", 3)(a => StTransformProj(a, 15)),
-    arity("st_transform_laea", 3)(a => StTransformProj(a, 16)),
-    arity("st_transform_laea_inv", 3)(a => StTransformProj(a, 17)),
-    arity("st_transform_mill", 2)(a => StTransformProj(a, 18)),
-    arity("st_transform_mill_inv", 2)(a => StTransformProj(a, 19)),
-    arity("st_towgs84", 10)(a => StDatumShift(a, inverse = false)),
-    arity("st_fromwgs84", 10)(a => StDatumShift(a, inverse = true)),
-    arity("st_style_part_count", 1)(a => StStyle(a, 0)),
-    arity("st_style_tool", 2)(a => StStyle(a, 1)),
-    arity("st_style_param", 3)(a => StStyle(a, 2)),
-    arity("st_style_param_dbl", 4)(a => StStyle(a, 3)),
-    arity("st_style_rgba", 1)(a => StStyle(a, 4)),
-    arity("st_half_decode", 1)(a => StHalfDecode(a(0))),
-    arity("st_half_encode", 1)(a => StHalfEncode(a(0))),
-    arity("st_simplify", 2)(a => StSimplify(a(0), a(1))),
-    arity("st_segmentize", 2)(a => StSegmentize(a(0), a(1))),
-    arity("st_cover", 2)(a => StCover(a(0), a(1))),
-    arity("st_cover_count", 2)(a => StCoverCount(a(0), a(1))),
-    arity("cell_ring", 2)(a => CellRing(a(0), a(1))),
-    arity("cell_disk", 2)(a => CellDisk(a(0), a(1))),
-    arity("cell_parent", 2)(a => CellParent(a(0), a(1))),
-    arity("tile_x", 2)(a => TileXExpr(a(0), a(1))),
-    arity("tile_y", 2)(a => TileYExpr(a(0), a(1))),
-    arity("st_cell", 3)(a => StCell(a(0), a(1), a(2))),
-    arity("st_contains_point", 3)(a => StContainsPoint(a(0), a(1), a(2))),
-    arity("st_intersects_point", 3)(a => StIntersectsPoint(a(0), a(1), a(2))),
-    arity("tile_quadkey", 3)(a => TileQuadkey(a(0), a(1), a(2))),
     "st_greatcircle" -> { (args: Seq[Expression]) =>
       args.length match {
-        case 4 => StGreatCircle(args(0), args(1), args(2), args(3), Literal(6378137.0))
-        case 5 => StGreatCircle(args(0), args(1), args(2), args(3), args(4))
+        case 4 => KernelFns("st_greatcircle")(args :+ Literal(6378137.0): _*)
+        case 5 => KernelFns("st_greatcircle")(args: _*)
         case n => throw new IllegalArgumentException(s"st_greatcircle expects 4 or 5 args, got $n")
       }
-    },
-    arity("st_env_intersects_box", 5)(a => StEnvIntersectsBox(a(0), a(1), a(2), a(3), a(4))),
-    arity("st_clip_bbox", 5)(a => StClipBBox(a(0), a(1), a(2), a(3), a(4))),
-    arity("hilbert_code", 6)(a => HilbertCode(a)),
-    arity("text_trigram_codes", 1)(a => TextTrigramCodes(a(0))),
-    arity("text_minhash", 1)(a => TextMinHash(a(0))),
-    arity("text_simhash16", 1)(a => TextSimHash16(a(0))),
-    arity("text_winnow", 3)(a => TextWinnow(a(0), a(1), a(2))),
-    arity("text_rep_stats", 1)(a => TextRepStats(a(0))),
-    arity("text_char_segs", 1)(a => TextCharSegs(a(0))),
-    arity("vec_dot", 2)(a => VecDot(a(0), a(1))),
-    arity("vec_norm", 1)(a => VecNorm(a(0))),
-  )
+    })
+
+  /** One builder per registered row of [[KernelFns]], plus the two point
+    * predicates, which take WKB or the boxed struct. */
+  val builders: Seq[(String, Builder)] =
+    KernelFns.rows.filter(_.registered).map(f => f.name -> withDefault.getOrElse(f.name, f.builder)) ++ Seq(
+      arity("st_contains_point", 3)(a => StContainsPoint(a(0), a(1), a(2))),
+      arity("st_intersects_point", 3)(a => StIntersectsPoint(a(0), a(1), a(2))))
 
   /** Runtime registration on an existing session (temp functions).
     * Idempotent per session: re-registering identical builders is a no-op,

@@ -270,10 +270,6 @@ object TextKernel {
   }
 }
 
-/** Sequential-fold vector kernels for the embedding similarity family —
-  * same left-to-right summation order as the `aggregate(zip_with(...))`
-  * HOF formulation (and DuckDB's list_sum), so results are bit-identical
-  * while skipping per-element lambda interpretation. */
 /** zlib deflate/inflate — the ogr_deflate/ogr_inflate SQL functions
   * (/root/reference/ogr/ogrsf_frmts/sqlite/ogrsqlitesqlfunctions.cpp:60-150,
   * backed by CPLZLibDeflate/CPLZLibInflate, /root/reference/port/cpl_conv.h).
@@ -305,8 +301,16 @@ object ZlibKernel {
       out.toByteArray
     } finally inf.end()
   }
+
+  /** ogr_inflate: null on a corrupt or truncated stream. */
+  def inflateOrNull(data: Array[Byte]): Array[Byte] =
+    try inflate(data) catch { case _: Exception => null }
 }
 
+/** Sequential-fold vector kernels for the embedding similarity family —
+  * same left-to-right summation order as the `aggregate(zip_with(...))`
+  * HOF formulation (and DuckDB's list_sum), so results are bit-identical
+  * while skipping per-element lambda interpretation. */
 object VecKernel {
   def dot(a: org.apache.spark.sql.catalyst.util.ArrayData,
           b: org.apache.spark.sql.catalyst.util.ArrayData): Double = {

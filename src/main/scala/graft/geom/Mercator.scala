@@ -90,25 +90,44 @@ object Mercator {
   /** Envelope (meters) → inclusive XYZ tile range, replicating GetTileIndices
     * (gdalalg_raster_tile.cpp:458-478): floor(tileUnits + 1e-3), clamped to the
     * matrix, measured from the TOP-LEFT origin (-OriginShift, +OriginShift);
-    * y here is already XYZ (top-down). Returns (minX, minY, maxX, maxY). */
-  def tileRange(e: Envelope, z: Int): (Int, Int, Int, Int) = {
+    * y here is already XYZ (top-down). Returns (minX, minY, maxX, maxY).
+    * `lo` and `hi` replace the 1e-3 on the min and the max side. */
+  def tileRange(e: Envelope, z: Int, lo: Double = 1e-3, hi: Double = 1e-3): (Int, Int, Int, Int) = {
     val span = resolution(z) * TileSize
     val nMax = ((1L << z) - 1).toDouble
-    val eps = 1e-3
-    def clampF(v: Double): Int = math.max(0.0, math.min(math.floor(v + eps), nMax)).toInt
-    val minTx = clampF((e.minX - (-OriginShift)) / span)
-    val maxTx = clampF((e.maxX - (-OriginShift)) / span)
-    val minTy = clampF((OriginShift - e.maxY) / span)
-    val maxTy = clampF((OriginShift - e.minY) / span)
+    def clampF(v: Double): Int = math.max(0.0, math.min(math.floor(v), nMax)).toInt
+    val minTx = clampF((e.minX - (-OriginShift)) / span + lo)
+    val maxTx = clampF((e.maxX - (-OriginShift)) / span + hi)
+    val minTy = clampF((OriginShift - e.maxY) / span + lo)
+    val maxTy = clampF((OriginShift - e.minY) / span + hi)
     (minTx, minTy, maxTx, maxTy)
   }
 
   /** Envelope in lon/lat degrees → inclusive XYZ tile range. */
-  def tileRangeLonLat(e: Envelope, z: Int): (Int, Int, Int, Int) = {
+  def tileRangeLonLat(e: Envelope, z: Int, lo: Double = 1e-3, hi: Double = 1e-3): (Int, Int, Int, Int) = {
     val lat0 = math.max(-MaxLat, math.min(MaxLat, e.minY))
     val lat1 = math.max(-MaxLat, math.min(MaxLat, e.maxY))
-    tileRange(Envelope(lonToX(e.minX), latToY(lat0), lonToX(e.maxX), latToY(lat1)), z)
+    tileRange(Envelope(lonToX(e.minX), latToY(lat0), lonToX(e.maxX), latToY(lat1)), z, lo, hi)
   }
+
+  /** How far, in tiles, the joins' range reaches past the envelope on each
+    * side: a bound on how far this path's tile coordinate can stray from
+    * the one a point's tile is taken from. Both start from the same lonToX
+    * or latToY. Columns then agree exactly (the same mx + OriginShift
+    * divided by resolution · 256, and scaling by 256 is exact); rows round
+    * OriginShift − my here and my + OriginShift there, a few ulps of a
+    * coordinate below 2^28 at any packable zoom, so under 2^-22 (2.4e-7)
+    * tiles. */
+  final val JoinSlack = 1e-6
+
+  /** The joins' tile range: floor(v − JoinSlack) on the min side and
+    * floor(v + JoinSlack) on the max side, so it holds the tile of every
+    * point in the envelope as [[lonLatToTileX]]/[[lonLatToTileY]] compute
+    * it. GetTileIndices' floor(v + 1e-3) drops the row or column that an
+    * envelope enters by less than 1e-3 of a tile. Latitude is clamped to
+    * ±MaxLat as in [[tileRangeLonLat]], and longitude is not wrapped. */
+  def joinTileRangeLonLat(e: Envelope, z: Int): (Int, Int, Int, Int) =
+    tileRangeLonLat(e, z, -JoinSlack, JoinSlack)
 
   /** Quadkey of an XYZ tile. gdal2tiles QuadTree (gdal2tiles.py:518-530) first
     * flips TMS→google y, then sets bit 2 from the flipped y — i.e. directly

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
-import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint}
+import org.apache.spark.sql.graft.{DatasetBridge, KernelFns, StBox, StContainsPoint, StIntersectsPoint}
 
 /** Optimizer rule: rewrite naive spatial-predicate joins
   *
@@ -20,7 +20,7 @@ import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint
   * predicate evaluations — into cell-indexed equi-joins (SpatialJoin's
   * point and polygon-polygon joins build theirs through `plan`):
   *
-  *   point case:  points × st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_cover(wkb,z))
+  *   point case:  points × st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_join_cover(wkb,z))
   *                … refined by the ORIGINAL predicate (a point is in exactly
   *                one cell, so no dedup is introduced). The polygon side
   *                carries its geometry once, as the boxed struct
@@ -41,9 +41,14 @@ import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint
   * handle skew) instead of a quadratic loop — at 100 TB this is the
   * difference between a plan that finishes and one that cannot.
   *
+  * The cover is the join cover (CellId.joinCover), not st_cover: it holds
+  * st_cell of every point of the geometry's envelope, where st_cover's
+  * GetTileIndices slack drops the row or column that an envelope enters
+  * by less than 1e-3 of a tile, and with it the points there.
+  *
   * Oversize guard (geometries whose cover at the chosen zoom would exceed
-  * CellId.cover's 4096-cell cap — continental polygons at a fine zoom, by
-  * the cheap envelope-only st_cover_count; only above zoom 6, which has
+  * CellId's 4096-cell cap — continental polygons at a fine zoom, by
+  * the cheap envelope-only st_join_cover_count; only above zoom 6, which has
   * 4^6 = 4096 cells): in the point case an oversized polygon is keyed by
   * its zoom-6 cover and each point also probes its zoom-6 cell (packed
   * cells carry their zoom, so a pair meets under exactly one key), which
@@ -78,13 +83,18 @@ import org.apache.spark.sql.graft.{DatasetBridge, StBox, StCell, StContainsPoint
   *    predicate join and hand it here. */
 object CellJoinRule extends Rule[LogicalPlan] {
 
-  /** Matches CellId.cover's default cap. */
+  /** Matches CellId.joinCover's default cap. */
   private val MaxCoverCells = 4096L
 
   /** The finest zoom at which no cover exceeds the cap: 4^6 = 4096 cells. */
   private val CoarseZoom = 6
 
   private val ZoomKey = "spark.graft.celljoin.zoom"
+
+  private val Cell = KernelFns("st_cell")
+  private val Cover = KernelFns("st_join_cover")
+  private val CoverCount = KernelFns("st_join_cover_count")
+  private val Intersects = KernelFns("st_intersects")
 
   /** A malformed value is refused: silently planning at another zoom
     * would hide the typo behind a different cover size. */
@@ -125,7 +135,7 @@ object CellJoinRule extends Rule[LogicalPlan] {
     * the inner join anyway. */
   private def coverFilter(side: LogicalPlan, wkb: Expression, z: Int,
                           fits: Boolean): LogicalPlan = {
-    val cnt = StCoverCount(wkb, Literal(z)); val cap = Literal(MaxCoverCells)
+    val cnt = CoverCount(wkb, Literal(z)); val cap = Literal(MaxCoverCells)
     Filter(if (fits) LessThanOrEqual(cnt, cap) else GreaterThan(cnt, cap), side)
   }
 
@@ -141,14 +151,14 @@ object CellJoinRule extends Rule[LogicalPlan] {
     val (ptsSide, polySide) = if (ptsLeft) (j.left, j.right) else (j.right, j.left)
     // points side: each row probes its own cell and, where a cover can
     // exceed the cap, its zoom-6 cell too
-    val own = StCell(lon, lat, Literal(z))
+    val own = Cell(lon, lat, Literal(z))
     val (pts2, cellL) =
       if (z <= CoarseZoom) {
         val c = Alias(own, "__graft_cell_pt")()
         (Project(ptsSide.output :+ c, ptsSide), c.toAttribute)
       } else {
         val c = AttributeReference("__graft_cell_pt", LongType)()
-        (Generate(Explode(CreateArray(Seq(own, StCell(lon, lat, Literal(CoarseZoom))))), Nil,
+        (Generate(Explode(CreateArray(Seq(own, Cell(lon, lat, Literal(CoarseZoom))))), Nil,
           outer = false, qualifier = None, generatorOutput = Seq(c), child = ptsSide), c)
       }
     // polygon side: the geometry rides once, as the boxed struct the refine
@@ -159,10 +169,10 @@ object CellJoinRule extends Rule[LogicalPlan] {
     val box = boxA.toAttribute
     val boxed = Project(polySide.output.filterNot(wkb.semanticEquals) :+ boxA, polySide)
     val polyWkb = StBox.wkb(box)
-    val cover = StCover(polyWkb, Literal(z))
+    val cover = Cover(polyWkb, Literal(z))
     val cells = if (z <= CoarseZoom) cover
-      else If(GreaterThan(StCoverCount(polyWkb, Literal(z)), Literal(MaxCoverCells)),
-        StCover(polyWkb, Literal(CoarseZoom)), cover)
+      else If(GreaterThan(CoverCount(polyWkb, Literal(z)), Literal(MaxCoverCells)),
+        Cover(polyWkb, Literal(CoarseZoom)), cover)
     val cellR = AttributeReference("__graft_cell_poly", LongType, nullable = false)()
     val polys2 = Generate(Explode(cells), Nil, outer = false, qualifier = None,
       generatorOutput = Seq(cellR), child = boxed)
@@ -185,12 +195,12 @@ object CellJoinRule extends Rule[LogicalPlan] {
     val lFit = if (coarse) j.left else coverFilter(j.left, wl, z, fits = true)
     val rFit = if (coarse) j.right else coverFilter(j.right, wr, z, fits = true)
     // each side carries its full (sorted) cover array AND the exploded cell
-    val covL = Alias(StCover(wl, Literal(z)), "__graft_cov_l")()
+    val covL = Alias(Cover(wl, Literal(z)), "__graft_cov_l")()
     val lProj = Project(j.left.output :+ covL, lFit)
     val cellL = AttributeReference("__graft_cell_l", LongType, nullable = false)()
     val lExp = Generate(Explode(covL.toAttribute), Nil, outer = false,
       qualifier = None, generatorOutput = Seq(cellL), child = lProj)
-    val covR = Alias(StCover(wr, Literal(z)), "__graft_cov_r")()
+    val covR = Alias(Cover(wr, Literal(z)), "__graft_cov_r")()
     val rProj = Project(j.right.output :+ covR, rFit)
     val cellR = AttributeReference("__graft_cell_r", LongType, nullable = false)()
     val rExp = Generate(Explode(covR.toAttribute), Nil, outer = false,
@@ -217,7 +227,7 @@ object CellJoinRule extends Rule[LogicalPlan] {
       // the geometry as WKB: a predicate over a boxed struct keeps its plan
       case StContainsPoint(w, lo, la) if w.dataType == BinaryType => matchPoint(w, lo, la, lSet, rSet)
       case StIntersectsPoint(w, lo, la) if w.dataType == BinaryType => matchPoint(w, lo, la, lSet, rSet)
-      case StIntersects(a, b)
+      case Intersects(a, b)
           if a.references.nonEmpty && b.references.nonEmpty =>
         if (a.references.subsetOf(lSet) && b.references.subsetOf(rSet))
           Some(GeomMatch(a, b))

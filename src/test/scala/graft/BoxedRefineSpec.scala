@@ -201,6 +201,89 @@ class BoxedRefineSpec extends AnyFunSuite {
       (hits, boundaryHits, outsideBox, offEnvelope))
   }
 
+  /** `g` moved by (dx, dy). */
+  private def shift(g: G, dx: Double, dy: Double): G = {
+    def mv(c: (Double, Double)) = (c._1 + dx, c._2 + dy)
+    g match {
+      case Pt(x, y) => Pt(x + dx, y + dy)
+      case Ln(code, cs) => Ln(code, cs.map(mv))
+      case Rg(code, rings) => Rg(code, rings.map(_.map(mv)))
+      case Co(code, parts) => Co(code, parts.map(shift(_, dx, dy)))
+    }
+  }
+
+  test("the join cover holds st_cell of every point the ray test accepts, at tile edges, poles and the antimeridian") {
+    val rnd = new Random(20261021L)
+    var accepted = 0; var slackMisses = 0
+    def finite(v: Double) = !v.isNaN && !v.isInfinite
+    /** Probes at and around the vertices that reach the envelope's sides,
+      * and a few others: ±1 ulp, ±1e-9 and ±1e-3 of a tile either way. */
+    def check(g: G, z: Int): Unit = {
+      val w = wkb(g, rnd)
+      val e = graft.geom.Wkb.read(w).envelope
+      if (e.isEmpty) return
+      val inCover: Long => Boolean =
+        if (GeoKernel.joinCoverCount(w, z) <= 4096) GeoKernel.joinCover(w, z).toSet
+        else { c => // too many cells to list: the range they would come from
+          val (x0, y0, x1, y1) = Mercator.joinTileRangeLonLat(e, z)
+          CellId.x(c) >= x0 && CellId.x(c) <= x1 && CellId.y(c) >= y0 && CellId.y(c) <= y1
+        }
+      val (sx0, sy0, sx1, sy1) = Mercator.tileRangeLonLat(e, z)
+      val vs = vertices(g).filter(v => finite(v._1) && finite(v._2))
+      val extremes = vs.filter(v => v._1 == e.minX || v._1 == e.maxX || v._2 == e.minY || v._2 == e.maxY).take(8)
+      for ((x, y) <- extremes ++ Seq.fill(math.min(4, vs.size))(vs(rnd.nextInt(vs.size)))) {
+        val t = Mercator.tileEnvelopeLonLat(z, CellId.x(GeoKernel.cell(x, y, z)), CellId.y(GeoKernel.cell(x, y, z)))
+        val (tw, th) = (t.maxX - t.minX, t.maxY - t.minY)
+        val dxs = Seq(0.0, 1e-9 * tw, -1e-9 * tw, 1e-3 * tw, -1e-3 * tw)
+        val dys = Seq(1e-9 * th, -1e-9 * th, 1e-3 * th, -1e-3 * th)
+        val probes = dxs.map(d => (x + d, y)) ++ dys.map(d => (x, y + d)) ++
+          Seq((math.nextUp(x), y), (math.nextDown(x), y), (x, math.nextUp(y)), (x, math.nextDown(y)))
+        // beyond ±90° latToY runs through tan's next period, so st_cell
+        // puts such a latitude in an arbitrary row: no cover can hold it
+        for ((px, py) <- probes if math.abs(py) <= 90 &&
+            (GeoKernel.intersectsPoint(w, px, py) || GeoKernel.containsPoint(w, px, py))) {
+          accepted += 1
+          val c = GeoKernel.cell(px, py, z)
+          assert(inCover(c), s"$g: ($px, $py) in cell (${CellId.x(c)}, ${CellId.y(c)}) at z=$z, " +
+            s"join range ${Mercator.joinTileRangeLonLat(e, z)}")
+          if (CellId.x(c) < sx0 || CellId.x(c) > sx1 || CellId.y(c) < sy0 || CellId.y(c) > sy1) slackMisses += 1
+        }
+      }
+    }
+    val offsets = Seq[(Double, Double) => Double]((v, _) => v, (v, _) => math.nextUp(v), (v, _) => math.nextDown(v),
+      (v, h) => v + 1e-9 * h, (v, h) => v - 1e-9 * h, (v, h) => v + 1e-3 * h, (v, h) => v - 1e-3 * h)
+    def off(v: Double, h: Double): Double = offsets(rnd.nextInt(offsets.size))(v, h)
+    for (k <- 1 to 1500) {
+      val g = geometry(rnd)
+      val e = graft.geom.Wkb.read(wkb(g, rnd)).envelope
+      val movable = !e.isEmpty && Seq(e.minX, e.minY, e.maxX, e.maxY).forall(finite)
+      for (z <- Seq(0, 4, 6, 10, 18)) {
+        check(g, z)
+        if (movable) {
+          // each side moved onto a tile edge at z, give or take an offset
+          val lo = Mercator.tileEnvelopeLonLat(z, CellId.x(GeoKernel.cell(e.minX, e.minY, z)),
+            CellId.y(GeoKernel.cell(e.minX, e.minY, z)))
+          val hi = Mercator.tileEnvelopeLonLat(z, CellId.x(GeoKernel.cell(e.maxX, e.maxY, z)),
+            CellId.y(GeoKernel.cell(e.maxX, e.maxY, z)))
+          val (tw, th) = (lo.maxX - lo.minX, lo.maxY - lo.minY)
+          def pick(a: Double, b: Double) = if (rnd.nextBoolean()) a else b
+          check(shift(g, off(pick(lo.minX, lo.maxX), tw) - e.minX, 0), z)
+          check(shift(g, off(pick(hi.minX, hi.maxX), tw) - e.maxX, 0), z)
+          check(shift(g, 0, off(pick(lo.minY, lo.maxY), th) - e.minY), z)
+          check(shift(g, 0, off(pick(hi.minY, hi.maxY), th) - e.maxY), z)
+          if (k % 5 == 0) { // the poles, the grid's latitude bound and the antimeridian
+            check(shift(g, 0, pick(90.0, off(Mercator.MaxLat, th)) - e.maxY), z)
+            check(shift(g, 0, pick(-90.0, off(-Mercator.MaxLat, th)) - e.minY), z)
+            check(shift(g, off(180.0, tw) - e.maxX, 0), z)
+            check(shift(g, off(-180.0, tw) - e.minX, 0), z)
+          }
+        }
+      }
+    }
+    // the probes reach the strip that GetTileIndices' slack drops
+    assert(accepted > 100000 && slackMisses > 100, (accepted, slackMisses))
+  }
+
   test("line work gets an unbounded box: a point a denormal off a line intersects it") {
     val line = graft.geom.Wkb.write(graft.geom.Wkt.parse("LINESTRING (0 0, 1 0)"))
     val y = java.lang.Double.MIN_VALUE

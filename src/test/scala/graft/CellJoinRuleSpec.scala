@@ -10,16 +10,16 @@ import graft.functions.{gf, GeoKernel, GraftExtensions, GraftFunctions}
   * loop) into a cell equi-join, with identical results. The only
   * nested-loop remnant allowed in the rewritten plan is the polygon-polygon
   * oversize fallback branch, whose input is filtered to geometries over
-  * the st_cover_count cap (empty in the common case; AQE collapses it). */
+  * the st_join_cover_count cap (empty in the common case; AQE collapses it). */
 class CellJoinRuleSpec extends AnyFunSuite {
 
   private def assertCellRewrite(plan: String): Unit = {
     assert(plan.contains("__graft_cell"), s"no cell equi-join in:\n$plan")
     // any remaining quadratic join must be the guarded oversize branch:
-    // every nested-loop/cartesian operator consumes an st_cover_count filter
+    // every nested-loop/cartesian operator consumes an st_join_cover_count filter
     val quadratic = plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct")
     if (quadratic)
-      assert(plan.contains("st_cover_count"),
+      assert(plan.contains("st_join_cover_count"),
         s"unguarded quadratic join in:\n$plan")
   }
 

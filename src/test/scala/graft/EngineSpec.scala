@@ -51,7 +51,7 @@ class EngineSpec extends AnyFunSuite {
       ("e", Seq.empty[Span]))
     val df = GeoDocs.withGeometry(spans.toDF("doc_id", "spans"))
     val parses = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-      case e: org.apache.spark.sql.graft.StGeomFromText => e }))
+      case e @ org.apache.spark.sql.graft.KernelCall("st_geomfromtext", _) => e }))
     assert(parses.size === 1, df.queryExecution.optimizedPlan.treeString)
     // the first geo span decides: c's unparseable one drops it
     assert(df.select($"doc_id", $"lon", $"lat").as[(String, Double, Double)].collect().sorted.toSeq ===
